@@ -300,8 +300,7 @@ final class QueryServer(engine: Engine, port: Int = 0) {
     * and `source` like the in-process routers — a dashboard sees which
     * tier answered. */
   private def routeFrame(line: String): org.apache.spark.sql.DataFrame = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.readTree(line)
+    val node = QueryServer.Json.readTree(line)
     def optStr(f: String): Option[String] =
       Option(node.get(f)).filterNot(_.isNull).map(_.asText())
     def reqLong(f: String): Long = Option(node.get(f)).filterNot(_.isNull)
@@ -426,6 +425,11 @@ final class QueryServer(engine: Engine, port: Int = 0) {
 }
 
 object QueryServer {
+  /** One parser shared by every connection: an `ObjectMapper` is
+    * thread-safe once configured, and building one per request costs
+    * more than parsing the frame. */
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** `graft.server.QueryServer --db <dir> [--port n]` */
   def main(args: Array[String]): Unit = {
     var dbDir = "."

@@ -52,9 +52,16 @@ object Tables {
     // above any floor, so this setting is INERT there — it only governs
     // how small inputs spread over idle cores, which is exactly the
     // dimension that must adapt between a laptop bench and a 100 TB
-    // cluster. Env-overridable, same contract as the fanOut guard.
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "64k"))
+    // cluster. The env var is the explicit override; otherwise a value the
+    // user already set on the session is kept, and 64k fills only a gap.
+    val minPartitionSize =
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    sys.env.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE") match {
+      case Some(v) => spark.conf.set(minPartitionSize, v)
+      case None =>
+        if (!spark.sessionState.conf.contains(minPartitionSize))
+          spark.conf.set(minPartitionSize, "64k")
+    }
   }
 
   /** Hadoop conf for catalog path operations — from the active session when
@@ -193,20 +200,16 @@ object Tables {
 
   /** Data files + mtimes for a metrics — `.describe`'s
     * updated_at/block_num (reference block metadata,
-    * `describe_metrics.rs:95-112`). Recursive remote listing, so
-    * date-bucketed layouts and object-store prefixes both walk the same
-    * way. */
+    * `describe_metrics.rs:95-112`). The shared [[FileTree]] walk, so
+    * date-bucketed layouts and object-store prefixes both list the same
+    * way, and a concurrent persist's `_temporary` output is neither
+    * counted nor walked into. */
   private def dataFiles(dbDir: String, metrics: String): Seq[DataFile] = {
     val root = new HPath(metricsPath(dbDir, metrics))
-    val it = fsFor(root).listFiles(root, true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[DataFile]
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.getName
-      if (name.endsWith(".parquet") && !name.startsWith("_"))
-        out += DataFile(st.getPath, st.getModificationTime)
+    FileTree.files(fsFor(root), root).collect {
+      case st if st.getPath.getName.endsWith(".parquet") =>
+        DataFile(st.getPath, st.getModificationTime)
     }
-    out.toSeq
   }
 
   /** Per-file footer stats: (file, rows, ts min, ts max) read driver-side

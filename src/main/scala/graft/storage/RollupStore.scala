@@ -342,11 +342,84 @@ object RollupStore {
     * store read. */
   private def scopedStore(spark: SparkSession, path: String,
       since: Option[Long], until: Option[Long]): DataFrame = {
+    healed(spark, path)
+    scopedFrame(checkedRead(spark, path), since, until)
+  }
+
+  /** Self-heal a crashed publish or compaction swap of the store tree
+    * before reading it. Returns the tree's filesystem and path for the
+    * caller's listing. */
+  private def healed(spark: SparkSession, path: String)
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
     AtomicDir.recover(fs, live, "rollup store")
     graft.pipeline.Similarity.recoverCompact(fs, live)
-    scopedFrame(checkedRead(spark, path), since, until)
+    (fs, live)
+  }
+
+  /** A store as one listing of its tree saw it: the checked frame
+    * ([[checkedRead]]), its one bucket width and its tier horizon. The
+    * frame's file list is frozen at read time, so the snapshot is valid
+    * exactly while the tree still lists the same files. */
+  private final case class StoreSnapshot(df: DataFrame,
+      bucketNs: Long, horizon: Option[Long])
+
+  /** Snapshots of recently served stores, keyed by (session, qualified
+    * path), each stamped with the listing it was probed under. A fixed
+    * LRU; it holds plan objects only (no `cache()`, no pin) and only
+    * successful probes — a failing store is re-probed, and fails, on
+    * every call. */
+  private object Snapshots {
+    private type Key = (SparkSession, String)
+    private type Listing = Vector[(String, Long, Long)]
+    private val MaxEntries = 64
+    private val lru =
+      new java.util.LinkedHashMap[Key, (Listing, StoreSnapshot)](16, 0.75f,
+          true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[Key, (Listing, StoreSnapshot)]): Boolean =
+          size() > MaxEntries
+      }
+
+    /** The snapshot probed under exactly `listing`; a stale one is
+      * dropped. */
+    def get(key: Key, listing: Listing): Option[StoreSnapshot] =
+      synchronized {
+        Option(lru.get(key)).flatMap { case (seen, snap) =>
+          if (seen == listing) Some(snap) else { lru.remove(key); None }
+        }
+      }
+
+    def put(key: Key, listing: Listing, snap: StoreSnapshot): Unit =
+      synchronized { lru.put(key, (listing, snap)); () }
+  }
+
+  /** Open a store for serving: self-heal, list the tree, and answer from
+    * the snapshot probed under the same listing — no Spark job at all —
+    * or, when any file was added, removed or rewritten since (or the
+    * store was never opened in this session), read it with
+    * [[checkedRead]] and probe width and horizon in one aggregation
+    * ([[storeMetaProbe]]). The listing runs BEFORE the read, so a write
+    * landing in between leaves the fingerprint older than the frame and
+    * the next call re-probes; it can never make a stale frame look
+    * current. Absent or schema-less trees fail as [[checkedRead]] does,
+    * empty and mixed-width stores as [[storeMetaProbe]] does — on every
+    * call, since failures are never cached. */
+  private def storeAtRest(spark: SparkSession, path: String)
+      : StoreSnapshot = {
+    val (fs, live) = healed(spark, path)
+    val listing = FileTree.files(fs, live)
+      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+      .sorted
+    val key = (spark, fs.makeQualified(live).toString)
+    Snapshots.get(key, listing).getOrElse {
+      val stored = checkedRead(spark, path)
+      val (bucketNs, horizon) = storeMetaProbe(stored, path)
+      val snap = StoreSnapshot(stored, bucketNs, horizon)
+      Snapshots.put(key, listing, snap)
+      snap
+    }
   }
 
   /** The scoping half of [[scopedStore]] over an already-read store frame
@@ -368,55 +441,33 @@ object RollupStore {
         Seq("bucket_ts", "bucket_ns", "batch_key"))
   }
 
-  /** A tier at rest, read ONCE per stitched call: self-healed, listed,
-    * horizon computed. Absent or schema-less trees are None. With
-    * `mirrorFirst`, a data-bearing store past index 0 without a horizon
-    * fails loudly — data landed in a tier path not via tiering is a
-    * wiring bug, and the check must not depend on which range a
-    * dashboard happens to ask for. */
+  /** A tier at rest for one stitched call: its [[StoreSnapshot]] under
+    * the tier's path. */
   private final case class TierAtRest(path: String, df: DataFrame,
-      horizon: Option[Long])
+      bucketNs: Long, horizon: Option[Long])
 
+  /** Open every tier through [[storeAtRest]], so each tier's frame, width
+    * and horizon come from its own snapshot and a warm cascade runs no
+    * metadata job. A tier whose tree lists no data file (nothing tiered
+    * that far yet, or fully trimmed) is None. With `mirrorFirst`, a
+    * data-bearing store past index 0 without a horizon fails loudly —
+    * data landed in a tier path not via tiering is a wiring bug, and the
+    * check must not depend on which range a dashboard happens to ask
+    * for. */
   private def readTiers(spark: SparkSession, storePaths: Seq[String],
-      context: String, mirrorFirst: Boolean): Seq[Option[TierAtRest]] = {
-    val readable: Seq[Option[(String, DataFrame)]] = storePaths.map { p =>
-      val live = new org.apache.hadoop.fs.Path(p)
-      val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(live)) None
+      context: String, mirrorFirst: Boolean): Seq[Option[TierAtRest]] =
+    storePaths.zipWithIndex.map { case (p, i) =>
+      val (fs, live) = healed(spark, p)
+      if (FileTree.files(fs, live).isEmpty) None
       else {
-        AtomicDir.recover(fs, live, "rollup store")
-        graft.pipeline.Similarity.recoverCompact(fs, live)
-        readableStore(spark, p).map(p -> _)
-      }
-    }
-    // ONE horizon probe across every readable tier (tier-tagged union →
-    // grouped max) instead of one driver-blocking agg job PER tier: a
-    // three-tier cascade's cold read paid three serial metadata jobs over
-    // KB frames before any data work — per-request job count, not bytes,
-    // is the stitched serving path's cost (guide §1). Total rows scanned
-    // are identical; only the job boundary moves.
-    val frames = readable.zipWithIndex.collect {
-      case (Some((_, df)), i) => (df, i) }
-    val horizons: Map[Int, Long] =
-      if (frames.isEmpty) Map.empty
-      else frames.map { case (df, i) =>
-          df.select(lit(i).as("__tier"), horizonExpr.as("__h")) }
-        .reduce(_ unionByName _)
-        .groupBy("__tier").agg(max("__h").as("__h"))
-        .collect().flatMap(r =>
-          if (r.isNullAt(1)) None else Some(r.getInt(0) -> r.getLong(1)))
-        .toMap
-    readable.zipWithIndex.map { case (opt, i) =>
-      opt.map { case (p, df) =>
-        val h = horizons.get(i)
-        if (mirrorFirst) require(i == 0 || h.nonEmpty,
+        val s = storeAtRest(spark, p)
+        if (mirrorFirst) require(i == 0 || s.horizon.nonEmpty,
           s"$context: tiered store at $p has data but no tier horizon" +
             " — only the FIRST (mirror) store may be horizonless; " +
             "stitch order must run mirror, then fine → coarse")
-        TierAtRest(p, df, h)
+        Some(TierAtRest(p, s.df, s.bucketNs, s.horizon))
       }
     }
-  }
 
   /** A router's key predicate must reference ONLY the store's key
     * columns: a predicate on a value column (`n`, `sum_c`, a bucket stat)
@@ -613,8 +664,18 @@ object RollupStore {
     * never stitch millions of series and filter client-side). The tier
     * horizon is still read from the UNFILTERED store: the filter selects
     * which series are served, not whether the store was tiered into.
+    *
+    * SNAPSHOT SERVING: the store is opened through [[storeAtRest]], so
+    * width and horizon come from the snapshot probed under the store's
+    * current file listing. Any file added, removed or rewritten under
+    * the store (an [[append]], [[compact]], [[tierOff]]) re-probes on the
+    * next call; a warm route over an unchanged store runs no metadata
+    * job while its plan is built. `raw` is by-name and read only on a
+    * path that needs it (a raw fine zoom or a stitch), so a store-served
+    * answer never pays the raw read's schema job — and a bad `raw` path
+    * fails only when raw is actually needed.
     */
-  def route(spark: SparkSession, path: String, raw: DataFrame,
+  def route(spark: SparkSession, path: String, raw: => DataFrame,
       since: Long, until: Long, maxPoints: Int,
       valueCol: String = "value", tsCol: String = "ts",
       distinctCol: Option[String] = None, lgK: Int = 12,
@@ -622,16 +683,10 @@ object RollupStore {
       keyFilter: Option[Column] = None): DataFrame = {
     require(until > since, s"route: empty range [$since, $until)")
     require(maxPoints >= 1, "route needs a positive point budget")
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    AtomicDir.recover(fs, live, "rollup store") // serving must self-heal a
-    graft.pipeline.Similarity.recoverCompact(fs, live) // crashed swap too
-    val stored0 = checkedRead(spark, path)
-    // width + horizon in one metadata job (see storeMetaProbe)
-    val (bucketNs, horizon) = storeMetaProbe(stored0, path)
+    val StoreSnapshot(stored0, bucketNs, horizon) = storeAtRest(spark, path)
     keyFilter.foreach(requireKeyPredicate(_, stored0, "route"))
     val stored = keyFilter.fold(stored0)(stored0.filter)
-    val rawF = keyFilter.fold(raw)(raw.filter)
+    lazy val rawF = { val r = raw; keyFilter.fold(r)(r.filter) }
     // the raw fallback must produce the same schema the store serves —
     // a dashboard that selects distinct_est at a coarse zoom must not
     // break when a finer zoom routes to raw
@@ -641,8 +696,8 @@ object RollupStore {
     require(!stored.columns.contains("hcnt") || histBoundsCents.nonEmpty,
       "route: the store carries histogram counters — pass histBoundsCents" +
         " so the raw fallback serves the same schema")
-    // horizon from the UNFILTERED store (probed above with the width): a
-    // key slice with no pre-horizon rows must not flip the router into
+    // horizon from the UNFILTERED store (the snapshot's, with the width):
+    // a key slice with no pre-horizon rows must not flip the router into
     // believing the store is an untiered complete mirror (it would then
     // serve that series' empty store slice instead of its raw samples)
     def widened(g: Long): (Long, Long) = widenTo(since, until, g)
@@ -655,7 +710,7 @@ object RollupStore {
     def stitchedAt(g: Long): DataFrame = {
       val (lo, hi) = widened(g)
       stitchTiers(spark, rawF,
-        Seq(Some(TierAtRest(path, stored, horizon))), g, Some(lo),
+        Seq(Some(TierAtRest(path, stored, bucketNs, horizon))), g, Some(lo),
         Some(hi), valueCol, tsCol, distinctCol, lgK, histBoundsCents)
         .withColumn("grain_ns", lit(g)).withColumn("source", lit("stitched"))
     }
@@ -665,8 +720,8 @@ object RollupStore {
         case Some(_) => stitchedAt(g) // tiered lifecycle: the store holds
           // the pre-horizon past, raw the rest — stitch, never partial
         case None => // untiered: the store is the complete mirror —
-          // served from the frame this call already self-healed and
-          // read, not a second rollup() listing of the same tree
+          // served from the snapshot's frame, not a second rollup()
+          // listing of the same tree
           val (lo, hi) = widened(g)
           mergeFold(scopedFrame(stored, Some(lo), Some(hi)), g,
               uniformWidth = true)
@@ -750,17 +805,19 @@ object RollupStore {
     * [[SampleStore.open]] open-once/estimate-many posture extended to
     * the router). `pinSample` persists the replay-deduped sample rows —
     * the BlinkDB serving stance; [[SampledRouter.close]] releases the
-    * pin. */
+    * pin.
+    *
+    * The store opens through [[storeAtRest]] ([[route]]'s snapshot
+    * semantics): any file added, removed or rewritten under the store
+    * re-probes, and re-preparing over an unchanged store runs no
+    * metadata job for it — so the unpinned [[routeSampled]], which
+    * prepares per call, pays the store's probe once per store state,
+    * not once per request. */
   def prepareSampled(spark: SparkSession, storePath: String,
       samplePath: String, valueCol: String = "value",
       pinSample: Boolean = true): SampledRouter = {
-    val live = new org.apache.hadoop.fs.Path(storePath)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    AtomicDir.recover(fs, live, "rollup store")
-    graft.pipeline.Similarity.recoverCompact(fs, live)
-    val stored = checkedRead(spark, storePath)
-    // width + horizon in one metadata job (see storeMetaProbe)
-    val (bucketNs, horizon) = storeMetaProbe(stored, storePath)
+    val StoreSnapshot(stored, bucketNs, horizon) =
+      storeAtRest(spark, storePath)
     val keys = keyColsOf(stored)
     require(horizon.isEmpty,
       "routeSampled serves a complete-mirror store — this store has a " +
@@ -1154,7 +1211,7 @@ object RollupStore {
   }
 
   /** Bucket width + tier horizon in ONE metadata aggregation — the
-    * serving cold path (route / prepareSampled) needs both, and two
+    * cold path of [[storeAtRest]] needs both, and two
     * separate driver-blocking jobs over the same KB store frame doubled
     * the per-request metadata cost (guide §1: the routed rows' time is
     * job count, not bytes). Same failure surface as [[storeBucketNs]] +
@@ -1450,8 +1507,9 @@ object RollupStore {
     require(until > since, s"routeCascade: empty range [$since, $until)")
     require(maxPoints >= 1, "routeCascade needs a positive point budget")
     require(storePaths.nonEmpty, "routeCascade needs at least one store")
-    // every store read ONCE: frames + horizons for stitching, widths for
-    // routing (horizonless stores were never tiered into and don't route)
+    // every store opened ONCE through its snapshot: frames + horizons for
+    // stitching, widths for routing (horizonless stores were never tiered
+    // into and don't route)
     val tiersRead = readTiers(spark, storePaths, "routeCascade",
       mirrorFirst = false)
     val tiersServe = filterTiers(tiersRead, keyFilter, "routeCascade")
@@ -1460,7 +1518,7 @@ object RollupStore {
         keyFieldsOf(tiersRead)))(_.filter(_))
     // present tiers fine → coarse, each with (bucket width, horizon)
     val present: Seq[(Long, Long)] = tiersRead.flatten.flatMap(t =>
-      t.horizon.map(h => (storeBucketNs(t.df, t.path), h)))
+      t.horizon.map(h => (t.bucketNs, h)))
     val (g, touchedAtG) = fitCascadeGrain(present, since, until,
       maxPoints, floorW = 1L)
     val (lo, hi) = widenTo(since, until, g)
@@ -1504,21 +1562,21 @@ object RollupStore {
     require(storePaths.size >= 2,
       "routeStoreCascade routes over a mirror plus tiers — for a " +
         "single store use route()")
-    // every store read ONCE: frames + horizons for stitching, widths for
-    // routing; the loud horizonless-non-first check fires here too, so
-    // wiring-bug detection never depends on which range a dashboard asks
+    // every store opened ONCE through its snapshot: frames + horizons for
+    // stitching, widths for routing; the loud horizonless-non-first check
+    // fires here too, so wiring-bug detection never depends on which
+    // range a dashboard asks
     val tiersRead = readTiers(spark, storePaths, "routeStoreCascade",
       mirrorFirst = true)
     val tiersServe = filterTiers(tiersRead, keyFilter, "routeStoreCascade")
     // present coarser tiers fine → coarse: (bucket width, horizon)
     val present: Seq[(Long, Long)] = tiersRead.tail.flatten.flatMap(t =>
-      t.horizon.map(h => (storeBucketNs(t.df, t.path), h)))
+      t.horizon.map(h => (t.bucketNs, h)))
     // the fine floor: the mirror's width — or, when the mirror is absent
     // or fully aged out (ingest stopped longer than its keep ago), the
     // finest PRESENT tier's width, so the router serves the complete
     // coarser answer instead of dying on an empty store
-    val mirrorOwnW: Option[Long] =
-      tiersRead.head.flatMap(t => widthOf(t.df, t.path))
+    val mirrorOwnW: Option[Long] = tiersRead.head.map(_.bucketNs)
     val mirrorW: Long =
       mirrorOwnW.orElse(present.headOption.map(_._1)).getOrElse(
         throw new IllegalArgumentException(

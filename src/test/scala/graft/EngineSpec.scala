@@ -132,6 +132,51 @@ class EngineSpec extends AnyFunSuite {
     assert(rows.forall(_.getAs[String]("metrics") == "trades"))
   }
 
+  test("meta .block_list/.describe skip in-flight _temporary output and " +
+      "survive a directory vanishing mid-walk") {
+    val dir = SparkTestBase.tempDir("graft-db-tmp")
+    val store = new WritableStore(spark, dir, "m", Seq(
+      StructField("price", DoubleType)), partitionByDay = true)
+    val base = 1650931200L * 1000000000L
+    store.pushMulti(Seq(DataPoint(base, Seq(1.0)),
+      DataPoint(base + 1000L, Seq(2.0))))
+    store.persist()
+    val mDir = new java.io.File(dir, "m")
+    val block = mDir.listFiles().filter(_.getName.startsWith("__day="))
+      .flatMap(_.listFiles()).find(_.getName.endsWith(".parquet")).get
+    // a persist caught mid-write: its output still sits under _temporary
+    val inFlight = new java.io.File(mDir,
+      "_temporary/0/_temporary/attempt_0/__day=2022-04-26/x.parquet")
+    inFlight.getParentFile.mkdirs()
+    java.nio.file.Files.copy(block.toPath, inFlight.toPath)
+    // and a (visible) directory the walk will find gone when it gets there
+    new java.io.File(mDir, "vanished").mkdirs()
+    spark.sparkContext.hadoopConfiguration.set("fs.vanishfs.impl",
+      classOf[VanishingDirFileSystem].getName)
+    for (db <- Seq(dir, s"vanishfs:$dir")) {
+      val blocks = graft.storage.Tables.blockListDf(spark, db, Some("m"))
+        .collect()
+      assert(blocks.length == 1 && blocks(0).getAs[Long]("row_num") == 2L,
+        s"$db: ${blocks.toSeq}")
+      val desc = graft.storage.Tables.describeDf(spark, db, Some("m"))
+        .collect()(0)
+      assert(desc.getAs[Long]("block_num") == 1L, s"$db: $desc")
+      assert(desc.getAs[Long]("row_num") == 2L, s"$db: $desc")
+    }
+  }
+
+  test("Tables.read keeps a user-set AQE minPartitionSize") {
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "2m")
+    try {
+      graft.storage.Tables.read(spark, dbDir, "trades")
+      // only the explicit env override may replace the user's value
+      assert(spark.conf.get(key) ==
+        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "2m"))
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("filter pushdown reaches the parquet scan (uncached path)") {
     val e = new Engine(spark, dbDir)
     val df = e.frame(

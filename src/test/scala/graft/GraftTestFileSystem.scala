@@ -28,3 +28,17 @@ class GraftTestFileSystem extends RawLocalFileSystem {
   override def getFileStatus(f: Path): FileStatus =
     materialize(super.getFileStatus(f))
 }
+
+/** [[GraftTestFileSystem]] under `vanishfs://` whose directories named
+  * `vanished` disappear between being listed in their parent and being
+  * listed themselves — the race a concurrent writer's committing
+  * temporary tree or a compaction swap opens under a recursive walk.
+  * Registered per-test via `fs.vanishfs.impl`. */
+class VanishingDirFileSystem extends GraftTestFileSystem {
+  override def getUri: URI = URI.create("vanishfs:///")
+
+  override def listStatus(f: Path): Array[FileStatus] =
+    if (f.getName == "vanished")
+      throw new java.io.FileNotFoundException(s"$f vanished")
+    else super.listStatus(f)
+}

@@ -1126,4 +1126,83 @@ class RollupStoreSpec extends AnyFunSuite {
     // 200 rows per host: largest b with 200 >= 30*2^b -> b=2 (rate 4)
     assert(fineS.forall(_.getAs[Long]("rate_den") == 4L))
   }
+
+  /** (bucket_ts, n, sum_c, source) of a routed answer, in bucket order. */
+  private def routed(df: org.apache.spark.sql.DataFrame)
+      : Seq[(Long, Long, java.math.BigDecimal, String)] =
+    df.orderBy("bucket_ts").collect().map(r => (r.getAs[Long]("bucket_ts"),
+      r.getAs[Long]("n"), r.getAs[java.math.BigDecimal]("sum_c"),
+      r.getAs[String]("source"))).toSeq
+
+  test("route on an empty or mixed-width store fails on the first call " +
+      "and on every repeated call") {
+    val base = SparkTestBase.tempDir("graft-rollup-bad")
+    val good = base + "/good"
+    RollupStore.write(raw, good, H)
+    // a store tree holding the store's columns and no row
+    val empty = base + "/empty"
+    spark.read.parquet(good).filter(lit(false)).write.parquet(empty)
+    // a second grain appended past the width guard
+    val mixed = base + "/mixed"
+    RollupStore.write(raw, mixed, H)
+    RollupStore.append(raw, mixed, "b#2h", 2 * H, validateWidth = false)
+    for (_ <- 1 to 2) {
+      val e = intercept[IllegalArgumentException] {
+        RollupStore.route(spark, empty, raw, 0L, 3 * Day, maxPoints = 2)
+      }
+      assert(e.getMessage == s"rollup store at $empty is empty")
+      val m = intercept[IllegalStateException] {
+        RollupStore.route(spark, mixed, raw, 0L, 3 * Day, maxPoints = 2)
+      }
+      assert(m.getMessage.contains(s"rollup store at $mixed holds MIXED " +
+        s"bucket widths $H, ${2 * H}"), m.getMessage)
+    }
+  }
+
+  test("route snapshots follow the store: append shows new buckets, " +
+      "compact keeps the answer, tierOff turns it stitched") {
+    val base = SparkTestBase.tempDir("graft-rollup-snap")
+    val stP = base + "/store"
+    RollupStore.write(raw.filter(col("ts") < 2 * Day), stP, H)
+    def coarse() = routed(RollupStore.route(spark, stP, raw, 0L, 3 * Day,
+      maxPoints = 2))
+    val before = coarse()
+    assert(before.map(_._2).sum == 4L && before.forall(_._4 == "store"))
+    assert(coarse() == before) // warm
+    RollupStore.append(raw.filter(col("ts") >= 2 * Day), stP, "b#1", H)
+    val appended = coarse()
+    assert(appended.map(_._2).sum == raw.count(), appended)
+    RollupStore.compact(spark, stP)
+    assert(coarse() == appended)
+    // a store mirroring only days 1-2, then day 0 tiered off raw: the
+    // store gains a horizon, so the next route must stitch
+    val rawP = base + "/raw"
+    val tierP = base + "/tiered"
+    raw.write.parquet(rawP)
+    RollupStore.write(raw.filter(col("ts") >= Day), tierP, H)
+    def tiered() = routed(RollupStore.route(spark, tierP,
+      spark.read.parquet(rawP), 0L, 3 * Day, maxPoints = 2))
+    assert(tiered().forall(_._4 == "store"))
+    RollupStore.tierOff(spark, rawP, tierP, cutoff = Day, bucketNanos = H)
+    val stitched = tiered()
+    assert(stitched.forall(_._4 == "stitched"), stitched)
+    assert(stitched.map(t => (t._1, t._2, t._3)) ==
+      appended.map(t => (t._1, t._2, t._3)))
+  }
+
+  test("a warm route over an unchanged store builds its plan with zero " +
+      "Spark jobs") {
+    val base = SparkTestBase.tempDir("graft-rollup-warm")
+    val stP = base + "/store"
+    val rawP = base + "/raw"
+    raw.write.parquet(rawP)
+    RollupStore.write(raw, stP, H)
+    def build() = RollupStore.route(spark, stP, spark.read.parquet(rawP),
+      0L, 3 * Day, maxPoints = 2)
+    val (cold, coldJobs) = SparkTestBase.countJobs(build())
+    assert(coldJobs > 0) // the probe ran, and the counter sees it
+    val (warm, warmJobs) = SparkTestBase.countJobs(build())
+    assert(warmJobs == 0)
+    assert(routed(warm) == routed(cold))
+  }
 }

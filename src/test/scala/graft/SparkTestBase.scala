@@ -17,6 +17,27 @@ object SparkTestBase {
     s
   }
 
+  /** Run `body` and count the Spark jobs it submits (a listener around
+    * the block, read once the listener bus has drained). Jobs submitted
+    * by other threads meanwhile count too, so specs run it alone. */
+  def countJobs[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   def tempDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix)
     d.toFile.deleteOnExit()

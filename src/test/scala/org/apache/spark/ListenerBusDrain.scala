@@ -1,0 +1,7 @@
+package org.apache.spark
+
+/** The listener bus is private to Spark; a spec that counts events must
+  * wait until the bus has delivered everything posted before it reads. */
+object ListenerBusDrain {
+  def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)
+}
