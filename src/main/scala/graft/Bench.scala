@@ -107,16 +107,8 @@ object Bench {
       true
     } catch { case _: Throwable => false }
 
-  private def buildSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .getOrCreate()
+  private def buildSession(): SparkSession = {
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
@@ -187,8 +179,7 @@ object Bench {
     * JVM per row makes every row AN isolated measurement by
     * construction, so one artifact's tail agrees with its own head. */
   private def runRowChild(sfDir: String, name: String): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = buildSession(cpus)
+    val spark = buildSession()
     // untimed warm-up: JIT, codegen, first-touch scans, and this row's
     // per-process fixture build all land here, exactly as the full-run
     // warm-up pass paid them
@@ -341,7 +332,6 @@ object Bench {
       runRowChild(args(1), args(2)); return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     // capture-window evidence FIRST (the invocation state), then
     // normalize it (env-gated, default ON) — see BASELINE.md's
@@ -356,7 +346,7 @@ object Bench {
     memAtInvoke.foreach { case (k, v) =>
       System.err.println(f"[bench] meminfo $k%-14s $v%12d kB") }
     System.err.println(s"[bench] cache-normalized        $normalized")
-    val spark = buildSession(cpus)
+    val spark = buildSession()
 
     // optional regex filter for local iteration on one query's variance;
     // the driver never sets it, so the headline set is what it measures

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import graft.ql.Engine
 
 /** One-shot / REPL runner (the reference's CLI + REPL surface,
@@ -22,14 +21,7 @@ object Cli {
         case q      => query = Some(q); i += 1
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-cli")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().appName("graft-cli").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val engine = new Engine(spark, dbDir)
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Multi-executor smoke drive (`local-cluster[2,2,…]`) — the one
@@ -44,7 +43,7 @@ object ClusterSmoke {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder()
       .master("local-cluster[2,2,1536]")
       .appName("graft-cluster-smoke")
       // the executor JVMs are launched fresh through SPARK_HOME: they
@@ -54,10 +53,8 @@ object ClusterSmoke {
         sys.props("java.class.path"))
       .config("spark.executor.extraJavaOptions",
         addOpens + " -Dio.netty.tryReflectionSetAccessible=true")
+      // one shuffle partition per executor core of the 2×2 cluster
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

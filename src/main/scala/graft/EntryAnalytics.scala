@@ -171,7 +171,6 @@ private[graft] object EntryAnalytics {
       // on the counter tier; the daily read over the streamed store
       // equals the batch recording rule (shares ts_counter_increase's
       // oracle)
-      Tables.configure(s)
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-sctr-$processId-${dirTag(d)}")
       if (base.exists())
@@ -254,7 +253,6 @@ private[graft] object EntryAnalytics {
       // (the rare-band tail at sf0.01 exercises exactly that path) —
       // and the oracle re-derives the seed-frozen map + keep-all
       // fallback from raw, hash-matching every estimate
-      Tables.configure(s)
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-saqps-$processId-${dirTag(d)}")
       if (base.exists())
@@ -318,7 +316,6 @@ private[graft] object EntryAnalytics {
       // route() would have re-aggregated the raw table. The oracle
       // re-derives the same sample and buckets it identically, so the
       // routed ESTIMATES hash-match
-      Tables.configure(s)
       graft.storage.RollupStore.routeSampled(s, rollupStore1h(s, d),
           aqpStorePath(s, d), ns("2024-01-05"), ns("2024-01-06"),
           maxPoints = 1440)
@@ -331,7 +328,6 @@ private[graft] object EntryAnalytics {
       // contract on the sampled path) and the fine zoom serves
       // per-series HT estimates carrying the same key columns the exact
       // keyed store path emits
-      Tables.configure(s)
       // month span / 1488 points = exactly a 30-minute grain, finer
       // than the stored hour — the sampled path, with enough sampled
       // click evidence at every test scale
@@ -351,7 +347,6 @@ private[graft] object EntryAnalytics {
       // contributing rate, not a constant. The oracle re-derives the
       // frozen stratum→rate map from raw (the same 2× ladder) and
       // hash-matches every estimate
-      Tables.configure(s)
       graft.storage.RollupStore.routeSampled(s, keyedStore1h(s, d),
           aqpStratifiedPath(s, d), ns("2024-01-01"), ns("2024-02-01"),
           maxPoints = 1488,
@@ -364,7 +359,6 @@ private[graft] object EntryAnalytics {
       // survivors under replay-stable keys, and estimates from the
       // streamed store equal the one-shot batch build (shared
       // aqp_event_stats oracle)
-      Tables.configure(s)
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-saqp-$processId-${dirTag(d)}")
       if (base.exists())
@@ -622,7 +616,6 @@ private[graft] object EntryAnalytics {
       // continuous-aggregate routing: daily stats answered from the
       // at-rest 1h rollup store alone — the oracle aggregates the RAW
       // table, so equality proves the store's partials compose exactly
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       graft.storage.RollupStore.rollup(s, rollupStore1h(s, d), day)
         .select(col("bucket_ts"), col("n"),
@@ -638,7 +631,6 @@ private[graft] object EntryAnalytics {
       // to 19h's 39) — the oracle re-derives the same grain over raw, so
       // equality proves the routing arithmetic, the widened-budget
       // contract, and the store's composition at a non-day grain
-      Tables.configure(s)
       graft.storage.RollupStore.route(s, rollupStore1h(s, d),
           t(s, d, "events"), ns("2024-01-01"), ns("2024-01-31"),
           maxPoints = 40, distinctCol = Some("user_id"),
@@ -655,7 +647,6 @@ private[graft] object EntryAnalytics {
       // (raw trimmed, 1h rollups kept), yet the stitched daily aggregate
       // equals the raw-table oracle exactly — tier ranges are disjoint
       // whole buckets, so the merge is the same associative fold
-      Tables.configure(s)
       val (rawP, stP) = tieredEvents(s, d)
       graft.storage.RollupStore.tieredRollup(s, rawP, stP,
           86400L * 1000000000L, distinctCol = Some("user_id"),
@@ -674,7 +665,6 @@ private[graft] object EntryAnalytics {
       // the post-horizon raw remnant; the oracle aggregates the
       // NEVER-tiered table at that grain, so equality proves the routed
       // answer is complete
-      Tables.configure(s)
       val (rawP, stP) = tieredEvents(s, d)
       graft.storage.RollupStore.route(s, stP, s.read.parquet(rawP),
           ns("2024-01-01"), ns("2024-01-31"), maxPoints = 2000,
@@ -692,7 +682,6 @@ private[graft] object EntryAnalytics {
       // horizon) — the same associative union compaction uses — so the
       // estimate survives tiering; gated against the exact count with
       // the rollup_store_users rank-error bound (lgK=12 ⇒ 3σ rse ≈ 4.9%)
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val (rawP, stP) = tieredEvents(s, d)
       val st = graft.storage.RollupStore.tieredRollup(s, rawP, stP, day,
@@ -713,7 +702,6 @@ private[graft] object EntryAnalytics {
       // (pre-horizon) vector-add with raw-side counters (post-horizon)
       // into exactly the daily counts a direct pass builds — integer-
       // exact, so this shares rollup_store_p90's value oracle
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val (rawP, stP) = tieredEvents(s, d)
       val st = graft.storage.RollupStore.tieredRollup(s, rawP, stP, day,
@@ -731,7 +719,6 @@ private[graft] object EntryAnalytics {
       // aggregate still equals the raw-table oracle, proving the per-tier
       // horizon windows partition the timeline exactly and the horizon
       // survives compaction's batch-key rewrite
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val (rawP, stH, stD) = cascadeEvents(s, d)
       graft.storage.RollupStore.cascadeRollup(s, rawP, Seq(stH, stD), day,
@@ -747,7 +734,6 @@ private[graft] object EntryAnalytics {
       // the whole month touches the daily tier, so the grain clamps to
       // 1d — the finest resolution every touched tier can serve — and
       // the stitched answer equals the never-tiered table at that grain
-      Tables.configure(s)
       val (rawP, stH, stD) = cascadeEvents(s, d)
       graft.storage.RollupStore.routeCascade(s, rawP, Seq(stH, stD),
           ns("2024-01-01"), ns("2024-01-31"), maxPoints = 2000,
@@ -764,7 +750,6 @@ private[graft] object EntryAnalytics {
       // sketches were union-folded twice (tierOff, then tierOffStore) and
       // still cover exactly the per-day hash sets — same gate as
       // rollup_store_users
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val (rawP, stH, stD) = cascadeEvents(s, d)
       val st = graft.storage.RollupStore.cascadeRollup(s, rawP,
@@ -796,7 +781,6 @@ private[graft] object EntryAnalytics {
       // ...and the aged-off history is still served: the stitched daily
       // read over the SAME trimmed metrics table plus its hourly history
       // store equals the raw-table oracle over the full span
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val (db, stH) = retainedMetricsDb(s, d)
       val rawP = new java.io.File(db, "events").getPath
@@ -814,7 +798,6 @@ private[graft] object EntryAnalytics {
       // to the stored hour over the aged range and the answer equals the
       // pristine table at that grain (the dashboard a TSDB's own tables
       // get)
-      Tables.configure(s)
       val (db, stH) = retainedMetricsDb(s, d)
       val rawP = new java.io.File(db, "events").getPath
       graft.storage.RollupStore.routeCascade(s, rawP, Seq(stH),
@@ -832,7 +815,6 @@ private[graft] object EntryAnalytics {
       // serve clamps first UP to the mirror's 1h buckets, then to the 1d
       // tier the range touches; the stitched answer equals the raw-table
       // daily aggregate
-      Tables.configure(s)
       val (stH, stD) = mirrorCascadeEvents(s, d)
       graft.storage.RollupStore.routeStoreCascade(s, Seq(stH, stD),
           ns("2024-01-01"), ns("2024-01-31"), maxPoints = 2000)
@@ -848,7 +830,6 @@ private[graft] object EntryAnalytics {
       // lifecycle's maintenance call: two clock-injected cycles (samples
       // arriving between, stores compacted after the second) and the
       // raw-less stitched daily read still equals the raw-table oracle
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val (stH, stD) = mirrorRetentionEvents(s, d)
       graft.storage.RollupStore.storeCascadeRollup(s, Seq(stH, stD), day)
@@ -864,7 +845,6 @@ private[graft] object EntryAnalytics {
       // whatever layout "5 days raw, hourly for 10, daily forever"
       // implies, and the stitched daily read still equals the raw-table
       // oracle — policy-computed cutoffs, not hand-placed ones
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val (rawP, stH, stD) = retentionEvents(s, d)
       graft.storage.RollupStore.cascadeRollup(s, rawP, Seq(stH, stD), day,
@@ -880,7 +860,6 @@ private[graft] object EntryAnalytics {
       // were vector-added twice (tierOff, then the store→store tier) and
       // still hold exactly the per-day counts a direct pass builds —
       // integer-exact, so this shares rollup_store_p90's value oracle
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val (rawP, stH, stD) = cascadeEvents(s, d)
       val st = graft.storage.RollupStore.cascadeRollup(s, rawP,
@@ -897,7 +876,6 @@ private[graft] object EntryAnalytics {
       // arrays vector-add into exactly the daily counts a direct pass
       // builds, then the shared exact-integer finisher interpolates —
       // the Prometheus recording-rule serving shape, fully value-oracled
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val st = graft.storage.RollupStore.rollup(s, rollupStore1h(s, d), day)
       val counts = graft.storage.RollupStore.histogramCounts(st, HistBounds,
@@ -916,7 +894,6 @@ private[graft] object EntryAnalytics {
       // rank-error bound vs the EXACT count (5% with an absolute floor,
       // the sketch_overlap convention; lgK=12 ⇒ 3σ rse ≈ 4.9%); the
       // day's row count rides beside it, value-oracled
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val st = graft.storage.RollupStore.rollup(s, rollupStore1h(s, d), day)
         .select(col("bucket_ts"), col("n"), col("distinct_est"))
@@ -936,7 +913,6 @@ private[graft] object EntryAnalytics {
       // the schema) — per-series daily stats answered from the keyed 1h
       // store alone; the oracle aggregates the raw table grouped the
       // same way, so equality proves the keyed partials compose exactly
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       graft.storage.RollupStore.rollup(s, keyedStore1h(s, d), day)
         .select(col("event_type"), col("bucket_ts"), col("n"),
@@ -950,7 +926,6 @@ private[graft] object EntryAnalytics {
       // event types — the merges are associative across keys exactly as
       // across time, so the fold equals the UNKEYED daily aggregate bit
       // for bit (shares rollup_store_daily's oracle)
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       graft.storage.RollupStore.rollup(s, keyedStore1h(s, d), day,
           keepKeys = Some(Nil))
@@ -965,7 +940,6 @@ private[graft] object EntryAnalytics {
       // dimension — n value-oracled, the estimate gated by the documented
       // rank-error bound vs the exact count (rollup_store_users's
       // convention; per-key cardinalities are smaller, same lgK=12 bound)
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val st = graft.storage.RollupStore.rollup(s, keyedStore1h(s, d), day)
         .select(col("event_type"), col("bucket_ts"), col("n"),
@@ -986,7 +960,6 @@ private[graft] object EntryAnalytics {
       // the TIME axis (per series), so the same 30-day/40-point budget
       // that rollup_route resolves to 19h resolves identically here —
       // every event_type series served at that grain from the store
-      Tables.configure(s)
       graft.storage.RollupStore.route(s, keyedStore1h(s, d),
           t(s, d, "events"), ns("2024-01-01"), ns("2024-01-31"),
           maxPoints = 40, distinctCol = Some("user_id"),
@@ -1005,7 +978,6 @@ private[graft] object EntryAnalytics {
       // re-aggregation BEFORE any stitch, instead of stitching every
       // series and filtering client-side; same 19h grain derivation as
       // rollup_keyed_route, oracle filtered to the same series
-      Tables.configure(s)
       graft.storage.RollupStore.route(s, keyedStore1h(s, d),
           t(s, d, "events"), ns("2024-01-01"), ns("2024-01-31"),
           maxPoints = 40, distinctCol = Some("user_id"),
@@ -1024,7 +996,6 @@ private[graft] object EntryAnalytics {
       // per-series whole-table counts, and the shared integer finisher
       // reproduces ts_histogram_quantile's p90 EXACTLY (same oracle) —
       // stored recording rules answer what the raw-table pass answers
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val st = graft.storage.RollupStore.rollup(s, keyedStore1h(s, d), day)
       val counts = graft.storage.RollupStore.histogramCounts(st,
@@ -1039,7 +1010,6 @@ private[graft] object EntryAnalytics {
       // distinct users from the stitched store+raw read, n value-oracled
       // and the estimate gated by the rank-error bound — the
       // rollup_tiered_users proof with the dimension attached
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val (rawP, stP) = keyedTieredEvents(s, d)
       val st = graft.storage.RollupStore.tieredRollup(s, rawP, stP, day,
@@ -1062,7 +1032,6 @@ private[graft] object EntryAnalytics {
       // applyRetention cycle tiers a keyed raw table raw→1h→1d, and the
       // stitched per-series daily read still equals the never-tiered
       // grouped oracle — keys ride every tier hop and every stitch window
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val (rawP, stH, stD) = keyedCascadeEvents(s, d)
       graft.storage.RollupStore.cascadeRollup(s, rawP, Seq(stH, stD), day)
@@ -1077,7 +1046,6 @@ private[graft] object EntryAnalytics {
       // budget touches the daily tier, so the grain clamps to 1d and
       // every event_type series serves complete stitched daily buckets —
       // keys ride the router's stitch exactly as they ride the scan's
-      Tables.configure(s)
       val (rawP, stH, stD) = keyedCascadeEvents(s, d)
       graft.storage.RollupStore.routeCascade(s, rawP, Seq(stH, stD),
           ns("2024-01-01"), ns("2024-01-31"), maxPoints = 2000)
@@ -1096,7 +1064,6 @@ private[graft] object EntryAnalytics {
       // range become stored recording rules. var_num = n·Σv² − (Σv)² is
       // compared as the EXACT integer-valued rational both engines
       // compute in decimal before one double cast
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val (rawP, stP) = varianceTieredEvents(s, d)
       graft.storage.RollupStore.tieredRollup(s, rawP, stP, day)
@@ -1113,7 +1080,6 @@ private[graft] object EntryAnalytics {
       // budget-routed, key-pruned, tier-stitched answer with grain_ns and
       // source riding the columns (the keyed cascade route's oracle,
       // filtered to the one requested series)
-      Tables.configure(s)
       val (rawP, stH, stD) = keyedCascadeEvents(s, d)
       GraftExtensions.registerRouteTvf(s)
       s.sql(
@@ -1132,7 +1098,6 @@ private[graft] object EntryAnalytics {
       // client over gRPC — gets exact-integer Horvitz-Thompson estimates
       // from the at-rest sample instead of scanning raw (shares
       // aqp_event_stats' oracle: same store, same estimator)
-      Tables.configure(s)
       val p = aqpStorePath(s, d)
       GraftExtensions.registerAqpTvf(s)
       s.sql(
@@ -1147,7 +1112,6 @@ private[graft] object EntryAnalytics {
       // still equals the never-tiered grouped oracle — tier windows are
       // key-agnostic (the horizon is global), so every series stitches
       // on the same boundary
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val (rawP, stP) = keyedTieredEvents(s, d)
       graft.storage.RollupStore.tieredRollup(s, rawP, stP, day,
@@ -1185,7 +1149,6 @@ private[graft] object EntryAnalytics {
       // in BOTH dimensions (ZOrderSpec pins the hit fractions); results
       // are layout-independent, which is what the oracle checks
       val (tLo, tHi) = (ns("2024-01-10"), ns("2024-01-15"))
-      Tables.configure(s)
       s.read.parquet(zOrderedEvents(s, d))
         .filter(col("user_id") >= 100L && col("user_id") < 200L &&
           col("ts") >= tLo && col("ts") < tHi)
@@ -2008,7 +1971,6 @@ private[graft] object EntryAnalytics {
       // runs on µs-truncated ts so DuckDB agrees on boundaries; sum_v is
       // omitted (double accumulation order across state updates is not
       // oracle-stable — counts/extrema are).
-      Tables.configure(s)
       val src = tsUs(eventStream(s, d))
       val sess = graft.streaming.StreamIngest.statefulSessionize(
         src.select("user_id", "ts", "value"),

@@ -8,7 +8,6 @@ import graft.model.TimeNano
 import graft.operators.TsOps
 import graft.pipeline.{Dedup, Multimodal, Similarity, Text}
 import graft.ql.Engine
-import graft.storage.Tables
 import graft.EntryFixtures._
 
 /** The LLM-data-pipeline query family (dedup, similarity, text
@@ -873,7 +872,6 @@ private[graft] object EntryPipeline {
       // the remainder arrive THROUGH THE STREAM (per-batch assign + cell-dir
       // append), and the stored probe over the merged index must equal the
       // batch knn_ivf over the full corpus — so it shares that value oracle
-      Tables.configure(s)
       val emb = t(s, d, "embeddings")
       val cents = emb.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
@@ -1248,7 +1246,6 @@ private[graft] object EntryPipeline {
       // dropDuplicatesWithinWatermark keeps an ARBITRARY representative
       // row per fingerprint, so only the deterministic fingerprint set is
       // emitted and compared — it must equal the batch distinct set
-      Tables.configure(s)
       val schema = t(s, d, "documents").schema
       // +1 day: doc_id 0 would land exactly on the initial watermark
       // (epoch 0) and be discarded as late before any state exists
@@ -1264,7 +1261,6 @@ private[graft] object EntryPipeline {
       // live funnel tracking: same greedy stage matching as ts_funnel,
       // per-key state = stage progress; a drained stream emits exactly
       // the batch completion set (shared oracle)
-      Tables.configure(s)
       val src = tsUs(eventStream(s, d))
       val done = graft.streaming.StreamIngest.streamingFunnel(
         src, "user_id", "ts", "event_type",
@@ -1278,7 +1274,6 @@ private[graft] object EntryPipeline {
       // streaming alerting: the exact integer z-test over per-user
       // trailing windows, state = one bounded deque per user; a drained
       // single batch flags exactly the batch set (shared oracle)
-      Tables.configure(s)
       val src = tsUs(eventStream(s, d))
         .select("event_id", "ts", "user_id", "value")
       val flagged = graft.streaming.StreamIngest.streamingZscoreAnomalies(
@@ -1306,7 +1301,6 @@ private[graft] object EntryPipeline {
       // top-k rolls up on the drained sink and equals the batch ranker
       // (shared oracle)
       import s.implicits._
-      Tables.configure(s)
       val qdir = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-bm25q-${processId}_${dirTag(d)}").getPath
       val qdf = Seq((1L, "fast vector scan"), (2L, "stream window agg"),
@@ -1379,7 +1373,6 @@ private[graft] object EntryPipeline {
       // stateless ingest-side twin of embed_outliers: broadcast-centroid
       // argmax in one UDF, same cosine arithmetic — a drained stream
       // emits exactly the batch outlier set, so it shares that oracle
-      Tables.configure(s)
       val emb = t(s, d, "embeddings")
       val cents = emb.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("cid"), col("embedding").as("cvec"))
@@ -1396,7 +1389,6 @@ private[graft] object EntryPipeline {
       // ingest admission gate: stream the corpus against the reference
       // third; admitted = docs whose fingerprint is NOT in the reference
       // (exact — bloom false positives are re-admitted by the anti-join)
-      Tables.configure(s)
       val schema = t(s, d, "documents").schema
       val src = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1413,7 +1405,6 @@ private[graft] object EntryPipeline {
       // ±1-bucket explode keeps it a stateless stream-static equi-join
       // (the raw theta predicate would be unsupported in streaming), so
       // drained pairs equal the batch twin exactly (shared oracle)
-      Tables.configure(s)
       val clicks = t(s, d, "events")
         .filter(col("event_type") === "click")
         .select(col("user_id"), col("ts"), col("event_id"))
@@ -1435,7 +1426,6 @@ private[graft] object EntryPipeline {
       // stream-static equi-join (a streaming theta-join would be
       // unsupported); the rollup is a complete-mode agg. A drained
       // stream equals the batch ts_interval_join (shared oracle)
-      Tables.configure(s)
       val ev = tsUs(t(s, d, "events"))
       val sessions = TsOps.sessionize(ev.select("user_id", "ts"),
           3600L * 1000000000L, Seq("user_id"))
@@ -1458,7 +1448,6 @@ private[graft] object EntryPipeline {
       // state is the |keys|·(|bounds|+1) counter matrix itself; the
       // drained counts run the identical exact-integer interpolation
       // finisher, so the twin shares the batch oracle
-      Tables.configure(s)
       val bounds = Seq(500L, 1000L, 2500L, 5000L, 10000L, 25000L)
       val counts = TsOps.histogramBuckets(eventStream(s, d),
         Seq("event_type"), bounds)
@@ -1471,7 +1460,6 @@ private[graft] object EntryPipeline {
     "stream_heatmap" -> ((s, d) => {
       // live dow×hour activity matrix: complete-mode agg whose state is
       // at most 168 counters — the cheapest possible live dashboard
-      Tables.configure(s)
       val src = tsUs(eventStream(s, d))
       val agg = TsOps.heatmap(src)
       runStreamToTable(s, agg, "stream_heatmap_out", mode = "complete")
@@ -1481,7 +1469,6 @@ private[graft] object EntryPipeline {
       // live cohort retention: the user-day ledger emits each (user, day)
       // once with its cohort tag; the rollup on the drained sink equals
       // the batch retention matrix (shared oracle)
-      Tables.configure(s)
       val src = tsUs(eventStream(s, d))
       val ledger = graft.streaming.StreamIngest.streamingUserDays(
         src, "user_id", "ts", dayNanos = 86400L * 1000000000L)
@@ -1494,7 +1481,6 @@ private[graft] object EntryPipeline {
     "stream_active_users" -> ((s, d) => {
       // live DAU/WAU off the same drained user-day ledger (the batch
       // explode-and-count shape applied to the sink; shared oracle)
-      Tables.configure(s)
       val src = tsUs(eventStream(s, d))
       val ledger = graft.streaming.StreamIngest.streamingUserDays(
         src, "user_id", "ts", dayNanos = 86400L * 1000000000L)
@@ -1509,7 +1495,6 @@ private[graft] object EntryPipeline {
       // live transition feed: pair rows stream out append-mode; the
       // count rollup runs on the drained sink table, which then equals
       // the batch transition matrix (shared oracle)
-      Tables.configure(s)
       val src = tsUs(eventStream(s, d))
       val pairs = graft.streaming.StreamIngest.streamingTransitions(
         src, "user_id", "ts", "event_id", "event_type")
@@ -1535,7 +1520,6 @@ private[graft] object EntryPipeline {
       // live skip-gram counts: the batch vocabulary rides a broadcast
       // into the same pairing UDF; state = complete-mode pair counts
       // (≤ K²/2)
-      Tables.configure(s)
       val docs = t(s, d, "documents")
       val vocab = s.sparkContext.broadcast(
         Text.occurrenceVocab(docs, "text", topK = 100))
@@ -1557,7 +1541,6 @@ private[graft] object EntryPipeline {
       // replaces the batch's vocab join — and the only state is the
       // complete-mode pair-count map, bounded by K²/2 regardless of
       // stream length. A drained stream equals the batch matrix
-      Tables.configure(s)
       val docs = t(s, d, "documents")
       // the SAME vocab helper the batch op uses — the shared-oracle
       // equivalence cannot drift at a rank-100 tie
@@ -1579,7 +1562,6 @@ private[graft] object EntryPipeline {
       // live token leaderboard: complete-mode running counts + top-50;
       // a drained stream's final emission is the batch counts exactly,
       // so it shares text_top_tokens' oracle
-      Tables.configure(s)
       val schema = t(s, d, "documents").schema
       val src = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1593,7 +1575,6 @@ private[graft] object EntryPipeline {
       // appends (n, sum, sumsq) partials under replay-stable keys, and
       // the daily fold over the streamed store equals the direct pass —
       // sums of squares are the same associative merge as everything else
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-rlsv-$processId-${dirTag(d)}")
@@ -1620,7 +1601,6 @@ private[graft] object EntryPipeline {
       // rollup over accumulated partials must equal the raw-table oracle
       // (decimal sums / min / max / counts are associative and
       // order-free), so this twin shares rollup_store_daily's oracle
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-rlst-$processId-${dirTag(d)}")
@@ -1649,7 +1629,6 @@ private[graft] object EntryPipeline {
       // partial row per (event_type, bucket) under its replay-stable
       // key, and the per-series daily rollup equals the grouped
       // raw-table oracle — the keyed twin of stream_rollup_store
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-rlkst-$processId-${dirTag(d)}")
@@ -1677,7 +1656,6 @@ private[graft] object EntryPipeline {
       // tier horizon), old buckets age into a daily store, and the
       // raw-less stitched read still equals the raw-table oracle — the
       // mirror serves [horizon, ∞), the daily tier everything below
-      Tables.configure(s)
       val day = 86400L * 1000000000L
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-rlcas-$processId-${dirTag(d)}")
@@ -1708,7 +1686,6 @@ private[graft] object EntryPipeline {
       // store's answers — CMS bit-equal (vector addition is order-free),
       // token totals exact, HLL estimate equal (register-max union is
       // order-free over the same hash set)
-      Tables.configure(s)
       val docs = t(s, d, "documents")
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-sksk-$processId-${dirTag(d)}")
@@ -1741,7 +1718,6 @@ private[graft] object EntryPipeline {
       // live count-min sketch: merge is elementwise sum, so the drained
       // complete-mode state is BIT-equal to the batch sketch of the same
       // rows — compared array-wise in-plan, emitted as a one-row gate
-      Tables.configure(s)
       val schema = t(s, d, "documents").schema
       val src = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1759,7 +1735,6 @@ private[graft] object EntryPipeline {
       // (stream-static join) + capped-vocabulary exact verify. Streaming
       // the same corpus the index holds makes the emitted pair set equal
       // the batch md5 near-dup pipeline, so it shares that value oracle
-      Tables.configure(s)
       val schema = t(s, d, "documents").schema
       val src = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1774,7 +1749,6 @@ private[graft] object EntryPipeline {
       // the decontamination gate on the ingest stream: train docs streamed,
       // eval shingle set static — stateless probe, so the emitted rows are
       // exactly the batch contamination result (shared oracle)
-      Tables.configure(s)
       val schema = t(s, d, "documents").schema
       val src = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1791,7 +1765,6 @@ private[graft] object EntryPipeline {
       // corpus against the streamed index equals the one-shot mine
       // (shares text_dup_spans' oracle) — the rollupIngest discipline on
       // the dedup tier
-      Tables.configure(s)
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-dgst-$processId-${dirTag(d)}")
       if (base.exists())
@@ -1817,7 +1790,6 @@ private[graft] object EntryPipeline {
       // (no driver-collected gram closure — the set is corpus-sized at
       // scale); the drained sink equals the batch transform (shared
       // oracle, rebuilt text included)
-      Tables.configure(s)
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-sexc-$processId-${dirTag(d)}")
       if (base.exists())
@@ -1846,7 +1818,6 @@ private[graft] object EntryPipeline {
       // driver-collected gram set, which is corpus-proportional and
       // cannot exist at 100 TB; the drained sink equals the batch
       // coverage (shared oracle)
-      Tables.configure(s)
       val base = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft-sdsp-$processId-${dirTag(d)}")
       if (base.exists())
@@ -1872,7 +1843,6 @@ private[graft] object EntryPipeline {
       // ingest-side adaptive length gate: band mined from the static
       // corpus, arrivals pass/drop via a stateless broadcast semi join —
       // admitted set equals the batch trim exactly (shared oracle)
-      Tables.configure(s)
       val schema = t(s, d, "documents").schema
       val src = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1889,7 +1859,6 @@ private[graft] object EntryPipeline {
       // mine once from the static corpus, each arriving doc cleans in
       // its own row — stateless, so the emitted rows are exactly the
       // batch removeBoilerplate result (shared oracle)
-      Tables.configure(s)
       val schema = t(s, d, "documents").schema
       val src = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1901,7 +1870,6 @@ private[graft] object EntryPipeline {
       // ingest-side budget admission: one AvailableNow pass over the
       // corpus admits exactly the batch mixSample survivor set (md5 order
       // within the batch, prefix rule over all arrivals) — shared oracle
-      Tables.configure(s)
       val schema = t(s, d, "documents").schema
       val src = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1917,7 +1885,6 @@ private[graft] object EntryPipeline {
       // against its own static RHP signature index — bucket collision is
       // symmetric, so the emitted ordered pair set equals the batch LSH
       // path and shares dedup_embedding_lsh's literal-planes value oracle
-      Tables.configure(s)
       val schema = t(s, d, "embeddings").schema
       val src = s.readStream.schema(schema)
         .option("pathGlobFilter", "embeddings.parquet").parquet(d)
@@ -1935,7 +1902,6 @@ private[graft] object EntryPipeline {
       // watermark, every row emits), so the batch value oracle applies
       // to the streamed output as-is — score docs for keep/drop WHILE
       // the corpus arrives
-      Tables.configure(s)
       val schema = t(s, d, "documents").schema
       val src = s.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -1950,7 +1916,6 @@ private[graft] object EntryPipeline {
       // docs score via a stateless broadcast join and the md5-coin
       // keep decision lands on the drained sink's associative reduce —
       // exactly the batch sampler (shared value oracle)
-      Tables.configure(s)
       val docs = t(s, d, "documents")
       val path = modelStorePaths.computeIfAbsent(d + "#dsir", _ => {
         val p = new java.io.File(sys.props("java.io.tmpdir"),
@@ -1977,7 +1942,6 @@ private[graft] object EntryPipeline {
       // drained to the sink and reduced there. The partials are
       // associative, so the roll-up equals the batch scorer however the
       // source splits into micro-batches (shared value oracle)
-      Tables.configure(s)
       val docs = t(s, d, "documents")
       val path = modelStorePaths.computeIfAbsent(d + "#lm", _ => {
         val p = new java.io.File(sys.props("java.io.tmpdir"),
@@ -2004,7 +1968,6 @@ private[graft] object EntryPipeline {
       // partials drained to the sink and reduced there — associative, so
       // the roll-up equals the batch scorer however the source splits
       // into micro-batches (shared value oracle)
-      Tables.configure(s)
       val docs = t(s, d, "documents")
       val path = modelStorePaths.computeIfAbsent(d + "#clf", _ => {
         val p = new java.io.File(sys.props("java.io.tmpdir"),
@@ -2033,7 +1996,6 @@ private[graft] object EntryPipeline {
       // quantizer runs unchanged inside a micro-batch pipeline — no
       // watermark, every row emits, and the batch quantization value
       // oracle applies to the streamed output as-is
-      Tables.configure(s)
       val schema = t(s, d, "embeddings").schema
       val src = s.readStream.schema(schema)
         .option("pathGlobFilter", "embeddings.parquet").parquet(d)
@@ -2055,7 +2017,6 @@ private[graft] object EntryPipeline {
       // node, so only joined types drive completeness). ts is µs-truncated at the source so DuckDB (µs
       // timestamps) agrees on every boundary; values pass through with no
       // accumulation, so doubles are oracle-stable.
-      Tables.configure(s)
       val src = tsUs(eventStream(s, d))
       val joined = graft.streaming.StreamIngest.streamingAsof(
         src, leftType = "purchase", rightType = "view")

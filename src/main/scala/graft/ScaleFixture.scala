@@ -6,15 +6,14 @@ import org.apache.spark.sql.functions._
 /** Dev harness: materialize a COMPLETE scaled sf-dir (all ten tables, same
   * names/layout contract as `/root/testdata/sf*`) so `graft.Bench` can run
   * the WHOLE headline suite at a larger scale unchanged — just point
-  * `SPARK_GRAFT_SF_DIR` at the output. ScaleProbe measures each operator's
-  * scaling in isolation; this fixture exists to measure the COMPOSITION
-  * (the round-13 verdict's top ask): memory pressure, AQE threshold flips,
-  * broadcast spills, and store-build costs only appear when the full
-  * 35-row suite runs against the larger inputs.
+  * `SPARK_GRAFT_SF_DIR` at the output. The fixture measures the
+  * COMPOSITION (the round-13 verdict's top ask): memory pressure, AQE
+  * threshold flips, broadcast spills, and store-build costs only appear
+  * when the full 35-row suite runs against the larger inputs.
   *
-  * Scaling design (same construction as ScaleProbe, extended to the whole
-  * star schema; every copy is a deterministic transform of the source so
-  * the fixture needs no RNG and regenerates byte-identically):
+  * Scaling design (the whole star schema; every copy is a deterministic
+  * transform of the source so the fixture needs no RNG and regenerates
+  * byte-identically):
   *
   *  - `events` ×K (default 10): copies shifted by 40 days (disjoint time
   *    ranges — the source spans 30), disjoint user/event id spaces. The
@@ -45,22 +44,39 @@ import org.apache.spark.sql.functions._
   *    purchase volume; density stays ~constant).
   *  - remaining dimensions (`customer supplier nation region`): copied
   *    as-is. The headline joins broadcast them; at 100 TB dims stay
-  *    orders of magnitude below facts, and their own slow growth is
-  *    probed separately (ScaleProbe's join rows), not in the composition.
+  *    orders of magnitude below facts, so the composition keeps them
+  *    fixed.
   *
   * Output defaults to /tmp/graft_sf10x; ~150 MB at the default factors.
   * Not part of the driver contract.
   */
 object ScaleFixture {
 
-  /** Build the scaled sf-dir. Deterministic in (src, evK, docK). */
+  /** Build the scaled sf-dir. Deterministic in (src, evK, docK).
+    *
+    * The source timestamps are parquet `TIMESTAMP(MICROS,
+    * isAdjustedToUTC=false)`. Read as `TimestampType` (what
+    * `inferTimestampNTZ=false` gives, and a [[GraftSession]] sets it) they
+    * would be written back `isAdjustedToUTC=true`, which DuckDB reads as
+    * `TIMESTAMPTZ` — so the build reads them as `TIMESTAMP_NTZ` and writes
+    * µs, whatever the caller's session has set, and restores the caller's
+    * values afterwards. */
   def build(spark: SparkSession, src: String, out: String,
       evK: Int, docK: Int): Unit = {
-    // keep the driver-table timestamp physical type on the way out so the
-    // scaled tables read EXACTLY like the source ones (timestamp[us]) —
-    // set here, not only in main's builder, so any session (tests) gets it
-    spark.conf.set("spark.sql.parquet.outputTimestampType",
-      "TIMESTAMP_MICROS")
+    val confs = Seq(
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "true",
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try buildTables(spark, src, out, evK, docK)
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def buildTables(spark: SparkSession, src: String, out: String,
+      evK: Int, docK: Int): Unit = {
     def read(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")
     def copies(k: Int)(f: Int => DataFrame): DataFrame =
@@ -131,13 +147,7 @@ object ScaleFixture {
     val evK = sys.env.getOrElse("SPARK_GRAFT_SCALE_EVENTS", "10").toInt
     val docK = sys.env.getOrElse("SPARK_GRAFT_SCALE_DOCS", "4").toInt
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     build(spark, src, out, evK, docK)
     spark.stop()

@@ -26,8 +26,17 @@ object SparkEntry {
         "select eid, etype, val from events where ts in ('2024-01-05', '2024-01-20');")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    EntryQl.queries ++ EntryAnalytics.queries ++ EntryPipeline.queries
+  /** Every registered query, each run on a [[Tables.configure]]d session
+    * — a [[GraftSession]] already is one; a foreign session (perfbench, a
+    * Connect host) becomes one before the entry builds its plan. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    (EntryQl.queries ++ EntryAnalytics.queries ++ EntryPipeline.queries)
+      .map { case (name, f) =>
+        name -> { (s: SparkSession, d: String) =>
+          Tables.configure(s)
+          f(s, d)
+        }
+      }
 
   def oracleSql: Map[String, String] = {
     val base = EntryQl.oracles ++ EntryAnalyticsOracles.oracles ++

@@ -140,7 +140,7 @@ object GraphOps {
     * but the final scalar row. That row materializes INSIDE the call so
     * the persisted frames release before return — repeated calls over
     * different edge frames leak no cache entries. Consequence for plan
-    * tooling: the returned frame is a 1-row local table, so PlanDump
+    * tooling: the returned frame is a 1-row local table, so PlanSnap
     * shows no join machinery for this operator — inspect the counting
     * plan via [[trianglesPlan]] instead (PlanAuditSpec does exactly
     * that); the no-cache-residue guarantee is worth the opaque dump.

@@ -808,9 +808,9 @@ object Similarity {
   /** Mergeable-aggregator formulation of the top-k tail ([[TopKAgg]] via
     * ObjectHashAggregate). Identical contract and output; kept NON-default
     * because it measured 2× slower than [[rankTopKWindow]] (see
-    * [[rankTopK]]) — retained so the ScaleProbe A/B keeps re-measuring the
-    * trade as data/Spark versions move, and as the fallback shape if a
-    * future scoring expression defeats WindowGroupLimit. */
+    * [[rankTopK]]) — kept as the reference `PipelineSpec` checks the
+    * window path's tie contract (id-asc among equal scores) against, and
+    * as the fallback shape if a scoring expression defeats WindowGroupLimit. */
   private[graft] def rankTopKAgg(cands: DataFrame, k: Int, idCol: String,
       qidCol: String, excludeSelf: Boolean, score: Column): DataFrame = {
     val topk = udaf(new TopKAgg(k))

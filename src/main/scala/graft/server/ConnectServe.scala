@@ -53,17 +53,9 @@ object ConnectServe {
     val db = args.headOption.getOrElse(
       sys.env.getOrElse("GRAFT_DB", "/root/testdata/sf0.001"))
     val port = args.lift(1).getOrElse("15002")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      String.valueOf(Runtime.getRuntime.availableProcessors()))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.GraftSession.builder()
       .appName("graft-connect")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.connect.grpc.binding.port", port)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     start(spark, db)
     println(s"graft Spark Connect: serving $db on sc://localhost:$port")

@@ -442,14 +442,8 @@ object QueryServer {
         case _        => i += 1
       }
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-server")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark: SparkSession = graft.GraftSession.builder()
+      .appName("graft-server").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val actual = new QueryServer(new Engine(spark, dbDir), port).start()
     System.err.println(s"[graft-server] listening on $actual (db=$dbDir)")

@@ -1644,9 +1644,9 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("top-k aggregator matches the window formulation, ties included") {
-    // heap path (default rankTopK) vs window path (rankTopKWindow) on a
-    // tie-heavy corpus: duplicated vectors make equal cosines, where the
-    // contract demands id-asc order
+    // window path (the default: knnBrute's rankTopK → rankTopKWindow) vs
+    // the heap aggregator (rankTopKAgg) on a tie-heavy corpus: duplicated
+    // vectors make equal cosines, where the contract demands id-asc order
     val base = (0L until 40L).map { i =>
       val a = (i % 7).toFloat; val b = ((i / 7) % 5).toFloat
       (i, Array(a + 0.1f, b + 0.1f, 1.0f))

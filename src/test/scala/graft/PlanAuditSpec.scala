@@ -890,4 +890,42 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("events.parquet"), p)
     assert(!p.contains("CartesianProduct"), p)
   }
+
+  test("pipeline_train_prep: the composed head fans out ONCE — no " +
+      "round-robin exchange stacked on another") {
+    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import org.apache.spark.sql.execution.{FilterExec, InputAdapter,
+      ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    // the pipeline_train_prep call, on pure lineage (no pins) so every
+    // copy of the head stays in the plan: trainPrep fans out before its
+    // scrub, and curate's own defensive fanOut must see that and add none
+    val docs = graft.storage.Tables.read(spark, d, "documents")
+    val out = graft.pipeline.Pipelines.trainPrep(
+      docs.filter(pmod(col("doc_id"), lit(97L)) =!= 0), "doc_id", "text",
+      docs.filter(pmod(col("doc_id"), lit(97L)) === 0),
+      Map("en" -> 2000L, "de" -> 600L, "es" -> 600L, "fr" -> 500L),
+      contextLen = 128, numBuckets = 4, materialize = false)
+    val physical = out.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    def roundRobin(p: SparkPlan): Boolean = p match {
+      case e: ShuffleExchangeExec =>
+        e.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+      case _ => false
+    }
+    // a round-robin exchange reached through narrow per-row ops only
+    def fannedBelow(p: SparkPlan): Boolean = p match {
+      case e if roundRobin(e) => true
+      case _: ProjectExec | _: FilterExec | _: WholeStageCodegenExec |
+          _: InputAdapter => fannedBelow(p.children.head)
+      case _ => false
+    }
+    val fans = physical.collect { case e if roundRobin(e) => e }
+    assert(fans.nonEmpty, physical)
+    assert(!fans.exists(e => fannedBelow(e.children.head)), physical)
+  }
 }

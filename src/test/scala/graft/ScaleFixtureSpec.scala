@@ -18,8 +18,50 @@ class ScaleFixtureSpec extends AnyFunSuite {
 
   private lazy val out: String = {
     val d = SparkTestBase.tempDir("graft-scalefix")
+    // the engine's read confs (timestamp[us] as TimestampType) must not
+    // leak into what the fixture writes
+    graft.storage.Tables.configure(spark)
     ScaleFixture.build(spark, src, d, evK, docK)
     d
+  }
+
+  /** The schema the files declare. Spark-written files carry their Spark
+    * schema in the footer and read back as written; the source's are
+    * inferred from the parquet types. Inference must honour the timestamp
+    * annotation (`inferTimestampNTZ` on) for the two to be comparable —
+    * the engine's setting maps every timestamp to `TimestampType`. */
+  private def filesSchema(path: String) = {
+    val k = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val prev = spark.conf.getOption(k)
+    spark.conf.set(k, "true")
+    try spark.read.parquet(path).schema
+    finally prev.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+  }
+
+  /** Parquet logical type of every timestamp column of a table (a file,
+    * or a directory of part files — all parts must agree). */
+  private def footerTsTypes(path: String): Map[String, String] = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+    import scala.jdk.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val files = fs.listStatus(root).toSeq.map(_.getPath)
+      .filter(_.getName.endsWith(".parquet"))
+    val perFile = files.map { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try r.getFooter.getFileMetaData.getSchema.getFields.asScala.collect {
+        case c if c.getLogicalTypeAnnotation
+            .isInstanceOf[TimestampLogicalTypeAnnotation] =>
+          c.getName -> c.getLogicalTypeAnnotation.toString
+      }.toMap
+      finally r.close()
+    }
+    assert(perFile.nonEmpty && perFile.distinct.size == 1, s"$path: $perFile")
+    perFile.head
   }
 
   private def srcT(n: String) = spark.read.parquet(s"$src/$n.parquet")
@@ -35,7 +77,15 @@ class ScaleFixtureSpec extends AnyFunSuite {
   test("schemas are field-for-field identical to the source tables") {
     for (t <- Seq("events", "documents", "embeddings", "orders", "lineitem",
         "customer", "supplier", "part", "nation", "region"))
-      assert(outT(t).schema === srcT(t).schema, t)
+      assert(filesSchema(s"$out/$t.parquet") ===
+        filesSchema(s"$src/$t.parquet"), t)
+    // the footers themselves: TIMESTAMP(MICROS,false) must not come back
+    // as (MICROS,true), which DuckDB reads as TIMESTAMPTZ
+    for (t <- Seq("events", "orders", "lineitem")) {
+      val want = footerTsTypes(s"$src/$t.parquet")
+      assert(want.nonEmpty, t)
+      assert(footerTsTypes(s"$out/$t.parquet") === want, t)
+    }
   }
 
   test("copy 0 is the source verbatim; copies occupy disjoint id spaces") {

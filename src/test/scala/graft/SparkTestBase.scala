@@ -3,14 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 object SparkTestBase {
+  /** The shared test session: the [[GraftSession]] every graft main runs
+    * on, pinned to 4 cores so plans and partition counts do not depend on
+    * the host. */
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder()
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", tempDir("graft-warehouse"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
