@@ -480,7 +480,7 @@ object Similarity {
       cidCol: String, cvecCol: String, qidCol: String, qvecCol: String)
       : (DataFrame, DataFrame) = {
     val livePath = new org.apache.hadoop.fs.Path(path)
-    recoverCompact(
+    graft.storage.AtomicDir.recoverCompact(
       livePath.getFileSystem(spark.sessionState.newHadoopConf()), livePath)
     val qCellsPlan = probeCells(centroids, queries, nprobe, cidCol, cvecCol,
       qidCol, qvecCol)
@@ -608,7 +608,8 @@ object Similarity {
       cidCol: String = "cid", idCol: String = "vec_id"): Unit = {
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    recoverCompact(fs, live) // heal a crash between a prior swap's renames
+    // heal a crash between a prior swap's renames
+    graft.storage.AtomicDir.recoverCompact(fs, live)
     graft.storage.AtomicDir.compactPublish(spark, path, "compactIvf") { tmp =>
       // dropDuplicates doubles as the ingest repair: foreachBatch appends
       // are at-least-once (a crash between a batch's files landing and its
@@ -619,21 +620,6 @@ object Similarity {
         .repartition(col(cidCol))
         .write.mode("overwrite").partitionBy(cidCol).parquet(tmp)
     }
-  }
-
-  /** Crash recovery for [[compactIvf]]'s swap window: a kill between
-    * `live → old` and `tmp → live` leaves the only complete copy at
-    * `.compact-old` — promote it back. Called by [[compactIvf]] and
-    * [[ivfKnnStored]] so the next access self-heals. */
-  private[graft] def recoverCompact(fs: org.apache.hadoop.fs.FileSystem,
-      live: org.apache.hadoop.fs.Path): Unit = {
-    val old = new org.apache.hadoop.fs.Path(live.toString + ".compact-old")
-    if (!fs.exists(live) && fs.exists(old) && !fs.rename(old, live)
-        // two readers can race to heal the same crashed swap: the
-        // loser's rename fails AFTER the winner restored the tree —
-        // re-check before declaring the (now healthy) store broken
-        && !fs.exists(live))
-      throw new java.io.IOException(s"compactIvf recovery: cannot restore $old")
   }
 
   /** IVF probe against a [[writeIvf]]-stored corpus. The query set's probe

@@ -385,7 +385,7 @@ private[pipeline] trait TextClassifier { self: Text.type =>
       path: String): Unit = {
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.pipeline.Similarity.recoverCompact(fs, live)
+    graft.storage.AtomicDir.recoverCompact(fs, live)
     graft.storage.AtomicDir.compactPublish(spark, path,
       "compact classifier counts") { tmp =>
       val key = s"compact-${java.util.UUID.randomUUID().toString.take(8)}"

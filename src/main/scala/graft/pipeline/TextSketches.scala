@@ -374,7 +374,7 @@ private[pipeline] trait TextSketches { self: Text.type =>
       path: String, groupCol: String = "source"): Unit = {
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    Similarity.recoverCompact(fs, live)
+    graft.storage.AtomicDir.recoverCompact(fs, live)
     graft.storage.AtomicDir.compactPublish(spark, path,
       "compactSketchStore") { tmp =>
       spark.read.parquet(path)

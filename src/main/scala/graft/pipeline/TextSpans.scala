@@ -270,7 +270,7 @@ private[pipeline] trait TextSpans { self: Text.type =>
       path: String): Unit = {
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.pipeline.Similarity.recoverCompact(fs, live)
+    graft.storage.AtomicDir.recoverCompact(fs, live)
     graft.storage.AtomicDir.compactPublish(spark, path,
       "compact dup-gram index") { tmp =>
       val key = s"compact-${java.util.UUID.randomUUID().toString.take(8)}"

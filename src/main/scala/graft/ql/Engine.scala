@@ -210,21 +210,22 @@ object Output {
     val (cols, rows, truncated) = renderRows(df, tz, formatDatetime, maxRows)
     val tsIdx = cols.indexOf("ts")
     val colTypes = df.schema.fields
+    def jsonStr(s: String): String = "\"" + s.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
     def jsonVal(s: String, i: Int): String = {
       if (s == "null") "null"
       else colTypes(i).dataType match {
         case _: org.apache.spark.sql.types.NumericType
             if !(i == tsIdx && formatDatetime) => s
         case org.apache.spark.sql.types.BooleanType => s
-        case _ => "\"" + s.flatMap {
-          case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-        } + "\""
+        case _ => jsonStr(s)
       }
     }
     val body = cols.indices.map { i =>
       val vals = rows.map(r => jsonVal(r(i), i)).mkString("[", ",", "]")
-      "\"" + cols(i) + "\":" + vals
+      jsonStr(cols(i)) + ":" + vals
     }
     // a capped result must be distinguishable from a complete one — the
     // marker key is namespaced so it cannot collide with a data column

@@ -18,17 +18,44 @@ import org.apache.spark.sql.SparkSession
   * re-expressed over Hadoop FS paths so it works on object stores too.
   *
   * The in-place compactors (`Similarity.compactIvf`,
-  * `Text.compactSketchStore`, `RollupStore.compact`) share the
-  * `.compact-*` variant below ([[compactPublish]]): compaction READS the
-  * live tree as its build input and must fail loudly when it's absent — a
-  * precondition the build-fresh [[publish]] deliberately doesn't impose.
+  * `Text.compactSketchStore`, the rollup, counter and sample store
+  * `compact`s) share the `.compact-*` variant below ([[compactPublish]]):
+  * compaction READS the live tree as its build input and must fail loudly
+  * when it's absent — a precondition the build-fresh [[publish]]
+  * deliberately doesn't impose. [[recoverCompact]] heals that swap, and
+  * [[heal]] heals both for a tree either swap may have crashed in.
   */
 object AtomicDir {
-  def recover(fs: FileSystem, live: Path, what: String): Unit = {
-    val old = new Path(live.toString + ".build-old")
-    if (!fs.exists(live) && fs.exists(old) && !fs.rename(old, live))
-      throw new java.io.IOException(s"$what recovery: cannot restore $old")
+  /** Crash recovery for [[publish]]'s swap window: a kill between
+    * `live → .build-old` and `.build-tmp → live` leaves the only complete
+    * copy at `.build-old` — promote it back. */
+  def recover(fs: FileSystem, live: Path, what: String): Unit =
+    restore(fs, live, new Path(live.toString + ".build-old"),
+      s"$what recovery")
+
+  /** Crash recovery for [[compactPublish]]'s swap window: a kill between
+    * `live → .compact-old` and `.compact-tmp → live` leaves the only
+    * complete copy at `.compact-old` — promote it back. */
+  private[graft] def recoverCompact(fs: FileSystem, live: Path): Unit =
+    restore(fs, live, new Path(live.toString + ".compact-old"),
+      "compact recovery")
+
+  /** Both recoveries: what every reader and compactor of a store tree
+    * runs first, so the next access self-heals whichever swap crashed. */
+  private[storage] def heal(fs: FileSystem, live: Path, what: String)
+      : Unit = {
+    recover(fs, live, what)
+    recoverCompact(fs, live)
   }
+
+  private def restore(fs: FileSystem, live: Path, old: Path,
+      context: String): Unit =
+    if (!fs.exists(live) && fs.exists(old) && !fs.rename(old, live)
+        // two readers can race to heal the same crashed swap: the
+        // loser's rename fails AFTER the winner restored the tree —
+        // re-check before declaring the (now healthy) store broken
+        && !fs.exists(live))
+      throw new java.io.IOException(s"$context: cannot restore $old")
 
   /** The shared `.compact-*` variant of the swap: compaction READS the
     * live tree as its build input (so no pre-recover of `.build-old`, and
@@ -36,8 +63,8 @@ object AtomicDir {
     * folded tree to `.compact-tmp`, then swaps. One implementation for
     * every compactor (IVF cells, sketch store, rollup store) — the
     * crash-window contract lives here, not in three copies. Heal a prior
-    * crash with [[graft.pipeline.Similarity.recoverCompact]] BEFORE
-    * calling (each compactor already does, as do its read paths).
+    * crash with [[recoverCompact]] BEFORE calling (each compactor
+    * already does, as do its read paths).
     */
   def compactPublish(spark: SparkSession, path: String, what: String)
       (build: String => Unit): Unit = {

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * Layout: ONE parquet tree of per-bucket increase rows
   * `(keys..., bucket, bucket_ns, n_deltas, inc_cents, n_resets,
   * batch_key)`, partitioned by `__day` derived from
-  * `bucket * bucket_ns` (the [[WritableStore]] date-bucket convention, so
-  * range trims drop whole day directories). All three measures are plain
+  * `bucket * bucket_ns` (the [[FileTree]] `__day` convention, so range
+  * trims drop whole day directories). All three measures are plain
   * longs and deltas land in the OBSERVING sample's bucket
   * ([[graft.operators.TsOps.counterIncrease]]'s contract), so partials
   * merge by ADDITION at any coarser grain — a fold over stored rows
@@ -40,10 +40,17 @@ import org.apache.spark.sql.functions._
   * to GB where raw is TB; reads are partition-pruned scans + one
   * combinable aggregation; [[tierOff]] keeps a fine recent window and an
   * old coarse tail exactly like the rollup cascade.
+  *
+  * At rest the store shares [[RollupStore]]'s machinery under its own
+  * read and wording: readers ([[read]], [[readTiered]], [[route]]) open
+  * it through the listing-validated snapshot
+  * ([[RollupStore.storeAtRest]]), so a warm read over an unchanged store
+  * builds its plan with no Spark job; writers ([[append]], [[compact]],
+  * [[tierOff]]) read it directly through the shared width probe.
   */
 object CounterStore {
 
-  private val DayNs = 86400L * 1000000000L
+  private val What = "counter store"
 
   private val ReservedCols: Set[String] = Set("bucket", "bucket_ns",
     "n_deltas", "inc_cents", "n_resets", "batch_key",
@@ -63,16 +70,15 @@ object CounterStore {
     keyColsOf(df)
   }
 
-  /** `__day` partition value — the bucket's start instant floor-divided
-    * to days, the shared [[WritableStore]] integer derivation. */
-  private def dayCol(bucketNanos: Long) = date_from_unix_date(
-    expr(s"((bucket * ${bucketNanos}L) - pmod(bucket * ${bucketNanos}L, " +
-      s"${DayNs}L)) div ${DayNs}L").cast("int")).cast("string")
+  /** The store's own read: plain parquet, one footer's schema. */
+  private def storeRead(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path)
 
-  /** One batch's rows, folded to one row per (keys, bucket) and stamped
-    * with the store's self-description. The fold makes the append shape
-    * canonical whether the producer handed per-bucket rows (batch
-    * counterIncrease) or finer partials.
+  /** One batch's rows (or, for [[compact]], the replay-deduped store),
+    * folded to one row per (keys, bucket) and stamped with the store's
+    * self-description. The fold makes the append shape canonical whether
+    * the producer handed per-bucket rows (batch counterIncrease) or finer
+    * partials.
     *
     * ALIGNED WRITES: the frame repartitions on `__day` before the
     * partitioned write, so each day directory receives ONE file instead
@@ -90,7 +96,8 @@ object CounterStore {
         sum("n_resets").as("n_resets"))
       .withColumn("bucket_ns", lit(bucketNanos))
       .withColumn("batch_key", lit(batchKey))
-      .withColumn(WritableStore.PartitionCol, dayCol(bucketNanos))
+      .withColumn(WritableStore.PartitionCol,
+        FileTree.dayCol(s"bucket * ${bucketNanos}L"))
       .repartition(col(WritableStore.PartitionCol))
   }
 
@@ -98,7 +105,7 @@ object CounterStore {
     * whole tree (two-rename; a crash leaves a complete store). */
   def write(increase: DataFrame, path: String, bucketNanos: Long): Unit = {
     require(bucketNanos > 0, s"bucketNanos must be positive: $bucketNanos")
-    AtomicDir.publish(increase.sparkSession, path, "counter store") { tmp =>
+    AtomicDir.publish(increase.sparkSession, path, What) { tmp =>
       canonical(increase, "base", bucketNanos)
         .write.partitionBy(WritableStore.PartitionCol).parquet(tmp)
     }
@@ -123,13 +130,13 @@ object CounterStore {
 
   private[graft] def requireGrain(spark: SparkSession, path: String,
       bucketNanos: Long, context: String): Unit =
-    storeWidthOpt(spark, path).foreach(bn => require(bn == bucketNanos,
+    storeWidth(spark, path).foreach(bn => require(bn == bucketNanos,
       s"$context: counter store at $path holds $bn-ns buckets; appending " +
         s"$bucketNanos-ns rows would mix grains in one store"))
 
   private[graft] def requireKeys(spark: SparkSession, path: String,
       keyCols: Seq[String], context: String): Unit =
-    readable(spark, path).foreach { df =>
+    RollupStore.healedOrNone(spark, path, What, storeRead).foreach { df =>
       val have = keyColsOf(df)
       require(have.sorted == keyCols.sorted,
         s"$context: counter store at $path is keyed by " +
@@ -138,70 +145,21 @@ object CounterStore {
           "key set")
     }
 
-  private def storeWidthOpt(spark: SparkSession, path: String)
-      : Option[Long] =
-    readable(spark, path).flatMap { df =>
-      df.select("bucket_ns").distinct().collect()
-        .map(_.getLong(0)).sorted.toSeq match {
-        case Seq(bn) => Some(bn)
-        case Seq() => None
-        case ws => throw new IllegalStateException(
-          s"counter store at $path holds MIXED bucket widths " +
-            s"${ws.mkString(", ")} — one store holds exactly one grain")
-      }
-    }
+  /** The writers' width probe: a direct read, None for an absent,
+    * schema-less or fully-trimmed store. */
+  private def storeWidth(spark: SparkSession, path: String): Option[Long] =
+    RollupStore.storeWidthOpt(spark, path, What, storeRead)
 
-  private def readable(spark: SparkSession, path: String)
-      : Option[DataFrame] = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(live)) None
-    else {
-      AtomicDir.recover(fs, live, "counter store")
-      graft.pipeline.Similarity.recoverCompact(fs, live)
-      try Some(spark.read.parquet(path))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    }
-  }
+  /** The readers' open: the store's snapshot, None when its tree lists
+    * no data file. */
+  private def atRest(spark: SparkSession, path: String)
+      : Option[RollupStore.StoreSnapshot] =
+    RollupStore.storeAtRest(spark, path, What, storeRead)
 
-  /** The tier horizon, mined from the deterministic `tier-<cutoffNs>`
-    * batch keys and from the `compact-<uuid>-h<cutoff>` keys [[compact]]
-    * stamps — None if never tiered into. */
-  private def tierHorizon(stored: DataFrame): Option[Long] = {
-    val fromTier = when(col("batch_key").startsWith("tier-"),
-      expr("CAST(substring(batch_key, 6) AS LONG)"))
-    val fromCompact = expr(
-      "CAST(nullif(regexp_extract(batch_key, " +
-        "'^compact-[0-9a-f]+-h(-?[0-9]+)$', 1), '') AS LONG)")
-    val r = stored.agg(max(coalesce(fromTier, fromCompact))).head()
-    if (r.isNullAt(0)) None else Some(r.getLong(0))
-  }
-
-  /** Replay-deduped partial rows scoped to `[since, until)` bucket-start
-    * nanos, with `__day` directory pruning — the shared front half of
-    * every read. */
-  private def scoped(spark: SparkSession, path: String,
-      since: Option[Long], until: Option[Long]): DataFrame = {
-    val df = readable(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"counter store at $path is absent or empty"))
-    val bn = storeWidthOpt(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"counter store at $path is empty"))
-    def dayStr(nanos: Long): String = java.time.LocalDate.ofEpochDay(
-      Math.floorDiv(nanos, DayNs)).toString
-    val startNs = col("bucket") * lit(bn)
-    val conds =
-      since.map(v => startNs >= lit(v)).toSeq ++
-        until.map(v => startNs < lit(v)).toSeq ++
-        since.map(v =>
-          col(WritableStore.PartitionCol) >= lit(dayStr(v))) ++
-        until.map(v =>
-          col(WritableStore.PartitionCol) <= lit(dayStr(v - 1)))
-    conds.reduceOption(_ && _).fold(df)(df.filter)
-      .dropDuplicates(keyColsOf(df) ++
-        Seq("bucket", "bucket_ns", "batch_key"))
-  }
+  private def opened(spark: SparkSession, path: String)
+      : RollupStore.StoreSnapshot =
+    atRest(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"counter store at $path is absent or empty"))
 
   /** Answer at `factor`× the stored grain from the store alone: replay
     * duplicates dropped, partials summed per (keys, coarse bucket) via
@@ -212,7 +170,21 @@ object CounterStore {
       since: Option[Long] = None, until: Option[Long] = None,
       keyFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(factor >= 1, s"bucket ratio must be positive: $factor")
-    val part0 = scoped(spark, path, since, until)
+    val snap = opened(spark, path)
+    fold(snap.df, snap.bucketNs, factor, since, until, keyFilter)
+  }
+
+  /** [[read]] over an already-read store frame of width `bucketNs`:
+    * scoped to `[since, until)` bucket-start nanos with `__day`
+    * directory pruning, replay-deduped, and summed per (keys, coarse
+    * bucket). */
+  private def fold(stored: DataFrame, bucketNs: Long, factor: Long,
+      since: Option[Long], until: Option[Long],
+      keyFilter: Option[org.apache.spark.sql.Column]): DataFrame = {
+    val part0 = FileTree.scope(stored, col("bucket") * lit(bucketNs),
+        since, until)
+      .dropDuplicates(keyColsOf(stored) ++
+        Seq("bucket", "bucket_ns", "batch_key"))
     // key pushdown, RollupStore.route's contract: validated against the
     // key schema (a value-column predicate would filter partial rows
     // before the fold), applied before the fold so the predicate reaches
@@ -232,27 +204,15 @@ object CounterStore {
     * rule). */
   def compact(spark: SparkSession, path: String): Unit = {
     val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.pipeline.Similarity.recoverCompact(fs, live)
+    AtomicDir.heal(live.getFileSystem(spark.sessionState.newHadoopConf()),
+      live, What)
     AtomicDir.compactPublish(spark, path, "compact counter store") { tmp =>
-      val live0 = spark.read.parquet(path)
-      val bn = storeWidthOpt(spark, path).getOrElse(
-        throw new IllegalArgumentException(
-          s"counter store at $path is empty"))
-      val key = tierHorizon(live0).fold(
-        s"compact-${java.util.UUID.randomUUID().toString.take(8)}")(h =>
-        s"compact-${java.util.UUID.randomUUID().toString.take(8)}-h$h")
-      val keys = keyColsOf(live0)
-      live0
-        .dropDuplicates(keys ++ Seq("bucket", "bucket_ns", "batch_key"))
-        .groupBy((keys :+ "bucket").map(col): _*)
-        .agg(sum("n_deltas").as("n_deltas"),
-          sum("inc_cents").as("inc_cents"),
-          sum("n_resets").as("n_resets"))
-        .withColumn("bucket_ns", lit(bn))
-        .withColumn("batch_key", lit(key))
-        .withColumn(WritableStore.PartitionCol, dayCol(bn))
-        .repartition(col(WritableStore.PartitionCol)) // one file per day
+      val live0 = storeRead(spark, path)
+      val (width, horizon) = RollupStore.storeMetaProbe(live0, path, What)
+      canonical(live0.dropDuplicates(keyColsOf(live0) ++
+          Seq("bucket", "bucket_ns", "batch_key")),
+          RollupStore.compactKey(horizon),
+          RollupStore.nonEmpty(width, path, What))
         .write.partitionBy(WritableStore.PartitionCol).parquet(tmp)
     }
   }
@@ -261,52 +221,33 @@ object CounterStore {
     * start nanos, aligned to the coarse grain) fold `factor`× coarser
     * into the coarse store under the deterministic `tier-<cutoff>` key,
     * then leave the fine store (whole-day directory drops when the
-    * cutoff is day-aligned, atomic rewrite otherwise). IDEMPOTENT like
-    * [[RollupStore.tierOff]]: a retry re-appends under the SAME key and
-    * the replay dedup collapses it; run with appends to the affected
-    * range quiesced. */
+    * cutoff is day-aligned, atomic rewrite otherwise —
+    * [[RollupStore.trimBelow]]). IDEMPOTENT like [[RollupStore.tierOff]]:
+    * a retry re-appends under the SAME key and the replay dedup
+    * collapses it; run with appends to the affected range quiesced. */
   def tierOff(spark: SparkSession, finePath: String, coarsePath: String,
       cutoff: Long, factor: Long): Unit = {
     require(factor >= 1, s"bucket ratio must be positive: $factor")
-    val fineBnOpt = storeWidthOpt(spark, finePath)
+    val fineBnOpt = storeWidth(spark, finePath)
     if (fineBnOpt.isEmpty) return // fully-trimmed fine store: no-op retry
     val fineBn = fineBnOpt.get
     val coarseBn = fineBn * factor
     require(Math.floorMod(cutoff, coarseBn) == 0,
       s"tierOff: cutoff $cutoff is not aligned to the $coarseBn coarse " +
         "bucket — a straddling bucket would be half fine, half coarse")
-    storeWidthOpt(spark, coarsePath).foreach(bn => require(bn == coarseBn,
+    storeWidth(spark, coarsePath).foreach(bn => require(bn == coarseBn,
       s"tierOff: coarse store at $coarsePath holds $bn-ns buckets, not " +
         s"$coarseBn"))
-    val old = read(spark, finePath, factor, until = Some(cutoff))
+    val old = fold(storeRead(spark, finePath), fineBn, factor, None,
+      Some(cutoff), None)
     if (old.isEmpty) return
     requireKeys(spark, coarsePath, keyColsOf(old), "tierOff")
     append(old, coarsePath, s"tier-$cutoff", coarseBn,
       validateGrain = false) // validated above against the fine grain
-    trimBelow(spark, finePath, cutoff, fineBn)
-  }
-
-  /** Drop fine rows below `cutoff`: whole `__day` directory deletes when
-    * the cutoff is day-aligned (O(days dropped), never a rewrite of the
-    * retained window), atomic two-rename rewrite otherwise. */
-  private def trimBelow(spark: SparkSession, path: String, cutoff: Long,
-      bucketNanos: Long): Unit = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val dayDirs = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-      path, s"${WritableStore.PartitionCol}=*"))).getOrElse(Array.empty)
-    if (dayDirs.nonEmpty && Math.floorMod(cutoff, DayNs) == 0) {
-      val cutDay = java.time.LocalDate.ofEpochDay(
-        Math.floorDiv(cutoff, DayNs)).toString
-      dayDirs.filter(_.getPath.getName.stripPrefix(
-          s"${WritableStore.PartitionCol}=") < cutDay)
-        .foreach(d => fs.delete(d.getPath, true))
-      spark.catalog.refreshByPath(path)
-    } else AtomicDir.publish(spark, path, "trimmed counter store") { tmp =>
-      spark.read.parquet(path)
-        .filter(col("bucket") * lit(bucketNanos) >= cutoff)
-        .write.partitionBy(WritableStore.PartitionCol).parquet(tmp)
-    }
+    val fineLive = new org.apache.hadoop.fs.Path(finePath)
+    RollupStore.trimBelow(spark,
+      fineLive.getFileSystem(spark.sessionState.newHadoopConf()),
+      finePath, "trimmed counter store", cutoff, col("bucket") * lit(fineBn))
   }
 
   /** Budget routing over the counter tier — [[RollupStore.route]]'s
@@ -319,44 +260,40 @@ object CounterStore {
     * floor-div indexes AT the chosen grain, and `grain_ns`/`source` ride
     * the columns so a dashboard sees which tier answered. Counter
     * partials merge by addition at any nesting grain, so every routed
-    * answer equals the direct pass over never-stored samples. */
+    * answer equals the direct pass over never-stored samples. Both tiers
+    * open through their snapshots: a warm route over unchanged stores
+    * builds its plan with no Spark job. */
   def route(spark: SparkSession, finePath: String,
       coarsePath: Option[String], since: Long, until: Long,
       maxPoints: Int,
       keyFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     require(until > since, s"route: empty range [$since, $until)")
     require(maxPoints >= 1, "route needs a positive point budget")
-    val fineBn = storeWidthOpt(spark, finePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"counter store at $finePath is absent or empty"))
-    val coarse = coarsePath.flatMap(p =>
-      readable(spark, p).map(df => (p, df,
-        storeWidthOpt(spark, p), tierHorizon(df))))
-    // present tiers (width, horizon) — a coarse store never tiered into
-    // (or fully trimmed) does not route
-    val present: Seq[(Long, Long)] = coarse.toSeq.flatMap {
-      case (_, _, Some(w), Some(h)) => Seq((w, h))
-      case _ => Nil
-    }
-    val (g, touched) = RollupStore.fitCascadeGrain(present, since, until,
-      maxPoints, floorW = fineBn)
-    require(g % fineBn == 0, s"route: grain $g does not nest $fineBn")
+    val fine = opened(spark, finePath)
+    // a coarse store never tiered into (or fully trimmed) does not route
+    val coarse = coarsePath.flatMap(atRest(spark, _)).filter(_.horizon.nonEmpty)
+    val (g, touched) = RollupStore.fitCascadeGrain(
+      coarse.toSeq.map(c => (c.bucketNs, c.horizon.get)), since, until,
+      maxPoints, floorW = fine.bucketNs)
+    require(g % fine.bucketNs == 0,
+      s"route: grain $g does not nest ${fine.bucketNs}")
     val (lo, hi) = RollupStore.widenTo(since, until, g)
+    def serve(s: RollupStore.StoreSnapshot, lo: Long, hi: Long) =
+      fold(s.df, s.bucketNs, g / s.bucketNs, Some(lo), Some(hi), keyFilter)
     if (touched.isEmpty)
-      read(spark, finePath, g / fineBn, Some(lo), Some(hi), keyFilter)
+      serve(fine, lo, hi)
         .withColumn("grain_ns", lit(g)).withColumn("source", lit("store"))
     else {
       // stitch: the coarse tier serves its pre-horizon window, the fine
       // store the rest — disjoint whole g-buckets (g is a multiple of
       // the coarse width, which is a multiple of the fine width and of
       // the horizon's alignment), merged by one more additive fold
-      val (cPath, _, cwOpt, hOpt) = coarse.get
-      val (cw, h) = (cwOpt.get, hOpt.get)
-      require(g % cw == 0, s"route: grain $g does not nest $cw")
-      val old = read(spark, cPath, g / cw, Some(lo),
-        Some(math.min(h, hi)), keyFilter)
-      val recent = read(spark, finePath, g / fineBn,
-        Some(math.max(h, lo)), Some(hi), keyFilter)
+      val c = coarse.get
+      val h = c.horizon.get
+      require(g % c.bucketNs == 0,
+        s"route: grain $g does not nest ${c.bucketNs}")
+      val old = serve(c, lo, math.min(h, hi))
+      val recent = serve(fine, math.max(h, lo), hi)
       graft.operators.TsOps.counterIncreaseCoarsen(
           old.unionByName(recent), 1L, keyColsOf(old))
         .withColumn("grain_ns", lit(g))
@@ -374,13 +311,16 @@ object CounterStore {
   def readTiered(spark: SparkSession, finePath: String,
       coarsePath: String, factor: Long): DataFrame = {
     require(factor >= 1, s"bucket ratio must be positive: $factor")
-    val coarse = readable(spark, coarsePath)
-    val horizon = coarse.flatMap(tierHorizon)
-    val fine = read(spark, finePath, factor, since = horizon)
+    val coarse = atRest(spark, coarsePath)
+    val horizon = coarse.flatMap(_.horizon)
+    val fineSnap = opened(spark, finePath)
+    val fine = fold(fineSnap.df, fineSnap.bucketNs, factor, horizon, None,
+      None)
     horizon match {
       case None => fine // never tiered: the fine store holds everything
       case Some(h) =>
-        val old = read(spark, coarsePath, 1L, until = Some(h))
+        val c = coarse.get
+        val old = fold(c.df, c.bucketNs, 1L, None, Some(h), None)
         val keys = keyColsOf(old)
         require(keys.sorted == keyColsOf(fine).sorted,
           s"readTiered: tiers carry DIFFERENT key sets — " +

@@ -1,9 +1,16 @@
 package graft.storage
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
+import org.apache.spark.sql.functions._
 
-/** The one recursive walk over a stored tree — the data files a reader of
-  * that tree would see. Plain `listStatus`, never `listFiles` or
+/** How a stored tree sits on disk: the one recursive walk over it (the
+  * data files a reader of that tree would see), the `__day` partition
+  * convention every day-partitioned tree shares (the raw metrics tables
+  * and the rollup, counter and sample stores), and the rule for when a
+  * tree reads as absent.
+  *
+  * The walk is plain `listStatus`, never `listFiles` or
   * `listLocatedStatus`: a `LocatedFileStatus` copies the file's
   * permission, and on `RawLocalFileSystem` loading a permission forks an
   * `ls -ld` per file (the reason Spark's own file index builds its
@@ -30,4 +37,68 @@ object FileTree {
         .flatMap(st => if (st.isDirectory) walk(st.getPath) else Vector(st))
     walk(root)
   }
+
+  private[storage] val DayNs = 86400L * 1000000000L
+
+  /** The `__day` partition value (`yyyy-MM-dd`) holding a nanos instant. */
+  private[storage] def day(nanos: Long): String =
+    java.time.LocalDate.ofEpochDay(Math.floorDiv(nanos, DayNs)).toString
+
+  /** [[day]] as a column over a nanos SQL expression, for writers. Pure
+    * integer floor-div: independent of the session time zone and exact
+    * past 2^53 (`/` on longs returns a double; `div` stays integral), so
+    * the partitions written and [[scope]]'s pruning literals agree. */
+  private[storage] def dayCol(nanosExpr: String): Column =
+    date_from_unix_date(
+      expr(s"(($nanosExpr) - pmod($nanosExpr, ${DayNs}L)) div ${DayNs}L")
+        .cast("int")).cast("string")
+
+  /** `df` filtered to `nanos` in `[since, until)`, plus `extra`. On a
+    * frame carrying `__day` the same bounds also land on the partition
+    * column: the scan prunes whole day directories only on a predicate
+    * over the partition column itself, where the `nanos` bounds alone
+    * prune row groups by footer statistics. */
+  private[storage] def scope(df: DataFrame, nanos: Column,
+      since: Option[Long], until: Option[Long],
+      extra: Seq[Column] = Nil): DataFrame = {
+    val days =
+      if (!df.columns.contains(WritableStore.PartitionCol)) Nil
+      else since.map(v =>
+          col(WritableStore.PartitionCol) >= lit(day(v))).toSeq ++
+        until.map(v => col(WritableStore.PartitionCol) <= lit(day(v - 1)))
+    (since.map(v => nanos >= lit(v)).toSeq ++
+      until.map(v => nanos < lit(v)) ++ days ++ extra)
+      .reduceOption(_ && _).fold(df)(df.filter)
+  }
+
+  /** Whole-day trim: delete every `__day` directory of the tree below the
+    * day `cutoff` starts — O(days dropped), never a rewrite of the
+    * retained window. Each directory delete is atomic. Touches nothing
+    * and returns false when the cutoff is not day-aligned or the tree has
+    * no `__day` directory; the caller then rewrites or rejects. */
+  private[storage] def dropDaysBelow(fs: FileSystem, root: Path,
+      cutoff: Long): Boolean = {
+    val dayDirs = Option(fs.globStatus(
+      new Path(root, s"${WritableStore.PartitionCol}=*")))
+      .getOrElse(Array.empty[FileStatus])
+    if (dayDirs.isEmpty || Math.floorMod(cutoff, DayNs) != 0) false
+    else {
+      val cutDay = s"${WritableStore.PartitionCol}=${day(cutoff)}"
+      dayDirs.filter(_.getPath.getName < cutDay)
+        .foreach(d => fs.delete(d.getPath, true))
+      true
+    }
+  }
+
+  /** A tree's read, or None when the tree is absent or its schema cannot
+    * be inferred (created but empty, or fully trimmed). Any other
+    * analysis failure propagates. The one place that matches Spark's
+    * error text, so a Spark upgrade that rewords it is a one-line fix. */
+  private[storage] def readOrNone(read: => DataFrame): Option[DataFrame] =
+    try Some(read)
+    catch {
+      case e: AnalysisException
+          if e.getMessage.toLowerCase.contains("schema") ||
+            e.getMessage.toLowerCase.contains("path does not exist") => None
+    }
 }

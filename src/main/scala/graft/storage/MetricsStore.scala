@@ -126,18 +126,7 @@ object Tables {
       since: Option[Long], until: Option[Long]): DataFrame = {
     configure(spark)
     val raw = normalizeTs(spark.read.parquet(metricsPath(dbDir, metrics)))
-    def dayStr(nanos: Long): String =
-      java.time.LocalDate.ofEpochDay(
-        Math.floorDiv(nanos, 86400L * 1000000000L)).toString
-    val tsConds =
-      since.map(s => col("ts") >= lit(s)).toSeq ++
-        until.map(u => col("ts") < lit(u)).toSeq
-    val dayConds =
-      if (raw.columns.contains(WritableStore.PartitionCol))
-        since.map(s => col(WritableStore.PartitionCol) >= lit(dayStr(s))).toSeq ++
-          until.map(u => col(WritableStore.PartitionCol) <= lit(dayStr(u - 1))).toSeq
-      else Nil
-    val filtered = (tsConds ++ dayConds).reduceOption(_ && _).fold(raw)(raw.filter)
+    val filtered = FileTree.scope(raw, col("ts"), since, until)
     if (raw.columns.contains(WritableStore.PartitionCol))
       filtered.drop(WritableStore.PartitionCol)
     else filtered

@@ -13,10 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Layout: ONE parquet tree of per-bucket rows
   * `(keys..., bucket_ts, bucket_ns, n, min_c, max_c, sum_c, batch_key)`
-  * partitioned by
-  * `__day` (the [[WritableStore]] date-bucket convention, derived from
-  * `bucket_ts` with the same integer floor-div, so [[rollup]]'s range
-  * predicate prunes whole day directories at file listing). All value
+  * partitioned by `__day` (the [[FileTree]] day convention, derived from
+  * `bucket_ts`, so [[rollup]]'s range predicate prunes whole day
+  * directories at file listing). All value
   * aggregates are DECIMAL(18,2)-exact: sum-of-sums, min-of-mins, max-of-maxes
   * and count-of-counts are associative and order-free, so a rollup over
   * stored rows equals — bit for bit — the aggregate a direct pass over the
@@ -35,8 +34,8 @@ import org.apache.spark.sql.functions._
   * exactly-once without a transactional table format. [[compact]] folds
   * accumulated partials back to one row per bucket under the shared
   * `.compact-*` two-rename protocol (crash self-heal via
-  * [[graft.pipeline.Similarity.recoverCompact]]), preserving the tier
-  * horizon in its batch key so tiered reads survive compaction.
+  * [[AtomicDir.heal]]), preserving the tier horizon in its batch key so
+  * tiered reads survive compaction.
   *
   * Dimensions: writers may pass `keyCols` (e.g. metric/host/event type) —
   * ONE store tree then holds millions of series, keyed per row, instead of
@@ -64,8 +63,6 @@ import org.apache.spark.sql.functions._
   * single aggregated values off those same KB rows).
   */
 object RollupStore {
-
-  private val DayNs = 86400L * 1000000000L
 
   /** The store's own (reserved) column names. Every OTHER column in a
     * store row is a GROUP KEY — the dimensional continuous-aggregate
@@ -103,17 +100,14 @@ object RollupStore {
     * null-keyed rows under parquet schema merge and silently split every
     * later fold. Absent/empty stores accept any key set. */
   private[graft] def requireKeys(spark: SparkSession, path: String,
-      keyCols: Seq[String], context: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(live)) readableStore(spark, path).foreach { df =>
+      keyCols: Seq[String], context: String): Unit =
+    healedOrNone(spark, path).foreach { df =>
       val have = keyColsOf(df)
       require(have.sorted == keyCols.sorted,
         s"$context: store at $path is keyed by [${have.mkString(", ")}]; " +
           s"this writer's keys are [${keyCols.mkString(", ")}] — one " +
           "store holds exactly one key set")
     }
-  }
 
   /** The per-bucket partial aggregation every writer shares: one row per
     * `bucketNanos`-wide floor bucket of `tsCol`, value stats in exact
@@ -226,13 +220,6 @@ object RollupStore {
       .filter(col("cnt") > 0)
   }
 
-  /** `__day` partition value for a bucket row — the exact
-    * [[WritableStore]] integer floor-div derivation, so range pruning and
-    * the raw store's directory convention agree. */
-  private def dayCol = date_from_unix_date(
-    expr(s"(bucket_ts - pmod(bucket_ts, ${DayNs}L)) div ${DayNs}L")
-      .cast("int")).cast("string")
-
   /** Build a rollup store from a raw frame: one atomic publish of the whole
     * tree (two-rename, crash leaves a complete store — [[AtomicDir]]). */
   def write(df: DataFrame, path: String, bucketNanos: Long,
@@ -245,7 +232,7 @@ object RollupStore {
       rollupRows(df, bucketNanos, valueCol, tsCol, distinctCol, lgK,
         histBoundsCents, keyCols, withVariance)
         .withColumn("batch_key", lit("base"))
-        .withColumn(WritableStore.PartitionCol, dayCol)
+        .withColumn(WritableStore.PartitionCol, FileTree.dayCol("bucket_ts"))
         // aligned write: one file per day directory, not one per
         // (task × day) — a store spanning D days written from P tasks
         // would otherwise land D×P near-empty files (measured 25× build
@@ -282,40 +269,34 @@ object RollupStore {
     rollupRows(df, bucketNanos, valueCol, tsCol, distinctCol, lgK,
       histBoundsCents, keyCols, withVariance)
       .withColumn("batch_key", lit(batchKey))
-      .withColumn(WritableStore.PartitionCol, dayCol)
+      .withColumn(WritableStore.PartitionCol, FileTree.dayCol("bucket_ts"))
       .repartition(col(WritableStore.PartitionCol)) // one file per day
       .write.mode("append").partitionBy(WritableStore.PartitionCol)
       .parquet(path)
   }
 
-  /** The distinct bucket widths a store holds — a metadata-sized scan of
-    * the KB store, so width drift is caught loudly (an arbitrary-first-row
-    * read would make routing arithmetic nondeterministic under drift). */
-  private def storeWidths(stored: DataFrame): Seq[Long] =
-    stored.select("bucket_ns").distinct().collect()
-      .map(_.getLong(0)).sorted.toSeq
+  /** The width [[storeMetaProbe]] finds in a store known only by path,
+    * read directly with the store's own `read` (CounterStore passes its
+    * own, with its wording): absent, schema-less, or fully-trimmed trees
+    * are None. The writers' width probe — writers never serve from a
+    * snapshot. */
+  private[storage] def storeWidthOpt(spark: SparkSession, path: String,
+      what: String = "rollup store",
+      read: (SparkSession, String) => DataFrame = checkedRead)
+      : Option[Long] =
+    healedOrNone(spark, path, what, read)
+      .flatMap(storeMetaProbe(_, path, what)._1)
 
-  /** The one width a store frame holds, None when it is empty (fully
-    * trimmed) — the shared single-grain probe behind every width guard;
-    * a mixed-width store (a writer that bypassed [[append]]'s
-    * validation) always fails loudly HERE, never feeds arithmetic. */
-  private def widthOf(stored: DataFrame, path: String): Option[Long] =
-    storeWidths(stored) match {
-      case Seq(bn) => Some(bn)
-      case Seq() => None
-      case ws => throw new IllegalStateException(
-        s"rollup store at $path holds MIXED bucket widths " +
-          s"${ws.mkString(", ")} — one store holds exactly one grain")
-    }
-
-  /** [[widthOf]] for a store known only by path: absent, schema-less,
-    * or fully-trimmed trees are None. */
-  private def storeWidthOpt(spark: SparkSession, path: String)
-      : Option[Long] = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(live)) None
-    else readableStore(spark, path).flatMap(widthOf(_, path))
+  /** Self-heal a store tree, then read it with the store's own `read`, or
+    * None for an absent or schema-less tree ([[FileTree.readOrNone]]; an
+    * absent tree is never handed to Spark, whose path check logs a stack
+    * trace). */
+  private[storage] def healedOrNone(spark: SparkSession, path: String,
+      what: String = "rollup store",
+      read: (SparkSession, String) => DataFrame = checkedRead)
+      : Option[DataFrame] = {
+    val (fs, live) = healed(spark, path, what)
+    if (!fs.exists(live)) None else FileTree.readOrNone(read(spark, path))
   }
 
   /** Fail loudly when an existing store's grain differs from
@@ -331,10 +312,11 @@ object RollupStore {
       s"$context: store at $path holds $bn-ns buckets; appending " +
         s"$bucketNanos-ns partials would mix grains in one store"))
 
-  /** The one bucket width a store holds; empty or mixed stores fail. */
-  private def storeBucketNs(stored: DataFrame, path: String): Long =
-    widthOf(stored, path).getOrElse(throw new IllegalArgumentException(
-      s"rollup store at $path is empty"))
+  /** A probed width that must exist: an empty store fails. */
+  private[storage] def nonEmpty(width: Option[Long], path: String,
+      what: String = "rollup store"): Long =
+    width.getOrElse(throw new IllegalArgumentException(
+      s"$what at $path is empty"))
 
   /** Self-heal crashed swaps, read, scope to `[since, until)` with `__day`
     * directory pruning + `bucket_ts` row-group pruning, and drop
@@ -342,36 +324,35 @@ object RollupStore {
     * store read. */
   private def scopedStore(spark: SparkSession, path: String,
       since: Option[Long], until: Option[Long]): DataFrame = {
-    healed(spark, path)
+    healed(spark, path, "rollup store")
     scopedFrame(checkedRead(spark, path), since, until)
   }
 
   /** Self-heal a crashed publish or compaction swap of the store tree
-    * before reading it. Returns the tree's filesystem and path for the
-    * caller's listing. */
-  private def healed(spark: SparkSession, path: String)
+    * ([[AtomicDir.heal]]) before reading it. Returns the tree's
+    * filesystem and path for the caller's listing. */
+  private def healed(spark: SparkSession, path: String, what: String)
       : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    AtomicDir.recover(fs, live, "rollup store")
-    graft.pipeline.Similarity.recoverCompact(fs, live)
+    AtomicDir.heal(fs, live, what)
     (fs, live)
   }
 
-  /** A store as one listing of its tree saw it: the checked frame
-    * ([[checkedRead]]), its one bucket width and its tier horizon. The
-    * frame's file list is frozen at read time, so the snapshot is valid
-    * exactly while the tree still lists the same files. */
-  private final case class StoreSnapshot(df: DataFrame,
+  /** A store as one listing of its tree saw it: the store's read of it,
+    * its one bucket width and its tier horizon. The frame's file list is
+    * frozen at read time, so the snapshot is valid exactly while the tree
+    * still lists the same files. */
+  private[storage] final case class StoreSnapshot(df: DataFrame,
       bucketNs: Long, horizon: Option[Long])
 
-  /** Snapshots of recently served stores, keyed by (session, qualified
-    * path), each stamped with the listing it was probed under. A fixed
-    * LRU; it holds plan objects only (no `cache()`, no pin) and only
-    * successful probes — a failing store is re-probed, and fails, on
+  /** Snapshots of recently served stores, keyed by (session, store kind,
+    * qualified path), each stamped with the listing it was probed under.
+    * A fixed LRU; it holds plan objects only (no `cache()`, no pin) and
+    * only successful probes — a failing store is re-probed, and fails, on
     * every call. */
   private object Snapshots {
-    private type Key = (SparkSession, String)
+    private type Key = (SparkSession, String, String)
     private type Listing = Vector[(String, Long, Long)]
     private val MaxEntries = 64
     private val lru =
@@ -398,48 +379,58 @@ object RollupStore {
   /** Open a store for serving: self-heal, list the tree, and answer from
     * the snapshot probed under the same listing — no Spark job at all —
     * or, when any file was added, removed or rewritten since (or the
-    * store was never opened in this session), read it with
-    * [[checkedRead]] and probe width and horizon in one aggregation
-    * ([[storeMetaProbe]]). The listing runs BEFORE the read, so a write
-    * landing in between leaves the fingerprint older than the frame and
-    * the next call re-probes; it can never make a stale frame look
-    * current. Absent or schema-less trees fail as [[checkedRead]] does,
-    * empty and mixed-width stores as [[storeMetaProbe]] does — on every
-    * call, since failures are never cached. */
-  private def storeAtRest(spark: SparkSession, path: String)
-      : StoreSnapshot = {
-    val (fs, live) = healed(spark, path)
+    * store was never opened in this session), read it with the store's
+    * own `read` ([[checkedRead]] here; CounterStore passes its own, with
+    * its wording) and probe width and horizon in one aggregation
+    * ([[storeMetaProbe]]). None when the tree lists no data file (absent,
+    * nothing tiered into it yet, or fully trimmed) — the emptiness check
+    * and the snapshot share the one listing. The listing runs BEFORE the
+    * read, so a write landing in between leaves the fingerprint older
+    * than the frame and the next call re-probes; it can never make a
+    * stale frame look current. Empty and mixed-width stores fail as
+    * [[storeMetaProbe]] does — on every call, since failures are never
+    * cached. */
+  private[storage] def storeAtRest(spark: SparkSession, path: String,
+      what: String = "rollup store",
+      read: (SparkSession, String) => DataFrame = checkedRead)
+      : Option[StoreSnapshot] = {
+    val (fs, live) = healed(spark, path, what)
     val listing = FileTree.files(fs, live)
       .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
       .sorted
-    val key = (spark, fs.makeQualified(live).toString)
-    Snapshots.get(key, listing).getOrElse {
-      val stored = checkedRead(spark, path)
-      val (bucketNs, horizon) = storeMetaProbe(stored, path)
-      val snap = StoreSnapshot(stored, bucketNs, horizon)
-      Snapshots.put(key, listing, snap)
-      snap
+    if (listing.isEmpty) None
+    else {
+      val key = (spark, what, fs.makeQualified(live).toString)
+      Some(Snapshots.get(key, listing).getOrElse {
+        val stored = read(spark, path)
+        val (width, horizon) = storeMetaProbe(stored, path, what)
+        val snap = StoreSnapshot(stored, nonEmpty(width, path, what),
+          horizon)
+        Snapshots.put(key, listing, snap)
+        snap
+      })
     }
   }
+
+  /** [[storeAtRest]] for a rollup store a router needs: a tree listing no
+    * data file fails as [[checkedRead]] does (absent, schema-less). */
+  private def servedStore(spark: SparkSession, path: String)
+      : StoreSnapshot =
+    storeAtRest(spark, path).getOrElse {
+      checkedRead(spark, path)
+      throw new IllegalArgumentException(s"rollup store at $path is empty")
+    }
 
   /** The scoping half of [[scopedStore]] over an already-read store frame
     * — lets a stitched read that listed the store once reuse the frame
     * instead of re-listing per window. */
   private def scopedFrame(raw: DataFrame, since: Option[Long],
-      until: Option[Long]): DataFrame = {
-    def dayStr(nanos: Long): String = java.time.LocalDate.ofEpochDay(
-      Math.floorDiv(nanos, DayNs)).toString
-    val conds =
-      since.map(v => col("bucket_ts") >= lit(v)).toSeq ++
-        until.map(v => col("bucket_ts") < lit(v)).toSeq ++
-        since.map(v => col(WritableStore.PartitionCol) >= lit(dayStr(v))) ++
-        until.map(v => col(WritableStore.PartitionCol) <= lit(dayStr(v - 1)))
-    conds.reduceOption(_ && _).fold(raw)(raw.filter)
+      until: Option[Long]): DataFrame =
+    FileTree.scope(raw, col("bucket_ts"), since, until)
       // replay identity includes the group keys: a keyed store's batch
       // legitimately lands one row PER KEY per bucket under one batch_key
       .dropDuplicates(keyColsOf(raw) ++
         Seq("bucket_ts", "bucket_ns", "batch_key"))
-  }
 
   /** A tier at rest for one stitched call: its [[StoreSnapshot]] under
     * the tier's path. */
@@ -457,15 +448,12 @@ object RollupStore {
   private def readTiers(spark: SparkSession, storePaths: Seq[String],
       context: String, mirrorFirst: Boolean): Seq[Option[TierAtRest]] =
     storePaths.zipWithIndex.map { case (p, i) =>
-      val (fs, live) = healed(spark, p)
-      if (FileTree.files(fs, live).isEmpty) None
-      else {
-        val s = storeAtRest(spark, p)
+      storeAtRest(spark, p).map { s =>
         if (mirrorFirst) require(i == 0 || s.horizon.nonEmpty,
           s"$context: tiered store at $p has data but no tier horizon" +
             " — only the FIRST (mirror) store may be horizonless; " +
             "stitch order must run mirror, then fine → coarse")
-        Some(TierAtRest(p, s.df, s.bucketNs, s.horizon))
+        TierAtRest(p, s.df, s.bucketNs, s.horizon)
       }
     }
 
@@ -683,7 +671,7 @@ object RollupStore {
       keyFilter: Option[Column] = None): DataFrame = {
     require(until > since, s"route: empty range [$since, $until)")
     require(maxPoints >= 1, "route needs a positive point budget")
-    val StoreSnapshot(stored0, bucketNs, horizon) = storeAtRest(spark, path)
+    val StoreSnapshot(stored0, bucketNs, horizon) = servedStore(spark, path)
     keyFilter.foreach(requireKeyPredicate(_, stored0, "route"))
     val stored = keyFilter.fold(stored0)(stored0.filter)
     lazy val rawF = { val r = raw; keyFilter.fold(r)(r.filter) }
@@ -798,10 +786,11 @@ object RollupStore {
     * thousands of zooms against one prepared pair of tiers, so the
     * per-store metadata work (self-heal, schema merge across the day
     * files, grain probe, horizon check, key inference, sample-store
-    * validation) prices in once instead of per request: the ScaleProbe
-    * `route_aqp_fine` burst showed the cold path 4× the exact raw
-    * aggregation at 10× events purely on repeated metadata jobs, and
-    * the prepared path is what a serving layer should hold (the
+    * validation) prices in once instead of per request — a cold open is
+    * metadata jobs, a warm plan build none (RollupStoreSpec's "a warm
+    * route over an unchanged store builds its plan with zero Spark jobs"
+    * pins the store side) — and the prepared path is what a serving
+    * layer should hold (the
     * [[SampleStore.open]] open-once/estimate-many posture extended to
     * the router). `pinSample` persists the replay-deduped sample rows —
     * the BlinkDB serving stance; [[SampledRouter.close]] releases the
@@ -817,7 +806,7 @@ object RollupStore {
       samplePath: String, valueCol: String = "value",
       pinSample: Boolean = true): SampledRouter = {
     val StoreSnapshot(stored, bucketNs, horizon) =
-      storeAtRest(spark, storePath)
+      servedStore(spark, storePath)
     val keys = keyColsOf(stored)
     require(horizon.isEmpty,
       "routeSampled serves a complete-mirror store — this store has a " +
@@ -931,7 +920,7 @@ object RollupStore {
     append(old, storePath, s"tier-$cutoff", bucketNanos, valueCol, tsCol,
       distinctCol, lgK, histBoundsCents, keyCols = keyCols,
       withVariance = withVariance)
-    trimBelow(spark, fs, rawPath, "tiered raw table", cutoff, tsCol)
+    trimBelow(spark, fs, rawPath, "tiered raw table", cutoff, col(tsCol))
   }
 
   /** The partition-column chain a hive-layout tree encodes in its
@@ -956,10 +945,10 @@ object RollupStore {
     walk(root, Nil)
   }
 
-  /** Trim a parquet tree to rows with `boundCol >= cutoff`. Fast path: a
+  /** Trim a parquet tree to rows with `bound >= cutoff`. Fast path: a
     * `__day=`-partitioned tree with a day-aligned cutoff trims by DELETING
-    * whole day directories — O(days dropped), never a rewrite of the
-    * retained window (at 100 TB the rewrite would dwarf the rollup
+    * whole day directories ([[FileTree.dropDaysBelow]]) — never a rewrite
+    * of the retained window (at 100 TB the rewrite would dwarf the rollup
     * itself). Each dir delete is atomic; a crash mid-way leaves extra
     * pre-cutoff dirs that the tier horizon already excludes from stitched
     * reads. Fallback (sub-day cutoff, flat tree, or a foreign hive
@@ -968,30 +957,25 @@ object RollupStore {
     * would silently demote the partition columns and lose directory
     * pruning (and, for a foreign tree, break the external writer's next
     * append against partition discovery) forever after. */
-  private def trimBelow(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      path: String, what: String, cutoff: Long, boundCol: String): Unit = {
-    val dayDirs = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-      path, s"${WritableStore.PartitionCol}=*"))).getOrElse(Array.empty)
-    if (dayDirs.nonEmpty && Math.floorMod(cutoff, DayNs) == 0) {
-      val cutDay = java.time.LocalDate.ofEpochDay(
-        Math.floorDiv(cutoff, DayNs)).toString
-      dayDirs.filter(_.getPath.getName.stripPrefix(
-          s"${WritableStore.PartitionCol}=") < cutDay)
-        .foreach(d => fs.delete(d.getPath, true))
+  private[storage] def trimBelow(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, path: String, what: String,
+      cutoff: Long, bound: Column): Unit = {
+    val live = new org.apache.hadoop.fs.Path(path)
+    if (FileTree.dropDaysBelow(fs, live, cutoff))
       spark.catalog.refreshByPath(path)
-    } else {
+    else {
       // any other READABLE layout — flat files, a __day tree with a
       // sub-day cutoff, or an externally-partitioned tree — rewrites
       // atomically; skipping one silently would leave the appended rows
       // in raw and the NEXT cycle's higher cutoff would re-append them
       // under a different tier key, double-counting forever. Only a
       // schema-less tree (a completed full trim's retry) is a no-op.
-      if (readTreeOrNone(spark, path).nonEmpty) {
-        val pcols = partitionColsOf(fs, new org.apache.hadoop.fs.Path(path))
+      if (FileTree.readOrNone(spark.read.parquet(path)).nonEmpty) {
+        val pcols = partitionColsOf(fs, live)
         AtomicDir.publish(spark, path, what) { tmp =>
           // re-read under the publish so the filter runs against the files
           // being replaced, not a stale cached plan
-          val kept = spark.read.parquet(path).filter(col(boundCol) >= cutoff)
+          val kept = spark.read.parquet(path).filter(bound >= cutoff)
           if (pcols.nonEmpty) kept.write.partitionBy(pcols: _*).parquet(tmp)
           else kept.write.parquet(tmp)
         }
@@ -1021,7 +1005,8 @@ object RollupStore {
     // skip before the width probe — an emptied fine store has no width
     // to read and an empty append would leave a schema-less coarse dir
     if (fine.isEmpty) return
-    val fineBn = storeBucketNs(checkedRead(spark, fineStorePath),
+    val fineBn = nonEmpty(
+      storeMetaProbe(checkedRead(spark, fineStorePath), fineStorePath)._1,
       fineStorePath)
     require(coarseBucketNanos % fineBn == 0,
       s"tierOffStore: coarse width $coarseBucketNanos does not nest the " +
@@ -1042,14 +1027,14 @@ object RollupStore {
       .withColumn("sum_c", col("sum_c").cast("decimal(28,2)"))
       .withColumn("bucket_ns", lit(coarseBucketNanos))
       .withColumn("batch_key", lit(s"tier-$cutoff"))
-      .withColumn(WritableStore.PartitionCol, dayCol)
+      .withColumn(WritableStore.PartitionCol, FileTree.dayCol("bucket_ts"))
       .repartition(col(WritableStore.PartitionCol)) // one file per day
       .write.mode("append").partitionBy(WritableStore.PartitionCol)
       .parquet(coarseStorePath)
     val fineLive = new org.apache.hadoop.fs.Path(fineStorePath)
     trimBelow(spark,
       fineLive.getFileSystem(spark.sessionState.newHadoopConf()),
-      fineStorePath, "tiered rollup store", cutoff, "bucket_ts")
+      fineStorePath, "tiered rollup store", cutoff, col("bucket_ts"))
   }
 
   /** One tier of a declarative retention policy: its at-rest store, bucket
@@ -1070,7 +1055,8 @@ object RollupStore {
     * minimum, the usual retention contract. */
   private def policyCutoff(nowNs: Long, keep: Long, bucketNanos: Long)
       : Long = {
-    val w = if (DayNs % bucketNanos == 0) DayNs else bucketNanos
+    val w =
+      if (FileTree.DayNs % bucketNanos == 0) FileTree.DayNs else bucketNanos
     Math.floorDiv(nowNs - keep, w) * w
   }
 
@@ -1150,11 +1136,7 @@ object RollupStore {
     * AFTER its data has already moved. */
   private def runPolicyMoves(spark: SparkSession, tiers: Seq[TierSpec],
       moveCutoffs: Seq[Long], compactStores: Boolean): Unit = {
-    def readable(p: String): Boolean = {
-      val live = new org.apache.hadoop.fs.Path(p)
-      live.getFileSystem(spark.sessionState.newHadoopConf())
-        .exists(live) && readableStore(spark, p).nonEmpty
-    }
+    def readable(p: String): Boolean = healedOrNone(spark, p).nonEmpty
     tiers.sliding(2).toSeq.zip(moveCutoffs).foreach {
       case (Seq(fine, coarse), cut) =>
         if (readable(fine.storePath))
@@ -1193,14 +1175,8 @@ object RollupStore {
     * [[tierOffStore]] has appended — everything below it is served from
     * this store, whatever the finer tier still holds. Parsed from the
     * deterministic `tier-<cutoff>` batch keys and from the
-    * `compact-<uuid>-h<cutoff>` keys [[compact]] stamps to carry the
-    * horizon THROUGH compaction (metadata-sized aggregation over KB
-    * rows). None if never tiered. */
-  private def tierHorizon(stored: DataFrame): Option[Long] = {
-    val r = stored.agg(max(horizonExpr)).head()
-    if (r.isNullAt(0)) None else Some(r.getLong(0))
-  }
-
+    * [[compactKey]]s [[compact]] stamps to carry the horizon THROUGH
+    * compaction. None (null) if never tiered. */
   private def horizonExpr: Column = {
     val fromTier = when(col("batch_key").startsWith("tier-"),
       expr("CAST(substring(batch_key, 6) AS LONG)"))
@@ -1210,26 +1186,34 @@ object RollupStore {
     coalesce(fromTier, fromCompact)
   }
 
-  /** Bucket width + tier horizon in ONE metadata aggregation — the
-    * cold path of [[storeAtRest]] needs both, and two
-    * separate driver-blocking jobs over the same KB store frame doubled
-    * the per-request metadata cost (guide §1: the routed rows' time is
-    * job count, not bytes). Same failure surface as [[storeBucketNs]] +
-    * [[tierHorizon]]: empty and mixed-width stores fail identically. */
-  private def storeMetaProbe(stored: DataFrame, path: String)
-      : (Long, Option[Long]) = {
+  /** The batch key a compaction stamps on its folded rows: unique per
+    * compaction, carrying the tier horizon (`compact-<uuid>-h<cutoff>`)
+    * so stitched reads survive the fold. */
+  private[storage] def compactKey(horizon: Option[Long]): String = {
+    val id = s"compact-${java.util.UUID.randomUUID().toString.take(8)}"
+    horizon.fold(id)(h => s"$id-h$h")
+  }
+
+  /** A store frame's bucket width and tier horizon in ONE metadata
+    * aggregation over its KB rows — the probe behind every width guard,
+    * snapshot and compaction (two driver-blocking jobs over the same
+    * frame doubled the per-request metadata cost; the routed rows' time
+    * is job count, not bytes). The width is None for an empty (fully
+    * trimmed) store. A mixed-width store (a writer that bypassed
+    * [[append]]'s validation) always fails loudly HERE, worded for the
+    * store kind `what`, and never feeds arithmetic. */
+  private[storage] def storeMetaProbe(stored: DataFrame, path: String,
+      what: String = "rollup store"): (Option[Long], Option[Long]) = {
     val r = stored.agg(collect_set(col("bucket_ns")), max(horizonExpr))
       .head()
-    val widths = r.getSeq[Long](0).sorted
-    val bucketNs = widths match {
-      case Seq(bn) => bn
-      case Seq() => throw new IllegalArgumentException(
-        s"rollup store at $path is empty")
+    val width = r.getSeq[Long](0).sorted match {
+      case Seq() => None
+      case Seq(bn) => Some(bn)
       case ws => throw new IllegalStateException(
-        s"rollup store at $path holds MIXED bucket widths " +
+        s"$what at $path holds MIXED bucket widths " +
           s"${ws.mkString(", ")} — one store holds exactly one grain")
     }
-    (bucketNs, if (r.isNullAt(1)) None else Some(r.getLong(1)))
+    (width, if (r.isNullAt(1)) None else Some(r.getLong(1)))
   }
 
   /** Stitch raw + tier stores into partial rows and fold at `coarseNanos`
@@ -1457,7 +1441,7 @@ object RollupStore {
     val rawLive = new org.apache.hadoop.fs.Path(rawPath)
     val fs = rawLive.getFileSystem(spark.sessionState.newHadoopConf())
     AtomicDir.recover(fs, rawLive, "tiered raw table")
-    readTreeOrNone(spark, rawPath).getOrElse {
+    FileTree.readOrNone(spark.read.parquet(rawPath)).getOrElse {
       val fields = Seq(
         org.apache.spark.sql.types.StructField(tsCol,
           org.apache.spark.sql.types.LongType),
@@ -1645,14 +1629,12 @@ object RollupStore {
   def compact(spark: SparkSession, path: String): Unit = {
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    graft.pipeline.Similarity.recoverCompact(fs, live)
+    AtomicDir.heal(fs, live, "rollup store")
     AtomicDir.compactPublish(spark, path, "compact rollup") { tmp =>
       val live0 = checkedRead(spark, path)
-      storeBucketNs(live0, path) // mixed grains fail loudly, never fold
-      val horizon = tierHorizon(live0)
-      val key = horizon.fold(
-        s"compact-${java.util.UUID.randomUUID().toString.take(8)}")(h =>
-        s"compact-${java.util.UUID.randomUUID().toString.take(8)}-h$h")
+      val (width, horizon) = storeMetaProbe(live0, path)
+      nonEmpty(width, path) // empty and mixed stores fail, never fold
+      val key = compactKey(horizon)
       val hasHist = live0.columns.contains("hcnt")
       val cAggs = Seq(sum("n").as("n"), min("min_c").as("min_c"),
         max("max_c").as("max_c"),
@@ -1683,7 +1665,7 @@ object RollupStore {
           .drop("__hbmin", "__hbmax")
       folded
         .withColumn("batch_key", lit(key))
-        .withColumn(WritableStore.PartitionCol, dayCol)
+        .withColumn(WritableStore.PartitionCol, FileTree.dayCol("bucket_ts"))
         .repartition(col(WritableStore.PartitionCol)) // one file per day
         .write.partitionBy(WritableStore.PartitionCol).parquet(tmp)
     }
@@ -1696,39 +1678,15 @@ object RollupStore {
     * every later distinct estimate undercount the streamed buckets.
     */
   private def checkedRead(spark: SparkSession, path: String): DataFrame =
-    guardMixedDims(spark.read.option("mergeSchema", "true").parquet(path))
-
-  private def guardMixedDims(df: DataFrame): DataFrame =
     Seq("hll" -> "distinctCol", "hcnt" -> "histBoundsCents",
         "sumsq_c" -> "withVariance")
-      .foldLeft(df) { case (acc, (c, param)) =>
-        if (acc.columns.contains(c))
-          acc.withColumn(c, when(assert_true(col(c).isNotNull,
-            lit(s"rollup store: mixed $c-bearing and $c-less partials — " +
-              s"every append must pass the store's $param")).isNull,
-            col(c)))
-        else acc
+      .foldLeft(spark.read.option("mergeSchema", "true").parquet(path)) {
+        case (acc, (c, param)) =>
+          if (acc.columns.contains(c))
+            acc.withColumn(c, when(assert_true(col(c).isNotNull,
+              lit(s"rollup store: mixed $c-bearing and $c-less partials — " +
+                s"every append must pass the store's $param")).isNull,
+              col(c)))
+          else acc
       }
-
-  /** Read a parquet tree, or None when it is absent or its schema cannot
-    * be inferred (a created-but-empty or fully-trimmed tree) — the ONE
-    * place the AnalysisException sniffing lives, so a Spark upgrade that
-    * rewords the error is a one-line fix, not a silent no-op in three. */
-  private def readTreeOrNone(spark: SparkSession, path: String,
-      mergeSchema: Boolean = false): Option[DataFrame] =
-    try {
-      val r = spark.read
-      Some((if (mergeSchema) r.option("mergeSchema", "true") else r)
-        .parquet(path))
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.toLowerCase.contains("schema") ||
-            e.getMessage.toLowerCase.contains("path does not exist") => None
-    }
-
-  /** [[checkedRead]], or None for a tree whose schema cannot be inferred
-    * (a created-but-empty or fully-trimmed store). */
-  private def readableStore(spark: SparkSession, path: String)
-      : Option[DataFrame] =
-    readTreeOrNone(spark, path, mergeSchema = true).map(guardMixedDims)
 }

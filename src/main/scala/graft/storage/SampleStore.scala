@@ -37,8 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object SampleStore {
 
-  private val DayNs = 86400L * 1000000000L
-
   // Reserved self-description / lifecycle columns riding every row:
   // rate_den, sample_col (the sampled-id column's name), ts_col (the
   // time column the __day partitions derive from), stratum_col (the
@@ -115,11 +113,9 @@ object SampleStore {
       .withColumn("stratum_col", lit(stratumCol))
       .withColumn("layout_version", lit(LayoutVersion))
       .withColumn("batch_key", lit(batchKey))
-      .withColumn(WritableStore.PartitionCol, date_from_unix_date(
-        // backticked: a ts column named e.g. `event.ts` must resolve,
-        // not parse as a field access
-        expr(s"((`$tsCol`) - pmod(`$tsCol`, ${DayNs}L)) div ${DayNs}L")
-          .cast("int")).cast("string"))
+      // backticked: a ts column named e.g. `event.ts` must resolve, not
+      // parse as a field access
+      .withColumn(WritableStore.PartitionCol, FileTree.dayCol(s"`$tsCol`"))
       .repartition(col(WritableStore.PartitionCol))
 
   private def canonical(df: DataFrame, idCol: String, tsCol: String,
@@ -295,11 +291,7 @@ object SampleStore {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sessionState.newHadoopConf()
     val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(conf)
-    if (!fs.exists(live)) return
-    val files = Option(fs.globStatus(new org.apache.hadoop.fs.Path(live,
-        s"${WritableStore.PartitionCol}=*/*")))
-      .getOrElse(Array.empty)
+    val files = FileTree.files(live.getFileSystem(conf), live)
       .map(_.getPath).filter(_.getName.endsWith(".parquet"))
     val unstamped = files.iterator.find { f =>
       val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
@@ -358,17 +350,9 @@ object SampleStore {
   }
 
   private def readable(spark: SparkSession, path: String)
-      : Option[DataFrame] = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(live)) None
-    else {
-      AtomicDir.recover(fs, live, "sample store")
-      graft.pipeline.Similarity.recoverCompact(fs, live)
-      try Some(withLegacyBackfills(spark.read.parquet(path)))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    }
-  }
+      : Option[DataFrame] =
+    RollupStore.healedOrNone(spark, path, "sample store",
+      (s, p) => withLegacyBackfills(s.read.parquet(p)))
 
   /** An opened sample store: validated sampled rows. The serving shape
     * is OPEN ONCE, ESTIMATE MANY — a dashboard issues thousands of
@@ -445,17 +429,7 @@ object SampleStore {
     private def scoped(since: Option[Long], until: Option[Long],
         extra: Option[Column] = None): DataFrame = {
       requireSnapshotIntact()
-      def dayStr(nanos: Long): String = java.time.LocalDate.ofEpochDay(
-        Math.floorDiv(nanos, DayNs)).toString
-      val conds =
-        since.map(v => col(tsCol) >= lit(v)).toSeq ++
-          until.map(v => col(tsCol) < lit(v)).toSeq ++
-          since.map(v =>
-            col(WritableStore.PartitionCol) >= lit(dayStr(v))) ++
-          until.map(v =>
-            col(WritableStore.PartitionCol) <= lit(dayStr(v - 1))) ++
-          extra.toSeq
-      val sc = conds.reduceOption(_ && _).fold(rows)(rows.filter)
+      val sc = FileTree.scope(rows, col(tsCol), since, until, extra.toSeq)
       if (preDeduped) sc else sc.dropDuplicates(idCol, "batch_key")
     }
 
@@ -660,12 +634,9 @@ object SampleStore {
   private def snapshotFiles(spark: SparkSession, path: String)
       : Seq[String] = {
     val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = Option(fs.globStatus(new org.apache.hadoop.fs.Path(live,
-        s"${WritableStore.PartitionCol}=*/*")))
-      .getOrElse(Array.empty)
-      .map(_.getPath.toString)
-      .filter(_.endsWith(".parquet")).toSeq
+    val files = FileTree.files(
+        live.getFileSystem(spark.sessionState.newHadoopConf()), live)
+      .map(_.getPath.toString).filter(_.endsWith(".parquet")).sorted
     require(files.nonEmpty,
       s"sample store at $path has no data files to snapshot")
     files
@@ -689,18 +660,12 @@ object SampleStore {
     * rather than approximated. Idempotent: a retried trim finds the
     * days already gone. */
   def trimBelow(spark: SparkSession, path: String, cutoff: Long): Unit = {
-    require(Math.floorMod(cutoff, DayNs) == 0,
+    require(Math.floorMod(cutoff, FileTree.DayNs) == 0,
       "sample-store trims are whole-day directory drops — day-floor the " +
         "cutoff (the applyRetention discipline)")
     val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    val dayDirs = Option(fs.globStatus(new org.apache.hadoop.fs.Path(
-      path, s"${WritableStore.PartitionCol}=*"))).getOrElse(Array.empty)
-    val cutDay = java.time.LocalDate.ofEpochDay(
-      Math.floorDiv(cutoff, DayNs)).toString
-    dayDirs.filter(_.getPath.getName.stripPrefix(
-        s"${WritableStore.PartitionCol}=") < cutDay)
-      .foreach(d => fs.delete(d.getPath, true))
+    FileTree.dropDaysBelow(
+      live.getFileSystem(spark.sessionState.newHadoopConf()), live, cutoff)
     spark.catalog.refreshByPath(path)
   }
 
@@ -713,10 +678,9 @@ object SampleStore {
   def compact(spark: SparkSession, path: String): Unit = {
     val live = new org.apache.hadoop.fs.Path(path)
     val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
-    // the recover steps readable() would have run — compact reads the
-    // tree directly (merged-schema) rather than through readable
-    AtomicDir.recover(fs, live, "sample store")
-    graft.pipeline.Similarity.recoverCompact(fs, live)
+    // the heal readable() would have run — compact reads the tree
+    // directly (merged-schema) rather than through readable
+    AtomicDir.heal(fs, live, "sample store")
     AtomicDir.compactPublish(spark, path, "compact sample store") { tmp =>
       // MERGED-schema read: compact is the one offline pass that must
       // tolerate a legacy or even MIXED tree (per-file schemas — the
@@ -726,12 +690,10 @@ object SampleStore {
       // the coalesce folds them onto the legacy default, and the
       // rewrite stamps the whole tree at the CURRENT layout — compact
       // doubles as the one-shot v1/v2 → v3 upgrade
-      val raw =
-        try spark.read.option("mergeSchema", "true").parquet(path)
-        catch { case _: org.apache.spark.sql.AnalysisException =>
-          throw new IllegalArgumentException(
-            s"compact: sample store at $path is absent or empty")
-        }
+      val raw = FileTree.readOrNone(
+          spark.read.option("mergeSchema", "true").parquet(path))
+        .getOrElse(throw new IllegalArgumentException(
+          s"compact: sample store at $path is absent or empty"))
       val df = (if (raw.columns.contains("ts_col"))
           raw.withColumn("ts_col", coalesce(col("ts_col"), lit("ts")))
         else raw.withColumn("ts_col", lit("ts")))

@@ -405,15 +405,7 @@ final class WritableStore(
       val w0 = df.coalesce(math.max(1, inRange.length / 2000000))
       val target = new java.io.File(dbDir, metrics).getPath
       if (partitionByDay) {
-        // pure integer floor-div to epoch day — must match Tables.readRange's
-        // Math.floorDiv pruning exactly, independent of session timezone and
-        // immune to double rounding (epoch nanos exceed 2^53, so `/` on longs
-        // — which returns double — is not exact; `div` stays integral)
-        val dayNs = 86400L * 1000000000L
-        val epochDay =
-          expr(s"(ts - pmod(ts, ${dayNs}L)) div ${dayNs}L").cast("int")
-        w0.withColumn(PartitionCol,
-            date_from_unix_date(epochDay).cast("string"))
+        w0.withColumn(PartitionCol, FileTree.dayCol("ts"))
           .write.mode("append").partitionBy(PartitionCol).parquet(target)
       } else {
         w0.write.mode("append").parquet(target)

@@ -144,6 +144,60 @@ class CounterStoreSpec extends AnyFunSuite {
         .collect().toSeq)
   }
 
+  /** The routed rows without the grain/source columns, in order. */
+  private def routedRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("host", "bucket", "n_deltas", "inc_cents", "n_resets")
+      .orderBy("host", "bucket").collect().toSeq
+
+  test("a warm route (stitched and fine-only) and a warm readTiered over " +
+      "unchanged stores build their plans with zero Spark jobs") {
+    val base = SparkTestBase.tempDir("graft-ctr-warm")
+    val fineP = base + "/fine"
+    val coarseP = base + "/coarse"
+    CounterStore.write(inc1h, fineP, H)
+    CounterStore.tierOff(spark, fineP, coarseP, cutoff = 2 * Day,
+      factor = 24L)
+    for ((name, build) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
+        "stitched route" -> (() => CounterStore.route(spark, fineP,
+          Some(coarseP), 0L, 3 * Day, 3)),
+        "fine-only route" -> (() => CounterStore.route(spark, fineP,
+          Some(coarseP), 2 * Day, 3 * Day, 3000)),
+        "readTiered" -> (() => CounterStore.readTiered(spark, fineP,
+          coarseP, 24L)))) {
+      val cold = build()
+      val (warm, warmJobs) = SparkTestBase.countJobs(build())
+      assert(warmJobs == 0, s"$name: $warmJobs jobs")
+      assert(warm.orderBy("host", "bucket").collect().toSeq ==
+        cold.orderBy("host", "bucket").collect().toSeq, name)
+    }
+  }
+
+  test("route snapshots follow the stores: append shows new buckets, " +
+      "compact keeps the answer, tierOff turns it stitched") {
+    val base = SparkTestBase.tempDir("graft-ctr-snap")
+    val fineP = base + "/fine"
+    val coarseP = base + "/coarse"
+    CounterStore.write(inc1h.filter(col("bucket") < 48L), fineP, H)
+    def daily() = CounterStore.route(spark, fineP, Some(coarseP), 0L,
+      3 * Day, 3)
+    val before = routedRows(daily())
+    assert(before == directDaily.filter(_.getAs[Long]("bucket") < 2L))
+    assert(routedRows(daily()) == before) // warm
+    CounterStore.append(inc1h.filter(col("bucket") >= 48L), fineP, "b#1",
+      H)
+    assert(routedRows(daily()) == directDaily, "append not seen")
+    CounterStore.compact(spark, fineP)
+    assert(routedRows(daily()) == directDaily, "compact changed the answer")
+    assert(daily().select("source").distinct().collect().map(_.getString(0))
+      .toSeq == Seq("store"))
+    CounterStore.tierOff(spark, fineP, coarseP, cutoff = 2 * Day,
+      factor = 24L)
+    val tiered = daily()
+    assert(tiered.select("source").distinct().collect().map(_.getString(0))
+      .toSeq == Seq("stitched"))
+    assert(routedRows(tiered) == directDaily, "tierOff changed the answer")
+  }
+
   test("aligned writes: every day directory holds ONE parquet file after " +
       "write, append, and compact — never one per task x day") {
     val p = SparkTestBase.tempDir("graft-ctr-files") + "/store"

@@ -81,6 +81,19 @@ class EngineSpec extends AnyFunSuite {
     assert(out.contains("\"price\":[100.0,101.5,102.0,99.0]"))
   }
 
+  test("column json escapes column names as it escapes values") {
+    val names = Seq("a\"b", "c\\d", "e\nf")
+    val df = spark.range(2).selectExpr(
+      names.map(n => s"CAST(id AS STRING) AS `$n`"): _*)
+    val json = graft.ql.Output.columnJson(df, java.time.ZoneOffset.UTC,
+      formatDatetime = false)
+    val tree = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(json)
+    import scala.jdk.CollectionConverters._
+    assert(tree.fieldNames().asScala.toSeq == names)
+    names.foreach(n => assert(tree.get(n).get(1).asText() == "1"))
+  }
+
   test("parquet output writes file") {
     val e = new Engine(spark, dbDir)
     val out = java.nio.file.Files.createTempDirectory("graft-out").toString + "/r"

@@ -42,3 +42,16 @@ class VanishingDirFileSystem extends GraftTestFileSystem {
       throw new java.io.FileNotFoundException(s"$f vanished")
     else super.listStatus(f)
 }
+
+/** [[GraftTestFileSystem]] under `racefs://` whose `rename` performs the
+  * move and then reports failure — what the losing reader of a heal race
+  * sees when a second reader restored the same crashed swap first.
+  * Registered per-test via `fs.racefs.impl`. */
+class RacingRenameFileSystem extends GraftTestFileSystem {
+  override def getUri: URI = URI.create("racefs:///")
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    super.rename(src, dst)
+    false
+  }
+}
