@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session factory. The reference builds one `DBContext` at
   * startup and every mode runs on it (`bin/main.rs`, `engine/context.rs`);
-  * here every graft main — Bench, Verify, Cli, the servers, the plan and
-  * stage tools, the fixtures — and the test base start from [[builder]],
+  * here every graft main — Verify, Cli, the servers, the plan and row
+  * tool, the fixtures — and the test base start from [[builder]],
   * so they all plan under the same confs from the first query:
   *
   *   - `local[N]` and N shuffle partitions, N = `SPARK_GRAFT_CPUS` or cores;

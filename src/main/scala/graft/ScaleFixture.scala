@@ -4,10 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Dev harness: materialize a COMPLETE scaled sf-dir (all ten tables, same
-  * names/layout contract as `/root/testdata/sf*`) so `graft.Bench` can run
-  * the WHOLE headline suite at a larger scale unchanged — just point
-  * `SPARK_GRAFT_SF_DIR` at the output. The fixture measures the
-  * COMPOSITION (the round-13 verdict's top ask): memory pressure, AQE
+  * names/layout contract as `/root/testdata/sf*`, read from
+  * `SPARK_GRAFT_SF_DIR`) so `graft.PlanSnap <out> --time` can run the
+  * WHOLE headline suite at a larger scale unchanged. The fixture measures
+  * the COMPOSITION (the round-13 verdict's top ask): memory pressure, AQE
   * threshold flips, broadcast spills, and store-build costs only appear
   * when the full 35-row suite runs against the larger inputs.
   *

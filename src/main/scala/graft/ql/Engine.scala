@@ -148,13 +148,6 @@ object Output {
   def maxRenderRows: Int =
     sys.env.get("GRAFT_MAX_RENDER_ROWS").map(_.toInt).getOrElse(100000)
 
-  /** Explicit single-file override for dialect parquet output (the
-    * reference writes one parquet per query). Unset → size-guarded default
-    * in [[Engine.execute]]; GRAFT_SINGLE_FILE_OUTPUT=true forces one file,
-    * =false forces parallel part-files. */
-  def singleFileOutput: Option[Boolean] =
-    sys.env.get("GRAFT_SINGLE_FILE_OUTPUT").map(_.toBoolean)
-
   /** Estimated-size ceiling for defaulting to single-file parquet output:
     * results Catalyst sizes above this write parallel part-files. */
   val SingleFileMaxBytes: Long = 128L * 1024 * 1024
@@ -162,11 +155,9 @@ object Output {
   /** Single-file output mirrors the reference's one-parquet-per-query, but
     * a coalesce(1) is a one-task funnel on a big extract — so the default
     * is size-guarded: single file only when Catalyst's estimate says the
-    * result is interactive-scale, parallel part-files above.
-    * GRAFT_SINGLE_FILE_OUTPUT=true/false overrides either way. */
+    * result is interactive-scale, parallel part-files above. */
   def singleFileFor(df: DataFrame): Boolean =
-    singleFileOutput.getOrElse(
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <= SingleFileMaxBytes)
+    df.queryExecution.optimizedPlan.stats.sizeInBytes <= SingleFileMaxBytes
 
   private def renderRows(df: DataFrame, tz: ZoneId, formatDatetime: Boolean,
       maxRows: Int): (Array[String], Seq[Array[String]], Boolean) = {
@@ -205,15 +196,28 @@ object Output {
     if (truncated) table + s"\n[truncated to $maxRows rows]" else table
   }
 
+  /** A JSON string literal: quote, backslash and newline escaped by name,
+    * every other control character as a hex unicode escape. The one
+    * escaper behind every JSON frame graft writes: results, errors,
+    * requests and oracle_sql.json. */
+  def jsonStr(s: String): String = {
+    val sb = new StringBuilder(s.length + 2)
+    sb.append('"')
+    s.foreach {
+      case '"'  => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n")
+      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"').toString
+  }
+
   def columnJson(df: DataFrame, tz: ZoneId, formatDatetime: Boolean,
       maxRows: Int = maxRenderRows): String = {
     val (cols, rows, truncated) = renderRows(df, tz, formatDatetime, maxRows)
     val tsIdx = cols.indexOf("ts")
     val colTypes = df.schema.fields
-    def jsonStr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     def jsonVal(s: String, i: Int): String = {
       if (s == "null") "null"
       else colTypes(i).dataType match {

@@ -5,7 +5,8 @@ import java.net.{ServerSocket, Socket}
 import java.util.concurrent.Executors
 import org.apache.spark.sql.SparkSession
 
-import graft.ql.{Ast, Engine, Interpreter, Output}
+import graft.ql.{Engine, Interpreter, Output}
+import graft.ql.Output.jsonStr
 
 /** Remote-query server — the capability analog of the reference's Arrow
   * Flight `DoGet` endpoint (`query/executor/interface/arrow_flight_server/`):
@@ -255,12 +256,6 @@ final class QueryServer(engine: Engine, port: Int = 0) {
     sb.toString
   }
 
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
   /** A routed-serving request: a JSON frame carrying `maxPoints` — the
     * dashboard point-budget contract ([[graft.storage.RollupStore]]'s
     * routers) served over the same wire as dialect queries. The dialect
@@ -388,10 +383,6 @@ final class QueryServer(engine: Engine, port: Int = 0) {
       val cols = Output.columnJson(df, tz, fmtDt)
       s"""{"ok":true,"columns":$cols}"""
     } catch {
-      case e: Ast.ParseException =>
-        s"""{"ok":false,"error":${jsonStr(e.getMessage)}}"""
-      case e: Interpreter.QueryException =>
-        s"""{"ok":false,"error":${jsonStr(e.getMessage)}}"""
       case e: Exception =>
         s"""{"ok":false,"error":${jsonStr(String.valueOf(e.getMessage))}}"""
     }
@@ -468,9 +459,7 @@ object QueryClient {
     try {
       val out = new PrintWriter(sock.getOutputStream, true)
       if (arrow) {
-        val escaped = query.replace("\n", " ")
-          .flatMap { case '\\' => "\\\\"; case '"' => "\\\""; case c => c.toString }
-        out.println(s"""{"query": "$escaped", "format": "arrow"}""")
+        out.println(s"""{"query": ${jsonStr(query)}, "format": "arrow"}""")
         val (header, bytes) = ArrowFraming.readFrame(sock.getInputStream)
         if (bytes.isEmpty) println(header)
         else {

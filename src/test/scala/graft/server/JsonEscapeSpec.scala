@@ -5,7 +5,8 @@ import graft.SparkTestBase
 import graft.ql.Engine
 
 /** Unit coverage for the server's JSON string unescaping — must be a single
-  * left-to-right scan (chained String.replace corrupts `\\n` → newline).
+  * left-to-right scan (chained String.replace corrupts `\\n` → newline) —
+  * and for the one escaper, `Output.jsonStr`.
   */
 class JsonEscapeSpec extends AnyFunSuite {
   private lazy val srv =
@@ -31,6 +32,14 @@ class JsonEscapeSpec extends AnyFunSuite {
     assert(srv.unescapeJson("a" + bs + "uzzzzb") == "auzzzzb")
     assert(srv.unescapeJson("a" + bs + "u00") == "au00") // too short for 4 hex
     assert(srv.unescapeJson("a" + bs + "u0041b") == "aAb")
+  }
+
+  test("Output.jsonStr round-trips control characters through Jackson") {
+    val s = "a\tb\rc\"d\\e" + 1.toChar + "f"
+    val enc = graft.ql.Output.jsonStr(s)
+    assert(!enc.exists(_ < ' '), enc)
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(enc, classOf[String]) == s)
   }
 
   test("parseRequest unescapes the framed query") {

@@ -7,7 +7,8 @@ Usage: oracle_check.py <sfDir> <verifyOutDir>
 For each query dir under verifyOutDir: read the Spark parquet result, run the
 corresponding oracle SQL from oracle_sql.json in DuckDB (tables = parquet
 files in sfDir), sort columns by name, compare row counts, schemas (loosely)
-and values.
+and values. An oracle_sql.json key with no query dir is a fail: Verify writes
+no dir for a query that failed.
 
 The driver's hash compare is dtype-sensitive: an int64 Spark column vs a
 float64 oracle column hash-fails even when every value is numerically equal
@@ -16,7 +17,7 @@ value compare we fail on a dtype-KIND mismatch — that is exactly the class
 that astype(float) coercion used to hide. --selftest proves the checker
 catches an uncast-sum oracle.
 """
-import sys, os, json, glob
+import sys, os, json, glob, tempfile
 import duckdb
 import pandas as pd
 
@@ -83,18 +84,32 @@ def selftest():
         "AS s FROM range(5) ORDER BY 1").df()
     fails = compare_frames("uncast_window_sum", wcast, wuncast)
     assert fails and "dtype-kind mismatch" in fails[0], fails
-    print("selftest OK: dtype-kind check catches uncast agg + window sums")
+    # a query Verify could not write has an oracle but no result dir
+    with tempfile.TemporaryDirectory() as out_dir:
+        os.mkdir(os.path.join(out_dir, "q_ok"))
+        con.execute("COPY (SELECT CAST(1 AS BIGINT) AS a) TO '"
+                    + os.path.join(out_dir, "q_ok", "part-0.parquet")
+                    + "' (FORMAT PARQUET)")
+        with open(os.path.join(out_dir, "oracle_sql.json"), "w") as f:
+            json.dump({"q_ok": "SELECT CAST(1 AS BIGINT) AS a",
+                       "q_failed": "SELECT CAST(1 AS BIGINT) AS a"}, f)
+        assert check(con, out_dir) == (1, 1)
+    print("selftest OK: dtype-kind check catches uncast agg + window sums; "
+          "a missing result counts as a fail")
     return 0
 
 
-def main(sf_dir, out_dir):
-    con = duckdb.connect()
-    for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
-        name = os.path.basename(p)[:-len(".parquet")]
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
+def check(con, out_dir):
+    """Compare every result dir under out_dir with its oracle; returns
+    (n_pass, n_fail). An oracle key with no result dir is a fail: Verify
+    writes no dir for a query that failed."""
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracles = json.load(f)
     n_pass = n_fail = 0
+    for qdir in sorted(oracles):
+        if not os.path.isdir(os.path.join(out_dir, qdir)):
+            print(f"✗ {qdir}: no result (the query failed in Verify)")
+            n_fail += 1
     for qdir in sorted(os.listdir(out_dir)):
         full = os.path.join(out_dir, qdir)
         if not os.path.isdir(full):
@@ -119,6 +134,15 @@ def main(sf_dir, out_dir):
             n_fail += 1
             for f_ in fails:
                 print(f"✗ {qdir}: {f_}")
+    return n_pass, n_fail
+
+
+def main(sf_dir, out_dir):
+    con = duckdb.connect()
+    for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
+        name = os.path.basename(p)[:-len(".parquet")]
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
+    n_pass, n_fail = check(con, out_dir)
     print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 
