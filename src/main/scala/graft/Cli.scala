@@ -6,7 +6,8 @@ import graft.ql.Engine
   * `zikeiretsu/src/bin/main.rs`, `repl/mod.rs`).
   *
   * Usage:
-  *   graft.Cli --db <dbDir> "<query>"     one-shot
+  *   graft.Cli --db <dbDir> "<query>"     one-shot; exits 1 when the
+  *                                        query fails
   *   graft.Cli --db <dbDir>               REPL (reads stdin, `;` terminated,
   *                                        `exit` quits)
   */
@@ -24,33 +25,37 @@ object Cli {
     val spark = GraftSession.builder().appName("graft-cli").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val engine = new Engine(spark, dbDir)
-
-    def run(q: String): Unit =
-      try {
-        val out = engine.execute(q)
-        if (out.nonEmpty) println(out)
-      } catch {
-        case e: graft.ql.Ast.ParseException => System.err.println(e.getMessage)
-        case e: graft.ql.Interpreter.QueryException =>
-          System.err.println(e.getMessage)
-        case e: IllegalArgumentException => System.err.println(e.getMessage)
-      }
-
-    query match {
-      case Some(q) => run(q)
-      case None =>
-        // REPL: accumulate lines until `;`
-        print("graft> "); Console.out.flush()
-        val buf = new StringBuilder
-        for (line <- scala.io.Source.stdin.getLines()) {
-          if (line.trim == "exit") { spark.stop(); return }
-          buf.append(line).append('\n')
-          if (line.contains(";")) {
-            run(buf.toString); buf.clear()
-            print("graft> "); Console.out.flush()
-          }
-        }
+    val ok = query match {
+      case Some(q) => run(engine, q)
+      case None    => repl(engine, scala.io.Source.stdin.getLines()); true
     }
     spark.stop()
+    if (!ok) sys.exit(1)
+  }
+
+  /** Runs one query: prints its output, or its error on stderr. False when
+    * the query failed. */
+  def run(engine: Engine, q: String): Boolean =
+    try {
+      val out = engine.execute(q)
+      if (out.nonEmpty) println(out)
+      true
+    } catch { case e: Exception =>
+      Console.err.println(String.valueOf(e.getMessage))
+      false
+    }
+
+  /** REPL: accumulates lines until `;`, runs each statement, stops at
+    * `exit` or at the end of `lines`. A failed statement does not end it. */
+  def repl(engine: Engine, lines: Iterator[String]): Unit = {
+    print("graft> "); Console.out.flush()
+    val buf = new StringBuilder
+    for (line <- lines.takeWhile(_.trim != "exit")) {
+      buf.append(line).append('\n')
+      if (line.contains(";")) {
+        run(engine, buf.toString); buf.clear()
+        print("graft> "); Console.out.flush()
+      }
+    }
   }
 }

@@ -3,8 +3,8 @@ package graft.ql
 import java.time.{Instant, ZoneId}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, NumericType}
 
-import graft.model.TimeNano
 import graft.operators.TsOps
 import graft.storage.Tables
 import Ast._
@@ -108,10 +108,7 @@ final class Engine(val spark: SparkSession, val dbDir: String,
   def execute(query: String): String = {
     val iq = interpret(query)
     val df = frame(iq)
-    val (tz, fmtDt) = iq match {
-      case s: SearchMetrics => (s.tz, s.formatDatetime)
-      case _                => (java.time.ZoneOffset.UTC: ZoneId, false)
-    }
+    val (tz, fmtDt) = Output.tsRendering(iq)
     iq.output.format match {
       case OutputFormat.Table => Output.asciiTable(df, tz, fmtDt)
       case OutputFormat.Json  => Output.columnJson(df, tz, fmtDt)
@@ -159,19 +156,34 @@ object Output {
   def singleFileFor(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.stats.sizeInBytes <= SingleFileMaxBytes
 
-  private def renderRows(df: DataFrame, tz: ZoneId, formatDatetime: Boolean,
-      maxRows: Int): (Array[String], Seq[Array[String]], Boolean) = {
+  /** How a query asks for `ts`: a search's `tz` and `format_datetime`;
+    * raw longs in UTC for the meta queries. */
+  def tsRendering(iq: Interpreted): (ZoneId, Boolean) = iq match {
+    case s: SearchMetrics => (s.tz, s.formatDatetime)
+    case _                => (java.time.ZoneOffset.UTC, false)
+  }
+
+  /** `df` with a `LongType` ns `ts` rendered in the plan as RFC3339 in `tz`
+    * ([[graft.functions.FormatNanos]]) when `formatDatetime` is set; `df`
+    * itself otherwise. The one `ts` formatter behind every text and Arrow
+    * answer. */
+  def formatTs(df: DataFrame, tz: ZoneId, formatDatetime: Boolean): DataFrame =
+    if (formatDatetime &&
+        df.schema.exists(f => f.name == "ts" && f.dataType == LongType))
+      df.withColumn("ts", graft.functions.FormatNanos.format_ns(col("ts"), tz.getId))
+    else df
+
+  /** Up to `maxRows` rows of `df` as strings, a SQL NULL as `null`; and
+    * whether rows were left over at the cap. */
+  private def renderRows(df: DataFrame, maxRows: Int)
+      : (Array[String], Seq[Array[String]], Boolean) = {
     val cols = df.columns
-    val tsIdx = cols.indexOf("ts")
     val it = df.toLocalIterator()
     val rows = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
     while (it.hasNext && rows.length < maxRows) {
       val row = it.next()
       rows += cols.indices.map { i =>
-        if (row.isNullAt(i)) "null"
-        else if (i == tsIdx && formatDatetime && row.get(i).isInstanceOf[Long])
-          TimeNano.formatNanos(row.getLong(i), tz)
-        else row.get(i).toString
+        if (row.isNullAt(i)) null else row.get(i).toString
       }.toArray
     }
     (cols, rows.toSeq, it.hasNext)
@@ -181,8 +193,10 @@ object Output {
     * (`executor/interface/mod.rs:45-47`). */
   def asciiTable(df: DataFrame, tz: ZoneId, formatDatetime: Boolean,
       maxRows: Int = maxRenderRows): String = {
-    val (cols, rows, truncated) = renderRows(df, tz, formatDatetime, maxRows)
-    if (rows.isEmpty) return "[empty]"
+    val (cols, rendered, truncated) =
+      renderRows(formatTs(df, tz, formatDatetime), maxRows)
+    if (rendered.isEmpty) return "[empty]"
+    val rows = rendered.map(_.map(String.valueOf))
     val widths = cols.indices.map { i =>
       math.max(cols(i).length, rows.map(_(i).length).max)
     }
@@ -215,18 +229,15 @@ object Output {
 
   def columnJson(df: DataFrame, tz: ZoneId, formatDatetime: Boolean,
       maxRows: Int = maxRenderRows): String = {
-    val (cols, rows, truncated) = renderRows(df, tz, formatDatetime, maxRows)
-    val tsIdx = cols.indexOf("ts")
-    val colTypes = df.schema.fields
-    def jsonVal(s: String, i: Int): String = {
-      if (s == "null") "null"
+    val shown = formatTs(df, tz, formatDatetime)
+    val (cols, rows, truncated) = renderRows(shown, maxRows)
+    val colTypes = shown.schema.fields
+    def jsonVal(s: String, i: Int): String =
+      if (s == null) "null"
       else colTypes(i).dataType match {
-        case _: org.apache.spark.sql.types.NumericType
-            if !(i == tsIdx && formatDatetime) => s
-        case org.apache.spark.sql.types.BooleanType => s
+        case _: NumericType | BooleanType => s
         case _ => jsonStr(s)
       }
-    }
     val body = cols.indices.map { i =>
       val vals = rows.map(r => jsonVal(r(i), i)).mkString("[", ",", "]")
       jsonStr(cols(i)) + ":" + vals

@@ -1,27 +1,45 @@
 package graft.server
 
-import java.io.{BufferedReader, InputStreamReader, PrintWriter}
+import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream, InputStream}
 import java.net.{ServerSocket, Socket}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.time.ZoneOffset
 import java.util.concurrent.Executors
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.SparkSession
 
-import graft.ql.{Engine, Interpreter, Output}
+import graft.ql.{Engine, Output}
 import graft.ql.Output.jsonStr
+import QueryServer.{Query, Request, Route}
 
 /** Remote-query server — the capability analog of the reference's Arrow
   * Flight `DoGet` endpoint (`query/executor/interface/arrow_flight_server/`):
   * a client ships query text, the server executes it and streams back a
   * columnar batch. Transport is line-framed over TCP (Flight's gRPC layer
   * is not available in this offline build — see README divergence note);
-  * the PAYLOAD can be genuine Arrow:
+  * the PAYLOAD can be genuine Arrow.
   *
-  *  - `{"query": "..."}` (or a raw query line) → one JSON response line
-  *    `{"ok":true,"columns":{col:[...]}}` or `{"ok":false,"error":"..."}`;
-  *  - `{"query": "...", "format": "arrow"}` → one JSON header line
-  *    `{"ok":true,"format":"arrow","rows":N,"bytes":M}` followed by exactly
-  *    M raw bytes: a standard Arrow IPC stream (schema + record batches)
-  *    that any Arrow reader decodes — the same record-batch payload the
-  *    reference's `do_get_handler.rs:16-53` ships, minus the gRPC wrapper.
+  * Requests, one per line (a trailing `\r` is dropped):
+  *  - a line that does not start with `{` is a raw dialect query;
+  *  - `{"query": "..."}` is a dialect query frame;
+  *  - a frame with `maxPoints` is a route frame: the dashboard
+  *    point-budget contract of [[graft.storage.RollupStore]]'s routers,
+  *    served over the same wire (fields at [[routeFrame]]);
+  *  - `"format": "arrow"` in a frame selects Arrow framing; a raw line
+  *    never does;
+  *  - a line over [[QueryServer.MaxFrameBytes]] (1 MiB), or a `{` line
+  *    that is not one of these frames, is answered
+  *    `{"ok":false,"error":"bad request: ..."}` and the connection stays
+  *    open.
+  *
+  * Responses:
+  *  - JSON: one line, `{"ok":true,"columns":{col:[...]}}`;
+  *  - Arrow: one header line `{"ok":true,"format":"arrow","rows":N,"bytes":M}`
+  *    (with `"truncated":true` at the render cap) followed by exactly M raw
+  *    bytes: a standard Arrow IPC stream (schema + record batches) that any
+  *    Arrow reader decodes — the same record-batch payload the reference's
+  *    `do_get_handler.rs:16-53` ships, minus the gRPC wrapper;
+  *  - a failure: one line, `{"ok":false,"error":"..."}`.
   *
   * Concurrency: thread-per-connection; Spark schedules concurrent jobs from
   * multiple threads fairly within the one session (same model as a Spark
@@ -172,101 +190,57 @@ final class QueryServer(engine: Engine, port: Int = 0) {
   }
 
   private def handle(sock: Socket): Unit = {
-    val in  = new BufferedReader(new InputStreamReader(sock.getInputStream, "UTF-8"))
+    val in = new BufferedInputStream(sock.getInputStream)
     // raw stream, not a Writer: arrow responses interleave a UTF-8 header
     // line with binary IPC bytes on the same connection
-    val out = new java.io.BufferedOutputStream(sock.getOutputStream)
-    def writeLine(s: String): Unit = {
-      out.write(s.getBytes("UTF-8")); out.write('\n'); out.flush()
-    }
+    val out = new BufferedOutputStream(sock.getOutputStream)
     try {
-      var line = in.readLine()
-      while (line != null) {
-        // a malformed frame must produce an error response, never kill the
-        // connection thread
-        try {
-          if (isRouteRequest(line)) {
-            if (wantsArrow(line)) {
-              val (header, bytes) = runRouteArrow(line)
-              writeLine(header)
-              if (bytes.nonEmpty) { out.write(bytes); out.flush() }
-            } else writeLine(runRoute(line))
-          } else if (wantsArrow(line)) {
-            val (header, bytes) = runQueryArrow(parseRequest(line))
-            writeLine(header)
-            if (bytes.nonEmpty) { out.write(bytes); out.flush() }
-          } else writeLine(runQuery(parseRequest(line)))
-        } catch { case e: Exception =>
-          writeLine(s"""{"ok":false,"error":${jsonStr("bad request: " + e.getMessage)}}""")
-        }
-        line = in.readLine()
+      var frame = QueryServer.readFrame(in)
+      while (frame.isDefined) {
+        val (header, payload) = respond(frame.get.flatMap(QueryServer.parse))
+        out.write(header.getBytes(UTF_8)); out.write('\n')
+        out.write(payload); out.flush()
+        frame = QueryServer.readFrame(in)
       }
     } catch {
       case _: java.io.IOException => // client went away
     } finally sock.close()
   }
 
-  /** `"format": "arrow"` in a JSON request frame selects Arrow IPC framing.
-    * Raw (non-JSON) query lines never do — a query whose TEXT contains the
-    * literal must not flip a line-oriented client into binary mode. (Inside
-    * a JSON frame the query value has its quotes escaped, so the unescaped
-    * pattern can't match embedded text there.) */
-  private[server] def wantsArrow(line: String): Boolean = {
-    val t = line.trim
-    t.startsWith("{") && """"format"\s*:\s*"arrow"""".r.findFirstIn(t).isDefined
-  }
-
-  /** Accept `{"query": "..."}` or a raw query line. */
-  private[server] def parseRequest(line: String): String = {
-    val t = line.trim
-    if (t.startsWith("{")) {
-      val m = """"query"\s*:\s*"((?:[^"\\]|\\.)*)"""".r
-      m.findFirstMatchIn(t) match {
-        case Some(g) => unescapeJson(g.group(1))
-        case None    => t
-      }
-    } else t
-  }
-
-  /** JSON string unescape, single left-to-right scan — chained
-    * `String.replace` calls corrupt sequences like `\\n` (escaped backslash
-    * followed by 'n') because earlier replacements consume characters that a
-    * later rule would have needed intact. */
-  private[server] def unescapeJson(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'n'  => sb.append('\n'); i += 2
-          case 't'  => sb.append('\t'); i += 2
-          case 'r'  => sb.append('\r'); i += 2
-          case 'b'  => sb.append('\b'); i += 2
-          case 'f'  => sb.append('\f'); i += 2
-          case 'u' if i + 6 <= s.length &&
-              s.substring(i + 2, i + 6).forall(c =>
-                Character.digit(c, 16) >= 0) =>
-            sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar)
-            i += 6
-          case other => sb.append(other); i += 2 // covers \" \\ \/ verbatim
-        }
-      } else { sb.append(c); i += 1 }
+  /** The answer to one request, or to a frame the parser rejected
+    * (`Left`): a header line and the Arrow IPC stream it announces, empty
+    * for a JSON answer or an error. A route or a dialect query is turned
+    * into a frame, `ts` rendered as the query asks, then encoded once. */
+  private def respond(req: Either[String, Request])
+      : (String, Array[Byte]) = {
+    def failed(msg: String) =
+      (s"""{"ok":false,"error":${jsonStr(msg)}}""", Array.emptyByteArray)
+    req match {
+      case Left(bad) => failed("bad request: " + bad)
+      case Right(r) =>
+        try {
+          val df = r match {
+            case Route(node, _) => routeFrame(node)
+            case Query(text, _) =>
+              val iq = engine.interpret(text)
+              val (tz, formatDatetime) = Output.tsRendering(iq)
+              Output.formatTs(engine.frame(iq), tz, formatDatetime)
+          }
+          if (r.arrow) {
+            val (bytes, rows, truncated) =
+              ArrowFraming.toIpcStream(df, Output.maxRenderRows)
+            val truncField = if (truncated) ""","truncated":true""" else ""
+            (s"""{"ok":true,"format":"arrow","rows":$rows$truncField,"bytes":${bytes.length}}""",
+              bytes)
+          } else {
+            val cols = Output.columnJson(df, ZoneOffset.UTC, false)
+            (s"""{"ok":true,"columns":$cols}""", Array.emptyByteArray)
+          }
+        } catch { case e: Exception => failed(String.valueOf(e.getMessage)) }
     }
-    sb.toString
   }
 
-  /** A routed-serving request: a JSON frame carrying `maxPoints` — the
-    * dashboard point-budget contract ([[graft.storage.RollupStore]]'s
-    * routers) served over the same wire as dialect queries. The dialect
-    * surface itself stays reference-parity; this is the serving tier's
-    * remote face. */
-  private[server] def isRouteRequest(line: String): Boolean = {
-    val t = line.trim
-    t.startsWith("{") && """"maxPoints"\s*:""".r.findFirstIn(t).isDefined
-  }
-
-  /** Parse and dispatch a routed request:
+  /** The frame a route request answers with:
     * `{"maxPoints":n, "since":ns, "until":ns,
     *   "stores":["/fine","/coarse",...] | "store":"/p",
     *   "raw":"/rawParquet" (optional),
@@ -294,8 +268,7 @@ final class QueryServer(engine: Engine, port: Int = 0) {
     * carries `grain_ns`
     * and `source` like the in-process routers — a dashboard sees which
     * tier answered. */
-  private def routeFrame(line: String): org.apache.spark.sql.DataFrame = {
-    val node = QueryServer.Json.readTree(line)
+  private def routeFrame(node: JsonNode): org.apache.spark.sql.DataFrame = {
     def optStr(f: String): Option[String] =
       Option(node.get(f)).filterNot(_.isNull).map(_.asText())
     def reqLong(f: String): Long = Option(node.get(f)).filterNot(_.isNull)
@@ -348,71 +321,6 @@ final class QueryServer(engine: Engine, port: Int = 0) {
           "tiered lifecycle or two-plus 'stores' for the raw-less mirror")
     }
   }
-
-  private[server] def runRoute(line: String): String =
-    try {
-      val cols = Output.columnJson(routeFrame(line),
-        java.time.ZoneOffset.UTC, false)
-      s"""{"ok":true,"columns":$cols}"""
-    } catch {
-      case e: Exception =>
-        s"""{"ok":false,"error":${jsonStr(String.valueOf(e.getMessage))}}"""
-    }
-
-  private[server] def runRouteArrow(line: String): (String, Array[Byte]) =
-    try {
-      val (bytes, rows, truncated) =
-        ArrowFraming.toIpcStream(routeFrame(line), Output.maxRenderRows)
-      val truncField = if (truncated) ""","truncated":true""" else ""
-      (s"""{"ok":true,"format":"arrow","rows":$rows$truncField,"bytes":${bytes.length}}""",
-        bytes)
-    } catch {
-      case e: Exception =>
-        (s"""{"ok":false,"error":${jsonStr(String.valueOf(e.getMessage))}}""",
-          Array.empty[Byte])
-    }
-
-  private[server] def runQuery(query: String): String =
-    try {
-      val iq = engine.interpret(query)
-      val df = engine.frame(iq)
-      val (tz, fmtDt) = iq match {
-        case s: Interpreter.SearchMetrics => (s.tz, s.formatDatetime)
-        case _ => (java.time.ZoneOffset.UTC: java.time.ZoneId, false)
-      }
-      val cols = Output.columnJson(df, tz, fmtDt)
-      s"""{"ok":true,"columns":$cols}"""
-    } catch {
-      case e: Exception =>
-        s"""{"ok":false,"error":${jsonStr(String.valueOf(e.getMessage))}}"""
-    }
-
-  /** Arrow-framed answer: header line + IPC stream bytes (empty on error —
-    * an error is a plain JSON line, no binary follows). Honors the query's
-    * tz/format_datetime exactly like the JSON path (ts becomes a rendered
-    * string column), and flags truncation at the render cap. */
-  private[server] def runQueryArrow(query: String): (String, Array[Byte]) =
-    try {
-      val iq = engine.interpret(query)
-      val df0 = engine.frame(iq)
-      val df = iq match {
-        case s: Interpreter.SearchMetrics
-            if s.formatDatetime && df0.columns.contains("ts") =>
-          df0.withColumn("ts",
-            graft.functions.FormatNanos.format_ns(
-              org.apache.spark.sql.functions.col("ts"), s.tz.getId))
-        case _ => df0
-      }
-      val (bytes, rows, truncated) =
-        ArrowFraming.toIpcStream(df, Output.maxRenderRows)
-      val truncField = if (truncated) ""","truncated":true""" else ""
-      (s"""{"ok":true,"format":"arrow","rows":$rows$truncField,"bytes":${bytes.length}}""",
-        bytes)
-    } catch {
-      case e: Exception =>
-        (s"""{"ok":false,"error":${jsonStr(String.valueOf(e.getMessage))}}""",
-          Array.empty[Byte])
-    }
 }
 
 object QueryServer {
@@ -420,6 +328,57 @@ object QueryServer {
     * thread-safe once configured, and building one per request costs
     * more than parsing the frame. */
   private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The largest request frame, in bytes without its newline. A fixed cap,
+    * so one client cannot grow the driver heap without bound. */
+  val MaxFrameBytes: Int = 1 << 20
+
+  /** A parsed request frame; `arrow` selects Arrow IPC framing. */
+  sealed trait Request { def arrow: Boolean }
+  final case class Query(text: String, arrow: Boolean) extends Request
+  final case class Route(frame: JsonNode, arrow: Boolean) extends Request
+
+  /** One frame → one request, with one Jackson parse of a `{` line; a
+    * `Left` is the reason the frame is a bad request. */
+  private[server] def parse(line: String): Either[String, Request] = {
+    val t = line.trim
+    if (!t.startsWith("{")) Right(Query(t, arrow = false))
+    else
+      try {
+        val node = Json.readTree(t)
+        val arrow = Option(node.get("format")).exists(_.asText() == "arrow")
+        val query = node.get("query")
+        if (node.has("maxPoints")) Right(Route(node, arrow))
+        else if (query != null && query.isTextual)
+          Right(Query(query.asText(), arrow))
+        else Left("a frame needs a string 'query' or a 'maxPoints' route")
+      } catch {
+        case e: com.fasterxml.jackson.core.JsonProcessingException =>
+          Left(e.getOriginalMessage)
+      }
+  }
+
+  /** The next frame: its bytes up to the newline, less a trailing `\r`,
+    * as UTF-8; `None` at end of stream. A frame over [[MaxFrameBytes]] is
+    * read through to its newline and comes back as a `Left`, so the
+    * connection stays in step. */
+  private def readFrame(in: InputStream)
+      : Option[Either[String, String]] = {
+    val buf = new ByteArrayOutputStream()
+    var over = false
+    var b = in.read()
+    if (b == -1) return None
+    while (b != -1 && b != '\n') {
+      if (buf.size < MaxFrameBytes) buf.write(b) else over = true
+      b = in.read()
+    }
+    val bytes = buf.toByteArray
+    val len = if (bytes.nonEmpty && bytes.last == '\r') bytes.length - 1
+      else bytes.length
+    Some(
+      if (over) Left(s"frame exceeds $MaxFrameBytes bytes")
+      else Right(new String(bytes, 0, len, UTF_8)))
+  }
 
   /** `graft.server.QueryServer --db <dir> [--port n]` */
   def main(args: Array[String]): Unit = {
@@ -457,21 +416,16 @@ object QueryClient {
     val Array(host, p) = hostPort.split(":")
     val sock = new Socket(host, p.toInt)
     try {
-      val out = new PrintWriter(sock.getOutputStream, true)
-      if (arrow) {
-        out.println(s"""{"query": ${jsonStr(query)}, "format": "arrow"}""")
-        val (header, bytes) = ArrowFraming.readFrame(sock.getInputStream)
-        if (bytes.isEmpty) println(header)
-        else {
-          val (names, rows) = ArrowFraming.fromIpcStream(bytes)
-          println(names.mkString("\t"))
-          rows.foreach(r => println(r.map(String.valueOf).mkString("\t")))
-        }
-      } else {
-        val in = new BufferedReader(
-          new InputStreamReader(sock.getInputStream, "UTF-8"))
-        out.println(query.replace("\n", " "))
-        println(in.readLine())
+      val format = if (arrow) """, "format": "arrow"""" else ""
+      sock.getOutputStream.write(
+        s"""{"query": ${jsonStr(query)}$format}\n""".getBytes(UTF_8))
+      val (header, bytes) =
+        ArrowFraming.readFrame(new BufferedInputStream(sock.getInputStream))
+      if (bytes.isEmpty) println(header)
+      else {
+        val (names, rows) = ArrowFraming.fromIpcStream(bytes)
+        println(names.mkString("\t"))
+        rows.foreach(r => println(r.map(String.valueOf).mkString("\t")))
       }
     } finally sock.close()
   }

@@ -94,6 +94,20 @@ class EngineSpec extends AnyFunSuite {
     names.foreach(n => assert(tree.get(n).get(1).asText() == "1"))
   }
 
+  test("column json keeps a string \"null\" apart from a SQL NULL") {
+    val df = spark.sql("SELECT * FROM VALUES ('null'), (NULL) AS t(s)")
+    val json = graft.ql.Output.columnJson(df, java.time.ZoneOffset.UTC,
+      formatDatetime = false)
+    val col = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(json).get("s")
+    assert(col.size == 2, json)
+    assert(col.get(0).isTextual && col.get(0).asText() == "null", json)
+    assert(col.get(1).isNull, json)
+    val table = graft.ql.Output.asciiTable(df, java.time.ZoneOffset.UTC,
+      formatDatetime = false)
+    assert(table.linesIterator.count(_ == "| null |") == 2, table)
+  }
+
   test("parquet output writes file") {
     val e = new Engine(spark, dbDir)
     val out = java.nio.file.Files.createTempDirectory("graft-out").toString + "/r"

@@ -351,6 +351,33 @@ class ServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("a frame over the cap is a bad request and the connection " +
+      "stays usable") {
+    val srv = new QueryServer(new Engine(spark, dbDir))
+    val port = srv.start()
+    try {
+      val sock = new Socket("127.0.0.1", port)
+      try {
+        val out = sock.getOutputStream
+        val in = new BufferedReader(new InputStreamReader(sock.getInputStream))
+        // a frame at the cap is read whole: a dialect error, not a bad request
+        out.write(("x" * QueryServer.MaxFrameBytes + "\n").getBytes("UTF-8"))
+        val big = "x" * (QueryServer.MaxFrameBytes + 1)
+        out.write((big + "\n").getBytes("UTF-8"))
+        out.write(("with format_datetime = false select * from m " +
+          "where ts >= '2022-01-01'\r\n").getBytes("UTF-8"))
+        out.flush()
+        val atCap = in.readLine()
+        assert(atCap.startsWith("""{"ok":false,"error":"parse error"""), atCap)
+        assert(in.readLine() == """{"ok":false,"error":"bad request: """ +
+          s"""frame exceeds ${QueryServer.MaxFrameBytes} bytes"}""")
+        val ok = in.readLine()
+        assert(ok.startsWith("""{"ok":true,"""), ok)
+        assert(ok.contains(""""v":[1.0,2.0,3.0,4.0,5.0]"""), ok)
+      } finally sock.close()
+    } finally srv.stop()
+  }
+
   test("arrow stream flags truncation at the render cap") {
     import graft.server.ArrowFraming
     val df = spark.range(10).toDF("n")
