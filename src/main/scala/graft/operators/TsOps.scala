@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.functions.BoundLong
+
 /** Time-series operators over frames carrying `ts` as epoch-nano LongType.
   *
   * Scale notes (100 TB target):
@@ -35,6 +37,11 @@ object TsOps {
   def floorBucketSql(x: String, b: Long): String =
     s"($x - pmod($x, ${b}L))"
 
+  /** [[floorBucketSql]] over a column, with the width a [[BoundLong]]: a
+    * serving fold whose grain differs from the last request's reuses its
+    * compiled plan. */
+  def floorBucket(x: Column, b: Long): Column = x - pmod(x, BoundLong.lit(b))
+
   /** THE exact fixed point every integer-exact operator scores in: value →
     * decimal(18,2) (null for null/NaN/non-castable) → CENTS as long. One
     * definition shared by the anomaly/counter/histogram/PAA operators, the
@@ -59,13 +66,14 @@ object TsOps {
 
   /** `[since, until)` — the reference's only WHERE predicate
     * (`time_series_dataframe.rs:355-385`): since inclusive, until exclusive,
-    * duplicate timestamps preserved.
+    * duplicate timestamps preserved. The bounds are [[BoundLong]]s, so reads
+    * that differ only in their range share one compiled plan.
     */
   def rangeFilter(df: DataFrame, since: Option[Long], until: Option[Long],
       tsCol: String = "ts"): DataFrame = {
     val conds: Seq[Column] =
-      since.map(s => col(tsCol) >= lit(s)).toSeq ++
-        until.map(u => col(tsCol) < lit(u)).toSeq
+      since.map(s => col(tsCol) >= BoundLong.lit(s)).toSeq ++
+        until.map(u => col(tsCol) < BoundLong.lit(u)).toSeq
     conds.reduceOption(_ && _).fold(df)(df.filter)
   }
 
@@ -82,7 +90,7 @@ object TsOps {
       .orderBy(col(tsCol).asc).limit(n)
       .agg(max(tsCol)).collect()(0)
     if (nth.isNullAt(0)) df.limit(0)
-    else df.filter(col(tsCol) <= lit(nth.getLong(0)))
+    else df.filter(col(tsCol) <= BoundLong.lit(nth.getLong(0)))
   }
 
   /** Tie-preserving tail limit: rows within the `n` largest distinct
@@ -93,7 +101,7 @@ object TsOps {
       .orderBy(col(tsCol).desc).limit(n)
       .agg(min(tsCol)).collect()(0)
     if (nth.isNullAt(0)) df.limit(0)
-    else df.filter(col(tsCol) >= lit(nth.getLong(0)))
+    else df.filter(col(tsCol) >= BoundLong.lit(nth.getLong(0)))
   }
 
   /** Window-based variant of the grouped limit (single-node semantics

@@ -39,6 +39,7 @@ object ArrowFraming {
     case StringType  => ArrowType.Utf8.INSTANCE
     case BooleanType => ArrowType.Bool.INSTANCE
     case BinaryType  => ArrowType.Binary.INSTANCE
+    case d: DecimalType => new ArrowType.Decimal(d.precision, d.scale, 128)
     case other => throw new IllegalArgumentException(
       s"arrow framing: unsupported column type $other")
   }
@@ -102,6 +103,7 @@ object ArrowFraming {
         x.setSafe(i, s.getBytes("UTF-8"))
       case (x: BitVector, b: Boolean)       => x.setSafe(i, if (b) 1 else 0)
       case (x: VarBinaryVector, b: Array[Byte]) => x.setSafe(i, b)
+      case (x: DecimalVector, d: java.math.BigDecimal) => x.setSafe(i, d)
       case (x, other) => throw new IllegalArgumentException(
         s"arrow framing: ${other.getClass.getSimpleName} into ${x.getClass.getSimpleName}")
     }

@@ -3,6 +3,8 @@ package graft.storage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.BoundLong
+
 /** At-rest lifecycle for the counter RECORDING RULE — the store behind
   * [[graft.operators.TsOps.counterIncrease]] rows, with the
   * [[RollupStore]] discipline applied to the monitoring-counter shape
@@ -282,7 +284,8 @@ object CounterStore {
       fold(s.df, s.bucketNs, g / s.bucketNs, Some(lo), Some(hi), keyFilter)
     if (touched.isEmpty)
       serve(fine, lo, hi)
-        .withColumn("grain_ns", lit(g)).withColumn("source", lit("store"))
+        .withColumn("grain_ns", BoundLong.lit(g))
+        .withColumn("source", lit("store"))
     else {
       // stitch: the coarse tier serves its pre-horizon window, the fine
       // store the rest — disjoint whole g-buckets (g is a multiple of
@@ -296,7 +299,7 @@ object CounterStore {
       val recent = serve(fine, math.max(h, lo), hi)
       graft.operators.TsOps.counterIncreaseCoarsen(
           old.unionByName(recent), 1L, keyColsOf(old))
-        .withColumn("grain_ns", lit(g))
+        .withColumn("grain_ns", BoundLong.lit(g))
         .withColumn("source", lit("stitched"))
     }
   }

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.BoundLong
+
 /** How a stored tree sits on disk: the one recursive walk over it (the
   * data files a reader of that tree would see), the `__day` partition
   * convention every day-partitioned tree shares (the raw metrics tables
@@ -40,6 +42,16 @@ object FileTree {
 
   private[storage] val DayNs = 86400L * 1000000000L
 
+  private val DayDir = s"/${WritableStore.PartitionCol}=([^/]+)/".r
+
+  /** Bytes per `__day` value over `(path, length)` files; a file outside
+    * every `__day` directory counts under `""`. */
+  private[storage] def dayBytes(files: Seq[(String, Long)])
+      : Map[String, Long] =
+    files.groupMapReduce { case (p, _) =>
+      DayDir.findFirstMatchIn(p).fold("")(_.group(1))
+    }(_._2)(_ + _)
+
   /** The `__day` partition value (`yyyy-MM-dd`) holding a nanos instant. */
   private[storage] def day(nanos: Long): String =
     java.time.LocalDate.ofEpochDay(Math.floorDiv(nanos, DayNs)).toString
@@ -57,7 +69,8 @@ object FileTree {
     * frame carrying `__day` the same bounds also land on the partition
     * column: the scan prunes whole day directories only on a predicate
     * over the partition column itself, where the `nanos` bounds alone
-    * prune row groups by footer statistics. */
+    * prune row groups by footer statistics. The `nanos` bounds are
+    * [[graft.functions.BoundLong]]s: one compiled plan serves every range. */
   private[storage] def scope(df: DataFrame, nanos: Column,
       since: Option[Long], until: Option[Long],
       extra: Seq[Column] = Nil): DataFrame = {
@@ -66,8 +79,8 @@ object FileTree {
       else since.map(v =>
           col(WritableStore.PartitionCol) >= lit(day(v))).toSeq ++
         until.map(v => col(WritableStore.PartitionCol) <= lit(day(v - 1)))
-    (since.map(v => nanos >= lit(v)).toSeq ++
-      until.map(v => nanos < lit(v)) ++ days ++ extra)
+    (since.map(v => nanos >= BoundLong.lit(v)).toSeq ++
+      until.map(v => nanos < BoundLong.lit(v)) ++ days ++ extra)
       .reduceOption(_ && _).fold(df)(df.filter)
   }
 

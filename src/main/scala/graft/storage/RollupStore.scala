@@ -3,6 +3,8 @@ package graft.storage
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.BoundLong
+
 /** At-rest downsample rollup store — the continuous-aggregate tier a TSDB
   * keeps beside its raw blocks so range aggregates over months of history
   * never rescan raw samples (the reference answers every aggregate from raw
@@ -160,10 +162,10 @@ object RollupStore {
       })
     val grouped = df
       .groupBy(keyCols.map(col) :+
-        expr(graft.operators.TsOps.floorBucketSql(tsCol, bucketNanos))
+        graft.operators.TsOps.floorBucket(col(s"`$tsCol`"), bucketNanos)
           .as("bucket_ts"): _*)
       .agg(aggs.head, aggs.tail: _*)
-      .withColumn("bucket_ns", lit(bucketNanos))
+      .withColumn("bucket_ns", BoundLong.lit(bucketNanos))
     if (histBoundsCents.isEmpty) grouped
     else {
       val slots = histBoundsCents.size + 1
@@ -340,11 +342,22 @@ object RollupStore {
   }
 
   /** A store as one listing of its tree saw it: the store's read of it,
-    * its one bucket width and its tier horizon. The frame's file list is
-    * frozen at read time, so the snapshot is valid exactly while the tree
-    * still lists the same files. */
+    * its one bucket width, its tier horizon and the bytes that listing
+    * holds per `__day` directory (files outside one under `""`). The
+    * frame's file list is frozen at read time, so the snapshot is valid
+    * exactly while the tree still lists the same files. */
   private[storage] final case class StoreSnapshot(df: DataFrame,
-      bucketNs: Long, horizon: Option[Long])
+      bucketNs: Long, horizon: Option[Long], dayBytes: Map[String, Long]) {
+
+    /** Bytes of the files a scope to `[lo, hi)` reads: the `__day`
+      * directories [[FileTree.scope]] keeps, plus any file outside one. */
+    def scopedBytes(lo: Long, hi: Long): Long = {
+      val (first, last) = (FileTree.day(lo), FileTree.day(hi - 1))
+      dayBytes.iterator.collect {
+        case (d, b) if d.isEmpty || (d >= first && d <= last) => b
+      }.sum
+    }
+  }
 
   /** Snapshots of recently served stores, keyed by (session, store kind,
     * qualified path), each stamped with the listing it was probed under.
@@ -405,7 +418,8 @@ object RollupStore {
         val stored = read(spark, path)
         val (width, horizon) = storeMetaProbe(stored, path, what)
         val snap = StoreSnapshot(stored, nonEmpty(width, path, what),
-          horizon)
+          horizon, FileTree.dayBytes(listing.map { case (p, len, _) =>
+            (p, len) }))
         Snapshots.put(key, listing, snap)
         snap
       })
@@ -423,14 +437,31 @@ object RollupStore {
 
   /** The scoping half of [[scopedStore]] over an already-read store frame
     * — lets a stitched read that listed the store once reuse the frame
-    * instead of re-listing per window. */
+    * instead of re-listing per window. `onePartition` reads the scoped
+    * rows as one partition ahead of the replay dedup, which then needs no
+    * exchange. */
   private def scopedFrame(raw: DataFrame, since: Option[Long],
-      until: Option[Long]): DataFrame =
-    FileTree.scope(raw, col("bucket_ts"), since, until)
+      until: Option[Long], onePartition: Boolean = false): DataFrame = {
+    val scoped = FileTree.scope(raw, col("bucket_ts"), since, until)
+    (if (onePartition) scoped.coalesce(1) else scoped)
       // replay identity includes the group keys: a keyed store's batch
       // legitimately lands one row PER KEY per bucket under one batch_key
       .dropDuplicates(keyColsOf(raw) ++
         Seq("bucket_ts", "bucket_ns", "batch_key"))
+  }
+
+  /** [[scopedFrame]] for a fold over `snap`'s store alone, `df` being its
+    * frame (key-filtered or not). When the files the widened range
+    * `[lo, hi)` touches fit one file split (Spark's own
+    * `spark.sql.files.maxPartitionBytes`), they are read as one partition:
+    * the replay dedup and the fold above it then run in one stage, one
+    * job. Larger scopes keep the partitioned plan. */
+  private def storeScoped(snap: StoreSnapshot, df: DataFrame, lo: Long,
+      hi: Long): DataFrame = {
+    val split = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    scopedFrame(df, Some(lo), Some(hi),
+      onePartition = snap.scopedBytes(lo, hi) <= split)
+  }
 
   /** A tier at rest for one stitched call: its [[StoreSnapshot]] under
     * the tier's path. */
@@ -533,7 +564,7 @@ object RollupStore {
     val hasHist = partials.columns.contains("hcnt")
     val hasVar = partials.columns.contains("sumsq_c")
     val checkedN = when(
-      assert_true(pmod(lit(coarseNanos), col("bucket_ns")) === 0,
+      assert_true(pmod(BoundLong.lit(coarseNanos), col("bucket_ns")) === 0,
         lit(s"rollup: coarseNanos $coarseNanos is not a multiple of the " +
           "stored bucket width")).isNull, col("n"))
     val aggs = Seq(sum(checkedN).as("n"), min("min_c").as("min_c"),
@@ -547,9 +578,8 @@ object RollupStore {
         .apply(col("hcnt")).as("hcnt"),
         min("hbounds").as("__hbmin"), max("hbounds").as("__hbmax")) else Nil)
     val grouped = partials
-      .groupBy(keys.map(col) :+
-        expr(graft.operators.TsOps.floorBucketSql("bucket_ts",
-          coarseNanos)).as("bucket_ts"): _*)
+      .groupBy(keys.map(col) :+ graft.operators.TsOps.floorBucket(
+        col("bucket_ts"), coarseNanos).as("bucket_ts"): _*)
       .agg(aggs.head, aggs.tail: _*)
     val widthChecked =
       if (!uniformWidth) grouped
@@ -671,7 +701,8 @@ object RollupStore {
       keyFilter: Option[Column] = None): DataFrame = {
     require(until > since, s"route: empty range [$since, $until)")
     require(maxPoints >= 1, "route needs a positive point budget")
-    val StoreSnapshot(stored0, bucketNs, horizon) = servedStore(spark, path)
+    val snap = servedStore(spark, path)
+    val StoreSnapshot(stored0, bucketNs, horizon, _) = snap
     keyFilter.foreach(requireKeyPredicate(_, stored0, "route"))
     val stored = keyFilter.fold(stored0)(stored0.filter)
     lazy val rawF = { val r = raw; keyFilter.fold(r)(r.filter) }
@@ -700,7 +731,8 @@ object RollupStore {
       stitchTiers(spark, rawF,
         Seq(Some(TierAtRest(path, stored, bucketNs, horizon))), g, Some(lo),
         Some(hi), valueCol, tsCol, distinctCol, lgK, histBoundsCents)
-        .withColumn("grain_ns", lit(g)).withColumn("source", lit("stitched"))
+        .withColumn("grain_ns", BoundLong.lit(g))
+        .withColumn("source", lit("stitched"))
     }
     if (gRaw >= bucketNs) { // the store's resolution satisfies the budget
       val g = fit(toMult(gRaw), toMult)
@@ -711,9 +743,9 @@ object RollupStore {
           // served from the snapshot's frame, not a second rollup()
           // listing of the same tree
           val (lo, hi) = widened(g)
-          mergeFold(scopedFrame(stored, Some(lo), Some(hi)), g,
+          mergeFold(storeScoped(snap, stored, lo, hi), g,
               uniformWidth = true)
-            .withColumn("grain_ns", lit(g))
+            .withColumn("grain_ns", BoundLong.lit(g))
             .withColumn("source", lit("store"))
       }
     } else {
@@ -735,7 +767,8 @@ object RollupStore {
         (if (distinctCol.nonEmpty) // schema parity with the store path
           rows.withColumn("distinct_est", expr("hll_sketch_estimate(hll)"))
         else rows)
-          .withColumn("grain_ns", lit(gRaw)).withColumn("source", lit("raw"))
+          .withColumn("grain_ns", BoundLong.lit(gRaw))
+          .withColumn("source", lit("raw"))
       } else {
         // the budget demands finer-than-stored resolution over a range
         // whose pre-horizon samples no longer exist at that resolution:
@@ -805,10 +838,9 @@ object RollupStore {
   def prepareSampled(spark: SparkSession, storePath: String,
       samplePath: String, valueCol: String = "value",
       pinSample: Boolean = true): SampledRouter = {
-    val StoreSnapshot(stored, bucketNs, horizon) =
-      servedStore(spark, storePath)
-    val keys = keyColsOf(stored)
-    require(horizon.isEmpty,
+    val snap = servedStore(spark, storePath)
+    val keys = keyColsOf(snap.df)
+    require(snap.horizon.isEmpty,
       "routeSampled serves a complete-mirror store — this store has a " +
         "tier horizon, so its post-horizon samples live in raw, which " +
         "this router does not read; use route()/routeCascade() for the " +
@@ -826,15 +858,17 @@ object RollupStore {
           "valueCol must fail at prepare, not pin rows and then die on " +
           "the first fine zoom")
     } catch { case e: Throwable => handle.close(); throw e }
-    SampledRouter(stored, bucketNs, keys, handle, valueCol)
+    SampledRouter(snap, keys, handle, valueCol)
   }
 
   /** A prepared store+sample serving pair (see [[prepareSampled]]):
     * every [[route]] call is pure plan construction over the already-
     * validated frames — no metadata jobs, no re-listing. */
-  final case class SampledRouter private[storage] (stored: DataFrame,
-      bucketNs: Long, keys: Seq[String],
+  final case class SampledRouter private[storage] (
+      private[storage] val snap: StoreSnapshot, keys: Seq[String],
       handle: SampleStore.SampleHandle, valueCol: String) {
+    private def stored = snap.df
+    private def bucketNs = snap.bucketNs
 
     def route(since: Long, until: Long, maxPoints: Int,
         keyFilter: Option[Column] = None): DataFrame = {
@@ -851,7 +885,7 @@ object RollupStore {
           ((g + bucketNs - 1) / bucketNs) * bucketNs
         val g = fitGrain(since, until, maxPoints, toMult(gRaw), toMult)
         val (lo, hi) = widenTo(since, until, g)
-        mergeFold(scopedFrame(storedF, Some(lo), Some(hi)), g,
+        mergeFold(storeScoped(snap, storedF, lo, hi), g,
             uniformWidth = true)
           .select(keys.map(col) ++ Seq(col("bucket_ts"),
             col("n").as("n_sample"), col("n").as("est_count"),
@@ -863,14 +897,14 @@ object RollupStore {
             // estimator, not the width, is the schema contract here.
             (col("sum_c") * 100).cast("long").as("est_sum_cents"),
             lit(0L).as("est_var_cents2"), lit(1L).as("rate_den")): _*)
-          .withColumn("grain_ns", lit(g))
+          .withColumn("grain_ns", BoundLong.lit(g))
           .withColumn("source", lit("store"))
       } else {
         val (lo, hi) = widenTo(since, until, gRaw)
         handle
           .estimateTimeBuckets(gRaw, valueCol, Some(lo), Some(hi),
             groupCols = keys, keyFilter = keyFilter)
-          .withColumn("grain_ns", lit(gRaw))
+          .withColumn("grain_ns", BoundLong.lit(gRaw))
           .withColumn("source", lit("sample"))
       }
     }
@@ -1518,11 +1552,13 @@ object RollupStore {
       (if (distinctCol.nonEmpty)
         rows.withColumn("distinct_est", expr("hll_sketch_estimate(hll)"))
       else rows)
-        .withColumn("grain_ns", lit(g)).withColumn("source", lit("raw"))
+        .withColumn("grain_ns", BoundLong.lit(g))
+        .withColumn("source", lit("raw"))
     } else
       stitchTiers(spark, raw, tiersServe, g, Some(lo), Some(hi), valueCol,
         tsCol, distinctCol, lgK, histBoundsCents)
-        .withColumn("grain_ns", lit(g)).withColumn("source", lit("stitched"))
+        .withColumn("grain_ns", BoundLong.lit(g))
+        .withColumn("source", lit("stitched"))
   }
 
   /** [[routeCascade]] for the RAW-LESS mirror lifecycle: serve `[since,
@@ -1570,11 +1606,13 @@ object RollupStore {
     val (lo, hi) = widenTo(since, until, g)
     if (touchedAtG.isEmpty && mirrorOwnW.nonEmpty)
       stitchStores(spark, tiersServe.take(1), g, Some(lo), Some(hi))
-        .withColumn("grain_ns", lit(g)).withColumn("source", lit("store"))
+        .withColumn("grain_ns", BoundLong.lit(g))
+        .withColumn("source", lit("store"))
     else // an empty mirror over an above-horizon range stitches to the
       // honest zero-row frame rather than erroring on "no readable store"
       stitchStores(spark, tiersServe, g, Some(lo), Some(hi))
-        .withColumn("grain_ns", lit(g)).withColumn("source", lit("stitched"))
+        .withColumn("grain_ns", BoundLong.lit(g))
+        .withColumn("source", lit("stitched"))
   }
 
   /** The router's shared grain discipline: clamp a budget-derived grain

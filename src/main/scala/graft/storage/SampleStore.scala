@@ -509,8 +509,8 @@ object SampleStore {
       scoped(since, until, keyFilter)
         .withColumn("__c", graft.operators.TsOps.centsExpr(valueCol))
         .groupBy(groupCols.map(col) :+
-          expr(graft.operators.TsOps.floorBucketSql(
-            s"`$tsCol`", bucketNanos)).as("bucket_ts"): _*)
+          graft.operators.TsOps.floorBucket(col(s"`$tsCol`"), bucketNanos)
+            .as("bucket_ts"): _*)
         .agg(count(lit(1)).as("n_sample"),
           sum("rate_den").as("est_count"),
           sum(col("__c") * col("rate_den")).as("est_sum_cents"),

@@ -351,6 +351,52 @@ class ServerSpec extends AnyFunSuite {
     } finally srv.stop()
   }
 
+  test("a raw+store route frame answers the same decimal buckets in " +
+      "JSON and in Arrow framing") {
+    import graft.server.ArrowFraming
+    import spark.implicits._
+    val H = 3600L * 1000000000L
+    val base = SparkTestBase.tempDir("graft-srv-dec")
+    val (rawP, stP) = (base + "/raw", base + "/store")
+    val raw = Seq((1L * H, 10.25), (2L * H, 3.10), (25L * H, 7.77),
+      (26L * H, 100.01), (49L * H, 0.02)).toDF("ts", "value")
+    raw.write.parquet(rawP)
+    graft.storage.RollupStore.write(raw, stP, H)
+    val route = s"""{"maxPoints": 3, "since": 0, "until": ${72 * H}, """ +
+      s""""store": "$stP", "raw": "$rawP""""
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      .enable(com.fasterxml.jackson.databind.DeserializationFeature
+        .USE_BIG_DECIMAL_FOR_FLOATS)
+    val stats = Seq("bucket_ts", "n", "sum_c", "min_c", "max_c")
+    val srv = new QueryServer(new Engine(spark, dbDir))
+    val port = srv.start()
+    try {
+      val json = mapper.readTree(roundtrip(port, route + "}"))
+      assert(json.path("ok").asBoolean(false), json)
+      val cols = json.get("columns")
+      // one row per bucket, in bucket order
+      val fromJson = (0 until cols.get("n").size()).map(i => stats.map(c =>
+        BigDecimal(cols.get(c).get(i).decimalValue()))).sortBy(_.head)
+      val sock = new Socket("127.0.0.1", port)
+      try {
+        new PrintWriter(sock.getOutputStream, true)
+          .println(route + """, "format": "arrow"}""")
+        val (header, bytes) = ArrowFraming.readFrame(sock.getInputStream)
+        assert(header.contains("\"ok\":true"), header)
+        val (names, rows) = ArrowFraming.fromIpcStream(bytes)
+        val fromArrow = rows.map(r => stats.map(c => r(names.indexOf(c))
+          match {
+            case d: java.math.BigDecimal => BigDecimal(d)
+            case n: java.lang.Long => BigDecimal(n.longValue)
+            case other => fail(s"$c: unexpected ${other.getClass}")
+          })).sortBy(_.head)
+        assert(fromArrow == fromJson)
+        assert(fromJson.map(_(1)).sum == 5 &&
+          fromJson.map(_(2)).sum == BigDecimal("121.15"), fromJson)
+      } finally sock.close()
+    } finally srv.stop()
+  }
+
   test("a frame over the cap is a bad request and the connection " +
       "stays usable") {
     val srv = new QueryServer(new Engine(spark, dbDir))
