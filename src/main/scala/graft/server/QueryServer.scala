@@ -81,6 +81,9 @@ final class QueryServer(engine: Engine, port: Int = 0) {
           "non-positive cap would evict every pin on insert")
       n
     }.getOrElse(32)
+  // read at construction: a malformed GRAFT_MAX_RENDER_ROWS stops the
+  // server from starting instead of failing every request
+  private val maxRows = Output.maxRenderRows
   private val preparedRouters = new java.util.LinkedHashMap[
       (String, String, String), graft.storage.RollupStore.SampledRouter](
       16, 0.75f, true) {
@@ -228,12 +231,12 @@ final class QueryServer(engine: Engine, port: Int = 0) {
           }
           if (r.arrow) {
             val (bytes, rows, truncated) =
-              ArrowFraming.toIpcStream(df, Output.maxRenderRows)
+              ArrowFraming.toIpcStream(df, maxRows)
             val truncField = if (truncated) ""","truncated":true""" else ""
             (s"""{"ok":true,"format":"arrow","rows":$rows$truncField,"bytes":${bytes.length}}""",
               bytes)
           } else {
-            val cols = Output.columnJson(df, ZoneOffset.UTC, false)
+            val cols = Output.columnJson(df, ZoneOffset.UTC, false, maxRows)
             (s"""{"ok":true,"columns":$cols}""", Array.emptyByteArray)
           }
         } catch { case e: Exception => failed(String.valueOf(e.getMessage)) }
