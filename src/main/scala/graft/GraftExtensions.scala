@@ -56,31 +56,10 @@ object GraftExtensions {
     }
   }
 
-  val RouteTvf = "graft_route"
-
-  val routeTvfInfo = new ExpressionInfo(GraftExtensions.getClass.getName,
-    null, RouteTvf,
-    "graft_route(stores, raw, since, until, maxPoints[, where]) - serve " +
-      "[since, until) epoch-nanos under a point budget from a rollup-" +
-      "store layout: `stores` is one path or a comma-separated fine-to-" +
-      "coarse cascade, `raw` the raw parquet path ('' for the raw-less " +
-      "mirror lifecycle), `where` an optional key predicate pushed into " +
-      "every tier scan. Emits the routed buckets with grain_ns and " +
-      "source columns.", "")
-
-  /** The TVF builder: literal args → the routed DataFrame's logical plan
-    * (the analyzer then resolves it like an expanded view). Dispatch
-    * mirrors the TCP serving frame: raw + one store → route, raw + a
-    * cascade → routeCascade, two-plus stores without raw →
-    * routeStoreCascade. Sketch-bearing stores need distinctCol /
-    * histBoundsCents and stay on the programmatic/TCP surfaces. */
-  val routeTvfBuilder: Seq[Expression] =>
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = exprs => {
-    require(exprs.length == 5 || exprs.length == 6,
-      s"$RouteTvf(stores, raw, since, until, maxPoints[, where]) — got " +
-        s"${exprs.length} arguments")
-    def const(i: Int, what: String): Any = {
-      require(exprs(i).foldable, s"$RouteTvf: $what must be a literal")
+  /** A table function's positional arguments, each a literal. */
+  private final class LiteralArgs(fn: String, exprs: Seq[Expression]) {
+    private def const(i: Int, what: String): Any = {
+      require(exprs(i).foldable, s"$fn: $what must be a literal")
       exprs(i).eval()
     }
     def str(i: Int, what: String): String =
@@ -88,37 +67,48 @@ object GraftExtensions {
     def num(i: Int, what: String): Long = const(i, what) match {
       case n: Number => n.longValue()
       case other => throw new IllegalArgumentException(
-        s"$RouteTvf: $what must be numeric, got $other")
+        s"$fn: $what must be numeric, got $other")
     }
-    val stores = str(0, "stores").split(",").map(_.trim)
-      .filter(_.nonEmpty).toSeq
-    require(stores.nonEmpty, s"$RouteTvf: needs at least one store path")
-    val raw = str(1, "raw").trim
-    val since = num(2, "since")
-    val until = num(3, "until")
-    val maxPoints = num(4, "maxPoints").toInt
-    val keyFilter =
-      if (exprs.length == 6)
-        Some(org.apache.spark.sql.functions.expr(str(5, "where")))
-      else None
-    val spark = org.apache.spark.sql.SparkSession.active
-    import graft.storage.RollupStore
-    val df = (raw.nonEmpty, stores) match {
-      case (true, Seq(one)) =>
-        RollupStore.route(spark, one, spark.read.parquet(raw), since,
-          until, maxPoints, keyFilter = keyFilter)
-      case (true, many) =>
-        RollupStore.routeCascade(spark, raw, many, since, until,
-          maxPoints, keyFilter = keyFilter)
-      case (false, many) if many.size >= 2 =>
-        RollupStore.routeStoreCascade(spark, many, since, until,
-          maxPoints, keyFilter)
-      case _ => throw new IllegalArgumentException(
-        s"$RouteTvf: a single store without raw cannot route — pass raw " +
-          "for the tiered lifecycle or a two-plus store cascade for the " +
-          "raw-less mirror")
-    }
-    df.queryExecution.logical
+    /** A comma-separated list, blanks dropped. */
+    def list(i: Int, what: String): Seq[String] =
+      str(i, what).split(",").map(_.trim).filter(_.nonEmpty).toSeq
+  }
+
+  val RouteTvf = "graft_route"
+
+  /** `graft_route`'s usage: its positional arguments become one
+    * [[graft.storage.RollupStore.RouteRequest]], served by the one budget
+    * router over that request's tier list. */
+  val routeTvfInfo = new ExpressionInfo(GraftExtensions.getClass.getName,
+    null, RouteTvf,
+    "graft_route(stores, raw, since, until, maxPoints[, where]) - serve " +
+      "[since, until) epoch-nanos under a point budget from a rollup-" +
+      "store layout: `stores` is one path or a comma-separated fine-to-" +
+      "coarse cascade, `raw` the raw parquet path ('' for the raw-less " +
+      "mirror lifecycle, which needs two-plus stores), `where` an " +
+      "optional key predicate pushed into every tier scan. Emits the " +
+      "routed buckets with grain_ns and source columns.", "")
+
+  /** The TVF builder: positional literal args → a
+    * [[graft.storage.RollupStore.RouteRequest]] → the routed DataFrame's
+    * logical plan (the analyzer then resolves it like an expanded view).
+    * [[graft.storage.RollupStore.routeRequest]] picks the router, the same
+    * dispatch the TCP serving frame uses. Sketch-bearing stores need
+    * distinctCol / histBoundsCents and stay on the programmatic/TCP
+    * surfaces. */
+  val routeTvfBuilder: Seq[Expression] =>
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = exprs => {
+    require(exprs.length == 5 || exprs.length == 6,
+      s"$RouteTvf(stores, raw, since, until, maxPoints[, where]) — got " +
+        s"${exprs.length} arguments")
+    val a = new LiteralArgs(RouteTvf, exprs)
+    val req = graft.storage.RollupStore.RouteRequest(a.list(0, "stores"),
+      Some(a.str(1, "raw").trim).filter(_.nonEmpty), a.num(2, "since"),
+      a.num(3, "until"), a.num(4, "maxPoints").toInt,
+      keyFilter = if (exprs.length == 6)
+        Some(org.apache.spark.sql.functions.expr(a.str(5, "where"))) else None)
+    graft.storage.RollupStore.routeRequest(
+      org.apache.spark.sql.SparkSession.active, req).queryExecution.logical
   }
 
   /** Post-hoc TVF registration for sessions built without the extension
@@ -147,25 +137,14 @@ object GraftExtensions {
     require(exprs.length == 3 || exprs.length == 5,
       s"$AqpTvf(store, groupCols, valueCol[, since, until]) — got " +
         s"${exprs.length} arguments")
-    def const(i: Int, what: String): Any = {
-      require(exprs(i).foldable, s"$AqpTvf: $what must be a literal")
-      exprs(i).eval()
-    }
-    def str(i: Int, what: String): String =
-      Option(const(i, what)).map(String.valueOf).getOrElse("")
-    def num(i: Int, what: String): Long = const(i, what) match {
-      case n: Number => n.longValue()
-      case other => throw new IllegalArgumentException(
-        s"$AqpTvf: $what must be numeric, got $other")
-    }
-    val store = str(0, "store").trim
+    val a = new LiteralArgs(AqpTvf, exprs)
+    val store = a.str(0, "store").trim
     require(store.nonEmpty, s"$AqpTvf: needs a store path")
-    val groupCols = str(1, "groupCols").split(",").map(_.trim)
-      .filter(_.nonEmpty).toSeq
-    val valueCol = str(2, "valueCol").trim
+    val groupCols = a.list(1, "groupCols")
+    val valueCol = a.str(2, "valueCol").trim
     val (since, until) =
       if (exprs.length == 5)
-        (Some(num(3, "since")), Some(num(4, "until")))
+        (Some(a.num(3, "since")), Some(a.num(4, "until")))
       else (None, None)
     val spark = org.apache.spark.sql.SparkSession.active
     graft.storage.SampleStore.open(spark, store)

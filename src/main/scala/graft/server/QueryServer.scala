@@ -246,83 +246,44 @@ final class QueryServer(engine: Engine, port: Int = 0) {
   /** The frame a route request answers with:
     * `{"maxPoints":n, "since":ns, "until":ns,
     *   "stores":["/fine","/coarse",...] | "store":"/p",
-    *   "raw":"/rawParquet" (optional),
+    *   "raw":"/rawParquet" | "sample":"/sampleStore" (optional),
     *   "where":"host = 'web'" (optional key predicate, pushed down),
     *   "distinctCol":"uid", "histBoundsCents":[...], "tsCol", "valueCol"
-    *   (optional)}`.
-    * raw + 1 store → route; raw + N stores → routeCascade; N ≥ 2 stores
-    * without raw → routeStoreCascade (the raw-less mirror lifecycle);
-    * `"sample":"/sampleStore"` + 1 store without raw → routeSampled (the
-    * AQP composition: fine zooms answer from the deterministic sample
-    * with `rate_den` and the `est_var_cents2` error bar riding the
-    * columns). A sample frame may add `"pin": true` to opt into this
-    * server's PREPARED router for the (store, sample) pair —
-    * [[graft.storage.RollupStore.prepareSampled]] runs once per pair
-    * (sample rows pinned over the open-time FILE SNAPSHOT — from round
-    * 13 the staleness is deterministic: same-session appends never
-    * leak into a pinned frame) and every later pinned frame is pure
-    * plan construction, the open-once dashboard-burst shape; the trade
-    * is staleness (the prepared pair does not see later appends, and a
-    * post-prepare `tierOff` on the store invalidates the pin silently
-    * — omit `pin` for read-latest semantics, or add
-    * `"refresh": true` to a pinned frame to close and re-prepare the
-    * pair before serving: the serving-layer verb that picks up
-    * yesterday's appends without a server restart). The response
-    * carries `grain_ns`
-    * and `source` like the in-process routers — a dashboard sees which
-    * tier answered. */
+    *   (optional), "pin": true, "refresh": true (optional)}`.
+    * The fields become one [[graft.storage.RollupStore.RouteRequest]];
+    * [[graft.storage.RollupStore.routeRequest]] — the dispatch the
+    * `graft_route` SQL function shares — picks the tier list: raw + 1
+    * store, raw + a cascade, two-plus stores without raw (the raw-less
+    * mirror lifecycle), or a sample + 1 store (fine zooms answer from the
+    * deterministic sample with `rate_den` and the `est_var_cents2` error
+    * bar riding the columns). A sample frame may add `"pin": true` to
+    * serve from this server's PREPARED router for the (store, sample,
+    * valueCol) triple ([[pinnedRouter]]): every later pinned frame is pure
+    * plan construction, and the trade is staleness — the prepared pair
+    * does not see later appends, and a post-prepare `tierOff` invalidates
+    * the pin silently; `"refresh": true` closes and re-prepares the pair
+    * before serving. The response carries `grain_ns` and `source` like
+    * the in-process routers. */
   private def routeFrame(node: JsonNode): org.apache.spark.sql.DataFrame = {
-    def optStr(f: String): Option[String] =
-      Option(node.get(f)).filterNot(_.isNull).map(_.asText())
-    def reqLong(f: String): Long = Option(node.get(f)).filterNot(_.isNull)
-      .map(_.asLong()).getOrElse(
-        throw new IllegalArgumentException(s"route request needs '$f'"))
-    val stores: Seq[String] =
-      Option(node.get("stores")).filterNot(_.isNull).map { arr =>
-        (0 until arr.size()).map(arr.get(_).asText())
-      }.getOrElse(optStr("store").toSeq)
-    require(stores.nonEmpty, "route request needs 'store' or 'stores'")
-    val raw = optStr("raw")
-    val since = reqLong("since")
-    val until = reqLong("until")
-    val maxPoints = reqLong("maxPoints").toInt
-    val distinctCol = optStr("distinctCol")
-    val hist: Seq[Long] = Option(node.get("histBoundsCents"))
-      .filterNot(_.isNull).map { arr =>
-        (0 until arr.size()).map(arr.get(_).asLong()).toSeq
-      }.getOrElse(Nil)
-    val keyFilter = optStr("where")
-      .map(org.apache.spark.sql.functions.expr)
-    val tsCol = optStr("tsCol").getOrElse("ts")
-    val valueCol = optStr("valueCol").getOrElse("value")
-    val spark = engine.spark
-    import graft.storage.RollupStore
-    val sample = optStr("sample")
-    val pin = Option(node.get("pin")).exists(_.asBoolean(false))
-    val refresh = Option(node.get("refresh")).exists(_.asBoolean(false))
-    (sample, raw, stores) match {
-      case (Some(sm), None, Seq(one)) if pin =>
-        pinnedRouter((one, sm, valueCol), refresh)
-          .route(since, until, maxPoints, keyFilter)
-      case (Some(sm), None, Seq(one)) =>
-        RollupStore.routeSampled(spark, one, sm, since, until,
-          maxPoints, valueCol, keyFilter)
-      case (Some(_), _, _) => throw new IllegalArgumentException(
-        "a 'sample' route takes exactly one store and no 'raw' — the " +
-          "sample tier IS the fine-zoom source")
-      case (None, Some(r), Seq(one)) =>
-        RollupStore.route(spark, one, spark.read.parquet(r), since, until,
-          maxPoints, valueCol, tsCol, distinctCol, 12, hist, keyFilter)
-      case (None, Some(r), many) =>
-        RollupStore.routeCascade(spark, r, many, since, until, maxPoints,
-          valueCol, tsCol, distinctCol, 12, hist, keyFilter)
-      case (None, None, many) if many.size >= 2 =>
-        RollupStore.routeStoreCascade(spark, many, since, until,
-          maxPoints, keyFilter)
-      case _ => throw new IllegalArgumentException(
-        "a single store without 'raw' cannot route — pass 'raw' for the " +
-          "tiered lifecycle or two-plus 'stores' for the raw-less mirror")
-    }
+    def opt(f: String): Option[JsonNode] =
+      Option(node.get(f)).filterNot(_.isNull)
+    def optStr(f: String): Option[String] = opt(f).map(_.asText())
+    def reqLong(f: String): Long = opt(f).map(_.asLong()).getOrElse(
+      throw new IllegalArgumentException(s"route request needs '$f'"))
+    def arr[T](f: String)(get: JsonNode => T): Option[Seq[T]] =
+      opt(f).map(a => (0 until a.size()).map(i => get(a.get(i))))
+    def flag(f: String): Boolean = opt(f).exists(_.asBoolean(false))
+    val req = graft.storage.RollupStore.RouteRequest(
+      arr("stores")(_.asText()).getOrElse(optStr("store").toSeq),
+      optStr("raw"), reqLong("since"), reqLong("until"),
+      reqLong("maxPoints").toInt, optStr("sample"),
+      optStr("valueCol").getOrElse("value"), optStr("tsCol").getOrElse("ts"),
+      optStr("distinctCol"), arr("histBoundsCents")(_.asLong()).getOrElse(Nil),
+      optStr("where").map(org.apache.spark.sql.functions.expr))
+    val pinned = (st: String, sm: String, v: String) =>
+      pinnedRouter((st, sm, v), flag("refresh"))
+    graft.storage.RollupStore.routeRequest(engine.spark, req,
+      if (flag("pin")) Some(pinned) else None)
   }
 }
 

@@ -3,8 +3,6 @@ package graft.storage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.BoundLong
-
 /** At-rest lifecycle for the counter RECORDING RULE — the store behind
   * [[graft.operators.TsOps.counterIncrease]] rows, with the
   * [[RollupStore]] discipline applied to the monitoring-counter shape
@@ -255,53 +253,38 @@ object CounterStore {
   /** Budget routing over the counter tier — [[RollupStore.route]]'s
     * maxDataPoints contract on the recording rule: answer `[since,
     * until)` under a point budget at the finest grain every touched tier
-    * can serve, never a silently partial answer. The grain fits the
-    * widened span (shared [[RollupStore.fitCascadeGrain]] arithmetic:
-    * the fine store's width is the floor; a range dipping below the
-    * coarse tier's horizon clamps to the coarse width), buckets are
-    * floor-div indexes AT the chosen grain, and `grain_ns`/`source` ride
-    * the columns so a dashboard sees which tier answered. Counter
-    * partials merge by addition at any nesting grain, so every routed
-    * answer equals the direct pass over never-stored samples. Both tiers
-    * open through their snapshots: a warm route over unchanged stores
-    * builds its plan with no Spark job. */
+    * can serve, never a silently partial answer. The fine store heads a
+    * [[RollupStore.TierList]] with the coarse store as its one tier (a
+    * coarse store never tiered into serves nothing), so the grain, the
+    * widening, the tier windows and the `grain_ns`/`source` labels are
+    * the rollup routers' own ([[RollupStore.planRoute]]): the fine
+    * store's width is the floor, and a range dipping below the coarse
+    * horizon clamps to the coarse width. Buckets are floor-div indexes AT
+    * the chosen grain; counter partials merge by addition at any nesting
+    * grain, so every routed answer equals the direct pass over
+    * never-stored samples. Both tiers open through their snapshots: a
+    * warm route over unchanged stores builds its plan with no Spark job. */
   def route(spark: SparkSession, finePath: String,
       coarsePath: Option[String], since: Long, until: Long,
       maxPoints: Int,
       keyFilter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
-    require(until > since, s"route: empty range [$since, $until)")
-    require(maxPoints >= 1, "route needs a positive point budget")
-    val fine = opened(spark, finePath)
-    // a coarse store never tiered into (or fully trimmed) does not route
-    val coarse = coarsePath.flatMap(atRest(spark, _)).filter(_.horizon.nonEmpty)
-    val (g, touched) = RollupStore.fitCascadeGrain(
-      coarse.toSeq.map(c => (c.bucketNs, c.horizon.get)), since, until,
-      maxPoints, floorW = fine.bucketNs)
-    require(g % fine.bucketNs == 0,
-      s"route: grain $g does not nest ${fine.bucketNs}")
-    val (lo, hi) = RollupStore.widenTo(since, until, g)
-    def serve(s: RollupStore.StoreSnapshot, lo: Long, hi: Long) =
-      fold(s.df, s.bucketNs, g / s.bucketNs, Some(lo), Some(hi), keyFilter)
-    if (touched.isEmpty)
-      serve(fine, lo, hi)
-        .withColumn("grain_ns", BoundLong.lit(g))
-        .withColumn("source", lit("store"))
-    else {
-      // stitch: the coarse tier serves its pre-horizon window, the fine
-      // store the rest — disjoint whole g-buckets (g is a multiple of
-      // the coarse width, which is a multiple of the fine width and of
-      // the horizon's alignment), merged by one more additive fold
-      val c = coarse.get
-      val h = c.horizon.get
-      require(g % c.bucketNs == 0,
-        s"route: grain $g does not nest ${c.bucketNs}")
-      val old = serve(c, lo, math.min(h, hi))
-      val recent = serve(fine, math.max(h, lo), hi)
-      graft.operators.TsOps.counterIncreaseCoarsen(
-          old.unionByName(recent), 1L, keyColsOf(old))
-        .withColumn("grain_ns", BoundLong.lit(g))
-        .withColumn("source", lit("stitched"))
+    val fine = RollupStore.Tier(finePath, opened(spark, finePath))
+    val coarse = coarsePath.flatMap(p =>
+      atRest(spark, p).map(RollupStore.Tier(p, _)))
+    val p = RollupStore.planRoute(RollupStore.TierList("route", None,
+      Some(fine), coarse.toSeq, fine.width), since, until, maxPoints)
+    val parts = p.parts.collect { case (Some(t), lo, hi) =>
+      require(p.g % t.width == 0,
+        s"route: grain ${p.g} does not nest ${t.width}")
+      fold(t.snap.df, t.width, p.g / t.width, lo, hi, keyFilter)
     }
+    // a stitch's tier windows are disjoint whole g-buckets: one more
+    // additive fold merges them
+    RollupStore.labelled(
+      if (parts.size == 1) parts.head
+      else graft.operators.TsOps.counterIncreaseCoarsen(
+        parts.reduce(_.unionByName(_)), 1L, keyColsOf(parts.head)),
+      p.g, p.source)
   }
 
   /** Stitched read across the fine + coarse pair at the COARSE grain:

@@ -172,9 +172,12 @@ object Tables {
     }.distinct.sorted
   }
 
+  /** The `.metrics` frame as ONE partition, like `.describe` and
+    * `.block_list`: a local relation otherwise splits into one partition
+    * per row, and its answer into one single-row Arrow batch per table. */
   def metricsDf(spark: SparkSession, dbDir: String): DataFrame = {
     import spark.implicits._
-    listMetrics(dbDir).toDF("metrics")
+    listMetrics(dbDir).toDF("metrics").coalesce(1)
   }
 
   /** `.describe`: per metrics — row count and ts range (`.describe` builds

@@ -349,12 +349,15 @@ object RollupStore {
   private[storage] final case class StoreSnapshot(df: DataFrame,
       bucketNs: Long, horizon: Option[Long], dayBytes: Map[String, Long]) {
 
-    /** Bytes of the files a scope to `[lo, hi)` reads: the `__day`
-      * directories [[FileTree.scope]] keeps, plus any file outside one. */
-    def scopedBytes(lo: Long, hi: Long): Long = {
-      val (first, last) = (FileTree.day(lo), FileTree.day(hi - 1))
+    /** Bytes of the files a scope to `[lo, hi)` reads (an absent bound
+      * is open): the `__day` directories [[FileTree.scope]] keeps, plus
+      * any file outside one. */
+    def scopedBytes(lo: Option[Long], hi: Option[Long]): Long = {
+      val first = lo.map(FileTree.day)
+      val last = hi.map(h => FileTree.day(h - 1))
       dayBytes.iterator.collect {
-        case (d, b) if d.isEmpty || (d >= first && d <= last) => b
+        case (d, b) if d.isEmpty ||
+            (first.forall(d >= _) && last.forall(d <= _)) => b
       }.sum
     }
   }
@@ -428,12 +431,11 @@ object RollupStore {
 
   /** [[storeAtRest]] for a rollup store a router needs: a tree listing no
     * data file fails as [[checkedRead]] does (absent, schema-less). */
-  private def servedStore(spark: SparkSession, path: String)
-      : StoreSnapshot =
-    storeAtRest(spark, path).getOrElse {
+  private def servedStore(spark: SparkSession, path: String): Tier =
+    Tier(path, storeAtRest(spark, path).getOrElse {
       checkedRead(spark, path)
       throw new IllegalArgumentException(s"rollup store at $path is empty")
-    }
+    })
 
   /** The scoping half of [[scopedStore]] over an already-read store frame
     * — lets a stitched read that listed the store once reuse the frame
@@ -450,41 +452,88 @@ object RollupStore {
         Seq("bucket_ts", "bucket_ns", "batch_key"))
   }
 
-  /** [[scopedFrame]] for a fold over `snap`'s store alone, `df` being its
-    * frame (key-filtered or not). When the files the widened range
-    * `[lo, hi)` touches fit one file split (Spark's own
+  /** [[scopedFrame]] for one store part of a fold, `df` being `snap`'s
+    * frame (key-filtered or not). When the files the window `[lo, hi)`
+    * touches fit one file split (Spark's own
     * `spark.sql.files.maxPartitionBytes`), they are read as one partition:
-    * the replay dedup and the fold above it then run in one stage, one
-    * job. Larger scopes keep the partitioned plan. */
-  private def storeScoped(snap: StoreSnapshot, df: DataFrame, lo: Long,
-      hi: Long): DataFrame = {
+    * the replay dedup then needs no exchange, and a fold over that part
+    * alone runs in one stage, one job. Larger scopes keep the partitioned
+    * plan. */
+  private def storeScoped(snap: StoreSnapshot, df: DataFrame,
+      lo: Option[Long], hi: Option[Long]): DataFrame = {
     val split = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-    scopedFrame(df, Some(lo), Some(hi),
-      onePartition = snap.scopedBytes(lo, hi) <= split)
+    scopedFrame(df, lo, hi, onePartition = snap.scopedBytes(lo, hi) <= split)
   }
 
-  /** A tier at rest for one stitched call: its [[StoreSnapshot]] under
-    * the tier's path. */
-  private final case class TierAtRest(path: String, df: DataFrame,
-      bucketNs: Long, horizon: Option[Long])
+  /** One store of a [[TierList]]: its path and the snapshot it was opened
+    * under. */
+  private[storage] final case class Tier(path: String, snap: StoreSnapshot) {
+    def width: Long = snap.bucketNs
+    def horizon: Option[Long] = snap.horizon
+  }
 
-  /** Open every tier through [[storeAtRest]], so each tier's frame, width
-    * and horizon come from its own snapshot and a warm cascade runs no
-    * metadata job. A tier whose tree lists no data file (nothing tiered
-    * that far yet, or fully trimmed) is None. With `mirrorFirst`, a
+  /** How a raw head is read (by name: a route whose parts leave raw out
+    * never reads it) and the columns its [[rollupRows]] pass aggregates. */
+  private[storage] final case class RawSide(read: () => DataFrame,
+      valueCol: String, tsCol: String, distinctCol: Option[String],
+      lgK: Int, histBoundsCents: Seq[Long])
+
+  /** The ordered sources one route or stitched read serves from.
+    *  - The head serves `[finest tier horizon, ∞)`: the `mirror` store when
+    *    there is one (a complete horizonless mirror — the raw-less
+    *    lifecycle's finest store, or [[route]]'s untiered store), else the
+    *    `raw` table.
+    *  - `tiers` run fine → coarse. A tier with a horizon serves its horizon
+    *    window ([[tierWindows]]); one without was never tiered into and
+    *    serves nothing, but still declares the key set.
+    *  - `floor` is the width at or above which a budget grain is served
+    *    from the stores. Below it a finer source answers alone when the
+    *    range touches no tier: raw beside a mirror, or the `sample`.
+    *    `floor = 1` lets a raw head serve any grain its window allows. */
+  private[storage] final case class TierList(context: String,
+      raw: Option[RawSide], mirror: Option[Tier], tiers: Seq[Tier],
+      floor: Long = 1L, sample: Option[SampledRouter] = None) {
+    def stores: Seq[Tier] = mirror.toSeq ++ tiers
+    def served: Seq[Tier] = tiers.filter(_.horizon.nonEmpty)
+
+    // the raw side serves the schema the stores serve: a dashboard that
+    // selects distinct_est at a coarse zoom must not break on a raw one
+    for (r <- raw; (c, param, given) <- Seq(
+        ("hll", "distinctCol", r.distinctCol.nonEmpty),
+        ("hcnt", "histBoundsCents", r.histBoundsCents.nonEmpty)))
+      require(given || !stores.exists(_.snap.df.columns.contains(c)),
+        s"$context: a store carries $c — pass $param so the raw side " +
+          "serves the same schema")
+
+    /** The head (None for raw) and every tier with a horizon, each with
+      * the window it serves within `[since, until)`. */
+    def parts(since: Option[Long], until: Option[Long])
+        : Seq[(Option[Tier], Option[Long], Option[Long])] = {
+      val head = mirror.map(Some(_)).orElse(raw.map(_ => None)).toSeq
+      val windows = tierWindows(context,
+        head.map(_ => None) ++ served.map(_.horizon), since, until)
+      (head ++ served.map(Some(_))).zip(windows).map {
+        case (t, (lo, hi)) => (t, lo, hi)
+      }
+    }
+  }
+
+  /** Open every store of a chain through [[storeAtRest]], so a warm chain
+    * runs no metadata job. A store whose tree lists no data file (nothing
+    * tiered that far yet, or fully trimmed) is None. With `mirrorFirst`, a
     * data-bearing store past index 0 without a horizon fails loudly —
     * data landed in a tier path not via tiering is a wiring bug, and the
     * check must not depend on which range a dashboard happens to ask
     * for. */
-  private def readTiers(spark: SparkSession, storePaths: Seq[String],
-      context: String, mirrorFirst: Boolean): Seq[Option[TierAtRest]] =
+  private def openTiers(spark: SparkSession, storePaths: Seq[String],
+      context: String, mirrorFirst: Boolean): Seq[Option[Tier]] =
     storePaths.zipWithIndex.map { case (p, i) =>
       storeAtRest(spark, p).map { s =>
         if (mirrorFirst) require(i == 0 || s.horizon.nonEmpty,
           s"$context: tiered store at $p has data but no tier horizon" +
             " — only the FIRST (mirror) store may be horizonless; " +
             "stitch order must run mirror, then fine → coarse")
-        TierAtRest(p, s.df, s.bucketNs, s.horizon)
+        Tier(p, s)
       }
     }
 
@@ -519,19 +568,6 @@ object RollupStore {
             s"and corrupt the aggregates (${e.getMessage})")
     }
   }
-
-  /** Apply a validated key predicate to every readable tier's frame —
-    * widths and horizons stay computed from the UNFILTERED frames (the
-    * filter is a serving concern; a series with no pre-horizon rows must
-    * not make the router believe the store was never tiered). */
-  private def filterTiers(tiers: Seq[Option[TierAtRest]],
-      keyFilter: Option[Column], context: String)
-      : Seq[Option[TierAtRest]] =
-    keyFilter.fold(tiers) { f =>
-      tiers.flatten.headOption.foreach(t =>
-        requireKeyPredicate(f, t.df, context))
-      tiers.map(_.map(t => t.copy(df = t.df.filter(f))))
-    }
 
   /** Merge partial per-bucket rows — from one store, several tiers, or a
     * raw-side [[rollupRows]] pass — into one row per `coarseNanos` bucket.
@@ -629,185 +665,206 @@ object RollupStore {
 
   /** Serving bounds round OUTWARD to whole `g`-buckets (a dashboard shows
     * complete buckets; the exact-bounds contract stays on [[rollup]]).
-    * `private[storage]`: [[CounterStore.route]] shares the arithmetic. */
-  private[storage] def widenTo(since: Long, until: Long, g: Long): (Long, Long) =
-    (Math.floorDiv(since, g) * g, (Math.floorDiv(until - 1, g) + 1) * g)
+    * Overflow throws `ArithmeticException` ([[routeGrain]] reports it). */
+  private def widenTo(since: Long, until: Long, g: Long): (Long, Long) =
+    (Math.multiplyExact(Math.floorDiv(since, g), g),
+      Math.multiplyExact(Math.floorDiv(until - 1, g) + 1, g))
 
-  /** Grain from the WIDENED span: the point budget is a hard contract, so
-    * re-derive until the widened bucket count fits — JUMP to the widened
-    * span's own ceil-grain each time (a unit step would crawl); g only
-    * grows and widening adds at most one bucket per edge, so this
-    * converges in a couple of rounds. */
-  private def fitGrain(since: Long, until: Long, maxPoints: Int, g0: Long,
-      roundUp: Long => Long): Long = {
-    var g = g0
-    var done = false
-    while (!done) {
+  /** The finest multiple of `w`, from `from` up, whose widened bucket count
+    * fits `maxPoints`: the point budget is a hard contract, so re-derive
+    * until the widened count fits — JUMP to the widened span's own
+    * ceil-grain each time (a unit step would crawl); g only grows and
+    * widening adds at most one bucket per edge, so this converges in a
+    * couple of rounds. */
+  private def fitGrain(since: Long, until: Long, maxPoints: Int, w: Long,
+      from: Long): Long = {
+    def up(x: Long): Long =
+      Math.multiplyExact(Math.addExact(x, w - 1) / w, w)
+    @scala.annotation.tailrec
+    def fit(g: Long): Long = {
       val (lo, hi) = widenTo(since, until, g)
-      if ((hi - lo) / g <= maxPoints) done = true
-      else g = roundUp((hi - lo + maxPoints - 1) / maxPoints)
+      val span = Math.subtractExact(hi, lo)
+      if (span / g <= maxPoints) g
+      else fit(up(Math.addExact(span, maxPoints - 1L) / maxPoints))
     }
-    g
+    fit(up(from))
+  }
+
+  /** THE grain rule of every route. First the budget alone: the finest
+    * grain whose widened span fits `maxPoints`. Then the clamps: a grain
+    * at or above `floor` — or any grain, when nothing finer than the floor
+    * exists (`fineBelowFloor` false) — rounds up to a multiple of `floor`,
+    * and a grain whose widened range touches a tier rounds up to a
+    * multiple of the widest touched width, iterated to a fixpoint (a
+    * coarser grain widens the bounds, which can touch a coarser tier; g
+    * only grows, so this converges within the tier count). `tiers` are
+    * (width, horizon) fine → coarse. Returns the grain and the tiers its
+    * widened range touches. When no grain fits — a one-point budget over a
+    * range holding a multiple of every grain (epoch 0) widens to two
+    * buckets at any grain, until the arithmetic overflows — it fails with
+    * an `IllegalArgumentException` instead of serving an overrun. */
+  private[storage] def routeGrain(since: Long, until: Long, maxPoints: Int,
+      floor: Long, fineBelowFloor: Boolean, tiers: Seq[(Long, Long)])
+      : (Long, Seq[(Long, Long)]) = {
+    // touch is tested on the WIDENED range: a first bucket dipping below a
+    // horizon would otherwise silently miss the tiered-off samples in it
+    def touched(g: Long): Seq[(Long, Long)] = {
+      val (lo, hi) = widenTo(since, until, g)
+      tiers.zipWithIndex.collect {
+        case ((w, h), i) if lo < h &&
+            hi > tiers.lift(i + 1).fold(Long.MinValue)(_._2) => (w, h)
+      }
+    }
+    try {
+      val g0 = fitGrain(since, until, maxPoints, 1L, 1L)
+      val base = if (g0 >= floor || !fineBelowFloor) floor else 1L
+      @scala.annotation.tailrec
+      def settle(g: Long): Long = {
+        val w = (base +: touched(g).map(_._1)).max
+        val next = if (w == 1L) g
+          else fitGrain(since, until, maxPoints, w, Math.max(g, w))
+        if (next == g) g else settle(next)
+      }
+      val g = settle(g0)
+      (g, touched(g))
+    } catch {
+      case _: ArithmeticException => throw new IllegalArgumentException(
+        s"no grain fits [$since, $until) in $maxPoints point(s)")
+    }
+  }
+
+  /** One route's choice over a [[TierList]]: the grain, the widened
+    * bounds, the source label and the parts a stitch folds. The finer
+    * source alone (raw or the sample) answers when the grain needed no
+    * clamp and touches no tier; the mirror alone when the grain touches
+    * no tier; otherwise the head and every tier with a horizon stitch. */
+  private[storage] final case class RoutePlan(g: Long, lo: Long, hi: Long,
+      source: String, parts: Seq[(Option[Tier], Option[Long], Option[Long])])
+
+  private[storage] def planRoute(list: TierList, since: Long, until: Long,
+      maxPoints: Int): RoutePlan = {
+    require(until > since, s"${list.context}: empty range [$since, $until)")
+    require(maxPoints >= 1, s"${list.context} needs a positive point budget")
+    val fine = list.raw.nonEmpty || list.sample.nonEmpty
+    val (g, touched) = routeGrain(since, until, maxPoints, list.floor, fine,
+      list.served.map(t => (t.width, t.horizon.get)))
+    val (lo, hi) = widenTo(since, until, g)
+    val parts = list.parts(Some(lo), Some(hi))
+    val (source, serving) =
+      if (touched.nonEmpty) ("stitched", parts)
+      else if (fine && (list.floor == 1L || g < list.floor))
+        (if (list.sample.nonEmpty) "sample" else "raw", Nil)
+      else if (list.mirror.nonEmpty) ("store", parts.take(1))
+      else ("stitched", parts)
+    RoutePlan(g, lo, hi, source, serving)
+  }
+
+  /** The one site that labels a routed answer with its grain and source,
+    * so a dashboard — and the tests — see which path answered. */
+  private[storage] def labelled(df: DataFrame, g: Long, source: String)
+      : DataFrame =
+    df.select(col("*"), BoundLong.lit(g).as("grain_ns"),
+      lit(source).as("source"))
+
+  /** THE router: serve `[since, until)` under `maxPoints` from `list`
+    * ([[planRoute]]). A stitch folds the planned parts ([[stitch]]); a fine
+    * zoom is one raw [[rollupRows]] pass at the grain, grouped by the
+    * stores' keys with the caller's dimensions so every zoom serves the
+    * same series and schema, or the sample's estimate. `keyFilter` (key
+    * columns only — validated loudly against the first store) prunes
+    * every source before any fold; widths and horizons stay those of the
+    * UNFILTERED snapshots, so a key slice with no pre-horizon rows never
+    * makes a tiered store look untiered. */
+  private def routeTiers(list: TierList, since: Long, until: Long,
+      maxPoints: Int, keyFilter: Option[Column]): DataFrame = {
+    for (f <- keyFilter; t <- list.stores.headOption)
+      requireKeyPredicate(f, t.snap.df, list.context)
+    val p = planRoute(list, since, until, maxPoints)
+    val served = p.source match {
+      case "sample" => list.sample.get.zoom(p.g, p.lo, p.hi, keyFilter)
+      case "raw" =>
+        val r = list.raw.get
+        val rows = rollupRows(graft.operators.TsOps.rangeFilter(
+            rawOf(list, keyFilter), Some(p.lo), Some(p.hi), r.tsCol), p.g,
+            r.valueCol, r.tsCol, r.distinctCol, r.lgK, r.histBoundsCents,
+            sharedKeys(list), withVariance =
+              list.stores.exists(_.snap.df.columns.contains("sumsq_c")))
+          .drop("bucket_ns")
+        if (r.distinctCol.isEmpty) rows
+        else rows.withColumn("distinct_est", expr("hll_sketch_estimate(hll)"))
+      case _ =>
+        val folded = stitch(list, p.parts, p.g, keyFilter)
+        list.sample.fold(folded)(_.exact(folded))
+    }
+    labelled(served, p.g, p.source)
+  }
+
+  /** The raw head's frame, key-filtered. */
+  private def rawOf(list: TierList, keyFilter: Option[Column]): DataFrame = {
+    val raw = list.raw.get.read()
+    keyFilter.fold(raw)(raw.filter)
   }
 
   /** Serving-layer grain router — the maxDataPoints contract a dashboard
     * backend implements: answer `[since, until)` under a point budget from
-    * the cheapest adequate source. The target grain is
-    * `max(1, ⌈span/maxPoints⌉)`; a target at or above the stored bucket
-    * width rounds UP to the next stored-width multiple and answers from
-    * the STORE (partition-pruned KB rows — at 100 TB this is the
-    * difference between reading kilobytes and terabytes); only a budget
-    * demanding finer-than-stored resolution falls back to the raw table.
-    * Serving bounds widen outward to whole grain buckets (a dashboard
-    * shows complete buckets; the exact-bounds contract stays on
-    * [[rollup]]). Output carries `grain_ns` and `source` so the caller —
-    * and the tests — can see which path answered.
+    * the cheapest adequate source ([[routeGrain]]). A budget grain at or
+    * above the stored bucket width rounds UP to the next stored-width
+    * multiple and answers from the STORE (partition-pruned KB rows — at
+    * 100 TB the difference between reading kilobytes and terabytes); only
+    * a budget demanding finer-than-stored resolution falls back to the raw
+    * table. Serving bounds widen outward to whole grain buckets. Output
+    * carries `grain_ns` and `source`.
     *
-    * TIER-AWARE: when the store has a [[tierOff]] horizon, raw no longer
-    * holds the pre-horizon samples, so (a) any store-grain answer is
-    * STITCHED — store buckets below the horizon, raw re-aggregated at the
-    * same grain at/after it — and (b) a budget demanding finer-than-stored
-    * resolution over a pre-horizon range CLAMPS to the stored grain (the
-    * finest resolution that still exists) and stitches, labeled
-    * `source="stitched"`. The pre-tiering behavior — serve the raw
-    * remnant and label it "raw" — would be a silently partial answer; it
-    * is now impossible by construction. A range entirely at/after the
-    * horizon still serves raw at the requested fine grain.
+    * TIER-AWARE: a store with no [[tierOff]] horizon is a complete mirror
+    * (`source="store"`, raw only for fine zooms). A store with a horizon
+    * no longer has raw beside it below the horizon, so a store-grain
+    * answer STITCHES store buckets below the horizon with raw at the same
+    * grain at/after it, and a finer-than-stored budget whose widened range
+    * dips below the horizon CLAMPS to the stored grain and stitches
+    * (`"stitched"`) — never a silently partial raw remnant. A range
+    * entirely at/after the horizon still serves raw at the fine grain.
     *
     * KEY PUSHDOWN: `keyFilter` (a predicate over the store's key columns
-    * only — validated loudly) prunes BOTH sides before any stitch: the
-    * store scan (the predicate reaches the parquet reader as a pushed
-    * filter over the KB rows) and the raw re-aggregation (at 100 TB,
-    * "one series, zoomed" — the most common keyed dashboard query — must
-    * never stitch millions of series and filter client-side). The tier
-    * horizon is still read from the UNFILTERED store: the filter selects
-    * which series are served, not whether the store was tiered into.
+    * only — validated loudly) prunes both the store scan and the raw
+    * re-aggregation before any stitch.
     *
-    * SNAPSHOT SERVING: the store is opened through [[storeAtRest]], so
-    * width and horizon come from the snapshot probed under the store's
-    * current file listing. Any file added, removed or rewritten under
-    * the store (an [[append]], [[compact]], [[tierOff]]) re-probes on the
-    * next call; a warm route over an unchanged store runs no metadata
-    * job while its plan is built. `raw` is by-name and read only on a
-    * path that needs it (a raw fine zoom or a stitch), so a store-served
-    * answer never pays the raw read's schema job — and a bad `raw` path
-    * fails only when raw is actually needed.
-    */
+    * SNAPSHOT SERVING: the store opens through [[storeAtRest]], so a warm
+    * route over an unchanged store runs no metadata job while its plan is
+    * built. `raw` is by-name and read only when a part needs it (a raw
+    * fine zoom, or a stitch whose raw window is non-empty) — and a bad
+    * `raw` path fails only then. */
   def route(spark: SparkSession, path: String, raw: => DataFrame,
       since: Long, until: Long, maxPoints: Int,
       valueCol: String = "value", tsCol: String = "ts",
       distinctCol: Option[String] = None, lgK: Int = 12,
       histBoundsCents: Seq[Long] = Nil,
       keyFilter: Option[Column] = None): DataFrame = {
-    require(until > since, s"route: empty range [$since, $until)")
-    require(maxPoints >= 1, "route needs a positive point budget")
-    val snap = servedStore(spark, path)
-    val StoreSnapshot(stored0, bucketNs, horizon, _) = snap
-    keyFilter.foreach(requireKeyPredicate(_, stored0, "route"))
-    val stored = keyFilter.fold(stored0)(stored0.filter)
-    lazy val rawF = { val r = raw; keyFilter.fold(r)(r.filter) }
-    // the raw fallback must produce the same schema the store serves —
-    // a dashboard that selects distinct_est at a coarse zoom must not
-    // break when a finer zoom routes to raw
-    require(!stored.columns.contains("hll") || distinctCol.nonEmpty,
-      "route: the store carries a distinct sketch — pass distinctCol so " +
-        "the raw fallback serves the same schema")
-    require(!stored.columns.contains("hcnt") || histBoundsCents.nonEmpty,
-      "route: the store carries histogram counters — pass histBoundsCents" +
-        " so the raw fallback serves the same schema")
-    // horizon from the UNFILTERED store (the snapshot's, with the width):
-    // a key slice with no pre-horizon rows must not flip the router into
-    // believing the store is an untiered complete mirror (it would then
-    // serve that series' empty store slice instead of its raw samples)
-    def widened(g: Long): (Long, Long) = widenTo(since, until, g)
-    def fit(g0: Long, roundUp: Long => Long): Long =
-      fitGrain(since, until, maxPoints, g0, roundUp)
-    val span = until - since
-    val target = math.max(1L, (span + maxPoints - 1) / maxPoints)
-    val toMult = (g: Long) => ((g + bucketNs - 1) / bucketNs) * bucketNs
-    val gRaw = fit(target, identity)
-    def stitchedAt(g: Long): DataFrame = {
-      val (lo, hi) = widened(g)
-      stitchTiers(spark, rawF,
-        Seq(Some(TierAtRest(path, stored, bucketNs, horizon))), g, Some(lo),
-        Some(hi), valueCol, tsCol, distinctCol, lgK, histBoundsCents)
-        .withColumn("grain_ns", BoundLong.lit(g))
-        .withColumn("source", lit("stitched"))
-    }
-    if (gRaw >= bucketNs) { // the store's resolution satisfies the budget
-      val g = fit(toMult(gRaw), toMult)
-      horizon match {
-        case Some(_) => stitchedAt(g) // tiered lifecycle: the store holds
-          // the pre-horizon past, raw the rest — stitch, never partial
-        case None => // untiered: the store is the complete mirror —
-          // served from the snapshot's frame, not a second rollup()
-          // listing of the same tree
-          val (lo, hi) = widened(g)
-          mergeFold(storeScoped(snap, stored, lo, hi), g,
-              uniformWidth = true)
-            .withColumn("grain_ns", BoundLong.lit(g))
-            .withColumn("source", lit("store"))
-      }
-    } else {
-      // the raw-only fast path must test the horizon against the
-      // WIDENED lower bound, not the requested `since`: widening rounds
-      // the first bucket down, and a first bucket dipping below the
-      // horizon would silently miss the tiered-off samples inside it —
-      // exactly the partial answer this router exists to prevent
-      val (lo, hi) = widened(gRaw)
-      if (horizon.forall(_ <= lo)) {
-        // finer-than-stored budget over a range raw fully holds — grouped
-        // by the store's own keys (and dims) so a fine zoom serves the
-        // same series and the same schema
-        val rows = rollupRows(graft.operators.TsOps.rangeFilter(rawF,
-            Some(lo), Some(hi), tsCol), gRaw, valueCol, tsCol, distinctCol,
-            lgK, histBoundsCents, keyColsOf(stored),
-            withVariance = stored0.columns.contains("sumsq_c"))
-          .drop("bucket_ns")
-        (if (distinctCol.nonEmpty) // schema parity with the store path
-          rows.withColumn("distinct_est", expr("hll_sketch_estimate(hll)"))
-        else rows)
-          .withColumn("grain_ns", BoundLong.lit(gRaw))
-          .withColumn("source", lit("raw"))
-      } else {
-        // the budget demands finer-than-stored resolution over a range
-        // whose pre-horizon samples no longer exist at that resolution:
-        // clamp to the stored grain — a complete answer at the finest
-        // resolution that still exists beats a silently partial fine one
-        stitchedAt(fit(toMult(bucketNs), toMult))
-      }
-    }
+    val store = servedStore(spark, path)
+    val rawSide = Some(RawSide(() => raw, valueCol, tsCol, distinctCol, lgK,
+      histBoundsCents))
+    // a horizonless store is a complete mirror and raw its fine-zoom
+    // source; a store with a horizon is a tier that raw heads
+    val list =
+      if (store.horizon.isEmpty)
+        TierList("route", rawSide, Some(store), Nil, store.width)
+      else TierList("route", rawSide, None, Seq(store), store.width)
+    routeTiers(list, since, until, maxPoints, keyFilter)
   }
 
-  /** Budget router with the AQP SAMPLE tier as the fine-zoom source —
-    * the composition of the two serving tiers: a budget the exact store
-    * can satisfy (target grain at or above the stored bucket width)
-    * answers EXACTLY from the store's partition-pruned KB rows; a budget
-    * demanding finer-than-stored resolution — where [[route]] would fall
-    * back to re-aggregating the raw table — answers from the
-    * deterministic [[SampleStore]] instead, reading 1/rate_den of the
-    * bytes (at 100 TB: the dashboard drill-in that would otherwise scan
-    * terabytes reads the GB-sized sample). ONE schema across every zoom
-    * so a dashboard never re-binds columns: `(bucket_ts, n_sample,
-    * est_count, est_sum_cents, est_var_cents2, rate_den, grain_ns,
-    * source)` — exact answers carry `rate_den = 1` and a ZERO variance
-    * bar (an exact count has no sampling randomness), sampled answers
-    * carry the store's rate and the unbiased Horvitz-Thompson variance
-    * of the sum (σ ≈ √var: the error bar printed beside the number).
-    * Serves the complete-mirror lifecycle: a tiered (horizon-bearing)
-    * store fails loudly — its post-horizon range lives in raw, which
-    * this router deliberately does not read; route/routeCascade own the
-    * tiered lifecycles.
-    *
-    * KEYED stores serve their dimensions through both zooms: the exact
-    * path folds per series as any keyed rollup; the sampled path groups
-    * the sampled RAW rows by the store's own key columns (they ride
-    * every sampled row — the sample came from the same raw table), so a
-    * fine zoom serves the same series the exact tiers do. `keyFilter`
-    * (a predicate over the key columns only — validated loudly) prunes
-    * both the store scan and the sampled scan before any aggregate, the
-    * [[route]] key-pushdown contract: "one series, zoomed" never
-    * estimates every series and filters client-side. */
+  /** Budget router with the AQP SAMPLE tier as the fine-zoom source: a
+    * budget the exact store can satisfy answers EXACTLY from the store; a
+    * budget demanding finer-than-stored resolution — where [[route]]
+    * would re-aggregate raw — answers from the deterministic
+    * [[SampleStore]], reading 1/rate_den of the bytes. ONE schema across
+    * every zoom so a dashboard never re-binds columns: `(keys...,
+    * bucket_ts, n_sample, est_count, est_sum_cents, est_var_cents2,
+    * rate_den, grain_ns, source)` — exact answers carry `rate_den = 1`
+    * and a ZERO variance bar, sampled answers the store's rate and the
+    * unbiased Horvitz-Thompson variance of the sum. Serves the
+    * complete-mirror lifecycle only: a tiered store fails loudly (its
+    * post-horizon range lives in raw, which this router does not read).
+    * Keyed stores serve their dimensions through both zooms, and
+    * `keyFilter` prunes both scans before any aggregate. */
   def routeSampled(spark: SparkSession, storePath: String,
       samplePath: String, since: Long, until: Long, maxPoints: Int,
       valueCol: String = "value",
@@ -815,32 +872,19 @@ object RollupStore {
     prepareSampled(spark, storePath, samplePath, valueCol,
       pinSample = false).route(since, until, maxPoints, keyFilter)
 
-  /** The OPEN-ONCE face of [[routeSampled]] — a dashboard backend routes
-    * thousands of zooms against one prepared pair of tiers, so the
-    * per-store metadata work (self-heal, schema merge across the day
-    * files, grain probe, horizon check, key inference, sample-store
-    * validation) prices in once instead of per request — a cold open is
-    * metadata jobs, a warm plan build none (RollupStoreSpec's "a warm
-    * route over an unchanged store builds its plan with zero Spark jobs"
-    * pins the store side) — and the prepared path is what a serving
-    * layer should hold (the
-    * [[SampleStore.open]] open-once/estimate-many posture extended to
-    * the router). `pinSample` persists the replay-deduped sample rows —
-    * the BlinkDB serving stance; [[SampledRouter.close]] releases the
-    * pin.
-    *
-    * The store opens through [[storeAtRest]] ([[route]]'s snapshot
-    * semantics): any file added, removed or rewritten under the store
-    * re-probes, and re-preparing over an unchanged store runs no
-    * metadata job for it — so the unpinned [[routeSampled]], which
-    * prepares per call, pays the store's probe once per store state,
-    * not once per request. */
+  /** The OPEN-ONCE face of [[routeSampled]]: the per-store metadata work
+    * (self-heal, grain probe, horizon check, key inference, sample-store
+    * validation) prices in once, and every later [[SampledRouter.route]]
+    * is pure plan construction. `pinSample` persists the replay-deduped
+    * sample rows; [[SampledRouter.close]] releases the pin. The store
+    * opens through [[storeAtRest]], so re-preparing over an unchanged
+    * store runs no metadata job for it. */
   def prepareSampled(spark: SparkSession, storePath: String,
       samplePath: String, valueCol: String = "value",
       pinSample: Boolean = true): SampledRouter = {
-    val snap = servedStore(spark, storePath)
-    val keys = keyColsOf(snap.df)
-    require(snap.horizon.isEmpty,
+    val store = servedStore(spark, storePath)
+    val keys = keyColsOf(store.snap.df)
+    require(store.horizon.isEmpty,
       "routeSampled serves a complete-mirror store — this store has a " +
         "tier horizon, so its post-horizon samples live in raw, which " +
         "this router does not read; use route()/routeCascade() for the " +
@@ -858,56 +902,36 @@ object RollupStore {
           "valueCol must fail at prepare, not pin rows and then die on " +
           "the first fine zoom")
     } catch { case e: Throwable => handle.close(); throw e }
-    SampledRouter(snap, keys, handle, valueCol)
+    SampledRouter(store, keys, handle, valueCol)
   }
 
-  /** A prepared store+sample serving pair (see [[prepareSampled]]):
-    * every [[route]] call is pure plan construction over the already-
-    * validated frames — no metadata jobs, no re-listing. */
+  /** A prepared store+sample serving pair (see [[prepareSampled]]): a
+    * tier list of the mirror store with the sample as its fine-zoom
+    * source. */
   final case class SampledRouter private[storage] (
-      private[storage] val snap: StoreSnapshot, keys: Seq[String],
+      private[storage] val store: Tier, keys: Seq[String],
       handle: SampleStore.SampleHandle, valueCol: String) {
-    private def stored = snap.df
-    private def bucketNs = snap.bucketNs
 
     def route(since: Long, until: Long, maxPoints: Int,
-        keyFilter: Option[Column] = None): DataFrame = {
-      require(until > since, s"routeSampled: empty range [$since, $until)")
-      require(maxPoints >= 1, "routeSampled needs a positive point budget")
-      keyFilter.foreach(requireKeyPredicate(_, stored, "routeSampled",
-        keys))
-      val storedF = keyFilter.fold(stored)(stored.filter)
-      val span = until - since
-      val target = math.max(1L, (span + maxPoints - 1) / maxPoints)
-      val gRaw = fitGrain(since, until, maxPoints, target, identity)
-      if (gRaw >= bucketNs) {
-        val toMult = (g: Long) =>
-          ((g + bucketNs - 1) / bucketNs) * bucketNs
-        val g = fitGrain(since, until, maxPoints, toMult(gRaw), toMult)
-        val (lo, hi) = widenTo(since, until, g)
-        mergeFold(storeScoped(snap, storedF, lo, hi), g,
-            uniformWidth = true)
-          .select(keys.map(col) ++ Seq(col("bucket_ts"),
-            col("n").as("n_sample"), col("n").as("est_count"),
-            // sum_c is decimal(28,2); at extreme widths (cents nearing
-            // 2^63) this non-ANSI cast nulls rather than fails — the
-            // SAME width limit the sampled path's integer-cents
-            // estimator acknowledges. Swap both emissions to decimal if
-            // a store's per-bucket sums approach the long edge; the
-            // estimator, not the width, is the schema contract here.
-            (col("sum_c") * 100).cast("long").as("est_sum_cents"),
-            lit(0L).as("est_var_cents2"), lit(1L).as("rate_den")): _*)
-          .withColumn("grain_ns", BoundLong.lit(g))
-          .withColumn("source", lit("store"))
-      } else {
-        val (lo, hi) = widenTo(since, until, gRaw)
-        handle
-          .estimateTimeBuckets(gRaw, valueCol, Some(lo), Some(hi),
-            groupCols = keys, keyFilter = keyFilter)
-          .withColumn("grain_ns", BoundLong.lit(gRaw))
-          .withColumn("source", lit("sample"))
-      }
-    }
+        keyFilter: Option[Column] = None): DataFrame =
+      routeTiers(TierList("routeSampled", None, Some(store), Nil,
+        store.width, Some(this)), since, until, maxPoints, keyFilter)
+
+    /** The fine zoom: Horvitz-Thompson estimates per `g` bucket. */
+    private[storage] def zoom(g: Long, lo: Long, hi: Long,
+        keyFilter: Option[Column]): DataFrame =
+      handle.estimateTimeBuckets(g, valueCol, Some(lo), Some(hi),
+        groupCols = keys, keyFilter = keyFilter)
+
+    /** An exact store answer in the estimate schema. sum_c is
+      * decimal(28,2); at extreme widths (cents nearing 2^63) this non-ANSI
+      * cast nulls rather than fails — the SAME width limit the sampled
+      * path's integer-cents estimator acknowledges. */
+    private[storage] def exact(folded: DataFrame): DataFrame =
+      folded.select(keys.map(col) ++ Seq(col("bucket_ts"),
+        col("n").as("n_sample"), col("n").as("est_count"),
+        (col("sum_c") * 100).cast("long").as("est_sum_cents"),
+        lit(0L).as("est_var_cents2"), lit(1L).as("rate_den")): _*)
 
     /** Release the pinned sample (no-op for an unpinned prepare). */
     def close(): Unit = handle.close()
@@ -1250,27 +1274,15 @@ object RollupStore {
     (width, if (r.isNullAt(1)) None else Some(r.getLong(1)))
   }
 
-  /** Stitch raw + tier stores into partial rows and fold at `coarseNanos`
-    * — the shared core of [[tieredRollup]], [[cascadeRollup]] and
-    * [[route]]'s tiered paths. `storePaths` runs fine → coarse; store i
-    * serves `[horizon(store i+1), horizon(store i))` and raw serves
-    * `[horizon(finest), ∞)`, so each sample is counted from exactly one
-    * tier even DURING a tierOff's append-to-trim window (or after a crash
-    * inside it), when the finer tier still holds already-tiered rows. A
-    * store with no horizon record was never tiered into and serves
-    * nothing; a missing or fully-trimmed store tree likewise (trim a tier
-    * fully only after tiering its whole range onward — then its horizon
-    * equals the next store's and the gap is empty). An absent/empty raw
-    * tree — everything tiered off — serves zero raw rows instead of
-    * failing schema inference. */
   /** Serving windows for a fine → coarse chain of stitched sources,
     * given each source's OWN horizon (None = serves to ∞, i.e. raw or a
     * mirror store): source i serves `[next present horizon below it ∨
     * since, own horizon ∧ until)`. This is THE exactly-once-per-sample
-    * window discipline every stitched read shares — one implementation,
-    * so a fix to the arithmetic cannot diverge between the raw-headed
-    * and the raw-less lifecycles. Validates that present horizons run
-    * newest (fine) to oldest (coarse). */
+    * window discipline every stitched read shares: each sample is counted
+    * from exactly one tier even DURING a tierOff's append-to-trim window
+    * (or after a crash inside it), when the finer tier still holds
+    * already-tiered rows. Validates that present horizons run newest
+    * (fine) to oldest (coarse). */
   private def tierWindows(context: String, horizons: Seq[Option[Long]],
       since: Option[Long], until: Option[Long])
       : Seq[(Option[Long], Option[Long])] = {
@@ -1285,70 +1297,59 @@ object RollupStore {
     }
   }
 
-  private def stitchTiers(spark: SparkSession, raw: DataFrame,
-      tiers: Seq[Option[TierAtRest]], coarseNanos: Long,
-      since: Option[Long], until: Option[Long],
-      valueCol: String, tsCol: String, distinctCol: Option[String],
-      lgK: Int, histBoundsCents: Seq[Long]): DataFrame = {
-    // per-store horizons, fine → coarse: absent, unreadable, or
-    // never-tiered-into (horizonless) stores skipped
-    val present: Seq[(TierAtRest, Long)] =
-      tiers.flatten.flatMap(t => t.horizon.map(t -> _))
-    // raw heads the chain as the horizonless source serving to ∞ — the
-    // same slot the mirror store occupies in the raw-less lifecycle
-    val windows = tierWindows("stitchTiers",
-      None +: present.map(p => Some(p._2)), since, until)
-    val (rawLo, rawHi) = windows.head
-    val rawScoped = graft.operators.TsOps.rangeFilter(raw, rawLo, rawHi,
-      tsCol)
-    val anySketch = present.exists(_._1.df.columns.contains("hll"))
-    val anyHist = present.exists(_._1.df.columns.contains("hcnt"))
-    // the variance dimension needs nothing from the caller (no column
-    // name, no schedule) — the raw side simply mirrors whatever the
-    // tiers carry, so stitched reads serve it with zero new parameters
-    val anyVar = present.exists(_._1.df.columns.contains("sumsq_c"))
-    require(!anySketch || distinctCol.nonEmpty,
-      "stitchTiers: a tier carries a distinct sketch — pass distinctCol " +
-        "so the raw side serves the same schema")
-    require(!anyHist || histBoundsCents.nonEmpty,
-      "stitchTiers: a tier carries histogram counters — pass " +
-        "histBoundsCents so the raw side serves the same schema")
-    // key inference reads ALL readable tiers, horizonless included: a
-    // keyed store that has not been tiered into yet serves no rows but
-    // still declares the dimension, so the stitched schema cannot flip
-    // from unkeyed to keyed the day the first tierOff runs
-    val keys = sharedKeys(tiers.flatten.map(t => (t.path, t.df)),
-      "stitchTiers")
-    val missing = keys.filterNot(rawScoped.columns.contains)
-    require(missing.isEmpty,
-      s"stitchTiers: the tiers are keyed by [${keys.mkString(", ")}] but " +
-        s"the raw side lacks ${missing.mkString(", ")}")
-    val cols = keys ++ Seq("bucket_ts", "bucket_ns", "n", "min_c", "max_c",
-      "sum_c") ++ (if (anyVar) Seq("sumsq_c") else Nil) ++
-      (if (anySketch) Seq("hll") else Nil) ++
-      (if (anyHist) Seq("hcnt", "hbounds") else Nil)
-    val rawPart = rollupRows(rawScoped, coarseNanos, valueCol, tsCol,
-      if (anySketch) distinctCol else None, lgK,
-      if (anyHist) histBoundsCents else Nil, keys, withVariance = anyVar)
-      .select(cols.map(col): _*)
-    val storeParts = present.zip(windows.tail).map { case ((t, _), (lo, hi)) =>
-      scopedFrame(t.df, lo, hi).select(cols.map(col): _*)
+  /** THE stitch: every part of `list` ([[TierList.parts]]) scoped to its
+    * window — each store part through [[storeScoped]], the raw head as one
+    * [[rollupRows]] pass at `g` — then folded into one row per `g` bucket
+    * ([[mergeFold]]). A raw part whose window is empty is not read at all.
+    * Store parts must carry the same dimensions (sketch, histogram,
+    * variance); the raw side mirrors them, keyed by the stores' keys. An
+    * absent or fully-trimmed store serves nothing. */
+  private def stitch(list: TierList,
+      parts: Seq[(Option[Tier], Option[Long], Option[Long])], g: Long,
+      keyFilter: Option[Column]): DataFrame = {
+    val keys = sharedKeys(list)
+    val stores = parts.flatMap(_._1)
+    // variance, sketch, histogram: each on every store part or on none
+    val dims = Seq("sumsq_c", "hll", "hcnt").filter { c =>
+      val n = stores.count(_.snap.df.columns.contains(c))
+      require(n == 0 || n == stores.size, s"${list.context}: some tiers " +
+        s"carry $c and some do not — every tier must be written with the " +
+        "same dimensions")
+      n > 0
     }
-    mergeFold(storeParts.foldLeft(rawPart)(_.unionByName(_)), coarseNanos,
-      uniformWidth = false)
+    val cols = (keys ++ Seq("bucket_ts", "bucket_ns", "n", "min_c", "max_c",
+      "sum_c") ++ dims ++ dims.filter(_ == "hcnt").map(_ => "hbounds"))
+      .map(col)
+    val frames = parts.collect {
+      case (Some(t), lo, hi) =>
+        storeScoped(t.snap, keyFilter.fold(t.snap.df)(t.snap.df.filter), lo,
+          hi)
+      case (None, lo, hi) if lo.zip(hi).forall { case (l, h) => l < h } =>
+        val r = list.raw.get
+        rollupRows(graft.operators.TsOps.rangeFilter(rawOf(list, keyFilter),
+            lo, hi, r.tsCol), g, r.valueCol, r.tsCol,
+          r.distinctCol.filter(_ => dims.contains("hll")), r.lgK,
+          if (dims.contains("hcnt")) r.histBoundsCents else Nil, keys,
+          withVariance = dims.contains("sumsq_c"))
+    }.map(_.select(cols: _*))
+    require(frames.nonEmpty, s"${list.context}: no readable store")
+    mergeFold(frames.reduce(_.unionByName(_)), g,
+      uniformWidth = frames.size == 1)
   }
 
-  /** The ONE key set a chain of stitched tiers shares — tiers keyed
-    * differently (a wiring bug: someone cascaded a host-keyed store into
-    * a type-keyed one) fail loudly, never fold across mismatched keys. */
-  private def sharedKeys(tiers: Seq[(String, DataFrame)],
-      context: String): Seq[String] = {
-    val keyed = tiers.map { case (p, df) => (p, keyColsOf(df)) }
+  /** The ONE key set every store of a tier list shares — horizonless
+    * stores included: a keyed store not yet tiered into serves no rows but
+    * still declares the dimension, so the stitched schema cannot flip from
+    * unkeyed to keyed the day the first tierOff runs. Stores keyed
+    * differently (a wiring bug: someone cascaded a host-keyed store into a
+    * type-keyed one) fail loudly, never fold across mismatched keys. */
+  private def sharedKeys(list: TierList): Seq[String] = {
+    val keyed = list.stores.map(t => (t.path, keyColsOf(t.snap.df)))
     keyed.map(_._2.sorted).distinct match {
       case Seq() => Nil
       case Seq(_) => keyed.head._2
       case _ => throw new IllegalStateException(
-        s"$context: tiers carry DIFFERENT key sets — " +
+        s"${list.context}: tiers carry DIFFERENT key sets — " +
           keyed.map { case (p, ks) => s"$p=[${ks.mkString(", ")}]" }
             .mkString("; "))
     }
@@ -1385,84 +1386,68 @@ object RollupStore {
     * contributing tier's bucket width). Each tier serves exactly its
     * horizon window, so the base aggregates equal a direct pass over the
     * never-tiered table bit for bit, and sketch dimensions survive via
-    * their associative unions. */
+    * their associative unions. A store never tiered into serves nothing;
+    * an absent/empty raw tree — everything tiered off — serves zero raw
+    * rows instead of failing schema inference. */
   def cascadeRollup(spark: SparkSession, rawPath: String,
       storePaths: Seq[String], coarseNanos: Long,
       valueCol: String = "value", tsCol: String = "ts",
       distinctCol: Option[String] = None, lgK: Int = 12,
       histBoundsCents: Seq[Long] = Nil): DataFrame = {
     require(storePaths.nonEmpty, "cascadeRollup needs at least one store")
-    val tiersRead = readTiers(spark, storePaths, "cascadeRollup",
-      mirrorFirst = false)
-    val raw = readRawOrEmpty(spark, rawPath, tsCol, valueCol, distinctCol,
-      keyFieldsOf(tiersRead))
-    stitchTiers(spark, raw, tiersRead, coarseNanos, None, None, valueCol,
-      tsCol, distinctCol, lgK, histBoundsCents)
+    val list = rawHeaded(spark, "cascadeRollup", rawPath, storePaths,
+      valueCol, tsCol, distinctCol, lgK, histBoundsCents)
+    stitch(list, list.parts(None, None), coarseNanos, None)
+  }
+
+  /** Raw at `rawPath` heading `storePaths` fine → coarse. The raw tree is
+    * read only when a part needs it. */
+  private def rawHeaded(spark: SparkSession, context: String,
+      rawPath: String, storePaths: Seq[String], valueCol: String,
+      tsCol: String, distinctCol: Option[String], lgK: Int,
+      histBoundsCents: Seq[Long]): TierList = {
+    val tiers = openTiers(spark, storePaths, context, mirrorFirst = false)
+      .flatten
+    // a keyed cascade whose raw tree is fully tiered off still needs the
+    // key columns (typed from the store) in the zero-row frame
+    val keyFields = tiers.headOption.toSeq.flatMap(t =>
+      keyColsOf(t.snap.df).map(t.snap.df.schema(_)))
+    TierList(context, Some(RawSide(() => readRawOrEmpty(spark, rawPath,
+      tsCol, valueCol, distinctCol, keyFields), valueCol, tsCol, distinctCol,
+      lgK, histBoundsCents)), None, tiers)
+  }
+
+  /** The RAW-LESS chain: the first store is the stream-maintained mirror
+    * (its batch keys are replay ids, so it has NO tier horizon of its
+    * own) heading the tiers [[tierOffStore]] aged its old buckets into.
+    * The routing floor is the mirror's width — or, when the mirror is
+    * absent or fully aged out, the finest tier's. */
+  private def mirrorHeaded(spark: SparkSession, context: String,
+      storePaths: Seq[String]): TierList = {
+    val opened = openTiers(spark, storePaths, context, mirrorFirst = true)
+    val tiers = opened.tail.flatten
+    TierList(context, None, opened.head, tiers,
+      opened.head.orElse(tiers.headOption).fold(1L)(_.width))
   }
 
   /** Stitched read over a RAW-LESS cascade — the stream-maintained
     * lifecycle: [[graft.streaming.StreamIngest.rollupIngest]] keeps the
-    * finest store a complete mirror (its batch keys are replay ids, so it
-    * has NO tier horizon of its own), and [[tierOffStore]] ages its old
+    * finest store a complete mirror, and [[tierOffStore]] ages its old
     * buckets down the cascade. The mirror serves `[next tier's horizon,
     * ∞)` — exactly the window raw serves in [[cascadeRollup]] — and each
     * tiered store its own horizon window, so every bucket is counted from
     * exactly one tier even inside a tierOffStore's append-to-trim crash
-    * window (the coarse horizon already excludes the fine rows the trim
-    * has not yet removed). Without this read, the two features it
-    * composes — stream-maintained stores and store→store tiering — would
-    * each work alone but lose data when combined: a plain rollup of the
-    * mirror misses everything tiered off, a horizon-gated stitch skips
-    * the horizonless mirror entirely. Tiered stores (all but the first)
-    * must carry horizons; a missing/empty tiered store serves nothing.
-    * Sketch dimensions ride through the same associative merges as every
-    * other stitched read. */
+    * window. Without this read, the two features it composes —
+    * stream-maintained stores and store→store tiering — would each work
+    * alone but lose data when combined. Tiered stores (all but the first)
+    * must carry horizons; a missing/empty tiered store serves nothing. */
   def storeCascadeRollup(spark: SparkSession, storePaths: Seq[String],
       coarseNanos: Long): DataFrame = {
     require(storePaths.size >= 2,
       "storeCascadeRollup stitches a mirror store with its tiers — for " +
         "a single store use rollup()")
-    stitchStores(spark, readTiers(spark, storePaths, "storeCascadeRollup",
-      mirrorFirst = true), coarseNanos, None, None)
-  }
-
-  /** The raw-less stitching core shared by [[storeCascadeRollup]] and
-    * [[routeStoreCascade]]: the first tier is the horizonless mirror
-    * (serves `[next horizon, ∞)`), each tiered store its horizon window,
-    * all scoped to `[since, until)` when given. Takes the [[readTiers]]
-    * result so callers that already listed the stores don't pay the
-    * metadata IO twice. */
-  private def stitchStores(spark: SparkSession,
-      tiers: Seq[Option[TierAtRest]], coarseNanos: Long,
-      since: Option[Long], until: Option[Long]): DataFrame = {
-    val horizons: Seq[Option[Long]] = tiers.map(_.flatMap(_.horizon))
-    // the mirror is the horizonless head serving to ∞ — same window
-    // discipline as raw in stitchTiers, one shared implementation
-    val windows = tierWindows("storeCascadeRollup", horizons, since, until)
-    val parts = tiers.zip(windows).flatMap { case (t, (lo, hi)) =>
-      t.map(tier => scopedFrame(tier.df, lo, hi))
-    }
-    require(parts.nonEmpty, "storeCascadeRollup: no readable store")
-    val anySketch = parts.exists(_.columns.contains("hll"))
-    val anyHist = parts.exists(_.columns.contains("hcnt"))
-    val anyVar = parts.exists(_.columns.contains("sumsq_c"))
-    require(!anySketch || parts.forall(_.columns.contains("hll")),
-      "storeCascadeRollup: some tiers carry a distinct sketch and some " +
-        "do not — every tier must be written with the same dimensions")
-    require(!anyHist || parts.forall(_.columns.contains("hcnt")),
-      "storeCascadeRollup: some tiers carry histogram counters and some " +
-        "do not — every tier must be written with the same dimensions")
-    require(!anyVar || parts.forall(_.columns.contains("sumsq_c")),
-      "storeCascadeRollup: some tiers carry the variance dimension and " +
-        "some do not — every tier must be written with the same dimensions")
-    val keys = sharedKeys(tiers.flatten.map(t => (t.path, t.df)),
-      "storeCascadeRollup")
-    val cols = keys ++ Seq("bucket_ts", "bucket_ns", "n", "min_c", "max_c",
-      "sum_c") ++ (if (anyVar) Seq("sumsq_c") else Nil) ++
-      (if (anySketch) Seq("hll") else Nil) ++
-      (if (anyHist) Seq("hcnt", "hbounds") else Nil)
-    mergeFold(parts.map(_.select(cols.map(col): _*)).reduce(_.unionByName(_)),
-      coarseNanos, uniformWidth = false)
+    val list = mirrorHeaded(spark, "storeCascadeRollup", storePaths)
+    stitch(list, list.parts(None, None), coarseNanos, None)
   }
 
   /** Self-heal and read a raw table; a fully-tiered-off tree (only
@@ -1482,176 +1467,91 @@ object RollupStore {
         org.apache.spark.sql.types.StructField(valueCol,
           org.apache.spark.sql.types.DoubleType)) ++
         distinctCol.map(c => org.apache.spark.sql.types.StructField(c,
-          org.apache.spark.sql.types.LongType)) ++
-        // a keyed cascade whose raw tree is fully tiered off still needs
-        // the key columns (typed from the store) in the zero-row frame
-        keyFields
+          org.apache.spark.sql.types.LongType)) ++ keyFields
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType(fields))
     }
   }
 
-  /** The key columns' StructFields off the first present tier — the types
-    * the synthesized empty raw frame must carry in a keyed cascade. */
-  private def keyFieldsOf(tiers: Seq[Option[TierAtRest]])
-      : Seq[org.apache.spark.sql.types.StructField] =
-    tiers.flatten.headOption.toSeq.flatMap(t =>
-      keyColsOf(t.df).map(k => t.df.schema(k)))
-
-  /** [[route]] generalized over a full tier cascade: serve `[since,
-    * until)` under a point budget from a raw table plus fine → coarse
-    * stores. The finest resolution that still EXISTS varies along the
-    * timeline (sample-level at/after the finest horizon, then each tier's
-    * bucket width down the cascade), so the grain clamps to the WIDEST
-    * bucket width among the tiers the widened range touches — a complete
-    * answer at the finest grain every touched tier can serve, never a
-    * silently partial one. Touch detection and grain fitting iterate to a
-    * fixpoint (a coarser grain widens the bounds, which can touch a
-    * coarser tier; g only grows, so this converges within the tier
-    * count). A range raw fully holds still serves raw at the requested
-    * fine grain, labeled "raw"; everything else stitches, labeled
-    * "stitched".
-    *
-    * `keyFilter` prunes every tier's scan and the raw re-aggregation
-    * before any stitch ([[route]]'s key-pushdown contract); widths and
-    * horizons stay computed from the unfiltered frames. */
+  /** [[route]] over a full tier cascade: raw plus fine → coarse stores.
+    * The finest resolution that still EXISTS varies along the timeline,
+    * so the grain clamps to the widest bucket width among the tiers the
+    * widened range touches ([[routeGrain]]). A range raw fully holds
+    * serves raw at the requested fine grain ("raw"); everything else
+    * stitches ("stitched"), reading raw only when its window is
+    * non-empty. Unlike [[route]], a store without a horizon here was
+    * never tiered into and serves nothing: raw holds its range. */
   def routeCascade(spark: SparkSession, rawPath: String,
       storePaths: Seq[String], since: Long, until: Long, maxPoints: Int,
       valueCol: String = "value", tsCol: String = "ts",
       distinctCol: Option[String] = None, lgK: Int = 12,
       histBoundsCents: Seq[Long] = Nil,
       keyFilter: Option[Column] = None): DataFrame = {
-    require(until > since, s"routeCascade: empty range [$since, $until)")
-    require(maxPoints >= 1, "routeCascade needs a positive point budget")
     require(storePaths.nonEmpty, "routeCascade needs at least one store")
-    // every store opened ONCE through its snapshot: frames + horizons for
-    // stitching, widths for routing (horizonless stores were never tiered
-    // into and don't route)
-    val tiersRead = readTiers(spark, storePaths, "routeCascade",
-      mirrorFirst = false)
-    val tiersServe = filterTiers(tiersRead, keyFilter, "routeCascade")
-    val raw = keyFilter.foldLeft(
-      readRawOrEmpty(spark, rawPath, tsCol, valueCol, distinctCol,
-        keyFieldsOf(tiersRead)))(_.filter(_))
-    // present tiers fine → coarse, each with (bucket width, horizon)
-    val present: Seq[(Long, Long)] = tiersRead.flatten.flatMap(t =>
-      t.horizon.map(h => (t.bucketNs, h)))
-    val (g, touchedAtG) = fitCascadeGrain(present, since, until,
-      maxPoints, floorW = 1L)
-    val (lo, hi) = widenTo(since, until, g)
-    if (touchedAtG.isEmpty) {
-      // raw holds the whole widened range — serve it at the fine grain,
-      // grouped by the cascade's own keys for schema parity across zooms
-      val rows = rollupRows(graft.operators.TsOps.rangeFilter(raw, Some(lo),
-          Some(hi), tsCol), g, valueCol, tsCol, distinctCol, lgK,
-          histBoundsCents, keyFieldsOf(tiersRead).map(_.name),
-          withVariance = tiersRead.flatten
-            .exists(_.df.columns.contains("sumsq_c")))
-        .drop("bucket_ns")
-      (if (distinctCol.nonEmpty)
-        rows.withColumn("distinct_est", expr("hll_sketch_estimate(hll)"))
-      else rows)
-        .withColumn("grain_ns", BoundLong.lit(g))
-        .withColumn("source", lit("raw"))
-    } else
-      stitchTiers(spark, raw, tiersServe, g, Some(lo), Some(hi), valueCol,
-        tsCol, distinctCol, lgK, histBoundsCents)
-        .withColumn("grain_ns", BoundLong.lit(g))
-        .withColumn("source", lit("stitched"))
+    routeTiers(rawHeaded(spark, "routeCascade", rawPath, storePaths,
+        valueCol, tsCol, distinctCol, lgK, histBoundsCents),
+      since, until, maxPoints, keyFilter)
   }
 
-  /** [[routeCascade]] for the RAW-LESS mirror lifecycle: serve `[since,
-    * until)` under a point budget from a stream-maintained mirror store
-    * plus its coarser tiers. There is no raw table, so the finest
-    * servable resolution is the MIRROR's bucket width — a budget
-    * demanding finer clamps UP to it — and below each tier horizon the
-    * grain further clamps to the widest touched tier, iterated to a
-    * fixpoint exactly as [[routeCascade]] does: a complete answer at the
-    * finest grain every touched tier can serve, never a silently partial
-    * one. Labeled `source="store"` when only the mirror is touched,
-    * `"stitched"` otherwise. `keyFilter` prunes every tier's scan before
-    * the stitch ([[route]]'s key-pushdown contract). */
+  /** [[routeCascade]] for the RAW-LESS mirror lifecycle: a mirror store
+    * plus its coarser tiers. There is no raw table, so a budget demanding
+    * finer than the mirror clamps UP to the mirror's width, then to the
+    * widest touched tier. Labeled `source="store"` when only the mirror
+    * is touched, `"stitched"` otherwise (an empty mirror over an
+    * above-horizon range stitches to the honest zero-row frame). */
   def routeStoreCascade(spark: SparkSession, storePaths: Seq[String],
       since: Long, until: Long, maxPoints: Int,
       keyFilter: Option[Column] = None): DataFrame = {
-    require(until > since,
-      s"routeStoreCascade: empty range [$since, $until)")
-    require(maxPoints >= 1,
-      "routeStoreCascade needs a positive point budget")
     require(storePaths.size >= 2,
       "routeStoreCascade routes over a mirror plus tiers — for a " +
         "single store use route()")
-    // every store opened ONCE through its snapshot: frames + horizons for
-    // stitching, widths for routing; the loud horizonless-non-first check
-    // fires here too, so wiring-bug detection never depends on which
-    // range a dashboard asks
-    val tiersRead = readTiers(spark, storePaths, "routeStoreCascade",
-      mirrorFirst = true)
-    val tiersServe = filterTiers(tiersRead, keyFilter, "routeStoreCascade")
-    // present coarser tiers fine → coarse: (bucket width, horizon)
-    val present: Seq[(Long, Long)] = tiersRead.tail.flatten.flatMap(t =>
-      t.horizon.map(h => (t.bucketNs, h)))
-    // the fine floor: the mirror's width — or, when the mirror is absent
-    // or fully aged out (ingest stopped longer than its keep ago), the
-    // finest PRESENT tier's width, so the router serves the complete
-    // coarser answer instead of dying on an empty store
-    val mirrorOwnW: Option[Long] = tiersRead.head.map(_.bucketNs)
-    val mirrorW: Long =
-      mirrorOwnW.orElse(present.headOption.map(_._1)).getOrElse(
-        throw new IllegalArgumentException(
-          "routeStoreCascade: no readable tier to serve from"))
-    val (g, touchedAtG) = fitCascadeGrain(present, since, until,
-      maxPoints, floorW = mirrorW)
-    val (lo, hi) = widenTo(since, until, g)
-    if (touchedAtG.isEmpty && mirrorOwnW.nonEmpty)
-      stitchStores(spark, tiersServe.take(1), g, Some(lo), Some(hi))
-        .withColumn("grain_ns", BoundLong.lit(g))
-        .withColumn("source", lit("store"))
-    else // an empty mirror over an above-horizon range stitches to the
-      // honest zero-row frame rather than erroring on "no readable store"
-      stitchStores(spark, tiersServe, g, Some(lo), Some(hi))
-        .withColumn("grain_ns", BoundLong.lit(g))
-        .withColumn("source", lit("stitched"))
+    routeTiers(mirrorHeaded(spark, "routeStoreCascade", storePaths), since,
+      until, maxPoints, keyFilter)
   }
 
-  /** The router's shared grain discipline: clamp a budget-derived grain
-    * to the widest tier the widened range touches, iterated to a
-    * fixpoint (a coarser grain widens the bounds, which can touch a
-    * coarser tier; g only grows, so this converges within the tier
-    * count). `present` is the tier list fine → coarse as (bucket width,
-    * horizon); `floorW` the finest servable width — 1 for raw-backed
-    * routes, the mirror's bucket width for raw-less ones. Returns the
-    * fixpoint grain and the tiers its widened range touches (empty ⇔
-    * the finest source alone holds the whole widened range). */
-  private[storage] def fitCascadeGrain(present: Seq[(Long, Long)],
-      since: Long, until: Long, maxPoints: Int, floorW: Long)
-      : (Long, Seq[(Long, Long)]) = {
-    val target = math.max(1L, (until - since + maxPoints - 1) / maxPoints)
-    def touched(g: Long): Seq[(Long, Long)] = {
-      val (lo, hi) = widenTo(since, until, g)
-      present.zipWithIndex.collect {
-        case ((w, h), i) if lo < h &&
-            hi > present.drop(i + 1).headOption.map(_._2)
-              .getOrElse(Long.MinValue) => (w, h)
-      }
-    }
-    val toFloor = (x: Long) => ((x + floorW - 1) / floorW) * floorW
-    var g = fitGrain(since, until, maxPoints,
-      toFloor(math.max(target, floorW)), toFloor)
-    var stable = false
-    while (!stable) {
-      val widths = touched(g).map(_._1)
-      if (widths.isEmpty) stable = true // finest source alone suffices
-      else {
-        val gMin = math.max(floorW, widths.max)
-        val toMult = (x: Long) => ((x + gMin - 1) / gMin) * gMin
-        val g2 = fitGrain(since, until, maxPoints,
-          toMult(math.max(g, gMin)), toMult)
-        if (g2 == g) stable = true else g = g2
-      }
-    }
-    (g, touched(g))
+  /** A route request as a serving surface parsed it: store paths fine →
+    * coarse, an optional raw or sample path, the range and point budget,
+    * the raw side's columns and an optional key predicate. */
+  final case class RouteRequest(stores: Seq[String], raw: Option[String],
+      since: Long, until: Long, maxPoints: Int,
+      sample: Option[String] = None, valueCol: String = "value",
+      tsCol: String = "ts", distinctCol: Option[String] = None,
+      histBoundsCents: Seq[Long] = Nil, keyFilter: Option[Column] = None)
+
+  /** THE dispatch from a parsed route request to its router, shared by the
+    * query server's route frames and the `graft_route` SQL function: raw +
+    * one store → [[route]]; raw + a cascade → [[routeCascade]]; two-plus
+    * stores without raw → [[routeStoreCascade]]; a sample + one store
+    * without raw → the sampled router, opened by `openSampled` (store,
+    * sample, valueCol) — a serving layer passes its pinned routers; by
+    * default each request prepares one unpinned. */
+  def routeRequest(spark: SparkSession, r: RouteRequest,
+      openSampled: Option[(String, String, String) => SampledRouter] = None)
+      : DataFrame = (r.sample, r.raw, r.stores) match {
+    case (_, _, Seq()) =>
+      throw new IllegalArgumentException("a route needs at least one store")
+    case (Some(sm), None, Seq(one)) =>
+      openSampled.fold(prepareSampled(spark, one, sm, r.valueCol,
+          pinSample = false))(_(one, sm, r.valueCol))
+        .route(r.since, r.until, r.maxPoints, r.keyFilter)
+    case (Some(_), _, _) => throw new IllegalArgumentException(
+      "a sample route takes exactly one store and no raw — the sample " +
+        "tier IS the fine-zoom source")
+    case (None, Some(raw), Seq(one)) =>
+      route(spark, one, spark.read.parquet(raw), r.since, r.until,
+        r.maxPoints, r.valueCol, r.tsCol, r.distinctCol, 12,
+        r.histBoundsCents, r.keyFilter)
+    case (None, Some(raw), many) =>
+      routeCascade(spark, raw, many, r.since, r.until, r.maxPoints,
+        r.valueCol, r.tsCol, r.distinctCol, 12, r.histBoundsCents,
+        r.keyFilter)
+    case (None, None, many) if many.size >= 2 =>
+      routeStoreCascade(spark, many, r.since, r.until, r.maxPoints,
+        r.keyFilter)
+    case _ => throw new IllegalArgumentException(
+      "a single store without raw cannot route — pass raw for the tiered " +
+        "lifecycle or two-plus stores for the raw-less mirror")
   }
 
   /** Fold accumulated per-batch partials back to one row per bucket — the

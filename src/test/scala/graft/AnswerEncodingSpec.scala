@@ -470,4 +470,29 @@ class AnswerEncodingSpec extends AnyFunSuite {
       T0 + 3L * 24 * 60 * Min, 72)
     assert(encodeJobs(route) == 1)
   }
+
+  test(".metrics over three tables is one partition and one Arrow " +
+      "record batch") {
+    val dir = SparkTestBase.tempDir("graft-encode-metrics")
+    for (name <- Seq("a", "b", "c")) {
+      val st = new WritableStore(spark, dir, name,
+        Seq(StructField("v", DoubleType)))
+      st.pushMulti(Seq(DataPoint(T0, Seq(1.0))))
+      st.persist()
+    }
+    val df = new Engine(spark, dir).frame("select * from .metrics")
+    assert(df.queryExecution.executedPlan.execute().getNumPartitions == 1)
+    val (bytes, rows, _) = ArrowFraming.toIpcStream(df, Output.maxRenderRows)
+    val alloc = new RootAllocator()
+    val reader = new ArrowStreamReader(
+      new java.io.ByteArrayInputStream(bytes), alloc)
+    val batches =
+      try Iterator.continually(reader.loadNextBatch()).takeWhile(identity)
+        .size
+      finally { reader.close(); alloc.close() }
+    assert(rows == 3 && batches == 1, s"$rows rows in $batches batches")
+    assert(ArrowFraming.fromIpcStream(bytes) ==
+      ((Seq("metrics"), Seq(Seq("a"), Seq("b"), Seq("c")))))
+    assert(json(df) == """{"metrics":["a","b","c"]}""")
+  }
 }

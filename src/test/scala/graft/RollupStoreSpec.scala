@@ -1205,4 +1205,56 @@ class RollupStoreSpec extends AnyFunSuite {
     assert(warmJobs == 0)
     assert(routed(warm) == routed(cold))
   }
+
+  test("route refuses a budget no grain fits instead of overrunning it") {
+    // a one-point budget over a range holding epoch 0: every grain's
+    // widened range is two buckets, until the arithmetic overflows
+    val stP = SparkTestBase.tempDir("graft-rollup-nofit") + "/store"
+    RollupStore.write(raw, stP, H)
+    val e = intercept[IllegalArgumentException] {
+      RollupStore.route(spark, stP, raw, -H, H, maxPoints = 1)
+    }
+    assert(e.getMessage.contains("no grain fits"), e.getMessage)
+  }
+
+  test("a horizonless store beside raw: route serves it as the complete " +
+      "mirror, routeCascade as never tiered into") {
+    val base = SparkTestBase.tempDir("graft-rollup-hz")
+    val (rawP, stP) = (base + "/raw", base + "/store")
+    raw.write.parquet(rawP)
+    RollupStore.write(raw, stP, H)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("bucket_ts", "n", "sum_c", "grain_ns", "source")
+        .orderBy("bucket_ts").collect().toSeq
+    val mirror = rows(RollupStore.route(spark, stP,
+      spark.read.parquet(rawP), 0L, 3 * Day, maxPoints = 2))
+    val cascade = rows(RollupStore.routeCascade(spark, rawP, Seq(stP), 0L,
+      3 * Day, maxPoints = 2))
+    assert(mirror.map(_.getString(4)).distinct == Seq("store"))
+    assert(cascade.map(_.getString(4)).distinct == Seq("raw"))
+    // the same 36h buckets either way
+    assert(mirror.map(r => (r.getLong(0), r.getLong(1), r.getLong(3))) ==
+      cascade.map(r => (r.getLong(0), r.getLong(1), r.getLong(3))))
+  }
+
+  test("a warm cascade route whose range ends below the finest horizon " +
+      "reads no raw and builds with zero Spark jobs") {
+    val base = SparkTestBase.tempDir("graft-rollup-noraw")
+    val rawP = base + "/raw"
+    val (stH, stD) = (base + "/st1h", base + "/st1d")
+    raw.write.parquet(rawP)
+    RollupStore.tierOff(spark, rawP, stH, cutoff = 2 * Day, bucketNanos = H)
+    RollupStore.tierOffStore(spark, stH, stD, cutoff = Day,
+      coarseBucketNanos = Day)
+    def build() = RollupStore.routeCascade(spark, rawP, Seq(stH, stD), 0L,
+      2 * Day, maxPoints = 2)
+    val cold = build()
+    val (warm, jobs) = SparkTestBase.countJobs(build())
+    assert(jobs == 0, s"$jobs jobs")
+    val got = warm.select("bucket_ts", "n", "min_c", "max_c", "sum_c")
+      .orderBy("bucket_ts").collect().toSeq
+    assert(got == directDaily.filter(_.getLong(0) < 2 * Day))
+    assert(cold.select("source").distinct().collect().map(_.getString(0))
+      .toSeq == Seq("stitched"))
+  }
 }

@@ -448,4 +448,25 @@ class ServerSpec extends AnyFunSuite {
       assert(results.forall(_.startsWith("""{"ok":true""")))
     } finally srv.stop()
   }
+
+  test("a route frame whose budget no grain fits answers the error, not " +
+      "an overrun") {
+    import spark.implicits._
+    val H = 3600L * 1000000000L
+    val base = SparkTestBase.tempDir("graft-srv-nofit")
+    val (rawP, stP) = (base + "/raw", base + "/store")
+    val ev = Seq((-2L * H, 1.25), (0L, 2.5), (H + 7L, 3.75))
+      .toDF("ts", "value")
+    ev.write.parquet(rawP)
+    graft.storage.RollupStore.write(ev, stP, H)
+    val srv = new QueryServer(new Engine(spark, dbDir))
+    val port = srv.start()
+    try {
+      val resp = roundtrip(port,
+        s"""{"maxPoints": 1, "since": ${-H}, "until": $H, """ +
+          s""""store": "$stP", "raw": "$rawP"}""")
+      assert(resp.startsWith("""{"ok":false,"""), resp)
+      assert(resp.contains("no grain fits"), resp)
+    } finally srv.stop()
+  }
 }

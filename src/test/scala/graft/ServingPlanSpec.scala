@@ -4,6 +4,9 @@ import java.time.ZoneOffset
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField}
 import org.scalatest.funsuite.AnyFunSuite
@@ -162,5 +165,60 @@ class ServingPlanSpec extends AnyFunSuite {
       val splitPlan = split.queryExecution.executedPlan.toString
       assert(splitPlan.contains("Exchange"), splitPlan)
     } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+  }
+
+  /** A one-minute mirror over two days whose first day aged into a
+    * one-hour tier: the raw-less lifecycle. */
+  private lazy val mirrorTiers: (String, String) = {
+    val base = SparkTestBase.tempDir("graft-serve-plan-mirror")
+    val (stM, stH) = (base + "/st1m", base + "/st1h")
+    val ev = (0L until 2L * 24 * 60).map(i =>
+      (T0 + i * Min, (i % 97).toDouble + 0.25)).toDF("ts", "value")
+    RollupStore.write(ev, stM, Min)
+    RollupStore.tierOffStore(spark, stM, stH, cutoff = T0 + Day,
+      coarseBucketNanos = H)
+    (stM, stH)
+  }
+
+  /** The physical plan, exchanges planned, before adaptive execution
+    * runs it. */
+  private def physical(df: DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
+  private def hourly(df: DataFrame): Seq[(Long, Long, Long, String)] =
+    df.select("bucket_ts", "n", "grain_ns", "source").orderBy("bucket_ts")
+      .as[(Long, Long, Long, String)].collect().toSeq
+
+  test("a raw-less mirror-only route under one file split runs one job " +
+      "without an exchange") {
+    val (stM, stH) = mirrorTiers
+    def route(): DataFrame = RollupStore.routeStoreCascade(spark,
+      Seq(stM, stH), T0 + 26 * H, T0 + 40 * H, 14)
+    route() // opens both snapshots
+    val df = route()
+    val (rows, jobs) = SparkTestBase.countJobs(hourly(df))
+    assert(rows.map(r => (r._3, r._4)).distinct == Seq((H, "store")), rows)
+    assert(rows.size == 14 && rows.forall(_._2 == 60L), rows)
+    assert(jobs == 1, s"$jobs jobs")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+  }
+
+  test("a stitched raw-less route has no exchange below its union") {
+    val (stM, stH) = mirrorTiers
+    def route(): DataFrame = RollupStore.routeStoreCascade(spark,
+      Seq(stM, stH), T0 + 20 * H, T0 + 40 * H, 20)
+    val rows = hourly(route())
+    assert(rows.map(r => (r._3, r._4)).distinct == Seq((H, "stitched")),
+      rows)
+    assert(rows.size == 20 && rows.forall(_._2 == 60L), rows)
+    val plan = physical(route())
+    val unions = plan.collect { case u: UnionExec => u }
+    assert(unions.size == 1, plan)
+    assert(unions.head.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      unions.head)
   }
 }
