@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
@@ -23,7 +24,10 @@ import scala.jdk.CollectionConverters._
   *     construction jobs, and `exec`, a write to the `noop` sink so every
   *     column is computed. One line per query carries both parts' seconds
   *     and jobs, the stages, tasks, shuffle and spill of the timed run,
-  *     and one line per stage follows it.
+  *     and the generated classes compiled in each run — `warm_compiles`,
+  *     the row's code footprint, and `compiles`, the classes the timed
+  *     run compiled again because Spark's code cache no longer held them;
+  *     one line per stage follows it.
   *
   * A query that fails, or a name that is not registered, prints no result
   * line; the run ends by naming every failed query and exits 1.
@@ -139,10 +143,15 @@ object PlanSnap {
     def time(name: String, build: () => DataFrame): Unit = {
       def sink(df: DataFrame): Unit =
         df.write.format("noop").mode("overwrite").save()
+      // every class Spark's code generator compiles, driver and tasks
+      def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val w0 = compiled
       sink(build())
+      val warmCompiles = compiled - w0
       val sc = spark.sparkContext
       ListenerBusDrain(sc)
       sc.addSparkListener(this)
+      val c0 = compiled
       val (buildS, buildJobs, execS, execJobs) = try {
         val t0 = System.nanoTime()
         val df = build()
@@ -155,6 +164,7 @@ object PlanSnap {
         ListenerBusDrain(sc)
         ((t1 - t0) / 1e9, bj, (t3 - t2) / 1e9, jobs.get - bj)
       } finally sc.removeSparkListener(this)
+      val compiles = compiled - c0
       val recs = stages.asScala.toSeq.sortBy(_.id)
       def mb(f: StageRec => Long): Double = recs.map(f).sum / 1e6
       println(f"==== $name  build_s=$buildS%.3f build_jobs=$buildJobs  " +
@@ -162,7 +172,8 @@ object PlanSnap {
         f"tasks=${recs.map(_.tasks).sum}  " +
         f"shuffle_read_mb=${mb(_.shuffleReadBytes)}%.1f " +
         f"shuffle_write_mb=${mb(_.shuffleWriteBytes)}%.1f " +
-        f"spill_mb=${mb(_.spillBytes)}%.1f")
+        f"spill_mb=${mb(_.spillBytes)}%.1f " +
+        f"warm_compiles=$warmCompiles compiles=$compiles")
       for (r <- recs)
         println(f"  stage ${r.id}%4d wall=${r.wallMs / 1e3}%6.2fs " +
           f"task=${r.taskTimeMs / 1e3}%7.2fs in=${r.inputBytes / 1e6}%8.1fMB " +

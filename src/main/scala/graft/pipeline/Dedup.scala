@@ -90,15 +90,8 @@ object Dedup {
     */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, shingleSize: Int): DataFrame =
-    signaturesFromSets(shingleSets(df, idCol, textCol, shingleSize),
-      idCol, numHashes)
-
-  /** [[minhashSignatures]] over a prebuilt (`__id`, `__set`) frame — the
-    * shared-sets face [[nearDuplicates]]' pin mode uses so the signature
-    * branch reads the SAME materialized shingling as the verify branch. */
-  private def signaturesFromSets(sets: DataFrame, idCol: String,
-      numHashes: Int): DataFrame =
-    sets.select(col("__id").as(idCol),
+    shingleSets(df, idCol, textCol, shingleSize)
+      .select(col("__id").as(idCol),
         MinHash.signatureUdf(numHashes)(col("__set")).as("sig"))
       .filter(col("sig").isNotNull) // docs with no shingles have no signature
 
@@ -115,15 +108,17 @@ object Dedup {
   /** The banding half of [[lshBuckets]], over an already-built signature
     * frame. */
   private def bucketsOfSignatures(withSig: DataFrame, idCol: String,
-      bands: Int, rowsPerBand: Int): DataFrame = {
-    val bandRows = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(",",
-          slice(col("sig"), b * rowsPerBand + 1, rowsPerBand))).as("bucket"))
-    }
-    withSig.select(col(idCol), explode(array(bandRows: _*)).as("bb"))
-      .select(col(idCol), col("bb.band"), col("bb.bucket"))
-  }
+      bands: Int, rowsPerBand: Int): DataFrame =
+    withSig.select(col(idCol), posexplode(
+        array(bandKeys(col("sig"), bands, rowsPerBand): _*)))
+      .select(col(idCol), col("pos").as("band"), col("col").as("bucket"))
+
+  /** The `bands` bucket keys of a signature: band b hashes its
+    * `rowsPerBand` signature slots. */
+  private def bandKeys(sig: Column, bands: Int,
+      rowsPerBand: Int): Seq[Column] =
+    (0 until bands).map(b => xxhash64(concat_ws(",",
+      slice(sig, b * rowsPerBand + 1, rowsPerBand))))
 
   /** MinHash-LSH near-dup candidate pairs (id1 < id2), deduped across bands.
     * Shuffle is keyed on (band, bucket) — within-bucket self-join only.
@@ -154,22 +149,24 @@ object Dedup {
   /** The cap + pair-join half of [[rawCandidates]], over a prebuilt
     * (id, band, bucket) frame. */
   private def candidatesOfBuckets(b0: DataFrame, idCol: String,
-      maxBucketDocs: Int): DataFrame = {
-    val b =
-      if (maxBucketDocs <= 0) b0
-      else {
-        import org.apache.spark.sql.expressions.Window
-        b0.withColumn("__bn",
-            count(lit(1)).over(Window.partitionBy("band", "bucket")))
-          .filter(col("__bn") <= maxBucketDocs).drop("__bn")
-      }
-    selfJoinOnBuckets(b, idCol, Seq("band", "bucket"))
-  }
+      maxBucketDocs: Int): DataFrame =
+    selfJoinOnBuckets(capBuckets(b0, maxBucketDocs), idCol,
+      Seq("band", "bucket"))
+
+  /** Drop the (band, bucket) rows of buckets holding more than
+    * `maxBucketDocs` docs (0 = keep all). */
+  private def capBuckets(b0: DataFrame, maxBucketDocs: Int): DataFrame =
+    if (maxBucketDocs <= 0) b0
+    else {
+      import org.apache.spark.sql.expressions.Window
+      b0.withColumn("__bn",
+          count(lit(1)).over(Window.partitionBy("band", "bucket")))
+        .filter(col("__bn") <= maxBucketDocs).drop("__bn")
+    }
 
   /** Bucket-keyed self-join emitting ordered (id1, id2) pairs, with BOTH
-    * children the same canonical plan (aliases applied after the join) so
-    * ReuseExchange computes the bucket pipeline — signatures included —
-    * once instead of once per side (see [[selfJoinOnTok]]). */
+    * children the same canonical plan (aliases applied after the join) —
+    * see [[selfJoinOnTok]] for what that buys under each join strategy. */
   private def selfJoinOnBuckets(b: DataFrame, idCol: String,
       keys: Seq[String]): DataFrame =
     b.alias("l").join(b.alias("r"),
@@ -215,15 +212,18 @@ object Dedup {
   def cappedSets(df: DataFrame, idCol: String, textCol: String,
       shingleSize: Int, maxDf: Int, pin: Boolean = false): DataFrame = {
     val sets0 = shingleSets(df, idCol, textCol, shingleSize)
-    // LAZY checkpoint: no job at plan-construction time (EXPLAIN / plan
-    // audits / discarded frames stay free); the first action materializes
-    // the blocks and every later branch of the same query reads them
-    cappedSetsFrom(
-      if (pin && pinSetsEnabled(df.sparkSession))
-        sets0.localCheckpoint(eager = false)
-      else sets0,
-      maxDf)
+    cappedSetsFrom(if (pin) pinSets(sets0) else sets0, maxDf)
   }
+
+  /** Pin a frame that several branches of one query read: a LAZY
+    * localCheckpoint, so the first action stores its blocks and every
+    * later branch reads them — unless [[PinSetsConf]] is off. Lazy means
+    * no job beyond the exchanges below the frame: Spark's checkpoint
+    * executes the adaptive plan to get its RDD, so a frame above a
+    * shuffle (a [[Text.fanOut]]) runs that shuffle when pinned. */
+  private[pipeline] def pinSets(sets: DataFrame): DataFrame =
+    if (pinSetsEnabled(sets.sparkSession)) sets.localCheckpoint(eager = false)
+    else sets
 
   /** Session kill-switch for the shingle-set pins ([[PinSetsConf]],
     * default on): `pinSets = true` call sites trade a second (and third)
@@ -273,17 +273,32 @@ object Dedup {
 
   /** [[stopShingles]] over an already-built (`__id`, `__set`) frame —
     * lets [[cappedSets]]' pin mode derive the stop list from the SAME
-    * materialized sets the kept path reads. */
+    * materialized sets the kept path reads.
+    *
+    * One aggregation gives both the document frequencies and the doc
+    * count: every doc adds a null "shingle" (no real shingle is null), so
+    * the null group's count is nDocs. That one row is broadcast back
+    * against the same aggregation (one exchange, reused), so only the
+    * shingles above the effective threshold `max(maxDf, nDocs × 5‰)`
+    * reach the single-partition fold — the fold holds the stop list and
+    * nothing more. Four jobs in all: the df shuffle, the doc-count
+    * broadcast, the fold, the stop-list broadcast. */
   private def stopShinglesFromSets(sets: DataFrame,
       maxDf: Int): DataFrame = {
-    // effective threshold = max(maxDf, nDocs × DfCapPerMille ‰),
-    // computed in-plan (1-row agg, broadcast) — no driver action
-    val nDocs = sets.agg(count(lit(1)).as("__ndocs"))
-    sets.select(explode(col("__set")).as("__tok"))
-      .groupBy("__tok").agg(count(lit(1)).as("__df"))
+    val sentinel = array(lit(null).cast("string"))
+    val dfs = sets
+      .select(explode(concat(coalesce(col("__set"), array()), sentinel))
+        .as("__tok"))
+      .groupBy("__tok").agg(count(lit(1)).as("__df"),
+        // both branches filter on this aggregate flag: a filter on the
+        // grouping key would be pushed below the aggregation, and a
+        // column one branch leaves unread would be pruned from its
+        // side — either way the two would no longer share one exchange
+        max(col("__tok").isNull).as("__sentinel"))
+    val nDocs = dfs.filter(col("__sentinel")).select(col("__df").as("__ndocs"))
+    dfs.filter(col("__df") > maxDf.toLong && !col("__sentinel"))
       .crossJoin(broadcast(nDocs))
-      .filter(col("__df") > greatest(lit(maxDf.toLong),
-        expr(s"(__ndocs * $DfCapPerMille) div 1000")))
+      .filter(col("__df") > expr(s"(__ndocs * $DfCapPerMille) div 1000"))
       .agg(collect_list(col("__tok")).as("__stop"))
   }
 
@@ -348,64 +363,106 @@ object Dedup {
         col("bb.band") :+ col("bb.bucket")): _*)
   }
 
-  /** Exact n-gram Jaccard similarity for given candidate pairs, verified via
-    * explode+join token-shingle co-counts — never materializes a cross
-    * product. `pairs` must have columns (id1, id2). Jaccard is computed over
+  /** Exact n-gram Jaccard similarity for given candidate pairs, verified
+    * by intersecting the two docs' capped shingle sets — work
+    * proportional to the candidates, never the whole inverted index, never
+    * a cross product. `pairs` must have columns (id1, id2); each distinct
+    * pair with id1 < id2 that shares a kept shingle comes back once (the
+    * rows [[jaccardPairs]] would emit for it). Jaccard is computed over
     * the df-capped shingle vocabulary (see [[DefaultMaxShingleDf]]).
     */
   def jaccardVerify(df: DataFrame, pairs: DataFrame, idCol: String,
       textCol: String, shingleSize: Int = 3,
-      maxShingleDf: Int = DefaultMaxShingleDf): DataFrame =
-    jaccardVerifyFromSets(shingleSets(df, idCol, textCol, shingleSize),
-      pairs, maxShingleDf)
-
-  /** [[jaccardVerify]] over a prebuilt (`__id`, `__set`) frame. */
-  private def jaccardVerifyFromSets(sets: DataFrame, pairs: DataFrame,
-      maxShingleDf: Int): DataFrame = {
-    val e = cappedSetsFrom(sets, maxShingleDf)
-      .select(col("__id"), col("__n"), explode(col("__kept")).as("__tok"))
-    // identical-children self-join → exchange reuse (see jaccardPairs)
-    selfJoinOnTok(e)
-      .join(pairs, Seq("id1", "id2"), "left_semi")
-      .groupBy("id1", "id2", "n1", "n2").agg(count(lit(1)).as("shared"))
-      .withColumn("jaccard",
-        col("shared").cast("double") /
-          (col("n1") + col("n2") - col("shared")))
-      .select("id1", "id2", "shared", "n1", "n2", "jaccard")
+      maxShingleDf: Int = DefaultMaxShingleDf): DataFrame = {
+    val capped = cappedSetsFrom(shingleSets(df, idCol, textCol, shingleSize),
+      maxShingleDf)
+    def side(i: Int) = capped.select(col("__id").as(s"id$i"),
+      col("__kept").as(s"__kept$i"), col("__n").as(s"n$i"))
+    verifyKept(pairs.select("id1", "id2").filter(col("id1") < col("id2"))
+      .distinct().join(side(1), "id1").join(side(2), "id2"))
   }
 
+  /** THE candidate verify, shared by [[jaccardVerify]] and
+    * [[nearDuplicates]]: (id1, id2, shared, n1, n2, jaccard) from rows
+    * carrying both docs' capped sets (`__kept1`, `__kept2`) and their
+    * sizes, with `shared = |kept1 ∩ kept2|`. A pair sharing no kept
+    * shingle drops — the inverted index would never emit it. */
+  private def verifyKept(cands: DataFrame): DataFrame =
+    cands
+      .withColumn("shared",
+        size(array_intersect(col("__kept1"), col("__kept2"))).cast("long"))
+      .filter(col("shared") > 0)
+      .select(col("id1"), col("id2"), col("shared"), col("n1"), col("n2"),
+        (col("shared").cast("double") /
+          (col("n1") + col("n2") - col("shared"))).as("jaccard"))
+
   /** All pairs with exact shingle-Jaccard >= threshold: LSH candidates →
-    * exact verify. The canonical fuzzy-dedup pipeline.
+    * exact verify of those candidates only (filter, then verify — the
+    * shape of ICDE'22 compressed-index similarity joins). The canonical
+    * fuzzy-dedup pipeline; its rows are the [[jaccardPairs]] rows whose
+    * pair collides in some band.
+    *
+    * Scale shape: each (doc, band) row carries the doc's band keys and
+    * its capped shingle set, so the bucket self-join verifies in place —
+    * `shared = |kept1 ∩ kept2|` — with no second join by id. A pair that
+    * collides in several bands is kept in its FIRST colliding band only,
+    * read off both docs' band keys, so no shuffle dedups the candidates.
+    * The price is the capped set riding each of a doc's `bands` rows
+    * through the join. With `maxBucketDocs > 0` a pair's first band may
+    * sit in a dropped bucket, so that mode dedups with a shuffle instead.
     *
     * `pinSets = true` (default) materializes the shingle-set frame ONCE
-    * (lazy localCheckpoint — materialized at the first action) and derives ALL THREE shingle consumers from
-    * it — the MinHash signature branch, the stop-shingle df count, and
-    * the verify kept-sets — where the unpinned chain shingles the corpus
-    * three times (the branches' exchange children differ, so ReuseExchange
-    * cannot dedup them). Same trade as [[jaccardPairs]]' pin: executor-
-    * local storage of the set frame vs repeated corpus passes; pass
-    * `pinSets = false` on preemptible fleets (or flip [[PinSetsConf]]
-    * once per session to opt every call site out). */
+    * (lazy localCheckpoint — materialized at the first action) and
+    * derives ALL THREE shingle consumers from it — the MinHash signature
+    * branch, the stop-shingle df count, and the verify kept-sets — where
+    * the unpinned chain shingles the corpus three times (the branches'
+    * exchange children differ, so ReuseExchange cannot dedup them).
+    * Same trade as [[jaccardPairs]]' pin: executor-local storage of the
+    * set frame vs repeated corpus passes; pass `pinSets = false` on
+    * preemptible fleets (or flip [[PinSetsConf]] once per session to opt
+    * every call site out). */
   def nearDuplicates(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, bands: Int = 16, rowsPerBand: Int = 4,
       shingleSize: Int = 3,
       maxShingleDf: Int = DefaultMaxShingleDf,
       maxBucketDocs: Int = 0, pinSets: Boolean = true): DataFrame = {
     val sets0 = shingleSets(df, idCol, textCol, shingleSize)
-    // lazy for the same reason as cappedSets' pin: construction stays
-    // job-free; the first action materializes the shared blocks
-    val sets =
-      if (pinSets && pinSetsEnabled(df.sparkSession))
-        sets0.localCheckpoint(eager = false)
-      else sets0
-    // band-duplicate pairs need no distinct: the verify semi-join dedups
-    val cands = candidatesOfBuckets(
-      bucketsOfSignatures(
-        signaturesFromSets(sets, idCol, bands * rowsPerBand), idCol,
-        bands, rowsPerBand),
-      idCol, maxBucketDocs)
-    jaccardVerifyFromSets(sets, cands, maxShingleDf)
-      .filter(col("jaccard") >= threshold)
+    val sets = if (pinSets) Dedup.pinSets(sets0) else sets0
+    val stop =
+      if (maxShingleDf <= 0) None
+      else Some(stopShinglesFromSets(sets, maxShingleDf))
+    // (doc, band) rows: band index, bucket, all band keys, capped set.
+    // Docs with no shingles have no signature; the keys array is never
+    // empty, and the outer form stops Catalyst inferring a non-empty
+    // filter that would evaluate the signature UDF again per band
+    val keyed = applyStop(sets.filter(size(col("__set")) > 0), stop)
+      .select(col("__id"), col("__kept"),
+        MinHash.signatureUdf(bands * rowsPerBand)(col("__set")).as("sig"))
+      .select(col("__id"), col("__kept"), size(col("__kept")).as("__n"),
+        array(bandKeys(col("sig"), bands, rowsPerBand): _*).as("__keys"))
+      .select(col("*"),
+        posexplode_outer(col("__keys")).as(Seq("band", "bucket")))
+    val b = capBuckets(keyed, maxBucketDocs)
+    val pairs = b.alias("l").join(b.alias("r"),
+        col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket"))
+      .filter(col("l.__id") < col("r.__id"))
+    def verified(p: DataFrame) = verifyKept(p.select(
+      col("l.__id").as("id1"), col("r.__id").as("id2"),
+      col("l.__kept").as("__kept1"), col("r.__kept").as("__kept2"),
+      col("l.__n").as("n1"), col("r.__n").as("n2")))
+    val once =
+      if (maxBucketDocs <= 0)
+        verified(pairs.filter(col("l.band") ===
+          firstEqual(col("l.__keys"), col("r.__keys"), bands)))
+      else verified(pairs).dropDuplicates("id1", "id2")
+    once.filter(col("jaccard") >= threshold)
+  }
+
+  /** Smallest index `i < n` where arrays `a` and `b` hold equal elements
+    * (null when none) — one `when` per index, so no lambda. */
+  private def firstEqual(a: Column, b: Column, n: Int): Column = {
+    val hits = (0 until n).map(i => when(a(i) === b(i), lit(i)))
+    if (n == 1) hits.head else least(hits: _*)
   }
 
   /** Exact all-pairs n-gram Jaccard >= threshold via shingle inverted index
@@ -417,12 +474,17 @@ object Dedup {
       threshold: Double, shingleSize: Int = 3,
       maxShingleDf: Int = DefaultMaxShingleDf,
       pinSets: Boolean = true): DataFrame = {
-    val e = cappedExploded(df, idCol, textCol, shingleSize, maxShingleDf,
-      pinSets)
-    // self-join with BYTE-IDENTICAL children (columns renamed after the
-    // join, not before): both sides canonicalize to the same plan, so
-    // ReuseExchange materializes the shingle+df-cap pipeline ONCE — with
-    // per-side aliases it would execute twice
+    val sets0 = shingleSets(df, idCol, textCol, shingleSize)
+    jaccardPairsFromSets(if (pinSets) Dedup.pinSets(sets0) else sets0,
+      threshold, maxShingleDf)
+  }
+
+  /** [[jaccardPairs]] over a prebuilt (`__id`, `__set`) frame — the face
+    * [[Pipelines.curate]] uses on the one frame it pins. */
+  private[pipeline] def jaccardPairsFromSets(sets: DataFrame,
+      threshold: Double, maxShingleDf: Int): DataFrame = {
+    val e = cappedSetsFrom(sets, maxShingleDf)
+      .select(col("__id"), col("__n"), explode(col("__kept")).as("__tok"))
     selfJoinOnTok(e)
       .groupBy("id1", "id2", "n1", "n2")
       .agg(count(lit(1)).as("shared"))
@@ -438,9 +500,9 @@ object Dedup {
     * symmetric Jaccard structurally misses: a paragraph embedded in a
     * 100× longer doc has Jaccard ≈ 1%, containment ≈ 100%. Identical
     * machinery and cost to [[jaccardPairs]] — same capped inverted-index
-    * self-join, same ReuseExchange shape — only the final normalization
-    * differs, so everything in SCALE.md about the jaccard tier (df caps,
-    * grouped variant trade) applies verbatim.
+    * self-join — only the final normalization differs, so everything in
+    * SCALE.md about the jaccard tier (df caps, grouped variant trade)
+    * applies verbatim.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, shingleSize: Int = 3,
@@ -687,8 +749,12 @@ object Dedup {
   /** Inverted-index self-join of an exploded-shingle frame on `__tok`,
     * keeping ordered pairs: (id1, n1, id2, n2) rows, one per shared
     * shingle. Both join children are the SAME plan (aliases applied after
-    * the join) so the exchange — and everything below it — is computed
-    * once and reused. */
+    * the join). As a sort-merge join (large inputs), that lets
+    * ReuseExchange shuffle the side once for both. When adaptive
+    * execution turns the join into a broadcast hash join (a small side),
+    * there is no exchange to reuse: the build side runs as its own stage
+    * and the probe side computes the pipeline again in the join's stage —
+    * which is why every caller feeds it from a pinned set frame. */
   private def selfJoinOnTok(e: DataFrame): DataFrame =
     e.alias("l").join(e.alias("r"), col("l.__tok") === col("r.__tok"))
       .filter(col("l.__id") < col("r.__id"))

@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   */
 object Pipelines {
 
-  /** How reused intermediate frames are pinned when `materialize = true`.
+  /** How reused intermediate frames are pinned: [[curate]]'s survivor
+    * frame on every call, [[trainPrep]]'s two reused frames when
+    * `materialize = true`.
     *
     *  - [[PinLocal]] — `localCheckpoint`: blocks live on executors with
     *    lineage truncated. Fastest, but a lost/preempted executor makes its
@@ -85,36 +87,79 @@ object Pipelines {
         col("n_chunks"), col("n_dropped"))
   }
 
+  /** The curated corpus: quality features and language ID, the
+    * token-length band, exact dedup (keep the smallest id per normalized
+    * fingerprint), then near-dup removal (drop the larger id of each pair
+    * with shingle-Jaccard >= `nearDupThreshold` among the exact
+    * survivors). Output rows are the survivors with every feature column.
+    *
+    * Scale shape: the exact survivors come from ONE shuffle on the
+    * fingerprint (a narrow input's fan-out hash-partitions on it), where
+    * a per-fingerprint `min(id)` window keeps the representative, with no
+    * aggregate joined back. The near-dup tail ([[nearDupTail]]) pins the
+    * survivors with their shingle sets as one frame that the df-cap, the
+    * inverted-index join and the final anti-join all read. That pin holds
+    * the curated corpus in block storage on every call — `pinMode` picks
+    * how, and [[Dedup.PinSetsConf]] set to `false` is the one way to run
+    * it as pure lineage (every branch then recomputes the feature chain).
+    */
   def curate(df: DataFrame, idCol: String, textCol: String,
       minTokens: Int = 20, maxTokens: Int = 70,
       nearDupThreshold: Double = 0.3, shingleSize: Int = 3,
       maxShingleDf: Int = Dedup.DefaultMaxShingleDf,
-      materialize: Boolean = false,
       pinMode: String = PinLocal): DataFrame = {
-    // quality features + langid + the fingerprint hash all ride the scan:
-    // fan a narrow input out across cores first (idempotent when the
-    // caller — e.g. [[trainPrep]] — already fanned out before its scrub)
-    val feats = Text.langId(
-      Text.qualityFeatures(Text.fanOut(df), textCol), textCol)
-    val kept = feats.filter(col("n_tokens").between(minTokens, maxTokens))
-    // exact dedup: keep the smallest id per normalized fingerprint
-    val reps = kept.withColumn("__fp", Text.fingerprint(col(textCol)))
-    val keepIds = reps.groupBy("__fp").agg(min(idCol).as(idCol))
-      .select(idCol)
-    val exactKept0 = reps.join(keepIds, Seq(idCol), "left_semi").drop("__fp")
-    // the survivor set fans out into a diamond (inverted-index branches +
-    // the final anti-join). `materialize` checkpoints it once so the
-    // feature/langid/dedup chain doesn't recompute per branch — measured
-    // neutral at bench scale (Spark's exchange reuse already dedups the
-    // heavy subtrees), so the pure-lineage plan is the default; flip it on
-    // clusters where re-scanning the corpus per branch dominates.
-    val exactKept =
-      if (materialize) pinFrame(exactKept0, pinMode) else exactKept0
-    // near-dup removal among survivors: drop the larger id of each pair
-    val dropIds = Dedup.jaccardPairs(exactKept, idCol, textCol,
-        nearDupThreshold, shingleSize, maxShingleDf)
-      .select(col("id2").as(idCol)).distinct()
-    exactKept.join(dropIds, Seq(idCol), "left_anti")
+    val (survivors, dropIds) = nearDupTail(
+      exactSurvivors(lengthBand(df, textCol, minTokens, maxTokens), idCol),
+      idCol, textCol, nearDupThreshold, shingleSize, maxShingleDf, pinMode)
+    survivors.join(dropIds, Seq(idCol), "left_anti")
+  }
+
+  /** [[curate]]'s near-dup tail over the exact survivors: the survivors
+    * with their shingle sets pinned as ONE frame (`pinMode`, unless
+    * [[Dedup.PinSetsConf]] is off), and the ids to drop — the larger id of
+    * each pair with shingle-Jaccard >= `threshold`, read off that frame.
+    * Returns (pinned survivors, drop ids); a drop id repeats once per
+    * pair it loses, which an anti-join ignores. */
+  private def nearDupTail(exactKept: DataFrame, idCol: String,
+      textCol: String, threshold: Double, shingleSize: Int,
+      maxShingleDf: Int, pinMode: String): (DataFrame, DataFrame) = {
+    val withSets = exactKept
+      .withColumn("__set", Text.shingleSetUdf(shingleSize)(col(textCol)))
+    val pinned =
+      if (Dedup.pinSetsEnabled(withSets.sparkSession))
+        pinFrame(withSets, pinMode)
+      else withSets
+    val dropIds = Dedup.jaccardPairsFromSets(
+        pinned.select(col(idCol).as("__id"), col("__set")),
+        threshold, maxShingleDf)
+      .select(col("id2").as(idCol))
+    (pinned.drop("__set"), dropIds)
+  }
+
+  /** [[curate]]'s head: quality features and language ID over a corpus
+    * fanned out on its content fingerprint `__fp`, cut to the token-length
+    * band. Keeps `__fp` for [[exactSurvivors]]. */
+  private def lengthBand(df: DataFrame, textCol: String, minTokens: Int,
+      maxTokens: Int): DataFrame = {
+    // a narrow input fans out on the fingerprint, so the features run
+    // across cores and the exact-dedup window finds its rows clustered;
+    // the fan-out is idempotent when the caller — e.g. [[trainPrep]] —
+    // already fanned out before its scrub
+    val head = Text.fanOut(
+      df.withColumn("__fp", Text.fingerprint(col(textCol))), col("__fp"))
+    Text.langId(Text.qualityFeatures(head, textCol), textCol)
+      .filter(col("n_tokens").between(minTokens, maxTokens))
+  }
+
+  /** Exact dedup of a [[lengthBand]] frame: the rows whose id is the
+    * smallest of their fingerprint, in one `min(id)` window partitioned by
+    * the fingerprint — no aggregate joined back. Drops `__fp`. */
+  private def exactSurvivors(kept: DataFrame, idCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    kept
+      .withColumn("__min", min(col(idCol)).over(Window.partitionBy("__fp")))
+      .filter(col(idCol) === col("__min"))
+      .drop("__fp", "__min")
   }
 
   /** Per-stage audit of the [[curate]] chain: one row per stage with the
@@ -126,17 +171,16 @@ object Pipelines {
     * input → length/langid band → exact dedup → near-dup removal.
     *
     * Scale shape: four count aggregates over the shared chain — the
-    * expensive prefix (features + exact dedup) is pinned once
-    * (`materialize`, default on, with the [[PinLocal]] trade), so the
-    * audit costs one chain pass plus the near-dup join, the same work
-    * [[curate]] itself does. The report frame is four driver rows —
-    * metadata, not data.
+    * exact survivors and their shingle sets are pinned once by the same
+    * near-dup tail [[curate]] runs (`pinMode`, with the [[PinLocal]]
+    * trade), so the audit costs one chain pass plus the near-dup join,
+    * the same work [[curate]] itself does. The report frame is four
+    * driver rows — metadata, not data.
     */
   def curationFunnel(df: DataFrame, idCol: String, textCol: String,
       minTokens: Int = 20, maxTokens: Int = 70,
       nearDupThreshold: Double = 0.3, shingleSize: Int = 3,
       maxShingleDf: Int = Dedup.DefaultMaxShingleDf,
-      materialize: Boolean = true,
       pinMode: String = PinLocal,
       evalDf: Option[DataFrame] = None,
       budgets: Map[String, Long] = Map.empty,
@@ -146,24 +190,16 @@ object Pipelines {
     def scrub(f: DataFrame) =
       if (scrubFirst) f.withColumn(textCol, Text.scrubPii(col(textCol)))
       else f
-    val in = scrub(Text.fanOut(df))
-    val feats = Text.langId(Text.qualityFeatures(in, textCol), textCol)
-    val kept = feats.filter(col("n_tokens").between(minTokens, maxTokens))
-    val reps = kept.withColumn("__fp", Text.fingerprint(col(textCol)))
-    val keepIds = reps.groupBy("__fp").agg(min(idCol).as(idCol))
-      .select(idCol)
-    val exactKept0 = reps.join(keepIds, Seq(idCol), "left_semi").drop("__fp")
-    val exactKept =
-      if (materialize) pinFrame(exactKept0, pinMode) else exactKept0
-    val dropIds = Dedup.jaccardPairs(exactKept, idCol, textCol,
-        nearDupThreshold, shingleSize, maxShingleDf)
-      .select(col("id2").as(idCol)).distinct()
+    val kept = lengthBand(scrub(Text.fanOut(df)), textCol, minTokens,
+      maxTokens)
+    val (exactKept, dropIds) = nearDupTail(exactSurvivors(kept, idCol),
+      idCol, textCol, nearDupThreshold, shingleSize, maxShingleDf, pinMode)
     val nExact = exactKept.count()
     val base = Seq(
       (1L, "input", df.count()),
       (2L, "length_lang", kept.count()),
       (3L, "exact_dedup", nExact),
-      (4L, "near_dedup", nExact - dropIds.count()))
+      (4L, "near_dedup", nExact - dropIds.distinct().count()))
     // the trainPrep tail, audited only when its inputs are supplied:
     // decontamination against the (scrubbed) eval set, then the
     // per-language token-budget cut
@@ -225,22 +261,23 @@ object Pipelines {
     // chain and it re-executes per branch. Measured at 4× corpus scale
     // (ScaleProbe `train_prep_4x`, SCALE.md): materialize 6.5s vs pure
     // lineage 22.8s — so pinning the reused frames is the default;
-    // `false` is for memory-starved clusters where holding the curated
-    // corpus in block storage is worse than recompute. `pinMode` picks the
+    // `false` drops these two pins, for memory-starved clusters where
+    // holding the cleaned corpus in block storage is worse than recompute
+    // (curate still pins its survivors; only [[Dedup.PinSetsConf]] set to
+    // `false` runs the whole job as lineage). `pinMode` picks the
     // pin mechanism: localCheckpoint for single-machine speed, reliable
     // checkpoint or DISK_ONLY_2 for preemptible fleets (see [[PinLocal]]).
     def pin(f: DataFrame) = if (materialize) pinFrame(f, pinMode) else f
     // curated also feeds two branches, but pinning IT measured no
     // improvement (slightly worse, within host variance, at sf0.1):
-    // with exactKept already checkpointed inside curate, the branches'
+    // with the survivors already checkpointed inside curate, the branches'
     // curated subtrees canonicalize identically and ride exchange
     // reuse — a third checkpoint only adds materialization. clean/docs
     // do not reuse (their branches reshape the plan), hence exactly
     // those two pins.
     val curated = curate(scrub(Text.fanOut(df)), idCol, textCol,
       minTokens, maxTokens,
-      nearDupThreshold, shingleSize, materialize = materialize,
-      pinMode = pinMode)
+      nearDupThreshold, shingleSize, pinMode = pinMode)
     val contam = Dedup.contamination(curated, scrub(evalDf), idCol, textCol,
       shingleSize).select(col(idCol))
     val clean = pin(curated.join(contam, Seq(idCol), "left_anti"))

@@ -18,9 +18,21 @@ object Text extends TextQuality with TextMix with TextSketches
   /** Canonical tokenizer: lowercase, split on non-alphanumeric runs, drop
     * empties. Equivalent DuckDB expression (used by the oracle):
     * `list_filter(string_split_regex(lower(text),'[^a-z0-9]+'), x -> x <> '')`.
+    * Spark drops the empties with `array_remove`, not a `filter` lambda:
+    * same values, and it compiles into the stage instead of running as
+    * an interpreted CodegenFallback that splits the stage.
     */
   def tokens(text: Column): Column =
-    filter(split(lower(text), "[^a-z0-9]+"), t => t =!= lit(""))
+    array_remove(split(lower(text), "[^a-z0-9]+"), "")
+
+  /** How many of `text`'s [[tokens]] are one of `words`, counting
+    * repeats: a token is a maximal `[a-z0-9]` run of the lowercased text,
+    * so a whole-run regex match is exactly a token in `words`. One
+    * codegen'd regex scan instead of a `filter` lambda over the token
+    * array; `words` must be `[a-z0-9]` words. */
+  private[graft] def wordHits(text: Column, words: Seq[String]): Column =
+    size(regexp_extract_all(lower(text),
+      lit(words.mkString("(?<![a-z0-9])(?:", "|", ")(?![a-z0-9])")), lit(0)))
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
@@ -99,8 +111,13 @@ object Text extends TextQuality with TextMix with TextSketches
     * The decision reads Catalyst's size estimate — `df.rdd` would force RDD
     * lineage materialization of the analyzed plan as a side channel — and
     * is a no-op at real scale, where file splits provide the parallelism.
+    *
+    * With `keys`, the fan-out hash-partitions on them instead of
+    * round-robin, so an operator that next needs the rows clustered by
+    * those keys (a window, a grouping) finds them so and adds no second
+    * shuffle.
     */
-  def fanOut(df: DataFrame): DataFrame = {
+  def fanOut(df: DataFrame, keys: Column*): DataFrame = {
     // streaming frames get their parallelism from the source; their plan
     // stats are not meaningful to read (and a blanket repartition would
     // add a shuffle to every micro-batch)
@@ -108,8 +125,9 @@ object Text extends TextQuality with TextMix with TextSketches
     val target = df.sparkSession.sparkContext.defaultParallelism
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val maxPartBytes = df.sparkSession.sessionState.conf.filesMaxPartitionBytes
-    // below target × split-size the scan CANNOT yield `target` partitions,
-    // so the repartition buys cores for (at most) that many cheap bytes;
+    // below target × split-size one file cannot split `target` ways, so
+    // the repartition buys cores for (at most) that many cheap bytes —
+    // unless the input already spans `target` files (fileSplits);
     // above it, file splits already provide the parallelism. Sources with
     // no real estimate (est saturates at the Long.MaxValue default, or a
     // join product overflows it): probe an RDD-backed leaf's EXISTING
@@ -120,7 +138,8 @@ object Text extends TextQuality with TextMix with TextSketches
     // wide RDD to core count).
     val unknown = est >= BigInt(Long.MaxValue)
     val needed =
-      if (!unknown) est < BigInt(maxPartBytes) * target
+      if (!unknown) est < BigInt(maxPartBytes) * target &&
+        fileSplits(df).forall(_ < target)
       else df.queryExecution.optimizedPlan.collectFirst {
         case r: org.apache.spark.sql.execution.LogicalRDD =>
           r.rdd.getNumPartitions < math.max(2, target / 2)
@@ -131,8 +150,22 @@ object Text extends TextQuality with TextMix with TextSketches
     // this walk the second call would stack a second full round-robin
     // exchange (plus its sort-before-repartition pass) on the same rows.
     if (needed && !fannedAlready(df.queryExecution.optimizedPlan, target))
-      df.repartition(target)
+      df.repartition(target, keys: _*)
     else df
+  }
+
+  /** How many splits `df`'s scan yields when every leaf of its plan is a
+    * file scan (the fewest of them); None for any other source. A small
+    * input spread over enough files is already wide, and a round-robin
+    * shuffle of it buys nothing. Reading it lists no files — the
+    * relation's index holds the listing. */
+  private def fileSplits(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val leaves = df.queryExecution.sparkPlan.collectLeaves()
+    if (leaves.isEmpty || !leaves.forall(_.isInstanceOf[FileSourceScanExec]))
+      None
+    else Some(leaves.collect { case f: FileSourceScanExec =>
+      f.inputRDD.getNumPartitions }.min)
   }
 
   /** True when `plan` is already an adequate repartition under nothing but

@@ -24,8 +24,7 @@ private[pipeline] trait TextQuality { self: Text.type =>
     val nPunct = nChars - length(regexp_replace(t, "[.,;:!?'\"()-]", ""))
     val nDigit = nChars - length(regexp_replace(t, "[0-9]", ""))
     val nWs = nChars - length(regexp_replace(t, " ", ""))
-    val stop = array(StopwordsEn.map(lit): _*)
-    val nStop = size(filter(toks, w => array_contains(stop, w)))
+    val nStop = wordHits(t, StopwordsEn)
     df.withColumn("__toks", tokens(t))
       .withColumn("n_chars_m", nChars.cast("long"))
       .withColumn("n_tokens", nTokens.cast("long"))
@@ -39,8 +38,8 @@ private[pipeline] trait TextQuality { self: Text.type =>
         when(nTokens > 0, nStop.cast("double") / nTokens).otherwise(lit(0.0)))
       .withColumn("mean_token_len",
         when(nTokens > 0,
-          aggregate(toks, lit(0L), (acc, w) => acc + length(w))
-            .cast("double") / nTokens).otherwise(lit(0.0)))
+          length(array_join(toks, "")).cast("double") / nTokens)
+          .otherwise(lit(0.0)))
       .drop("__toks")
   }
 
@@ -310,19 +309,15 @@ private[pipeline] trait TextQuality { self: Text.type =>
     * fastText — the *shape* (scores struct + argmax) is the operator.
     */
   def langId(df: DataFrame, textCol: String): DataFrame = {
-    val toks = col("__toks")
     def score(words: Seq[String]): Column =
-      size(filter(toks, w => array_contains(array(words.map(lit): _*), w)))
-        .cast("long")
+      wordHits(col(textCol), words).cast("long")
     // greatest-of-structs argmax: (score, langRank) — ranks inverted so ties
     // pick the alphabetically-first language
     val scored = df
-      .withColumn("__toks", tokens(col(textCol)))
       .withColumn("score_de", score(StopwordsDe))
       .withColumn("score_en", score(StopwordsEn))
       .withColumn("score_es", score(StopwordsEs))
       .withColumn("score_fr", score(StopwordsFr))
-      .drop("__toks")
     val langs = Seq("de", "en", "es", "fr")
     val best = greatest(langs.zipWithIndex.map { case (l, i) =>
       struct(col(s"score_$l").as("s"), lit(langs.length - i).as("r"),

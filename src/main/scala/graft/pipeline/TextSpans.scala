@@ -10,14 +10,6 @@ import org.apache.spark.sql.{functions => Fn}
   * `Text.<member>` call sites are unchanged. */
 private[pipeline] trait TextSpans { self: Text.type =>
 
-  /** Chunk-granularity duplication stats — the paragraph-dedup signal
-    * (CCNet/RefinedWeb shape at fixed token spans): non-overlapping
-    * [[chunk]]s fingerprint with md5, the corpus-wide occurrence
-    * frequency joins back, and each doc reports how many of its chunks
-    * are duplicated ANYWHERE (including within itself — repeated
-    * boilerplate is the point). Two keyed shuffles on the fingerprint
-    * and the doc id; chunking itself is a narrow map + explode.
-    */
   /** Exact duplicated-SPAN coverage per document — the substring-dedup
     * signal of "Deduplicating Training Data Makes Language Models Better"
     * (Lee et al. 2022) as a per-doc measure: how many of a document's
@@ -29,22 +21,31 @@ private[pipeline] trait TextSpans { self: Text.type =>
     * `dup_tokens` is the size of the union of covered positions, the
     * number a span-excision pass would actually remove.
     *
-    * Scale shape: one tokenize pass; occurrence counts are one groupBy
-    * over the exploded k-grams (inverted-index shape, map-side combined)
-    * joined back on the gram; span merging is a per-DOC window over that
-    * doc's duplicated positions only — bounded by the doc's own token
-    * count, never a global sort. The gram string is the shuffle key so a
+    * Scale shape: one tokenize pass and two keyed shuffles. The windows
+    * shuffle on the gram, where a per-gram `count` window marks the
+    * duplicated ones (no aggregate joined back: a gram's occurrences
+    * share one window partition, so a boilerplate gram in millions of
+    * docs is one large — spilling — partition); then each doc's
+    * duplicated positions shuffle on the doc id and fold into one list,
+    * whose span union a narrow UDF sums — bounded by the doc's token
+    * count, never a global sort. Every input row keeps exactly one
+    * output row, from its anchor row (a doc shorter than `k` has only
+    * that; a null id scores 0). The gram string is the shuffle key so a
     * second engine reproduces the result bit for bit; a production run
     * would xxhash64 it (same equality, 8-byte keys).
     */
   def dupSpanCoverage(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8, minCount: Long = 2L): DataFrame = {
     require(minCount >= 2L, s"minCount < 2 would cover every token")
-    val base = spanTokens(df, idCol, textCol)
-    val grams = spanGrams(base, idCol, k)
-    val dupGrams = grams.groupBy("__gram").agg(count(lit(1)).as("__cnt"))
-      .filter(col("__cnt") >= minCount)
-    spanCoverage(base, grams, dupGrams, idCol, k)
+    import org.apache.spark.sql.expressions.Window
+    val windows = spanWindows(df, idCol, textCol, k)
+    // an anchor's null gram takes a key no gram can have ('#' is a
+    // token separator), so anchors spread over the tasks instead of
+    // sharing the null partition; they are never duplicated
+    val key = coalesce(col("__gram"),
+      concat(lit("#"), col(idCol).cast("string")))
+    spanCoverage(windows.withColumn("__dup", col("__gram").isNotNull &&
+      count(lit(1)).over(Window.partitionBy(key)) >= minCount), idCol, k)
   }
 
   private def spanTokens(df: DataFrame, idCol: String,
@@ -52,50 +53,96 @@ private[pipeline] trait TextSpans { self: Text.type =>
     df.select(col(idCol), coalesce(tokens(col(textCol)), array())
       .as("__toks"))
 
-  /** (id, __pos, __gram) — every k-token window of every doc, 0-based
-    * start positions. A doc shorter than k has none (sequence(1,0) would
-    * count DOWN in Spark, hence the guard). */
-  private def spanGrams(base: DataFrame, idCol: String, k: Int): DataFrame = {
+  /** Every k-token window of `toks` joined by one space, in order, with
+    * repeats — the positional counterpart of [[shinglesScala]]. A doc
+    * shorter than k has none. One narrow UDF: the Catalyst form is a
+    * `transform` lambda, which is CodegenFallback and splits its stage. */
+  private def kGramsUdf(k: Int) = {
     require(k >= 1, s"span length must be positive: $k")
-    base.select(col(idCol), posexplode(expr(
-        s"""CASE WHEN size(__toks) >= $k
-           |THEN transform(sequence(1, size(__toks) - ${k - 1}),
-           |  i -> array_join(slice(__toks, i, $k), ' '))
-           |ELSE array() END""".stripMargin)))
+    udf((toks: Seq[String]) =>
+      if (toks.length < k) Seq.empty[String]
+      else toks.sliding(k).map(_.mkString(" ")).toSeq)
+  }
+
+  /** (id, __pos, __gram) — every k-token window of every doc, 0-based
+    * start positions. A doc shorter than k has none. */
+  private def spanGrams(base: DataFrame, idCol: String, k: Int): DataFrame =
+    base.select(col(idCol), posexplode(kGramsUdf(k)(col("__toks"))))
       .select(col(idCol), col("pos").as("__pos"), col("col").as("__gram"))
-  }
 
-  /** Merge each doc's duplicated window positions into MAXIMAL spans —
-    * gaps-and-islands over the doc's OWN duplicated positions: a new
-    * island starts where a window clears every previous window's end.
-    * One row per (doc, island) with `[__start, __end)` token bounds. */
+  /** (id, n_tokens, __pos, __gram): one anchor row per input row, with
+    * null `__pos` and `__gram` — the row [[spanCoverage]] reports it on,
+    * and which no gram join can match or multiply — plus one row per
+    * k-token window at its 0-based start. */
+  private def spanWindows(df: DataFrame, idCol: String, textCol: String,
+      k: Int): DataFrame =
+    spanTokens(df, idCol, textCol)
+      .select(col(idCol), size(col("__toks")).cast("long").as("n_tokens"),
+        // never empty; the outer form stops Catalyst inferring a
+        // non-empty filter that would run the UDF twice
+        posexplode_outer(concat(array(lit(null).cast("string")),
+          kGramsUdf(k)(col("__toks")))))
+      .select(col(idCol), col("n_tokens"),
+        when(col("pos") > 0, col("pos") - 1).as("__pos"),
+        col("col").as("__gram"))
+
+  /** (id, __start, __end): each doc's duplicated windows merged into
+    * MAXIMAL spans by [[mergeSpans]], one row per (doc, island) — one
+    * per-doc fold of the doc's OWN duplicated positions. */
   private def spanIslands(grams: DataFrame, dupGrams: DataFrame,
-      idCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val dupPos = grams.join(dupGrams.select("__gram"), "__gram")
-      .select(col(idCol), col("__pos"))
-    val w = Window.partitionBy(idCol).orderBy("__pos")
-    dupPos
-      .withColumn("__prev_end", max(col("__pos") + k)
-        .over(w.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("__new", when(col("__prev_end").isNull ||
-        col("__pos") >= col("__prev_end"), 1L).otherwise(0L))
-      .withColumn("__isl", sum("__new").over(w))
-      .groupBy(col(idCol), col("__isl"))
-      .agg(min(col("__pos")).as("__start"),
-        (max(col("__pos")) + k).as("__end"))
+      idCol: String, k: Int): DataFrame =
+    grams.join(dupGrams.select("__gram"), "__gram")
+      .groupBy(idCol).agg(collect_list(col("__pos")).as("__ps"))
+      .select(col(idCol),
+        explode(spanIslandsUdf(k)(col("__ps"))).as("__isl"))
+      .select(col(idCol), col("__isl._1").as("__start"),
+        col("__isl._2").as("__end"))
+
+  /** THE span merge: the windows `[p, p + k)` over start positions `ps`
+    * as maximal `[start, end)` islands, in order — sorted, a window
+    * opens a new island where it starts at or past the current island's
+    * end. [[dupSpanCoverage]] sums the islands, excision removes them. */
+  private def mergeSpans(ps: Seq[Int], k: Int): Seq[(Int, Int)] = {
+    val s = ps.toArray
+    java.util.Arrays.sort(s)
+    val out = Seq.newBuilder[(Int, Int)]
+    var i = 0
+    while (i < s.length) {
+      val start = s(i)
+      var end = start + k
+      i += 1
+      while (i < s.length && s(i) < end) { end = s(i) + k; i += 1 }
+      out += ((start, end))
+    }
+    out.result()
   }
 
-  /** Join each doc's windows against the duplicated-gram frame and
-    * report the merged-span coverage. */
-  private def spanCoverage(base: DataFrame, grams: DataFrame,
-      dupGrams: DataFrame, idCol: String, k: Int): DataFrame = {
-    val covered = spanIslands(grams, dupGrams, idCol, k)
+  private def spanIslandsUdf(k: Int) =
+    udf((ps: Seq[Int]) => mergeSpans(ps, k))
+
+  /** Size of the union of the windows `[p, p + k)` — the summed
+    * [[mergeSpans]] islands. */
+  private def spanUnionUdf(k: Int) = udf((ps: Seq[Int]) =>
+    mergeSpans(ps, k).map { case (s, e) => (e - s).toLong }.sum)
+
+  /** (id, n_tokens, dup_tokens), one row per input row, from
+    * [[spanWindows]] rows marked `__dup`: one aggregation per id folds
+    * the duplicated positions and each row's token count, and the union
+    * of the windows `[p, p + k)` is summed by [[spanUnionUdf]]. Rows
+    * sharing an id merge their windows into one union, as one doc's
+    * would; a null id scores 0. */
+  private def spanCoverage(marked: DataFrame, idCol: String,
+      k: Int): DataFrame = {
+    val anchor = col("__pos").isNull
+    marked
+      // only duplicated windows and each row's anchor cross the shuffle
+      .filter(col("__dup") || anchor)
       .groupBy(idCol)
-      .agg(sum(col("__end") - col("__start")).as("dup_tokens"))
-    base.select(col(idCol), size(col("__toks")).cast("long").as("n_tokens"))
-      .join(covered, Seq(idCol), "left")
-      .withColumn("dup_tokens", coalesce(col("dup_tokens"), lit(0L)))
+      .agg(collect_list(when(col("__dup"), col("__pos"))).as("__ps"),
+        collect_list(when(anchor, col("n_tokens"))).as("__ns"))
+      .select(col(idCol), explode(col("__ns")).as("n_tokens"),
+        when(col(idCol).isNull, lit(0L))
+          .otherwise(spanUnionUdf(k)(col("__ps"))).as("dup_tokens"))
   }
 
   /** EXCISE the duplicated spans — the transform half of Lee et al.
@@ -289,11 +336,23 @@ private[pipeline] trait TextSpans { self: Text.type =>
     * a new dump scores in one pass with no corpus-wide re-count. */
   def dupSpanCoverageStored(df: DataFrame, idCol: String, textCol: String,
       index: DataFrame, k: Int = 8): DataFrame = {
-    val base = spanTokens(df, idCol, textCol)
-    spanCoverage(base, spanGrams(base, idCol, k),
-      index.select(col("gram").as("__gram")), idCol, k)
+    // a left join marks the indexed windows (a gram listed twice only
+    // repeats a position, which the union ignores)
+    val dup = index.select(col("gram").as("__gram"), lit(true).as("__hit"))
+    spanCoverage(spanWindows(df, idCol, textCol, k)
+        .join(dup, Seq("__gram"), "left")
+        .withColumn("__dup", coalesce(col("__hit"), lit(false))),
+      idCol, k)
   }
 
+  /** Chunk-granularity duplication stats — the paragraph-dedup signal
+    * (CCNet/RefinedWeb shape at fixed token spans): non-overlapping
+    * [[chunk]]s fingerprint with md5, the corpus-wide occurrence
+    * frequency joins back, and each doc reports how many of its chunks
+    * are duplicated ANYWHERE (including within itself — repeated
+    * boilerplate is the point). Two keyed shuffles on the fingerprint
+    * and the doc id; chunking itself is a narrow map + explode.
+    */
   def dupChunkStats(df: DataFrame, idCol: String, textCol: String,
       size: Int = 32): DataFrame = {
     val chunks = chunk(df, idCol, textCol, size, overlap = 0)

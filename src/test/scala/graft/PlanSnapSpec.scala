@@ -38,6 +38,12 @@ class PlanSnapSpec extends AnyFunSuite {
     for (field <- Seq("build_s=", "build_jobs=", "exec_s=", "stages=",
         "tasks=", "shuffle_read_mb=", "shuffle_write_mb=", "spill_mb="))
       assert(line.get.contains(field), line.get)
+    // the compile counts: the warm run's footprint, the timed run's
+    // recompiles
+    def count(f: String) = raw"""\b$f=(\d+)""".r
+      .findFirstMatchIn(line.get).map(_.group(1).toLong)
+    assert(count("warm_compiles").isDefined, line.get)
+    assert(count("compiles").isDefined, line.get)
     assert(out.linesIterator.exists(_.startsWith("  stage ")), out)
   }
 
