@@ -18,7 +18,7 @@ import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnVector,
   ColumnarBatch}
 
 import graft.operators.TsOps
-import graft.storage.Tables
+import graft.storage.{CacheRegistry, Tables}
 import Ast._
 import Interpreter._
 
@@ -67,22 +67,13 @@ final class Engine(val spark: SparkSession, val dbDir: String,
       else Tables.describeDf(spark, resolveDb(d.db), d.metricsFilter)
     case s: SearchMetrics =>
       val db = resolveDb(s.db)
-      // force_sync_cloud ≈ REFRESH TABLE: re-list files, drop cached data
-      // (`storage/api/cloud_setting.rs`; cloud-path tables are just
-      // object-store URIs to Spark, so a refresh is the whole story)
-      if (s.forceSync) graft.storage.CacheRegistry.invalidate(spark, db, s.metrics)
-      // use_cache maps to the table-LRU (reference block cache analog).
-      // false = read fresh from disk: the cached plan must be dropped first,
-      // because Spark cache matching is plan-based — an equivalent scan
-      // would silently resolve to the InMemoryRelation otherwise.
-      // uncached reads push the range onto the partition column too, so
-      // date-bucketed tables get directory pruning before footer stats
+      // force_sync_cloud ≈ REFRESH TABLE (`storage/api/cloud_setting.rs`);
+      // use_cache = false reads a relation no pin matches, leaving pins be
+      if (s.forceSync) CacheRegistry.invalidate(spark, db, s.metrics)
       val raw =
-        if (s.useCache) graft.storage.CacheRegistry.get(spark, db, s.metrics)
-        else {
-          graft.storage.CacheRegistry.invalidate(spark, db, s.metrics)
-          Tables.readRange(spark, db, s.metrics, s.range.since, s.range.until)
-        }
+        if (s.useCache) CacheRegistry.get(spark, db, s.metrics)
+        else Tables.readRange(spark, db, s.metrics, s.range.since,
+          s.range.until)
       require(raw.columns.contains("ts"),
         s"metrics '${s.metrics}' has no ts column")
       // positional aliasing: `with cols=[...]` renames value fields in schema
@@ -137,9 +128,16 @@ final class Engine(val spark: SparkSession, val dbDir: String,
     }
   }
 
-  // Hadoop Path, not java.io.File: dbDir may be an object-store URI
-  private def resolveDb(db: Option[String]): String =
-    db.fold(dbDir)(d => new org.apache.hadoop.fs.Path(dbDir, d).toString)
+  /** `db = d` is a relative path under the root, no scheme, no `..`
+    * (Hadoop Path, not java.io.File: dbDir may be an object-store URI). */
+  private def resolveDb(db: Option[String]): String = db.fold(dbDir) { d =>
+    val p = scala.util.Try(new org.apache.hadoop.fs.Path(d)).toOption
+    if (p.forall(p => p.isAbsolute || p.toUri.getScheme != null) ||
+        d.split("[/\\\\]").contains(".."))
+      throw QueryException("InvalidDatabase",
+        s"db = $d: a database is a relative path under the root")
+    new org.apache.hadoop.fs.Path(dbDir, d).toString
+  }
 }
 
 /** Output formatting (`query/executor/output/format/`): ASCII table,

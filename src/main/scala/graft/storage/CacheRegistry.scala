@@ -1,54 +1,41 @@
 package graft.storage
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.collection.mutable
+import org.apache.spark.storage.StorageLevel
 
-/** LRU registry of cached metrics tables — the engine-level analog of the
-  * reference's block LRU cache (`storage/cache/block_cache.rs:13-51`,
-  * `ZDB_BLOCK_CACHE_SIZE` default 1000). Spark's block manager holds the
-  * actual bytes; this tracks which metrics are pinned and evicts
-  * least-recently-used ones.
-  *
-  * `use_cache = false` in a query bypasses (and does not populate) the
-  * registry, matching `CacheSetting::only_write` semantics
-  * (`query/lexer/with.rs:96-99`).
-  */
+/** Cached metrics tables — the analog of the reference's block LRU cache
+  * (`storage/cache/block_cache.rs:13-51`). A pin is a per-session at-rest
+  * snapshot ([[FileTree.atRest]]) of one table, checked against a listing
+  * on every read: any writer's new or rewritten file replaces it, and a
+  * replaced or evicted pin is unpersisted. `use_cache = false` reads
+  * never touch a pin ([[Tables.readRange]]), as `CacheSetting::only_write`
+  * (`query/lexer/with.rs:96-99`). */
 object CacheRegistry {
-  private val maxEntries: Int =
-    sys.env.get("GRAFT_TABLE_CACHE_SIZE").map(_.toInt).getOrElse(64)
-  private val cached = mutable.LinkedHashMap.empty[String, DataFrame]
+  private val Kind = "cached table"
 
-  def get(spark: SparkSession, dbDir: String, metrics: String): DataFrame =
-    synchronized {
-      val key = Tables.metricsPath(dbDir, metrics)
-      cached.remove(key) match {
-        case Some(df) => // LRU touch: move to tail
-          cached.put(key, df); df
-        case None =>
-          val df = Tables.read(spark, dbDir, metrics).cache()
-          cached.put(key, df)
-          while (cached.size > maxEntries) {
-            val (_, old) = cached.head
-            old.unpersist(blocking = false)
-            cached.remove(cached.head._1)
-          }
-          df
-      }
-    }
-
-  /** Drop + refresh a metrics (the `force_sync_cloud` analog: re-list files
-    * and invalidate cached data — ≈ REFRESH TABLE). */
-  def invalidate(spark: SparkSession, dbDir: String, metrics: String): Unit =
-    synchronized {
-      val key = Tables.metricsPath(dbDir, metrics)
-      cached.remove(key).foreach(_.unpersist(blocking = false))
-      spark.catalog.refreshByPath(key)
-    }
-
-  def clear(): Unit = synchronized {
-    cached.values.foreach(_.unpersist(blocking = false))
-    cached.clear()
+  private final case class Pin(df: DataFrame) extends FileTree.Snapshot {
+    override def release(): Unit = { df.unpersist(blocking = false); () }
   }
 
-  def size: Int = synchronized(cached.size)
+  def get(spark: SparkSession, dbDir: String, metrics: String): DataFrame = {
+    val t = Tables.snapshot(spark, dbDir, metrics)
+    // Spark matches cached data by plan across sessions: pinning drops
+    // another session's stale pin, and its release can drop this one's
+    val pin = FileTree.atRest(spark, Kind, t.root, t.listing)(
+      Pin(Tables.table(t.df).unpersist(blocking = false).cache())).df
+    if (pin.storageLevel == StorageLevel.NONE) pin.cache() else pin
+  }
+
+  /** `force_sync_cloud` (≈ REFRESH TABLE): forget this session's snapshot
+    * and pin of a table, so its next read infers and pins it anew. */
+  def invalidate(spark: SparkSession, dbDir: String, metrics: String): Unit = {
+    val root = FileTree.qualified(spark, Tables.metricsPath(dbDir, metrics))._3
+    FileTree.forget(spark, Kind, root)
+    FileTree.forget(spark, Tables.TreeKind, root)
+  }
+
+  /** Drop every at-rest snapshot, unpersisting every pin. */
+  def clear(): Unit = FileTree.forgetAll()
+
+  def size: Int = FileTree.held(Kind)
 }

@@ -1,13 +1,17 @@
 package graft.storage
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame,
+  SparkSession}
 import org.apache.spark.sql.functions._
+
+import scala.jdk.CollectionConverters._
 
 import graft.functions.BoundLong
 
 /** How a stored tree sits on disk: the one recursive walk over it (the
-  * data files a reader of that tree would see), the `__day` partition
+  * data files a reader of that tree would see), the one snapshot of what
+  * a reader built from one walk ([[atRest]]), the `__day` partition
   * convention every day-partitioned tree shares (the raw metrics tables
   * and the rollup, counter and sample stores), and the rule for when a
   * tree reads as absent.
@@ -40,17 +44,107 @@ object FileTree {
     walk(root)
   }
 
+  /** Each visible file's path, length and modification time, sorted. */
+  type Listing = Vector[(String, Long, Long)]
+
+  def listing(fs: FileSystem, root: Path): Listing = files(fs, root)
+    .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+    .sorted
+
+  /** What a reader built from one listing; `release` runs when it leaves
+    * [[atRest]] (a pinned frame is unpersisted there). */
+  trait Snapshot { def release(): Unit = () }
+
+  private final class Entry {
+    var listing: Listing = null
+    var value: Snapshot = null
+    var live = true
+    def clear(): Unit = synchronized {
+      if (value != null) value.release()
+      value = null; listing = null
+    }
+    def close(): Unit = synchronized { live = false; clear() }
+  }
+
+  private type Key = (SparkSession, String, String)
+  private val snapshots =
+    new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, Entry]) =
+        size > 128 && { e.getValue.close(); true }
+    }
+
+  /** THE at-rest snapshot, one LRU of 128 keyed by (session, `kind`,
+    * qualified `root`): `build`'s result, kept while the tree lists exactly
+    * `listing`. The caller lists BEFORE it reads, so a write landing in
+    * between leaves the stamp older than the snapshot. A failed build is
+    * not kept. A build holds only its entry's lock and never calls
+    * [[atRest]], so an eviction waiting on a build cannot deadlock. */
+  def atRest[T <: Snapshot](spark: SparkSession, kind: String, root: String,
+      listing: Listing)(build: => T): T = {
+    val entry = snapshots.synchronized(
+      snapshots.computeIfAbsent((spark, kind, root), _ => new Entry))
+    entry.synchronized {
+      if (entry.listing == listing) entry.value.asInstanceOf[T]
+      else {
+        entry.clear()
+        val built = build
+        // evicted mid-build: the caller still gets its snapshot, unkept
+        if (entry.live) { entry.value = built; entry.listing = listing }
+        else built.release()
+        built
+      }
+    }
+  }
+
+  /** `path`'s filesystem, `Path` and qualified form (an [[atRest]] root). */
+  def qualified(spark: SparkSession, path: String)
+      : (FileSystem, Path, String) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    (fs, p, fs.makeQualified(p).toString)
+  }
+
+  /** Drop one snapshot: the next read rebuilds it whatever is listed. */
+  def forget(spark: SparkSession, kind: String, root: String): Unit =
+    snapshots.synchronized(Option(snapshots.remove((spark, kind, root))))
+      .foreach(_.close())
+
+  def forgetAll(): Unit = snapshots.synchronized {
+    val all = snapshots.values.asScala.toVector
+    snapshots.clear(); all
+  }.foreach(_.close())
+
+  /** How many `kind` snapshots are held. */
+  def held(kind: String): Int = snapshots.synchronized {
+    snapshots.asScala.count { case (k, e) => k._2 == kind && e.value != null }
+  }
+
   private[storage] val DayNs = 86400L * 1000000000L
 
-  private val DayDir = s"/${WritableStore.PartitionCol}=([^/]+)/".r
+  private val DayDir = s"(.*/${WritableStore.PartitionCol}=([^/]+))/".r
 
-  /** Bytes per `__day` value over `(path, length)` files; a file outside
-    * every `__day` directory counts under `""`. */
-  private[storage] def dayBytes(files: Seq[(String, Long)])
-      : Map[String, Long] =
-    files.groupMapReduce { case (p, _) =>
-      DayDir.findFirstMatchIn(p).fold("")(_.group(1))
-    }(_._2)(_ + _)
+  /** Whether a `__day` value lies in the days a scope to `[lo, hi)`
+    * keeps (an absent bound is open). */
+  private[storage] def dayInScope(d: String, lo: Option[Long],
+      hi: Option[Long]): Boolean =
+    lo.forall(v => d >= day(v)) && hi.forall(v => d <= day(v - 1))
+
+  /** The `__day` directories of `listing` a scope to `[lo, hi)` keeps, or
+    * None when a file lies outside every `__day` directory. */
+  private[storage] def dayDirs(listing: Listing, lo: Option[Long],
+      hi: Option[Long]): Option[Seq[String]] = {
+    val dirs = listing.map(f => DayDir.findFirstMatchIn(f._1))
+    if (dirs.exists(_.isEmpty)) None
+    else Some(dirs.flatten.collect {
+      case m if dayInScope(m.group(2), lo, hi) => m.group(1)
+    }.distinct)
+  }
+
+  /** Bytes per `__day` value of a listing; a file outside every `__day`
+    * directory counts under `""`. */
+  private[storage] def dayBytes(listing: Listing): Map[String, Long] =
+    listing.groupMapReduce(f =>
+      DayDir.findFirstMatchIn(f._1).fold("")(_.group(2)))(_._2)(_ + _)
 
   /** The `__day` partition value (`yyyy-MM-dd`) holding a nanos instant. */
   private[storage] def day(nanos: Long): String =
@@ -107,7 +201,7 @@ object FileTree {
     * be inferred (created but empty, or fully trimmed). Any other
     * analysis failure propagates. The one place that matches Spark's
     * error text, so a Spark upgrade that rewords it is a one-line fix. */
-  private[storage] def readOrNone(read: => DataFrame): Option[DataFrame] =
+  private[storage] def readOrNone[T](read: => T): Option[T] =
     try Some(read)
     catch {
       case e: AnalysisException

@@ -41,27 +41,16 @@ object Tables {
     // predicates over normalizeTs output fold back to native scan filters
     graft.plans.NanoTsRewrite.install(spark)
     // SCALE-ADAPTIVE post-shuffle parallelism (optimization guide §2.2):
-    // AQE coalescing under `parallelismFirst` (default on) targets
-    // totalBytes / defaultParallelism per partition but never goes below
-    // `minPartitionSize`, whose 1 MB default caps a small intermediate's
-    // parallelism at ⌈bytes/1MB⌉ tasks — a 12 MB post-shuffle frame runs
-    // its whole downstream stage on 4 of 32 cores (measured: the
-    // graph_triangles normalize+distinct stage, 2.9 s of task time in
-    // 0.83 s of wall on 4 tasks; tpch_q9's final agg on 3). At
-    // production scale the computed target (bytes/parallelism) is far
-    // above any floor, so this setting is INERT there — it only governs
-    // how small inputs spread over idle cores, which is exactly the
-    // dimension that must adapt between a laptop bench and a 100 TB
-    // cluster. The env var is the explicit override; otherwise a value the
-    // user already set on the session is kept, and 64k fills only a gap.
+    // AQE coalescing never goes below `minPartitionSize`, whose 1 MB
+    // default runs a 12 MB post-shuffle frame on 4 of 32 cores (measured:
+    // graph_triangles' normalize+distinct stage, 2.9 s of task time in
+    // 0.83 s of wall). At production scale the target bytes/parallelism is
+    // far above any floor, so this is inert there. A value the user set on
+    // the session is kept; 64k fills only a gap.
     val minPartitionSize =
       "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    sys.env.get("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE") match {
-      case Some(v) => spark.conf.set(minPartitionSize, v)
-      case None =>
-        if (!spark.sessionState.conf.contains(minPartitionSize))
-          spark.conf.set(minPartitionSize, "64k")
-    }
+    if (!spark.sessionState.conf.contains(minPartitionSize))
+      spark.conf.set(minPartitionSize, "64k")
   }
 
   /** Hadoop conf for catalog path operations — from the active session when
@@ -108,28 +97,69 @@ object Tables {
       case _ => df
     }
 
-  def read(spark: SparkSession, dbDir: String, metrics: String): DataFrame = {
+  /** A parquet tree's read under one listing: its schema inferred and its
+    * Spark file index listed once, so a warm read runs no Spark job. */
+  private[storage] final case class TreeSnapshot(root: String,
+      listing: FileTree.Listing, df: DataFrame) extends FileTree.Snapshot
+
+  private[storage] val TreeKind = "parquet tree"
+
+  /** The parquet tree at `path` ([[FileTree.atRest]]), or None (not kept)
+    * when it lists no data file or has no inferable schema. */
+  private[storage] def treeAtRest(spark: SparkSession, path: String)
+      : Option[TreeSnapshot] = {
+    val (fs, p, root) = FileTree.qualified(spark, path)
+    val listing = FileTree.listing(fs, p)
+    if (listing.isEmpty) None
+    else FileTree.readOrNone(FileTree.atRest(spark, TreeKind, root, listing)(
+      TreeSnapshot(root, listing, spark.read.parquet(path))))
+  }
+
+  /** A metrics table's snapshot, under the confs [[configure]] pins (the
+    * schema depends on them); an unreadable table fails as Spark does. */
+  private[storage] def snapshot(spark: SparkSession, dbDir: String,
+      metrics: String): TreeSnapshot = {
     configure(spark)
-    val df = normalizeTs(spark.read.parquet(metricsPath(dbDir, metrics)))
-    // drop writer partition columns (date bucketing) from the logical schema
+    val path = metricsPath(dbDir, metrics)
+    treeAtRest(spark, path).getOrElse {
+      spark.read.parquet(path)
+      throw new IllegalArgumentException(
+        s"metrics '$metrics' in $dbDir holds no data file")
+    }
+  }
+
+  /** A table as the engine serves it: `ts` in nanos, no `__day` column. */
+  private[storage] def table(df: DataFrame): DataFrame =
+    dropDay(normalizeTs(df))
+
+  private def dropDay(df: DataFrame): DataFrame =
     if (df.columns.contains(WritableStore.PartitionCol))
       df.drop(WritableStore.PartitionCol)
     else df
-  }
+
+  def read(spark: SparkSession, dbDir: String, metrics: String): DataFrame =
+    table(snapshot(spark, dbDir, metrics).df)
 
   /** Range-aware read: applies the `[since, until)` ts predicate AND, for
     * date-bucketed tables, the equivalent predicate on the `__day` partition
     * column — directory-level pruning needs a filter on the partition column
     * itself; the ts filter alone only prunes row-groups via footer stats.
-    */
+    *
+    * The fresh (`use_cache = false`) read, under the snapshot's schema: of
+    * the `__day` directories the range touches (`basePath` at the root),
+    * else of the listed files. Spark matches cached data by a relation's
+    * root paths, so no pin answers it — except of a one-file table. */
   def readRange(spark: SparkSession, dbDir: String, metrics: String,
       since: Option[Long], until: Option[Long]): DataFrame = {
-    configure(spark)
-    val raw = normalizeTs(spark.read.parquet(metricsPath(dbDir, metrics)))
-    val filtered = FileTree.scope(raw, col("ts"), since, until)
-    if (raw.columns.contains(WritableStore.PartitionCol))
-      filtered.drop(WritableStore.PartitionCol)
-    else filtered
+    val t = snapshot(spark, dbDir, metrics)
+    val read = spark.read.schema(t.df.schema)
+    val raw = FileTree.dayDirs(t.listing, since, until) match {
+      case Some(Seq()) => spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], t.df.schema)
+      case Some(dirs) => read.option("basePath", t.root).parquet(dirs: _*)
+      case None => read.parquet(t.listing.map(_._1): _*)
+    }
+    dropDay(FileTree.scope(normalizeTs(raw), col("ts"), since, until))
   }
 
   /** Save a frame as a bucketed catalog table: rows are hash-bucketed (and

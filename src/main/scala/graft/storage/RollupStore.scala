@@ -1,7 +1,9 @@
 package graft.storage
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
+  StructType}
 
 import graft.functions.BoundLong
 
@@ -322,8 +324,8 @@ object RollupStore {
 
   /** Self-heal crashed swaps, read, scope to `[since, until)` with `__day`
     * directory pruning + `bucket_ts` row-group pruning, and drop
-    * at-least-once replay duplicates. The shared front half of every
-    * store read. */
+    * at-least-once replay duplicates: a writer's store read (readers
+    * open the snapshot, [[servedStore]]). */
   private def scopedStore(spark: SparkSession, path: String,
       since: Option[Long], until: Option[Long]): DataFrame = {
     healed(spark, path, "rollup store")
@@ -335,98 +337,47 @@ object RollupStore {
     * filesystem and path for the caller's listing. */
   private def healed(spark: SparkSession, path: String, what: String)
       : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sessionState.newHadoopConf())
+    val (fs, live, _) = FileTree.qualified(spark, path)
     AtomicDir.heal(fs, live, what)
     (fs, live)
   }
 
-  /** A store as one listing of its tree saw it: the store's read of it,
-    * its one bucket width, its tier horizon and the bytes that listing
-    * holds per `__day` directory (files outside one under `""`). The
-    * frame's file list is frozen at read time, so the snapshot is valid
-    * exactly while the tree still lists the same files. */
+  /** A store under one listing of its tree: its read (file list frozen at
+    * read time), its one bucket width, its tier horizon and the listing's
+    * bytes per `__day` directory (files outside one under `""`). */
   private[storage] final case class StoreSnapshot(df: DataFrame,
-      bucketNs: Long, horizon: Option[Long], dayBytes: Map[String, Long]) {
+      bucketNs: Long, horizon: Option[Long], dayBytes: Map[String, Long])
+      extends FileTree.Snapshot {
 
     /** Bytes of the files a scope to `[lo, hi)` reads (an absent bound
       * is open): the `__day` directories [[FileTree.scope]] keeps, plus
       * any file outside one. */
-    def scopedBytes(lo: Option[Long], hi: Option[Long]): Long = {
-      val first = lo.map(FileTree.day)
-      val last = hi.map(h => FileTree.day(h - 1))
+    def scopedBytes(lo: Option[Long], hi: Option[Long]): Long =
       dayBytes.iterator.collect {
-        case (d, b) if d.isEmpty ||
-            (first.forall(d >= _) && last.forall(d <= _)) => b
+        case (d, b) if d.isEmpty || FileTree.dayInScope(d, lo, hi) => b
       }.sum
-    }
-  }
-
-  /** Snapshots of recently served stores, keyed by (session, store kind,
-    * qualified path), each stamped with the listing it was probed under.
-    * A fixed LRU; it holds plan objects only (no `cache()`, no pin) and
-    * only successful probes — a failing store is re-probed, and fails, on
-    * every call. */
-  private object Snapshots {
-    private type Key = (SparkSession, String, String)
-    private type Listing = Vector[(String, Long, Long)]
-    private val MaxEntries = 64
-    private val lru =
-      new java.util.LinkedHashMap[Key, (Listing, StoreSnapshot)](16, 0.75f,
-          true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[Key, (Listing, StoreSnapshot)]): Boolean =
-          size() > MaxEntries
-      }
-
-    /** The snapshot probed under exactly `listing`; a stale one is
-      * dropped. */
-    def get(key: Key, listing: Listing): Option[StoreSnapshot] =
-      synchronized {
-        Option(lru.get(key)).flatMap { case (seen, snap) =>
-          if (seen == listing) Some(snap) else { lru.remove(key); None }
-        }
-      }
-
-    def put(key: Key, listing: Listing, snap: StoreSnapshot): Unit =
-      synchronized { lru.put(key, (listing, snap)); () }
   }
 
   /** Open a store for serving: self-heal, list the tree, and answer from
-    * the snapshot probed under the same listing — no Spark job at all —
-    * or, when any file was added, removed or rewritten since (or the
-    * store was never opened in this session), read it with the store's
-    * own `read` ([[checkedRead]] here; CounterStore passes its own, with
-    * its wording) and probe width and horizon in one aggregation
-    * ([[storeMetaProbe]]). None when the tree lists no data file (absent,
-    * nothing tiered into it yet, or fully trimmed) — the emptiness check
-    * and the snapshot share the one listing. The listing runs BEFORE the
-    * read, so a write landing in between leaves the fingerprint older
-    * than the frame and the next call re-probes; it can never make a
-    * stale frame look current. Empty and mixed-width stores fail as
-    * [[storeMetaProbe]] does — on every call, since failures are never
-    * cached. */
+    * its at-rest snapshot ([[FileTree.atRest]], kind `what`) with no Spark
+    * job, or on a new listing read it with the store's own `read`
+    * ([[checkedRead]]; CounterStore passes its own) and probe width and
+    * horizon in one aggregation ([[storeMetaProbe]]). None when the tree
+    * lists no data file. Empty and mixed-width stores fail on every call. */
   private[storage] def storeAtRest(spark: SparkSession, path: String,
       what: String = "rollup store",
       read: (SparkSession, String) => DataFrame = checkedRead)
       : Option[StoreSnapshot] = {
     val (fs, live) = healed(spark, path, what)
-    val listing = FileTree.files(fs, live)
-      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
-      .sorted
+    val listing = FileTree.listing(fs, live)
     if (listing.isEmpty) None
-    else {
-      val key = (spark, what, fs.makeQualified(live).toString)
-      Some(Snapshots.get(key, listing).getOrElse {
-        val stored = read(spark, path)
-        val (width, horizon) = storeMetaProbe(stored, path, what)
-        val snap = StoreSnapshot(stored, nonEmpty(width, path, what),
-          horizon, FileTree.dayBytes(listing.map { case (p, len, _) =>
-            (p, len) }))
-        Snapshots.put(key, listing, snap)
-        snap
-      })
-    }
+    else Some(FileTree.atRest(spark, what, fs.makeQualified(live).toString,
+        listing) {
+      val stored = read(spark, path)
+      val (width, horizon) = storeMetaProbe(stored, path, what)
+      StoreSnapshot(stored, nonEmpty(width, path, what), horizon,
+        FileTree.dayBytes(listing))
+    })
   }
 
   /** [[storeAtRest]] for a rollup store a router needs: a tree listing no
@@ -556,8 +507,7 @@ object RollupStore {
     val keys = if (keyCols.nonEmpty) keyCols else keyColsOf(keyed)
     val spark = keyed.sparkSession
     val probe = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(keys.map(keyed.schema(_))))
+      spark.sparkContext.emptyRDD[Row], StructType(keys.map(keyed.schema(_))))
     try { probe.filter(f); () }
     catch {
       case e: org.apache.spark.sql.AnalysisException =>
@@ -649,7 +599,8 @@ object RollupStore {
     * at-least-once replay that landed between compactions — are dropped
     * before the merge. The `__day` predicate prunes day directories at
     * file listing; the `bucket_ts` predicate prunes row groups inside
-    * surviving files.
+    * surviving files. The store opens from its at-rest snapshot
+    * ([[servedStore]]): a warm rollup builds with no Spark job.
     */
   def rollup(spark: SparkSession, path: String, coarseNanos: Long,
       since: Option[Long] = None, until: Option[Long] = None,
@@ -659,8 +610,8 @@ object RollupStore {
       require(Math.floorMod(v, coarseNanos) == 0,
         s"rollup: range bound $v is not aligned to coarseNanos $coarseNanos" +
           " — a partially-covered coarse bucket would report partial stats")
-    mergeFold(scopedStore(spark, path, since, until), coarseNanos,
-      uniformWidth = true, keepKeys)
+    mergeFold(scopedFrame(servedStore(spark, path).snap.df, since, until),
+      coarseNanos, uniformWidth = true, keepKeys)
   }
 
   /** Serving bounds round OUTWARD to whole `g`-buckets (a dashboard shows
@@ -876,9 +827,9 @@ object RollupStore {
     * (self-heal, grain probe, horizon check, key inference, sample-store
     * validation) prices in once, and every later [[SampledRouter.route]]
     * is pure plan construction. `pinSample` persists the replay-deduped
-    * sample rows; [[SampledRouter.close]] releases the pin. The store
-    * opens through [[storeAtRest]], so re-preparing over an unchanged
-    * store runs no metadata job for it. */
+    * sample rows; [[SampledRouter.close]] releases the pin. Store and
+    * sample open from their at-rest snapshots, so re-preparing over
+    * unchanged trees runs no metadata job. */
   def prepareSampled(spark: SparkSession, storePath: String,
       samplePath: String, valueCol: String = "value",
       pinSample: Boolean = true): SampledRouter = {
@@ -967,7 +918,8 @@ object RollupStore {
     // readRawOrEmpty (not a bare read): a RETRY of an already-completed
     // full tierOff sees an emptied raw tree and must no-op, not die on
     // schema inference
-    val raw = readRawOrEmpty(spark, rawPath, tsCol, valueCol, distinctCol)
+    val raw = readRawOrEmpty(spark, rawPath, tsCol, valueCol, distinctCol,
+      atRest = false)
     val old = raw.filter(col(tsCol) < cutoff)
     // nothing below the cutoff — a completed trim's retry, or a policy
     // cycle where no sample has aged yet: skip BOTH sides, so no
@@ -1450,28 +1402,21 @@ object RollupStore {
     stitch(list, list.parts(None, None), coarseNanos, None)
   }
 
-  /** Self-heal and read a raw table; a fully-tiered-off tree (only
-    * _SUCCESS left) serves ZERO rows — reads must degrade to the stores,
-    * not die on schema inference. */
+  /** Self-heal and read a raw table — a reader from its at-rest snapshot
+    * ([[Tables.treeAtRest]]), a writer (`atRest = false`) directly; a
+    * fully-tiered-off tree (only _SUCCESS left) serves ZERO rows — reads
+    * must degrade to the stores, not die on schema inference. */
   private def readRawOrEmpty(spark: SparkSession, rawPath: String,
       tsCol: String, valueCol: String, distinctCol: Option[String],
-      keyFields: Seq[org.apache.spark.sql.types.StructField] = Nil)
-      : DataFrame = {
-    val rawLive = new org.apache.hadoop.fs.Path(rawPath)
-    val fs = rawLive.getFileSystem(spark.sessionState.newHadoopConf())
+      keyFields: Seq[StructField] = Nil,
+      atRest: Boolean = true): DataFrame = {
+    val (fs, rawLive, _) = FileTree.qualified(spark, rawPath)
     AtomicDir.recover(fs, rawLive, "tiered raw table")
-    FileTree.readOrNone(spark.read.parquet(rawPath)).getOrElse {
-      val fields = Seq(
-        org.apache.spark.sql.types.StructField(tsCol,
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField(valueCol,
-          org.apache.spark.sql.types.DoubleType)) ++
-        distinctCol.map(c => org.apache.spark.sql.types.StructField(c,
-          org.apache.spark.sql.types.LongType)) ++ keyFields
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(fields))
-    }
+    (if (atRest) Tables.treeAtRest(spark, rawPath).map(_.df)
+    else FileTree.readOrNone(spark.read.parquet(rawPath))).getOrElse(
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], StructType(
+        Seq(StructField(tsCol, LongType), StructField(valueCol, DoubleType))
+          ++ distinctCol.map(StructField(_, LongType)) ++ keyFields)))
   }
 
   /** [[route]] over a full tier cascade: raw plus fine → coarse stores.
@@ -1539,7 +1484,8 @@ object RollupStore {
       "a sample route takes exactly one store and no raw — the sample " +
         "tier IS the fine-zoom source")
     case (None, Some(raw), Seq(one)) =>
-      route(spark, one, spark.read.parquet(raw), r.since, r.until,
+      route(spark, one, Tables.treeAtRest(spark, raw).fold(
+          spark.read.parquet(raw))(_.df), r.since, r.until,
         r.maxPoints, r.valueCol, r.tsCol, r.distinctCol, 12,
         r.histBoundsCents, r.keyFilter)
     case (None, Some(raw), many) =>

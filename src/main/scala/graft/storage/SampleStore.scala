@@ -365,26 +365,17 @@ object SampleStore {
     * time scope can never silently prune against a different column. */
   final case class SampleHandle(rows: DataFrame, idCol: String,
       tsCol: String, preDeduped: Boolean = false,
-      pinFiles: Set[String] = Set.empty,
       pinSource: Option[DataFrame] = None) {
 
-    /** The pin's loud-fail guard (round-14): Spark does NOT make a
-      * block-losing snapshot fail on its own — a rewrite under the pin
-      * (compact) triggers `recacheByPath`, which REFRESHES the explicit
-      * file-list index, silently drops the deleted files (a listing
-      * WARN, nothing more), and recaches the pin as EMPTY. A weeks-
-      * lived dashboard handle would serve zeros from then on. So every
-      * estimate first compares the plan's CURRENT file listing against
-      * the open-time set — driver-side metadata from the in-memory file
-      * index, no Spark job, no FS call — and refuses to serve a partial
-      * or empty snapshot. Appends stay invisible by construction (the
-      * refresh re-lists only the named files, which still exist), so
-      * the guard passes exactly when the snapshot bytes are intact.
-      * The listing is read through the UNCACHED source frame
-      * (`pinSource`): `rows` is persisted, so its optimized plan is an
-      * InMemoryRelation with no inputFiles — while the source frame
-      * shares the very InMemoryFileIndex instance recacheByPath
-      * refreshes, so it sees the post-rewrite shrink. */
+    /** A pinned handle's open-time files. */
+    private val pinFiles = pinSource.fold(Set.empty[String])(_.inputFiles.toSet)
+
+    /** The pin's loud-fail guard: a rewrite under the pin (compact)
+      * makes Spark's `recacheByPath` refresh the pin's file-list index and
+      * recache the pin EMPTY, so every estimate compares the files of the
+      * uncached source frame (`pinSource`, sharing that index) with the
+      * open-time set, with no Spark job, and refuses a partial or empty
+      * one. */
     private def requireSnapshotIntact(): Unit =
       pinSource.foreach { src =>
         val now = src.inputFiles.toSet
@@ -523,38 +514,47 @@ object SampleStore {
     def close(): Unit = { rows.unpersist(); () }
   }
 
-  /** Open a sample store: ONE metadata pass validates the membership
-    * self-description — exactly one (sampled-id, stratum, ts) triple;
-    * for uniform stores exactly one rate, for stratified ones exactly
-    * one rate PER STRATUM (a mis-rated concurrent writer fails the
-    * read, never mis-scales it). `pin = true` persists the sampled rows
-    * for estimate-many serving. The replay dedup runs per estimate
-    * AFTER the time scope (see [[SampleHandle.estimate]]) — over
-    * sample-sized rows it is the cheap half of the aggregation. */
+  /** A sample store's read of exactly its listed files, validated. */
+  private final case class SampleSnapshot(df: DataFrame, idCol: String,
+      tsCol: String) extends FileTree.Snapshot
+
+  /** Open a sample store from its at-rest snapshot ([[FileTree.atRest]]):
+    * the first open under a listing validates the membership ([[validated]];
+    * a failure is not kept), later ones run no Spark job. `pin = true`
+    * persists the sampled rows for estimate-many serving. The replay dedup
+    * runs per estimate AFTER the time scope (see [[SampleHandle.estimate]])
+    * — over sample-sized rows it is the cheap half of the aggregation. */
   def open(spark: SparkSession, path: String,
       pin: Boolean = false): SampleHandle = {
-    val dirDf = readable(spark, path).getOrElse(
-      throw new IllegalArgumentException(
-        s"sample store at $path is absent or empty"))
-    // Validation and pin must cover IDENTICAL bytes: when pinning, list
-    // the snapshot files FIRST and run every membership/rate guard over
-    // that explicit file-list frame. Validating the live directory and
-    // globbing afterwards would let a concurrent append land between
-    // the two reads, pinning rows the open-time guards never saw — a
-    // mis-rated batch would silently mis-scale every estimate served
-    // from the pinned handle.
-    val df =
-      if (pin) withLegacyBackfills(
-        spark.read.option("basePath", path)
-          .parquet(snapshotFiles(spark, path): _*))
-      else dirDf
-    // ONE metadata job covers the membership triple AND the uniform-rate
-    // guard (rate_den rides the same distinct): the one-shot estimate
-    // path used to pay two driver-blocking collects over the same store
-    // scan — per-request metadata jobs are the cold open's cost, not
-    // bytes (guide §1). Stratified stores still pay the per-stratum rate
-    // probe below (the stratum column's NAME only exists after this
-    // read).
+    val (fs, live, root) = FileTree.qualified(spark, path)
+    AtomicDir.heal(fs, live, "sample store")
+    val listing =
+      FileTree.listing(fs, live).filter(_._1.endsWith(".parquet"))
+    require(listing.nonEmpty, s"sample store at $path is absent or empty")
+    val snap = FileTree.atRest(spark, "sample store", root, listing)(
+      validated(path, withLegacyBackfills(spark.read
+        .option("basePath", path).parquet(listing.map(_._1): _*))))
+    // the pin pays the replay dedup ONCE, in core-count partitions
+    // (replays are byte-identical, so a scope commutes with it). Reading
+    // the EXPLICIT listed files, validation and pin cover identical bytes,
+    // and a same-session append's cache refresh re-lists only those files.
+    val df = snap.df
+    SampleHandle(
+      if (pin)
+        df.dropDuplicates(snap.idCol, "batch_key")
+          .repartition(spark.sparkContext.defaultParallelism)
+          .persist()
+      else df,
+      snap.idCol, snap.tsCol, preDeduped = pin,
+      pinSource = if (pin) Some(df) else None)
+  }
+
+  /** Exactly one (sampled-id, stratum, ts) triple and, for a uniform
+    * store, one rate — ONE job, rate_den riding the same distinct — or, for
+    * a stratified one, one rate PER STRATUM (a second job: the stratum
+    * column's name comes from the first). A mis-rated concurrent writer
+    * fails the read, never mis-scales it. */
+  private def validated(path: String, df: DataFrame): SampleSnapshot = {
     val metaRows = df.select("sample_col", "stratum_col", "ts_col",
       "rate_den").distinct().collect()
     val meta = metaRows.map(r =>
@@ -573,9 +573,7 @@ object SampleStore {
           "uniform store holds exactly one")
     } else {
       // per-stratum single rate at READ time, mirroring
-      // appendStratified's write-side guard — a mis-rated concurrent
-      // writer (or manual parquet append) fails the open, never
-      // mis-scales an estimate
+      // appendStratified's write-side guard
       val perStratum = df.select(col(stratumCol), col("rate_den"))
         .distinct().collect()
       val dupes = perStratum.groupBy(_.get(0)).filter(_._2.length > 1)
@@ -585,61 +583,7 @@ object SampleStore {
           s"${dupes.keys.mkString(", ")} — each stratum holds exactly " +
           "one rate")
     }
-    // the pinned serving copy pays the replay dedup ONCE and compacts to
-    // core-count partitions: a day-partitioned store tree reads as one
-    // micro-partition per day file and the dedup is a whole shuffle
-    // stage, so an un-prepared pin would charge a dashboard burst
-    // hundreds of near-empty task launches PLUS a dedup stage per
-    // estimate — one open-time pass buys every later estimate a single
-    // core-sized aggregation (the dedup-before-scope swap is exact:
-    // replays are byte-identical rows, so scoping the deduped frame
-    // equals deduping the scoped one).
-    //
-    // The pin reads the EXPLICIT open-time file list, not the
-    // directory: a persist() of the directory read is NOT a snapshot —
-    // Spark's own writers refresh the file index of every CACHED plan
-    // over the written path (recacheByPath), so a same-session append
-    // silently turned the "open-time snapshot" fresh (round-13
-    // finding; the round-12 wire test observed staleness only because
-    // an unrelated failed prepare's unpersist had evicted the shared
-    // cache entry, freezing the stale listing by accident). With the
-    // file list in the plan the snapshot holds by construction: an
-    // executor loss recomputes the same rows, close() stays a plain
-    // unpersist, and appends become visible exactly through the
-    // documented refresh verb (re-open). A post-snapshot compact()
-    // REPLACES the files; Spark alone would then silently serve an
-    // EMPTY recache (see requireSnapshotIntact — round-14 finding), so
-    // every estimate guards the open-time file set and fails loudly
-    // instead — refresh re-prepares, as with appends.
-    val idCol = meta(0)._1
-    SampleHandle(
-      if (pin)
-        // `df` IS the file-list snapshot here (built above, before the
-        // guards) — validation and pinned bytes are the same plan
-        df.dropDuplicates(idCol, "batch_key")
-          .repartition(spark.sparkContext.defaultParallelism)
-          .persist()
-      else df,
-      idCol, meta(0)._3, preDeduped = pin,
-      // the open-time listing the loud-fail guard compares against —
-      // read through the same accessor (inputFiles, on the uncached
-      // source frame) the guard uses, so the comparison is
-      // self-normalized
-      pinFiles = if (pin) df.inputFiles.toSet else Set.empty,
-      pinSource = if (pin) Some(df) else None)
-  }
-
-  /** The store's current data files — the open-time snapshot [[open]]'s
-    * pinned handles are built over (see the pin comment there). */
-  private def snapshotFiles(spark: SparkSession, path: String)
-      : Seq[String] = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val files = FileTree.files(
-        live.getFileSystem(spark.sessionState.newHadoopConf()), live)
-      .map(_.getPath.toString).filter(_.endsWith(".parquet")).sorted
-    require(files.nonEmpty,
-      s"sample store at $path has no data files to snapshot")
-    files
+    SampleSnapshot(df, meta(0)._1, meta(0)._3)
   }
 
   /** One-shot convenience: open cold, estimate once. Serving layers

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
-import graft.ql.Engine
+import graft.ql.{Engine, Interpreter}
 import graft.storage.{DataPoint, WritableStore}
 
 /** End-to-end minimum slice (SURVEY §7.3): ingest → flush → dialect query →
@@ -198,9 +198,7 @@ class EngineSpec extends AnyFunSuite {
     spark.conf.set(key, "2m")
     try {
       graft.storage.Tables.read(spark, dbDir, "trades")
-      // only the explicit env override may replace the user's value
-      assert(spark.conf.get(key) ==
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PARTITION_SIZE", "2m"))
+      assert(spark.conf.get(key) == "2m")
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
@@ -249,9 +247,84 @@ class EngineSpec extends AnyFunSuite {
     store.pushMulti(Seq(DataPoint(1650931200L * 1000000000L, Seq(1.5))))
     store.persist()
     val e = new Engine(spark, root)
-    val df = e.frame(
-      "with db = mydb, use_cache = false select * from m where ts >= '2020-01-01'")
+    val q = "with db = mydb, use_cache = false select * from m " +
+      "where ts >= '2020-01-01'"
+    val df = e.frame(q)
     assert(df.collect().map(_.getDouble(1)).toSeq == Seq(1.5))
+    // the dialect's db is an identifier; an interpreted query built in
+    // code is confined to the root too
+    val search = e.interpret(q).asInstanceOf[Interpreter.SearchMetrics]
+    for (bad <- Seq("../mydb", "mydb/../..", "/tmp", "file:///tmp",
+        "s3a://bucket/db", "")) {
+      for (iq <- Seq(search.copy(db = Some(bad)),
+          Interpreter.ListMetrics(Some(bad), search.output))) {
+        val ex = intercept[Interpreter.QueryException](e.frame(iq))
+        assert(ex.kind == "InvalidDatabase", s"$bad: $ex")
+      }
+    }
+  }
+
+  test("at-rest snapshot: warm reads run no Spark job, a fresh read " +
+      "leaves the pin in place, and a cached read sees every new file") {
+    import graft.storage.{CacheRegistry, Tables}
+    import org.apache.spark.storage.StorageLevel
+    import spark.implicits._
+    val dir = SparkTestBase.tempDir("graft-db-snap")
+    val store = new WritableStore(spark, dir, "m",
+      Seq(StructField("v", DoubleType)), partitionByDay = true)
+    val base = 1650931200L * 1000000000L // 2022-04-26
+    val day = 86400L * 1000000000L
+    store.pushMulti((0 until 3).map(d => DataPoint(base + d * day,
+      Seq(d.toDouble))))
+    store.persist()
+    val e = new Engine(spark, dir)
+    def cached() = e.frame("select * from m where ts >= '2022-04-01'")
+    def values(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getDouble(1)).toSeq.sorted
+    val fresh = "with use_cache = false select * from m " +
+      "where ts in ('2022-04-27', +1 day)"
+    Tables.read(spark, dir, "m")
+    assert(SparkTestBase.countJobs(Tables.read(spark, dir, "m"))._2 == 0)
+    e.frame(fresh)
+    assert(SparkTestBase.countJobs(e.frame(fresh))._2 == 0)
+    // a fresh read never resolves to the pin, and leaves it pinned
+    assert(values(cached()) == Seq(0.0, 1.0, 2.0))
+    val pin = CacheRegistry.get(spark, dir, "m")
+    val freshDf = e.frame(fresh)
+    val plan = freshDf.queryExecution.executedPlan.toString
+    assert(!plan.contains("InMemoryTableScan") && plan.contains("FileScan"),
+      plan)
+    assert(values(freshDf) == Seq(1.0))
+    assert(pin.storageLevel != StorageLevel.NONE)
+    assert(CacheRegistry.get(spark, dir, "m") eq pin)
+    // new rows through the store, then a file written beside it
+    store.pushMulti(Seq(DataPoint(base + 3 * day, Seq(3.0))))
+    store.persist()
+    assert(values(cached()) == Seq(0.0, 1.0, 2.0, 3.0))
+    Seq((base + 4 * day, 4.0)).toDF("ts", "v").write
+      .parquet(new java.io.File(dir, "m/__day=2022-04-30").getPath)
+    val seen = cached()
+    assert(seen.queryExecution.executedPlan.toString
+      .contains("InMemoryTableScan"))
+    assert(values(seen) == Seq(0.0, 1.0, 2.0, 3.0, 4.0))
+    // force_sync_cloud re-reads: a new pin, built with the schema job
+    val before = CacheRegistry.get(spark, dir, "m")
+    val (_, jobs) = SparkTestBase.countJobs(e.frame(
+      "with force_sync_cloud = true select * from m where ts >= '2022-04-01'"))
+    assert(jobs >= 1)
+    assert(!(CacheRegistry.get(spark, dir, "m") eq before))
+    // two sessions never share a pinned frame, and one session's release
+    // leaves the other's read cached
+    val other = spark.newSession()
+    val mine = CacheRegistry.get(spark, dir, "m")
+    val theirs = CacheRegistry.get(other, dir, "m")
+    assert(!(mine eq theirs))
+    assert((mine.sparkSession eq spark) && (theirs.sparkSession eq other))
+    mine.unpersist(blocking = true)
+    assert(CacheRegistry.get(other, dir, "m").storageLevel !=
+      StorageLevel.NONE)
+    assert(values(CacheRegistry.get(other, dir, "m")) ==
+      Seq(0.0, 1.0, 2.0, 3.0, 4.0))
   }
 
   test("unknown metrics errors") {

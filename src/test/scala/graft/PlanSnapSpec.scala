@@ -26,7 +26,8 @@ class PlanSnapSpec extends AnyFunSuite {
   }
 
   test("--time profiles a row and fails loudly on an unknown name") {
-    val (rc, out, err) = run("--time", "ql_range", "no_such_query")
+    val (rc, out, err) = run("--time", "ql_range", "dedup_exact",
+      "no_such_query")
     assert(rc != 0)
     assert(err.contains("1 failed: no_such_query"), err)
     assert(!out.contains("==== no_such_query"), out)
@@ -45,6 +46,10 @@ class PlanSnapSpec extends AnyFunSuite {
     assert(count("warm_compiles").isDefined, line.get)
     assert(count("compiles").isDefined, line.get)
     assert(out.linesIterator.exists(_.startsWith("  stage ")), out)
+    // the table's schema comes from its at-rest snapshot: the timed
+    // build of a row that only reads tables runs no job
+    val dedup = out.linesIterator.find(_.startsWith("==== dedup_exact "))
+    assert(dedup.exists(_.contains(" build_jobs=0 ")), out)
   }
 
   test("--scan on an unknown name returns nonzero") {

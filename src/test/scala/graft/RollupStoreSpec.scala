@@ -1204,6 +1204,12 @@ class RollupStoreSpec extends AnyFunSuite {
     val (warm, warmJobs) = SparkTestBase.countJobs(build())
     assert(warmJobs == 0)
     assert(routed(warm) == routed(cold))
+    // a rollup opens the same snapshot
+    val (daily, rollupJobs) =
+      SparkTestBase.countJobs(RollupStore.rollup(spark, stP, Day))
+    assert(rollupJobs == 0)
+    assert(daily.select("bucket_ts", "n", "min_c", "max_c", "sum_c")
+      .orderBy("bucket_ts").collect().toSeq == directDaily)
   }
 
   test("route refuses a budget no grain fits instead of overrunning it") {
@@ -1256,5 +1262,14 @@ class RollupStoreSpec extends AnyFunSuite {
     assert(got == directDaily.filter(_.getLong(0) < 2 * Day))
     assert(cold.select("source").distinct().collect().map(_.getString(0))
       .toSeq == Seq("stitched"))
+    // and a warm route whose raw window [2 days, 3 days) is non-empty:
+    // the raw side is served from its at-rest snapshot, no schema job
+    def withRaw() = RollupStore.routeCascade(spark, rawP, Seq(stH, stD),
+      0L, 3 * Day, maxPoints = 3)
+    withRaw()
+    val (warmRaw, rawJobs) = SparkTestBase.countJobs(withRaw())
+    assert(rawJobs == 0, s"$rawJobs jobs")
+    assert(warmRaw.select("bucket_ts", "n", "min_c", "max_c", "sum_c")
+      .orderBy("bucket_ts").collect().toSeq == directDaily)
   }
 }

@@ -45,6 +45,8 @@ class SampleSnapshotSpec extends AnyFunSuite {
       // an UNPINNED handle reads latest; a re-open (the refresh verb)
       // sees the appended batch
       assert(nOf(SampleStore.open(spark, p)) > n1)
+      // a warm unpinned open validates nothing again: no Spark job
+      assert(SparkTestBase.countJobs(SampleStore.open(spark, p))._2 == 0)
       val reopened = SampleStore.open(spark, p, pin = true)
       try assert(nOf(reopened) > n1)
       finally reopened.close()
@@ -64,6 +66,8 @@ class SampleSnapshotSpec extends AnyFunSuite {
       assert(nOf(pinned) == n1,
         "stratified pinned handle must serve the open-time snapshot")
       assert(nOf(SampleStore.open(spark, p)) > n1)
+      // a warm unpinned open validates nothing again: no Spark job
+      assert(SparkTestBase.countJobs(SampleStore.open(spark, p))._2 == 0)
     } finally pinned.close()
   }
 

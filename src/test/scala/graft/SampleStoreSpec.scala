@@ -187,6 +187,15 @@ class SampleStoreSpec extends AnyFunSuite {
         idCol = "event_id", tsCol = "ts2", bits = 4)
     }
     assert(eTs.getMessage.contains("time column"))
+    // a snapshot validated, then an append at another rate: the listing
+    // changed, so every later open validates again, and fails
+    SampleStore.open(spark, p)
+    SampleStore.append(events, p, "b#5", idCol = "event_id", bits = 8,
+      validateRate = false)
+    for (_ <- 1 to 2) {
+      val eOpen = intercept[IllegalStateException](SampleStore.open(spark, p))
+      assert(eOpen.getMessage.contains("MIXED rates"), eOpen.getMessage)
+    }
     intercept[IllegalArgumentException] {
       SampleStore.estimate(spark, p + "-absent", Seq("etype"), "value")
     }

@@ -410,16 +410,25 @@ class ServerSpec extends AnyFunSuite {
         out.write(("x" * QueryServer.MaxFrameBytes + "\n").getBytes("UTF-8"))
         val big = "x" * (QueryServer.MaxFrameBytes + 1)
         out.write((big + "\n").getBytes("UTF-8"))
-        out.write(("with format_datetime = false select * from m " +
-          "where ts >= '2022-01-01'\r\n").getBytes("UTF-8"))
+        val good = "with format_datetime = false select * from m " +
+          "where ts >= '2022-01-01'"
+        out.write((good + "\r\n").getBytes("UTF-8"))
+        // a db outside the root is an error answer too
+        out.write(("{\"query\": \"with db = ../" + new java.io.File(dbDir)
+          .getName + ", " + good.drop(5) + "\"}\n" + good + "\n")
+          .getBytes("UTF-8"))
         out.flush()
         val atCap = in.readLine()
         assert(atCap.startsWith("""{"ok":false,"error":"parse error"""), atCap)
         assert(in.readLine() == """{"ok":false,"error":"bad request: """ +
           s"""frame exceeds ${QueryServer.MaxFrameBytes} bytes"}""")
-        val ok = in.readLine()
-        assert(ok.startsWith("""{"ok":true,"""), ok)
-        assert(ok.contains(""""v":[1.0,2.0,3.0,4.0,5.0]"""), ok)
+        for (i <- 0 to 2) {
+          val line = in.readLine()
+          assert(line.startsWith(
+            if (i == 1) """{"ok":false,""" else """{"ok":true,"""), line)
+          if (i != 1)
+            assert(line.contains(""""v":[1.0,2.0,3.0,4.0,5.0]"""), line)
+        }
       } finally sock.close()
     } finally srv.stop()
   }
