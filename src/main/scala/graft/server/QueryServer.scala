@@ -43,128 +43,20 @@ import QueryServer.{Query, Request, Route}
   *
   * Concurrency: thread-per-connection; Spark schedules concurrent jobs from
   * multiple threads fairly within the one session (same model as a Spark
-  * Thrift server).
+  * Thrift server). The server holds no pins: a pinned route frame's sample
+  * rows live in the session's one at-rest LRU
+  * ([[graft.storage.FileTree.atRest]]), which builds each once, shares it
+  * between concurrent frames and unpersists it when it is replaced or
+  * evicted.
   */
 final class QueryServer(engine: Engine, port: Int = 0) {
   @volatile private var server: Option[ServerSocket] = None
-  /** Set under the [[preparedRouters]] lock in [[stop]]: an in-flight
-    * prepare that loses the race with shutdown sees it and closes its
-    * fresh router instead of caching into the already-cleared map. */
-  private var closed = false
   private val pool = Executors.newCachedThreadPool(r => {
     val t = new Thread(r, "graft-server-conn"); t.setDaemon(true); t
   })
-  /** Prepared sampled routers for `"pin": true` frames, one per
-    * (store, sample, valueCol) — the server IS the long-lived serving
-    * layer, so it owns the open-once lifecycle; released on [[stop]].
-    *
-    * LRU-capped (access-order, `SPARK_GRAFT_SERVER_MAX_PINS`, default
-    * 32): each pinned pair persists the deduped sample rows in executor
-    * memory, so an unbounded client-keyed map would let a path-cycling
-    * client pin memory without bound. The eldest pair is closed when a
-    * new distinct triple arrives past the cap — closing unpersists the
-    * cache; an in-flight route on the evicted router still completes
-    * (Spark recomputes de-cached rows), it just loses the pin. */
-  private val maxPreparedRouters: Int =
-    sys.env.get("SPARK_GRAFT_SERVER_MAX_PINS").map { v =>
-      // validated loudly AT CONSTRUCTION: a cap <= 0 would make
-      // removeEldestEntry evict (and close) every router the moment it
-      // is inserted — pinned requests silently slower than unpinned,
-      // no error anywhere — and a bare toInt on a typo'd value throws
-      // with no hint which setting is at fault
-      val n = try v.toInt catch { case _: NumberFormatException =>
-        throw new IllegalArgumentException(
-          s"SPARK_GRAFT_SERVER_MAX_PINS must be a positive int, got '$v'")
-      }
-      require(n >= 1,
-        s"SPARK_GRAFT_SERVER_MAX_PINS must be >= 1, got $n — a " +
-          "non-positive cap would evict every pin on insert")
-      n
-    }.getOrElse(32)
   // read at construction: a malformed GRAFT_MAX_RENDER_ROWS stops the
   // server from starting instead of failing every request
   private val maxRows = Output.maxRenderRows
-  private val preparedRouters = new java.util.LinkedHashMap[
-      (String, String, String), graft.storage.RollupStore.SampledRouter](
-      16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[
-        (String, String, String),
-        graft.storage.RollupStore.SampledRouter]): Boolean =
-      if (size > maxPreparedRouters) { e.getValue.close(); true }
-      else false
-  }
-
-  /** Per-key in-flight prepares, so [[pinnedRouter]]'s Spark metadata
-    * jobs never run under the global LRU lock (a cold pin of pair B
-    * must not stall the dashboard burst against already-prepared pair
-    * A on a multi-second map lookup); same-key racers join the one
-    * in-flight prepare instead of duplicating it. */
-  private val inFlight = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String),
-    java.util.concurrent.CompletableFuture[
-      graft.storage.RollupStore.SampledRouter]]()
-
-  /** The pinned-router lifecycle: cache hits hold the LRU lock for a
-    * map lookup only; a miss prepares OUTSIDE the lock with a per-key
-    * in-flight guard (one prepare per triple, concurrent keys
-    * independent). `refresh = true` closes and re-prepares the triple
-    * FIRST — the serving-layer verb that picks up appends (and a
-    * post-prepare `tierOff`, which otherwise invalidates a pin
-    * silently) without a server restart. */
-  private def pinnedRouter(key: (String, String, String),
-      refresh: Boolean): graft.storage.RollupStore.SampledRouter = {
-    if (refresh) preparedRouters.synchronized {
-      Option(preparedRouters.remove(key)).foreach(_.close())
-    }
-    val hit = preparedRouters.synchronized {
-      Option(preparedRouters.get(key))
-    }
-    hit.getOrElse {
-      val fut = new java.util.concurrent.CompletableFuture[
-        graft.storage.RollupStore.SampledRouter]()
-      val prev = inFlight.putIfAbsent(key, fut)
-      if (prev != null) prev.join() // another thread is preparing
-      else {
-        // no non-local returns below: the catch must only ever see a
-        // genuine prepare failure, never Scala control-flow throwables
-        // (a NonLocalReturnControl swallowed here would hand racers
-        // joining the future an exception instead of the router)
-        try {
-          // double-check after winning the in-flight slot: a racer may
-          // have completed between our miss and the putIfAbsent
-          val again = preparedRouters.synchronized {
-            Option(preparedRouters.get(key))
-          }
-          val r = again.getOrElse {
-            val fresh = graft.storage.RollupStore.prepareSampled(
-              engine.spark, key._1, key._2, key._3)
-            // cache under the same lock that stop() closes the map
-            // under: once `closed` is set, a late prepare must not
-            // park an orphaned router (and its pinned sample rows)
-            // in a map nobody will ever close again
-            val cached = preparedRouters.synchronized {
-              if (closed) false
-              else { preparedRouters.put(key, fresh); true }
-            }
-            if (!cached) {
-              fresh.close()
-              throw new IllegalStateException(
-                "server is stopped; pinned router discarded")
-            }
-            fresh
-          }
-          fut.complete(r)
-          r
-        } catch { case t: Throwable =>
-          // Throwable on purpose: with no non-local returns in scope,
-          // anything landing here is a real failure, and a fatal error
-          // (OOM, LinkageError) must still release joined racers —
-          // an uncompleted future would park them forever
-          fut.completeExceptionally(t); throw t
-        } finally inFlight.remove(key)
-      }
-    }
-  }
 
   def start(): Int = {
     val ss = new ServerSocket(port)
@@ -185,11 +77,6 @@ final class QueryServer(engine: Engine, port: Int = 0) {
   def stop(): Unit = {
     server.foreach(_.close())
     pool.shutdown()
-    preparedRouters.synchronized {
-      closed = true
-      preparedRouters.values().forEach(_.close())
-      preparedRouters.clear()
-    }
   }
 
   private def handle(sock: Socket): Unit = {
@@ -249,7 +136,7 @@ final class QueryServer(engine: Engine, port: Int = 0) {
     *   "raw":"/rawParquet" | "sample":"/sampleStore" (optional),
     *   "where":"host = 'web'" (optional key predicate, pushed down),
     *   "distinctCol":"uid", "histBoundsCents":[...], "tsCol", "valueCol"
-    *   (optional), "pin": true, "refresh": true (optional)}`.
+    *   (optional), "pin": true (optional)}`.
     * The fields become one [[graft.storage.RollupStore.RouteRequest]];
     * [[graft.storage.RollupStore.routeRequest]] — the dispatch the
     * `graft_route` SQL function shares — picks the tier list: raw + 1
@@ -257,13 +144,12 @@ final class QueryServer(engine: Engine, port: Int = 0) {
     * mirror lifecycle), or a sample + 1 store (fine zooms answer from the
     * deterministic sample with `rate_den` and the `est_var_cents2` error
     * bar riding the columns). A sample frame may add `"pin": true` to
-    * serve from this server's PREPARED router for the (store, sample,
-    * valueCol) triple ([[pinnedRouter]]): every later pinned frame is pure
-    * plan construction, and the trade is staleness — the prepared pair
-    * does not see later appends, and a post-prepare `tierOff` invalidates
-    * the pin silently; `"refresh": true` closes and re-prepares the pair
-    * before serving. The response carries `grain_ns` and `source` like
-    * the in-process routers. */
+    * serve the replay-deduped sample rows from their persisted at-rest
+    * snapshot ([[graft.storage.SampleStore.open]]): both trees are listed
+    * on every frame, so a pinned frame sees appends and compactions, and
+    * a `tierOff` of its store fails it as it fails an unpinned one. The
+    * response carries `grain_ns` and `source` like the in-process
+    * routers. */
   private def routeFrame(node: JsonNode): org.apache.spark.sql.DataFrame = {
     def opt(f: String): Option[JsonNode] =
       Option(node.get(f)).filterNot(_.isNull)
@@ -272,7 +158,6 @@ final class QueryServer(engine: Engine, port: Int = 0) {
       throw new IllegalArgumentException(s"route request needs '$f'"))
     def arr[T](f: String)(get: JsonNode => T): Option[Seq[T]] =
       opt(f).map(a => (0 until a.size()).map(i => get(a.get(i))))
-    def flag(f: String): Boolean = opt(f).exists(_.asBoolean(false))
     val req = graft.storage.RollupStore.RouteRequest(
       arr("stores")(_.asText()).getOrElse(optStr("store").toSeq),
       optStr("raw"), reqLong("since"), reqLong("until"),
@@ -280,10 +165,8 @@ final class QueryServer(engine: Engine, port: Int = 0) {
       optStr("valueCol").getOrElse("value"), optStr("tsCol").getOrElse("ts"),
       optStr("distinctCol"), arr("histBoundsCents")(_.asLong()).getOrElse(Nil),
       optStr("where").map(org.apache.spark.sql.functions.expr))
-    val pinned = (st: String, sm: String, v: String) =>
-      pinnedRouter((st, sm, v), flag("refresh"))
     graft.storage.RollupStore.routeRequest(engine.spark, req,
-      if (flag("pin")) Some(pinned) else None)
+      pinSample = opt("pin").exists(_.asBoolean(false)))
   }
 }
 

@@ -29,7 +29,9 @@ object CacheRegistry {
   /** `force_sync_cloud` (≈ REFRESH TABLE): forget this session's snapshot
     * and pin of a table, so its next read infers and pins it anew. */
   def invalidate(spark: SparkSession, dbDir: String, metrics: String): Unit = {
-    val root = FileTree.qualified(spark, Tables.metricsPath(dbDir, metrics))._3
+    val fs = FileTree.qualified(spark, dbDir)._1
+    val root =
+      FileTree.qualified(spark, Tables.metricsPath(fs, dbDir, metrics))._3
     FileTree.forget(spark, Kind, root)
     FileTree.forget(spark, Tables.TreeKind, root)
   }

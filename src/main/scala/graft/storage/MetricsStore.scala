@@ -68,12 +68,16 @@ object Tables {
 
   private def fsFor(p: HPath): FileSystem = p.getFileSystem(hadoopConf())
 
-  def metricsPath(dbDir: String, metrics: String): String = {
+  /** The path of `metrics` in `dbDir` on `fs` (the database dir's
+    * filesystem): the directory `<metrics>`, else `<metrics>.parquet`. */
+  def metricsPath(fs: FileSystem, dbDir: String, metrics: String): String = {
+    def status(p: HPath) =
+      try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
     val dir  = new HPath(dbDir, metrics)
     val file = new HPath(dbDir, metrics + ".parquet")
-    val fs = fsFor(dir)
-    if (fs.exists(dir) && fs.getFileStatus(dir).isDirectory) dir.toString
-    else if (fs.exists(file)) file.toString
+    if (status(dir).exists(_.isDirectory)) dir.toString
+    else if (status(file).nonEmpty) file.toString
     else throw new IllegalArgumentException(s"unknown metrics '$metrics' in $dbDir")
   }
 
@@ -107,8 +111,13 @@ object Tables {
   /** The parquet tree at `path` ([[FileTree.atRest]]), or None (not kept)
     * when it lists no data file or has no inferable schema. */
   private[storage] def treeAtRest(spark: SparkSession, path: String)
+      : Option[TreeSnapshot] =
+    treeAtRest(spark, FileTree.qualified(spark, path)._1, path)
+
+  private def treeAtRest(spark: SparkSession, fs: FileSystem, path: String)
       : Option[TreeSnapshot] = {
-    val (fs, p, root) = FileTree.qualified(spark, path)
+    val p = new HPath(path)
+    val root = fs.makeQualified(p).toString
     val listing = FileTree.listing(fs, p)
     if (listing.isEmpty) None
     else FileTree.readOrNone(FileTree.atRest(spark, TreeKind, root, listing)(
@@ -120,8 +129,9 @@ object Tables {
   private[storage] def snapshot(spark: SparkSession, dbDir: String,
       metrics: String): TreeSnapshot = {
     configure(spark)
-    val path = metricsPath(dbDir, metrics)
-    treeAtRest(spark, path).getOrElse {
+    val fs = FileTree.qualified(spark, dbDir)._1
+    val path = metricsPath(fs, dbDir, metrics)
+    treeAtRest(spark, fs, path).getOrElse {
       spark.read.parquet(path)
       throw new IllegalArgumentException(
         s"metrics '$metrics' in $dbDir holds no data file")
@@ -227,8 +237,9 @@ object Tables {
     * way, and a concurrent persist's `_temporary` output is neither
     * counted nor walked into. */
   private def dataFiles(dbDir: String, metrics: String): Seq[DataFile] = {
-    val root = new HPath(metricsPath(dbDir, metrics))
-    FileTree.files(fsFor(root), root).collect {
+    val fs = fsFor(new HPath(dbDir))
+    val root = new HPath(metricsPath(fs, dbDir, metrics))
+    FileTree.files(fs, root).collect {
       case st if st.getPath.getName.endsWith(".parquet") =>
         DataFile(st.getPath, st.getModificationTime)
     }

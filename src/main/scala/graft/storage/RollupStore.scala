@@ -826,10 +826,11 @@ object RollupStore {
   /** The OPEN-ONCE face of [[routeSampled]]: the per-store metadata work
     * (self-heal, grain probe, horizon check, key inference, sample-store
     * validation) prices in once, and every later [[SampledRouter.route]]
-    * is pure plan construction. `pinSample` persists the replay-deduped
-    * sample rows; [[SampledRouter.close]] releases the pin. Store and
-    * sample open from their at-rest snapshots, so re-preparing over
-    * unchanged trees runs no metadata job. */
+    * is pure plan construction. Store and sample open from their at-rest
+    * snapshots, so re-preparing over unchanged trees runs no metadata job.
+    * `pinSample` serves the replay-deduped sample rows from their pinned
+    * at-rest entry ([[SampleStore.open]]), checked against the listing on
+    * every prepare; [[SampledRouter.close]] forgets it. */
   def prepareSampled(spark: SparkSession, storePath: String,
       samplePath: String, valueCol: String = "value",
       pinSample: Boolean = true): SampledRouter = {
@@ -840,19 +841,19 @@ object RollupStore {
         "tier horizon, so its post-horizon samples live in raw, which " +
         "this router does not read; use route()/routeCascade() for the " +
         "tiered lifecycle")
-    val handle = SampleStore.open(spark, samplePath, pin = pinSample)
-    try {
-      val missing = keys.filterNot(handle.rows.columns.contains)
-      require(missing.isEmpty,
-        s"routeSampled: the store is keyed by [${keys.mkString(", ")}] " +
-          s"but the sample rows lack ${missing.mkString(", ")} — sample " +
-          "the same raw table the store rolls up")
-      require(handle.rows.columns.contains(valueCol),
-        s"routeSampled: the sample rows have no '$valueCol' column " +
-          s"(columns: ${handle.rows.columns.mkString(", ")}) — a typo'd " +
-          "valueCol must fail at prepare, not pin rows and then die on " +
-          "the first fine zoom")
-    } catch { case e: Throwable => handle.close(); throw e }
+    val handle = SampleStore.open(spark, samplePath, pin = pinSample,
+      check = rows => {
+        val missing = keys.filterNot(rows.columns.contains)
+        require(missing.isEmpty,
+          s"routeSampled: the store is keyed by [${keys.mkString(", ")}] " +
+            s"but the sample rows lack ${missing.mkString(", ")} — sample " +
+            "the same raw table the store rolls up")
+        require(rows.columns.contains(valueCol),
+          s"routeSampled: the sample rows have no '$valueCol' column " +
+            s"(columns: ${rows.columns.mkString(", ")}) — a typo'd " +
+            "valueCol must fail at prepare, not pin rows and then die on " +
+            "the first fine zoom")
+      })
     SampledRouter(store, keys, handle, valueCol)
   }
 
@@ -884,7 +885,7 @@ object RollupStore {
         (col("sum_c") * 100).cast("long").as("est_sum_cents"),
         lit(0L).as("est_var_cents2"), lit(1L).as("rate_den")): _*)
 
-    /** Release the pinned sample (no-op for an unpinned prepare). */
+    /** Forget the pinned sample (no-op for an unpinned prepare). */
     def close(): Unit = handle.close()
   }
 
@@ -1468,17 +1469,15 @@ object RollupStore {
     * query server's route frames and the `graft_route` SQL function: raw +
     * one store → [[route]]; raw + a cascade → [[routeCascade]]; two-plus
     * stores without raw → [[routeStoreCascade]]; a sample + one store
-    * without raw → the sampled router, opened by `openSampled` (store,
-    * sample, valueCol) — a serving layer passes its pinned routers; by
-    * default each request prepares one unpinned. */
+    * without raw → [[prepareSampled]], its sample rows pinned when
+    * `pinSample`. */
   def routeRequest(spark: SparkSession, r: RouteRequest,
-      openSampled: Option[(String, String, String) => SampledRouter] = None)
+      pinSample: Boolean = false)
       : DataFrame = (r.sample, r.raw, r.stores) match {
     case (_, _, Seq()) =>
       throw new IllegalArgumentException("a route needs at least one store")
     case (Some(sm), None, Seq(one)) =>
-      openSampled.fold(prepareSampled(spark, one, sm, r.valueCol,
-          pinSample = false))(_(one, sm, r.valueCol))
+      prepareSampled(spark, one, sm, r.valueCol, pinSample)
         .route(r.since, r.until, r.maxPoints, r.keyFilter)
     case (Some(_), _, _) => throw new IllegalArgumentException(
       "a sample route takes exactly one store and no raw — the sample " +

@@ -2,6 +2,7 @@ package graft.storage
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** At-rest DETERMINISTIC sample tier — approximate query processing the
   * BlinkDB way, minus the nondeterminism: membership is a pure function
@@ -362,10 +363,10 @@ object SampleStore {
     * at 1/256 is cluster-cache-sized, and every estimate then reads
     * memory, not the lake). `tsCol` is the store's own self-described
     * time column — the one the `__day` partitions derive from, so a
-    * time scope can never silently prune against a different column. */
+    * time scope can never silently prune against a different column;
+    * `root` is the store's qualified path, which keys its pin. */
   final case class SampleHandle(rows: DataFrame, idCol: String,
-      tsCol: String, preDeduped: Boolean = false,
-      pinSource: Option[DataFrame] = None) {
+      tsCol: String, root: String, pinSource: Option[DataFrame] = None) {
 
     /** A pinned handle's open-time files. */
     private val pinFiles = pinSource.fold(Set.empty[String])(_.inputFiles.toSet)
@@ -383,8 +384,8 @@ object SampleStore {
           s"pinned sample snapshot lost ${pinFiles.size - now.size} of " +
             s"its ${pinFiles.size} open-time files (a compact/rewrite " +
             "replaced the store under the pin) — refusing to serve a " +
-            "partial or empty recompute; refresh (re-open pinned) to " +
-            "serve the rewritten tree")
+            "partial or empty recompute; re-open to refresh the pin " +
+            "over the rewritten tree")
       }
 
     /** Grouped estimates from the sample alone, in Horvitz-Thompson
@@ -408,7 +409,7 @@ object SampleStore {
       * to first()-aggregates whose outputs block pushdown; PlanAuditSpec
       * pins the PartitionFilters). */
     /** Scoped, replay-deduped rows — the shared front half. A
-      * `preDeduped` (pinned) handle already collapsed replays at open,
+      * pinned handle already collapsed replays at open,
       * so each estimate is ONE aggregation with no dedup shuffle: at
       * dashboard burst rates the per-query stage count is the cost.
       * `extra` (a key predicate) applies BEFORE the dedup for the same
@@ -421,7 +422,7 @@ object SampleStore {
         extra: Option[Column] = None): DataFrame = {
       requireSnapshotIntact()
       val sc = FileTree.scope(rows, col(tsCol), since, until, extra.toSeq)
-      if (preDeduped) sc else sc.dropDuplicates(idCol, "batch_key")
+      if (pinSource.nonEmpty) sc else sc.dropDuplicates(idCol, "batch_key")
     }
 
     def estimate(groupCols: Seq[String], valueCol: String,
@@ -510,22 +511,39 @@ object SampleStore {
           max("rate_den").as("rate_den"))
     }
 
-    /** Release a pinned sample (no-op if never pinned). */
-    def close(): Unit = { rows.unpersist(); () }
+    /** Release a pinned sample: forget its [[FileTree.atRest]] entry,
+      * which every pinned handle of the store in this session shares, and
+      * so unpersist the rows (no-op if never pinned). */
+    def close(): Unit =
+      if (pinSource.nonEmpty) FileTree.forget(rows.sparkSession, PinKind, root)
   }
 
   /** A sample store's read of exactly its listed files, validated. */
   private final case class SampleSnapshot(df: DataFrame, idCol: String,
       tsCol: String) extends FileTree.Snapshot
 
+  /** A pinned sample's replay-deduped rows, persisted, and the uncached
+    * read they were built from (the guard's [[SampleHandle.pinSource]]:
+    * it must share the rows' file index); the rows are unpersisted when
+    * they leave [[FileTree.atRest]]. */
+  private final case class Pinned(rows: DataFrame, source: DataFrame)
+      extends FileTree.Snapshot {
+    override def release(): Unit = { rows.unpersist(); () }
+  }
+
+  private val PinKind = "pinned sample"
+
   /** Open a sample store from its at-rest snapshot ([[FileTree.atRest]]):
     * the first open under a listing validates the membership ([[validated]];
-    * a failure is not kept), later ones run no Spark job. `pin = true`
-    * persists the sampled rows for estimate-many serving. The replay dedup
-    * runs per estimate AFTER the time scope (see [[SampleHandle.estimate]])
-    * — over sample-sized rows it is the cheap half of the aggregation. */
-  def open(spark: SparkSession, path: String,
-      pin: Boolean = false): SampleHandle = {
+    * a failure is not kept), later ones run no Spark job. `check` sees the
+    * sampled rows before anything is pinned. `pin = true` serves the rows
+    * from a second at-rest entry under the same listing, which persists
+    * them for estimate-many serving; [[SampleHandle.close]] forgets it.
+    * The replay dedup runs per estimate AFTER the time scope (see
+    * [[SampleHandle.estimate]]) — over sample-sized rows it is the cheap
+    * half of the aggregation. */
+  def open(spark: SparkSession, path: String, pin: Boolean = false,
+      check: DataFrame => Unit = _ => ()): SampleHandle = {
     val (fs, live, root) = FileTree.qualified(spark, path)
     AtomicDir.heal(fs, live, "sample store")
     val listing =
@@ -534,19 +552,24 @@ object SampleStore {
     val snap = FileTree.atRest(spark, "sample store", root, listing)(
       validated(path, withLegacyBackfills(spark.read
         .option("basePath", path).parquet(listing.map(_._1): _*))))
-    // the pin pays the replay dedup ONCE, in core-count partitions
-    // (replays are byte-identical, so a scope commutes with it). Reading
-    // the EXPLICIT listed files, validation and pin cover identical bytes,
-    // and a same-session append's cache refresh re-lists only those files.
-    val df = snap.df
-    SampleHandle(
-      if (pin)
-        df.dropDuplicates(snap.idCol, "batch_key")
+    check(snap.df)
+    if (!pin) SampleHandle(snap.df, snap.idCol, snap.tsCol, root)
+    else {
+      // the pin pays the replay dedup ONCE, in core-count partitions
+      // (replays are byte-identical, so a scope commutes with it). Reading
+      // the EXPLICIT listed files, validation and pin cover identical bytes,
+      // and a same-session append's cache refresh re-lists only those files.
+      // The build calls no atRest (FileTree's rule against a deadlock).
+      val pinned = FileTree.atRest(spark, PinKind, root, listing)(Pinned(
+        snap.df.dropDuplicates(snap.idCol, "batch_key")
           .repartition(spark.sparkContext.defaultParallelism)
-          .persist()
-      else df,
-      snap.idCol, snap.tsCol, preDeduped = pin,
-      pinSource = if (pin) Some(df) else None)
+          .persist(), snap.df))
+      // Spark matches cached data by plan across sessions: another
+      // session's release can drop this one's
+      if (pinned.rows.storageLevel == StorageLevel.NONE) pinned.rows.persist()
+      SampleHandle(pinned.rows, snap.idCol, snap.tsCol, root,
+        Some(pinned.source))
+    }
   }
 
   /** Exactly one (sampled-id, stratum, ts) triple and, for a uniform

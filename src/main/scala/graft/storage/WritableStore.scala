@@ -298,10 +298,12 @@ final class WritableStore(
     } else {
       val f = lockFile
       Option(f.getParentFile).foreach(_.mkdirs())
-      def cfgMs(prop: String, env: String, dflt: Long): Long =
-        sys.props.get(prop).orElse(sys.env.get(env)).map(_.toLong).getOrElse(dflt)
-      val staleMs = cfgMs("graft.lockStaleMs", "GRAFT_LOCK_STALE_MS", 1800000L)
-      val waitMs  = cfgMs("graft.lockWaitMs", "GRAFT_LOCK_WAIT_MS", 10000L)
+      def cfgMs(prop: String, env: Option[String], dflt: Long): Long =
+        sys.props.get(prop).orElse(env).map(_.toLong).getOrElse(dflt)
+      val staleMs = cfgMs("graft.lockStaleMs",
+        sys.env.get("GRAFT_LOCK_STALE_MS"), 1800000L)
+      val waitMs  = cfgMs("graft.lockWaitMs",
+        sys.env.get("GRAFT_LOCK_WAIT_MS"), 10000L)
       def tryAcquire(): Boolean =
         try { java.nio.file.Files.createFile(f.toPath); true }
         catch { case _: java.nio.file.FileAlreadyExistsException => false }

@@ -28,6 +28,32 @@ class ContractSpec extends AnyFunSuite {
     assert(unoracled.isEmpty, s"queries without oracles: $unoracled")
   }
 
+  test("the README's Settings table names exactly the env vars src/main " +
+      "reads") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def text(p: Path) = new String(Files.readAllBytes(p), "UTF-8")
+    val anyRead = """sys\.env|System\.getenv""".r
+    val literalRead =
+      """(?:sys\.env(?:\.get|\.getOrElse)?|System\.getenv)\("(\w+)"""".r
+    val read = Files.walk(Paths.get("src/main/scala")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val src = text(f)
+        val names = literalRead.findAllMatchIn(src).map(_.group(1)).toVector
+        // a name this scan cannot see is a knob the table cannot list
+        assert(names.size == anyRead.findAllMatchIn(src).size,
+          s"$f reads an env var by a computed name; name it literally")
+        names
+      }.toSet
+    val settings = text(Paths.get("README.md")).split("\n## ")
+      .find(_.startsWith("Settings\n"))
+      .getOrElse(fail("README.md has no Settings section"))
+    val listed = """(?m)^\| `(\w+)` \|""".r.findAllMatchIn(settings)
+      .map(_.group(1)).toSet
+    assert(listed == read, s"listed but not read: ${listed -- read}; " +
+      s"read but not listed: ${read -- listed}")
+  }
+
   test("typed Dataset facade works over a metrics table") {
     // Dataset[T] path (case-class encoders where type safety helps)
     val ds = graft.storage.Tables

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
 import graft.ql.Engine
 import graft.server.QueryServer
-import graft.storage.{DataPoint, WritableStore}
+import graft.storage.{DataPoint, FileTree, WritableStore}
 
 class ServerSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -29,6 +29,17 @@ class ServerSpec extends AnyFunSuite {
       out.println(line)
       in.readLine()
     } finally sock.close()
+  }
+
+  /** A sample route answer's (n_sample, est_sum_cents) per bucket_ts: a
+    * keyed map, as the aggregate emits no inter-row order. */
+  private def bucketRows(resp: String): Map[Long, (Long, Long)] = {
+    def longs(f: String): Seq[Long] =
+      (s""""$f":\\[([^\\]]*)\\]""".r.findFirstMatchIn(resp).get
+        .group(1)).split(",").map(_.trim.toLong).toSeq
+    longs("bucket_ts").lazyZip(longs("n_sample"))
+      .lazyZip(longs("est_sum_cents"))
+      .map((b, n, s) => b -> ((n, s))).toMap
   }
 
   test("server answers queries over TCP, raw and JSON-framed") {
@@ -138,18 +149,8 @@ class ServerSpec extends AnyFunSuite {
           s""""store": "$stP", "sample": "$smP", "raw": "$stP"}""")
       assert(bad.startsWith("""{"ok":false,"""), bad)
       assert(bad.contains("sample"), bad)
-      // "pin": true opts into the server's PREPARED router — same
-      // answer as the cold frame (rows compared as a keyed map; the
-      // aggregate emits no inter-row order), served from the one-open
-      // lifecycle across repeated frames
-      def rows(resp: String): Map[Long, (Long, Long)] = {
-        def longs(f: String): Seq[Long] =
-          (s""""$f":\\[([^\\]]*)\\]""".r.findFirstMatchIn(resp).get
-            .group(1)).split(",").map(_.trim.toLong).toSeq
-        longs("bucket_ts").lazyZip(longs("n_sample"))
-          .lazyZip(longs("est_sum_cents"))
-          .map((b, n, s) => b -> ((n, s))).toMap
-      }
+      // "pin": true serves the sample rows from their at-rest pin — same
+      // answer as the cold frame, across repeated frames
       val resp0 = roundtrip(port,
         s"""{"maxPoints": 120, "since": 0, "until": ${2 * H}, """ +
           s""""store": "$stP", "sample": "$smP"}""")
@@ -160,51 +161,43 @@ class ServerSpec extends AnyFunSuite {
         s"""{"maxPoints": 120, "since": 0, "until": ${2 * H}, """ +
           s""""store": "$stP", "sample": "$smP", "pin": true}""")
       assert(pinned1.startsWith("""{"ok":true,"""), pinned1)
-      assert(rows(pinned1) == rows(resp0),
+      assert(bucketRows(pinned1) == bucketRows(resp0),
         s"$pinned1 vs $resp0")
-      assert(rows(pinned2) == rows(resp0))
+      assert(bucketRows(pinned2) == bucketRows(resp0))
       // a typo'd valueCol fails AT PREPARE, loudly, without pinning
+      val held = FileTree.held("pinned sample")
       val typo = roundtrip(port,
         s"""{"maxPoints": 120, "since": 0, "until": ${2 * H}, """ +
           s""""store": "$stP", "sample": "$smP", "pin": true, """ +
           """"valueCol": "vlaue"}""")
       assert(typo.startsWith("""{"ok":false,"""), typo)
       assert(typo.contains("vlaue"), typo)
-      // the refresh contract: append to the sample store → the pinned
-      // frame still serves the open-time snapshot (the documented
-      // trade) → a "refresh": true frame closes and re-prepares the
-      // pair → the new rows are served, no server restart
+      assert(FileTree.held("pinned sample") == held)
+      // a pinned frame lists both trees: after an append it serves the
+      // grown sample, as an unpinned frame does
       val more = (200L until 400L).map(i =>
         (i, (i % 4) * H, ((i % 7) + 1).toDouble + 0.25))
         .toDF("event_id", "ts", "value")
       graft.storage.SampleStore.append(more, smP, batchKey = "b2",
         idCol = "event_id", bits = 1)
-      val stale = roundtrip(port,
+      val grown = roundtrip(port,
         s"""{"maxPoints": 120, "since": 0, "until": ${2 * H}, """ +
           s""""store": "$stP", "sample": "$smP", "pin": true}""")
-      assert(rows(stale) == rows(resp0), s"$stale vs $resp0")
-      val fresh = roundtrip(port,
+      val unpinned = roundtrip(port,
         s"""{"maxPoints": 120, "since": 0, "until": ${2 * H}, """ +
-          s""""store": "$stP", "sample": "$smP", "pin": true, """ +
-          """"refresh": true}""")
-      assert(fresh.startsWith("""{"ok":true,"""), fresh)
-      assert(rows(fresh) != rows(resp0),
-        s"refresh must surface the appended batch: $fresh vs $resp0")
-      assert(rows(fresh).values.map(_._1).sum >
-        rows(resp0).values.map(_._1).sum,
-        s"refreshed n_sample must grow: $fresh vs $resp0")
-      // and the refreshed router replaces the cached one for later
-      // pinned frames
-      val after = roundtrip(port,
-        s"""{"maxPoints": 120, "since": 0, "until": ${2 * H}, """ +
-          s""""store": "$stP", "sample": "$smP", "pin": true}""")
-      assert(rows(after) == rows(fresh), s"$after vs $fresh")
+          s""""store": "$stP", "sample": "$smP"}""")
+      assert(grown.startsWith("""{"ok":true,"""), grown)
+      assert(bucketRows(grown) == bucketRows(unpinned),
+        s"$grown vs $unpinned")
+      assert(bucketRows(grown).values.map(_._1).sum >
+        bucketRows(resp0).values.map(_._1).sum,
+        s"a pinned frame must serve the appended batch: $grown vs $resp0")
     } finally srv.stop()
   }
 
   test("STRATIFIED sampled serve over the wire: a pinned fine zoom " +
-      "returns mixed-rate HT rows in the Arrow-decoded frame; append + " +
-      "refresh updates the served rates without a restart") {
+      "returns mixed-rate HT rows in the Arrow-decoded frame; a pinned " +
+      "frame after an append serves the grown sample") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     import graft.server.ArrowFraming
@@ -286,26 +279,61 @@ class ServerSpec extends AnyFunSuite {
       val got = rows.map(r => r(iBucket).asInstanceOf[Long] ->
         r(iCount).asInstanceOf[Long]).toMap
       assert(got == expected, s"$got vs $expected")
-      // append under the FROZEN rate map → pinned frame serves the
-      // open-time snapshot → refresh re-prepares and serves the growth
+      // append under the FROZEN rate map → a plain pinned frame lists
+      // both trees and serves the growth, as an unpinned frame does
       graft.storage.SampleStore.appendStratified(mk(400L, 800L), smP,
         batchKey = "b2", idCol = "event_id")
-      val stale = roundtrip(port, frame(""", "pin": true"""))
-      assert(srvRows(stale) == srvRows(cold), s"$stale vs $cold")
-      val freshed = roundtrip(port,
-        frame(""", "pin": true, "refresh": true"""))
-      assert(freshed.startsWith("""{"ok":true,"""), freshed)
+      val grown = roundtrip(port, frame(""", "pin": true"""))
+      assert(grown.startsWith("""{"ok":true,"""), grown)
+      assert(srvRows(grown) == srvRows(roundtrip(port, frame(""))), grown)
       def nSampleSum(resp: String): Long =
         srvRows(resp).values.map(_._1).sum
-      assert(nSampleSum(freshed) > nSampleSum(cold),
-        s"refresh must serve the appended batch: $freshed vs $cold")
+      assert(nSampleSum(grown) > nSampleSum(cold),
+        s"a pinned frame must serve the appended batch: $grown vs $cold")
       // the appended cold rows keep their FROZEN thinned rate: the
-      // refreshed frame still mixes rate 1 and rate 8 buckets
-      assert(srvRows(freshed).values.map(_._3).toSet == Set(1L, 8L),
-        freshed)
-      // later pinned frames serve the refreshed pair
-      val after = roundtrip(port, frame(""", "pin": true"""))
-      assert(srvRows(after) == srvRows(freshed), s"$after vs $freshed")
+      // grown frame still mixes rate 1 and rate 8 buckets
+      assert(srvRows(grown).values.map(_._3).toSet == Set(1L, 8L), grown)
+    } finally srv.stop()
+  }
+
+  test("pinned sample frames share one at-rest pin: concurrent cold " +
+      "frames build it once, a warm frame runs no job, and a tierOff " +
+      "under it fails the frame") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import graft.storage.RollupStore
+    val H = 3600L * 1000000000L
+    val base = SparkTestBase.tempDir("graft-srv-pin")
+    val (rawP, stP, smP) = (base + "/raw", base + "/store", base + "/sample")
+    val ev = (0L until 200L).map(i =>
+      (i, (i % 4) * H, ((i % 7) + 1).toDouble + 0.25))
+      .toDF("event_id", "ts", "value")
+    ev.write.parquet(rawP)
+    RollupStore.write(ev, stP, H)
+    graft.storage.SampleStore.build(ev, smP, idCol = "event_id", bits = 1)
+    val pinned = s"""{"maxPoints": 120, "since": 0, "until": ${2 * H}, """ +
+      s""""store": "$stP", "sample": "$smP", "pin": true}"""
+    val held = FileTree.held("pinned sample")
+    val srv = new QueryServer(new Engine(spark, dbDir))
+    val port = srv.start()
+    try {
+      val burst = Await.result(Future.sequence(
+        (1 to 4).map(_ => Future(roundtrip(port, pinned)))), 120.seconds)
+      assert(burst.forall(_.startsWith("""{"ok":true,""")), burst)
+      assert(burst.map(bucketRows).distinct.size == 1, burst)
+      assert(FileTree.held("pinned sample") == held + 1)
+      val req = RollupStore.RouteRequest(Seq(stP), None, 0, 2 * H, 120,
+        Some(smP))
+      assert(SparkTestBase.countJobs(
+        RollupStore.routeRequest(spark, req, pinSample = true))._2 == 0)
+      // the store becomes a tier: its post-horizon rows live in raw,
+      // which a sample route does not read
+      RollupStore.tierOff(spark, rawP, stP, cutoff = H, bucketNanos = H)
+      val tiered = roundtrip(port, pinned)
+      assert(tiered.startsWith("""{"ok":false,""") &&
+        tiered.contains("tier horizon"), tiered)
     } finally srv.stop()
   }
 
